@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 entry(spark)    — flagship BM25 top-k over /root/testdata/sf0.001 documents.
-queries()       — one callable per implemented operator (SURVEY.md §2).
+queries()       — one callable per search behaviour and operator (entry_queries).
 oracle_sql()    — matching ANSI SQL for DuckDB (same parquet views).
 
 Column names are aliased identically on both sides (the driver's compare
@@ -25,14 +25,12 @@ from pyspark_codesearch import entry_queries  # noqa: E402
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0.
 
-    DECISION (r6, conscious): entry() stays on search_wand — it
-    intentionally exercises the 100 TB scale path (compressed block-max
-    segments + MaxScore pruning) even though the cost-dispatched product
-    path (engine.search_best, driver p50 0.359 s = 0.72x baseline) is
-    faster at this SF; forced-WAND is 1.08x baseline and rank-identical
-    to the exact scorer (proven by the bm25_wand_* driver entries
-    sharing the exact path's SQL oracle). bench.py's single_query
-    section measures search_best, so both paths stay visible."""
+    entry() stays on search_wand: it exercises the scale path
+    (compressed block-max segments + MaxScore pruning) even though the
+    cost-dispatched product path (engine.search_best) is faster at this
+    SF. Forced WAND is rank-identical to the exact scorer (the bm25_wand_*
+    entries share the exact path's SQL oracle); perfbench measures the
+    serving routes."""
     from pyspark_codesearch.engine import documents_engine
 
     eng = documents_engine(spark, "/root/testdata/sf0.001")

@@ -18,8 +18,10 @@ wand        block-max WAND scorer over compressed segments (mapInPandas)
 search      reference-parity search service (multi_match best_fields,
             bool-sum, grouped best-chunk, min-max normalize, paginate)
 oracle      pure-python BM25 oracle for rank-identity tests
-operators/  relational + pipeline operator library (dedup, simsearch,
-            text stats, reference §2 ops over the driver testdata)
+operators/  keyed MERGE/upsert + DELETE by id (the upsert's docs merge),
+            plus dedup, multimodal and relational operators off the
+            search path
+streaming/  incremental index over a docs stream + delta compaction
 lineage     checkpoint/resume manifest + per-partition metrics
 """
 

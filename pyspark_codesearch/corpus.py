@@ -242,7 +242,7 @@ def replicated_documents(
         base = base.select(
             "doc_id", "content", "lang", "source", "n_chars", *variant_cols
         ).cache()
-        # bound barrier-cache retention like dedup._with_shingles: drop
+        # bound barrier-cache retention: drop
         # the previous call's base blocks (plans referencing the old
         # InMemoryRelation recompute through it — barrier semantics keep)
         while _REPLICA_BASE_CACHES:

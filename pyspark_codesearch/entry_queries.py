@@ -1,9 +1,13 @@
 """Registry backing __spark_entry__.queries() / oracle_sql().
 
-Every implemented operator from SURVEY.md §2 gets (a) a Spark callable
-(spark, sf_dir) -> DataFrame and (b) where SQL-expressible, a DuckDB oracle
-SQL string over the driver's pre-registered views. Register with
-:func:`register` so both dicts stay in sync.
+Every search behaviour the engine keeps (exact and WAND BM25, the
+analyzer, best-fields, hybrid, bucket order, normalization, pagination,
+chunking, merge/delete, enrichment) and every operator still shipped
+beside it (dedup, multimodal, relational, the SURVEY.md §2 parity
+entries) gets (a) a Spark callable (spark, sf_dir) -> DataFrame and
+(b) where SQL-expressible, a DuckDB oracle SQL string over the driver's
+pre-registered views. Register with :func:`register` so both dicts stay
+in sync.
 
 Determinism rules applied to every entry:
 - every computed column aliased identically on both sides
@@ -75,16 +79,9 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- BM25 core
 
-# NOTE on registration ORDER: the round-1 driver graded exactly the first
-# 50 registered entries, so order is a coverage decision — every entry with
-# unique SURVEY §2 coverage registers in the main section (exactly 50);
-# redundant variants live in the OVERFLOW section at the bottom of this
-# module and lose nothing if the cap drops them.
-
 # query strings drawn from the documents-table vocabulary (hot multi-term
-# and a query with a missing term; the camelCase analyzer shape moved to
-# OVERFLOW in r4 — the analyzer is driver-covered by doc_token_stats /
-# term_frequencies — freeing the slot for the A1 bucket-order entry)
+# and a query with a missing term; the camelCase analyzer shape is
+# registered with the variants at the bottom of this module)
 _BM25_QUERIES = {
     "bm25_topk_scan_merge": ("table scan merge join", 20),
     "bm25_topk_with_miss": ("filter zzznotaterm", 10),
@@ -385,7 +382,11 @@ FROM hybrid ORDER BY score DESC, doc_id ASC LIMIT {k}
 @register("hybrid_bm25_cosine_topk", _hybrid_sql(_HYBRID_QUERY, 20))
 def hybrid_bm25_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid mode: BM25 clause (boost 0.3) + cosine clause, should-sum."""
-    from .operators.simsearch import _dot, _norm
+    def dot(a, b):
+        return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+
+    def norm(a):
+        return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
     eng = documents_engine(spark, sf_dir)
     bm25 = eng.search(_HYBRID_QUERY, k=10**9).withColumnRenamed("score", "b")
@@ -394,7 +395,7 @@ def hybrid_bm25_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = F.array(*[F.lit(float(x)) for x in qv_arr])
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     qd = F.transform(qv, lambda x: x)
-    cos = _dot(v, qd) / (_norm(v) * _norm(qd))
+    cos = dot(v, qd) / (norm(v) * norm(qd))
     cdf = emb.select(F.col("vec_id").alias("doc_id"), (cos + F.lit(1.0)).alias("c"))
     out = (
         cdf.join(bm25, "doc_id", "left")
@@ -458,7 +459,7 @@ def t4_offset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
        ORDER BY window_start, event_type""",
 )
 def rel_hourly_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window agg (the batch shape of streaming.windowed_event_counts)."""
+    """Tumbling-window event counts per hour and event type."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -508,205 +509,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("dedup_simhash_near", _dd.simhash_near_pairs_sql(max_hamming=8))
 def dedup_simhash_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _dd.simhash_near_pairs(_docs(spark, sf_dir), max_hamming=8)
-
-
-# ------------------------------------------------------- similarity search
-
-from .operators import simsearch as _ss  # noqa: E402
-
-
-def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
-    row = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .filter(F.col("vec_id") == 0)
-        .collect()[0]
-    )
-    return [float(x) for x in row["embedding"]]
-
-
-_QV_SQL_CTE = "(SELECT embedding FROM embeddings WHERE vec_id = 0)"
-
-
-@register(
-    "simsearch_cosine_topk",
-    f"""
-WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-scored AS (
-  SELECT e.vec_id,
-         list_sum(list_transform(list_zip(e.embedding, q.qe),
-                  p -> p[1]::DOUBLE * p[2]::DOUBLE))
-         / (sqrt(list_sum(list_transform(e.embedding, x -> x::DOUBLE * x::DOUBLE)))
-            * sqrt(list_sum(list_transform(q.qe, x -> x::DOUBLE * x::DOUBLE)))) AS c
-  FROM embeddings e, q
-)
-SELECT vec_id, round(c, 4) AS cos
-FROM scored ORDER BY c DESC, vec_id ASC LIMIT 20
-""",
-)
-def simsearch_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return _ss.cosine_topk(emb, _query_vec(spark, sf_dir), k=20)
-
-
-# full-probe IVF is lossless -> same oracle as brute force; this checks
-# the coarse-quantizer assign + semi-join machinery end to end
-register("simsearch_ivf_fullprobe", ORACLE_SQL["simsearch_cosine_topk"])(
-    lambda spark, sf_dir: _ss.ivf_topk(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
-        _query_vec(spark, sf_dir), k=20, n_cells=8, n_probe=8,
-    )
-)
-
-# lossy ANN path — oracled: the seeded hyperplanes embed as SQL literals
-# (exactly like the cosine oracle's query vector) and the multiprobe set
-# becomes bit_count(xor(bucket, qbucket)) <= 1; recall floors vs brute
-# force stay pinned in pytest. Embedding dim is 64 at every SF (TESTDATA).
-# Lazy: the query-side bucket + norm are embedded as the EXACT numpy
-# literals the Spark path computes (read from the compare SF's vec 0), so
-# no engine recomputation can diverge at a sign/rounding boundary.
-def _ann_lsh_oracle() -> str:
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(f"{oracle_sf_dir()}/embeddings.parquet", columns=["vec_id", "embedding"])
-    qv = [float(x) for x in t.filter(pc.equal(t["vec_id"], 0))["embedding"][0].as_py()]
-    return _ss.ann_topk_sql(len(qv), k=20, multiprobe=1, query_vec=qv)
-
-
-register("simsearch_ann_lsh", _ann_lsh_oracle)(
-    lambda spark, sf_dir: _ss.ann_topk(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
-        _query_vec(spark, sf_dir), k=20, multiprobe=1,
-    )
-)
-
-
-# persisted NSW graph ANN, driver-graded (promoted r7, VERDICT r6 ask #3):
-# build-once adjacency parquet + beam-searched query-many half — the
-# reference's index-time HNSW shape (es_indexer.py:111-128). The beam is
-# deterministic, so the oracle is a VALUES table computed by the pure-
-# numpy mirror (nsw_reference_rows) over the same mod-partition insert
-# order: every float64 is bit-identical to the Spark path's before the
-# shared floor-half-up rounding. Recall>=0.9@10 floors stay in pytest.
-_NSW_KW = dict(n_partitions=4, max_degree=12, ef_construction=48)
-
-
-def _nsw_oracle() -> str:
-    import pyarrow.parquet as pq
-
-    from .rounding import round_half_up_py as _r4
-
-    t = pq.read_table(
-        f"{oracle_sf_dir()}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    ids = t["vec_id"].to_pylist()
-    vecs = t["embedding"].to_pylist()
-    by_id = dict(zip(ids, vecs))
-    qs = {"q0": [float(x) for x in by_id[0]], "q7": [float(x) for x in by_id[7]]}
-    rows = _ss.nsw_reference_rows(ids, vecs, qs, k=10, **_NSW_KW)
-    vals = ", ".join(
-        f"('{q}', {r}, {i}, CAST({_r4(c)!r} AS DOUBLE))" for q, r, i, c in rows
-    )
-    return (
-        "SELECT * FROM (VALUES " + vals + ") AS t(query_id, rank, vec_id, cos)"
-        " ORDER BY query_id, rank"
-    )
-
-
-@register("simsearch_ann_nsw_indexed", _nsw_oracle)
-def simsearch_ann_nsw_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os as _os
-    import tempfile
-
-    from .rounding import round_half_up as _r4c
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    by7 = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == 7).collect()[0]["embedding"]
-    ]
-    qs = {"q0": _query_vec(spark, sf_dir), "q7": by7}
-    # key includes the pid: two processes grading the same sf_dir
-    # concurrently (pytest + driver, parallel test workers) must not
-    # race one's overwrite-build against the other's read (r7 ADVICE);
-    # the per-pid dir is removed at interpreter exit (the returned
-    # DataFrame reads it lazily, so cleanup cannot happen earlier)
-    import atexit
-    import shutil as _shutil
-
-    key = hashlib.md5(_os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    ix = _os.path.join(
-        tempfile.gettempdir(), f"spark_graft_nsw_ix_{key}_{_os.getpid()}"
-    )
-    atexit.register(_shutil.rmtree, ix, ignore_errors=True)
-    _ss.build_nsw_index(emb, ix, partitioner="mod", **_NSW_KW)
-    out = _ss.nsw_topk_indexed(spark, ix, qs, k=10, round_to=None)
-    return out.select(
-        "query_id", "rank", "vec_id", _r4c(F.col("cos")).alias("cos")
-    ).orderBy("query_id", "rank")
-
-
-@register(
-    "d2_similar_vectors_excl_self",
-    """
-WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 7),
-scored AS (
-  SELECT e.vec_id,
-         list_sum(list_transform(list_zip(e.embedding, q.qe),
-                  p -> p[1]::DOUBLE * p[2]::DOUBLE))
-         / (sqrt(list_sum(list_transform(e.embedding, x -> x::DOUBLE * x::DOUBLE)))
-            * sqrt(list_sum(list_transform(q.qe, x -> x::DOUBLE * x::DOUBLE)))) AS c
-  FROM embeddings e, q
-  WHERE e.vec_id <> 7
-),
-top AS (SELECT vec_id, c FROM scored ORDER BY c DESC, vec_id ASC LIMIT 15),
-ext AS (SELECT vec_id, c, min(c) OVER () AS mn, max(c) OVER () AS mx FROM top)
-SELECT vec_id,
-       CASE WHEN mx = mn THEN 1.0 ELSE round((c - mn) / (mx - mn), 6) END AS norm
-FROM ext ORDER BY norm DESC, vec_id ASC
-""",
-)
-def d2_similar_vectors_excl_self(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # D2 exclude-self similar items (reference find_similar_papers shape:
-    # query = the reference row's own embedding, self excluded, top-k,
-    # min-max normalized) — the papers-table composition is pytest-pinned
-    # in test_search_service.test_find_similar_papers
-    return _ss.similar_vectors(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"), ref_id=7, k=15
-    )
-
-
-# ---------------------------------------------------------- text analysis
-
-from .operators import textstats as _ts  # noqa: E402
-
-
-@register("text_language_id", _ts.language_id_sql())
-def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ts.language_id(_docs(spark, sf_dir))
-
-
-@register("text_quality_score", _ts.quality_score_sql())
-def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ts.quality_score(_docs(spark, sf_dir))
-
-
-@register("text_fingerprint", _ts.fingerprint_sql())
-def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ts.fingerprint(_docs(spark, sf_dir))
-
-
-@register(
-    "text_token_counts_sql",
-    f"""SELECT doc_id,
-               len(list_filter(string_split_regex(text, '\\s+'), t -> len(t) > 0)) AS ws_tokens,
-               len({duckdb_tokens_expr('text')}) AS analyzer_tokens
-        FROM documents ORDER BY doc_id""",
-)
-def text_token_counts_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the SQL-expressible token counters (whitespace + analyzer)
-    return _ts.token_counts(_docs(spark, sf_dir)).drop("bpe_ish_tokens")
 
 
 # -------------------------------------------- rows-only pipeline surfaces
@@ -1120,12 +922,8 @@ def j1_meta_enrich_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------------------ OVERFLOW
-# Entries BELOW this line are redundant variants of operators already
-# driver-covered above. The round-1 driver graded only the first 50
-# registered entries; everything above this line is exactly 50, so these
-# are the (acceptable) casualties if the cap holds. Each remains pytest-
-# covered regardless of driver grading.
+# ------------------------------------------------------------ variants
+# Redundant variants of shapes already covered above.
 
 # the multi-term WAND shape (scan_merge query via the exact path is #1)
 register("bm25_wand_scan_merge", bm25_oracle_sql("table scan merge join", 20))(
@@ -1144,21 +942,6 @@ register("bm25_topk_camelcase", bm25_oracle_sql("tableScan mergeJoin the", 20))(
 # join + agg + ordered top-k (star-join shape already covered by
 # rel_revenue_by_nation; bounded top-k by longest_docs_top10)
 register("rel_top_customers", _rel.top_customers_sql())(_rel.top_customers)
-
-
-@register("text_token_counts")  # BPE-ish counter: python-oracle in pytest
-def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ts.token_counts(_docs(spark, sf_dir))
-
-
-# lossy IVF probe (machinery driver-proven by simsearch_ivf_fullprobe;
-# recall floor pinned in pytest)
-register("simsearch_ann_ivf")(
-    lambda spark, sf_dir: _ss.ivf_topk(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
-        _query_vec(spark, sf_dir), k=20, n_cells=8, n_probe=3,
-    )
-)
 
 
 # A4 over a scalar column (demoted r3: the keyword-ARRAY variant
@@ -1200,20 +983,8 @@ def s3_from_json_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# per-partition NSW graph ANN prototype (r5; ARCHITECTURE §7): lossy by
-# design, so no SQL oracle — recall >=0.9@10 vs brute cosine + exact
-# self-hit + determinism are pinned in pytest (test_dedup_simsearch).
-register("simsearch_ann_nsw")(
-    lambda spark, sf_dir: _ss.nsw_topk(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
-        {"q0": _query_vec(spark, sf_dir)}, k=20, n_partitions=4,
-    )
-)
-
-
-# D4 array_distinct (demoted r7: the array-function shape also lives in
-# graded entries' token pipelines; slot given to simsearch_ann_nsw_indexed,
-# which proves the persisted ANN path under the driver)
+# D4 array_distinct (the array-function shape also lives in the
+# analyzer entries' token pipelines)
 @register(
     "d4_array_distinct_tokens",
     f"""SELECT doc_id,
@@ -1240,9 +1011,7 @@ def d4_array_distinct_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# union-distinct shape (demoted r6: the shape is also exercised inside
-# other graded entries; slot given to multimodal_frame_sample, which
-# proves real 1->N video decode under the driver)
+# union-distinct shape (also exercised inside other entries)
 @register(
     "d3_union_distinct",
     """SELECT doc_id FROM (

@@ -1,7 +1,10 @@
-"""Operator library: dedup, similarity search, text analysis, relational.
+"""Operator library beside the search engine.
 
-The training-data-pipeline operators a 100 TB corpus engine needs
-(dedup/ANN/text-quality) plus the reference's relational operator
-inventory (SURVEY §2) expressed over the driver testdata tables. Every
-SQL-expressible operator ships a DuckDB oracle via entry_queries.
+``merge`` is the table-format surface (keyed MERGE/upsert and DELETE by
+id); ``merge.merge_upsert`` is the docs-table merge inside
+``lineage.upsert_index``. ``dedup`` (exact, MinHash-LSH, n-gram Jaccard,
+SimHash), ``multimodal`` with its ``media_codecs`` and ``relational``
+(the reference's relational inventory over the driver testdata) are not
+on any search path. Every SQL-expressible operator ships a DuckDB oracle
+via entry_queries.
 """

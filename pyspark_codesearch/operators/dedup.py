@@ -13,8 +13,6 @@ Scale notes (the point of each design):
   bits). Near-dup candidates join on chunk equality with the chunk count
   derived from the requested radius (pigeonhole: max_hamming+1 chunks,
   so recall is complete at ANY radius — see :func:`chunk_plan`).
-- embedding cosine near-dup: brute-force pair join at test scale;
-  random-hyperplane LSH buckets as the scale path (simsearch.py).
 
 All hash functions are md5-derived so the DuckDB oracles are exactly
 reproducible cross-engine (Spark md5() == DuckDB md5()).

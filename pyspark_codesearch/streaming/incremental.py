@@ -1,4 +1,4 @@
-"""Incremental index maintenance + streaming aggregation.
+"""Incremental index maintenance.
 
 - :func:`incremental_index` — readStream over a docs parquet directory,
   tokenize + posting-build per micro-batch (foreachBatch), written to a
@@ -14,11 +14,8 @@
   appending duplicates. Doc ids pass through from the input unchanged
   (they are deterministic at the source — the same idempotency property
   as the reference's deterministic ES _id, es_indexer.py:176-179).
-  Compaction of the delta into the base segments reuses the batch
-  builder (lineage.build_index_resumable).
-
-- :func:`windowed_event_counts` — watermarked tumbling-window counts
-  over the events stream (late data beyond the watermark dropped).
+  Compaction of the delta into the base index reuses the index upsert
+  (lineage.upsert_index).
 """
 
 from __future__ import annotations
@@ -115,27 +112,3 @@ def compact_delta_into_index(
     )
     delta = ingest_documents_df(latest)
     return upsert_index(spark, index_dir, delta, salt_range=salt_range)
-
-
-def windowed_event_counts(
-    events_stream: DataFrame,
-    *,
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Tumbling-window per-type counts with a watermark for late data."""
-    # watermarks require TIMESTAMP (not NTZ); session tz is UTC so the
-    # cast is the identity on the timeline
-    events_stream = events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        events_stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("total_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "cnt",
-            "total_value",
-        )
-    )

@@ -50,17 +50,25 @@ def _in_expr(col: str, values):
     same Catalyst ``In`` (pushdown unchanged). String values are
     backslash- and single-quote-escaped (analyzer tokens never contain
     either, but the helper should not rely on that — Spark SQL string
-    literals process backslash escapes by default)."""
+    literals process backslash escapes by default).
+
+    Only all-``str`` or all-integer (bool excluded) lists are accepted:
+    anything else — None, floats, bools, a mix — raises TypeError instead
+    of being stringified into a wrong predicate."""
     vals = list(values)
     if not vals:
         # SQL `IN ()` does not parse; match isin([])'s semantics
         return F.lit(False)
-    if all(isinstance(v, (int, np.integer)) for v in vals):
+    if all(isinstance(v, (int, np.integer)) and not isinstance(v, bool) for v in vals):
         body = ", ".join(str(int(v)) for v in vals)
-    else:
+    elif all(isinstance(v, str) for v in vals):
         body = ", ".join(
-            "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
-            for v in vals
+            "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'" for v in vals
+        )
+    else:
+        raise TypeError(
+            f"_in_expr takes all-str or all-int values, got "
+            f"{sorted({type(v).__name__ for v in vals})}"
         )
     return F.expr(f"{col} IN ({body})")
 

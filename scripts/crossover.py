@@ -4,7 +4,7 @@ item 2: SEARCH_EXACT_MAX_POSTINGS was extrapolated from decode-rate
 arithmetic; every sf0.1 bench query routes exact, so the WAND side of
 the dispatch had never been timed past the boundary).
 
-Builds the same replicated corpus as bench_scaling (default 768 x sf0.1
+Builds a replicated corpus with corpus.replicated_documents (default 768 x sf0.1
 = 3.84M docs, where single common terms carry multi-million-posting
 df), then times BOTH rank-identical plans — the literal-CASE exact
 scorer and block-max WAND (G=16, the single-query configuration) — on
@@ -96,7 +96,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     ensure_py_files(spark)
 
-    # same ALU control as bench.py (clean @32: ~0.43 s) so every point
+    # a pure-JVM ALU control (clean @32: ~0.43 s) so every point
     # carries its own window state — the r6 16M flip was a cross-window
     # artifact that a per-point control would have flagged
     def alu_control() -> float:

@@ -4,8 +4,8 @@ Runs every queries() entry and its oracle_sql() side-by-side at the
 comparison SF (default /root/testdata/sf0.01), comparing row count,
 column names, and values the way the driver's value-hash does: columns
 sorted by name, integer widths normalized to int64, but int-vs-float
-dtype differences treated as MISMATCH (the round-2 sessionize lesson —
-DuckDB HUGEINT surfaces as float64 in pandas and the driver's hash sees
+dtype differences treated as MISMATCH (a DuckDB sum over integers —
+HUGEINT — surfaces as float64 in pandas and the driver's hash sees
 1.0 != 1).
 
 Usage: python scripts/oracle_sweep.py [sf_dir] [entry ...]

@@ -1,8 +1,6 @@
-"""Behavioral tests for dedup + similarity operators on planted cases."""
+"""Behavioral tests for the dedup operators on planted cases."""
 
-import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from pyspark_codesearch.operators.dedup import (
     exact_duplicates,
@@ -10,11 +8,6 @@ from pyspark_codesearch.operators.dedup import (
     ngram_jaccard_pairs,
     simhash,
     simhash_near_pairs,
-)
-from pyspark_codesearch.operators.simsearch import (
-    ann_topk,
-    cosine_topk,
-    embedding_near_dup_pairs,
 )
 
 BASE = (
@@ -141,140 +134,6 @@ def test_simhash_near_pairs_complete_at_radius_8(spark, sf_dir):
     assert got == brute
 
 
-@pytest.fixture(scope="module")
-def vectors(spark):
-    rng = np.random.default_rng(5)
-    base = rng.standard_normal(64)
-    rows = []
-    for i in range(50):
-        v = rng.standard_normal(64)
-        rows.append((i, [float(x) for x in v]))
-    # planted near-dups of vector 100
-    rows.append((100, [float(x) for x in base]))
-    rows.append((101, [float(x) for x in base + 0.05 * rng.standard_normal(64)]))
-    rows.append((102, [float(x) for x in base + 0.05 * rng.standard_normal(64)]))
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>").cache()
-
-
-def test_cosine_topk_exact(vectors):
-    q_row = vectors.filter(F.col("vec_id") == 100).collect()[0]
-    q = [float(x) for x in q_row["embedding"]]
-    top = cosine_topk(vectors, q, k=3).collect()
-    assert top[0]["vec_id"] == 100 and top[0]["cos"] == 1.0
-    assert {top[1]["vec_id"], top[2]["vec_id"]} == {101, 102}
-
-
-def test_ann_recall_vs_brute(vectors):
-    q_row = vectors.filter(F.col("vec_id") == 100).collect()[0]
-    q = [float(x) for x in q_row["embedding"]]
-    brute = [r["vec_id"] for r in cosine_topk(vectors, q, k=5).collect()]
-    ann = [r["vec_id"] for r in ann_topk(vectors, q, k=5, multiprobe=1).collect()]
-    # planted near-dups must survive LSH bucketing
-    assert 100 in ann and 101 in ann
-    recall = len(set(brute) & set(ann)) / 5
-    assert recall >= 0.6, (brute, ann)
-
-
-def test_embedding_near_dup_pairs(vectors):
-    pairs = {(r["id_a"], r["id_b"]) for r in embedding_near_dup_pairs(vectors, dim=64, threshold=0.9).collect()}
-    assert (100, 101) in pairs and (100, 102) in pairs
-    assert all(a >= 100 and b >= 100 for a, b in pairs)
-
-
-def test_embedding_near_dup_multiband_recall(spark):
-    """Multi-seed bands lift near-dup recall: with 30 planted cos>=0.9
-    pairs, B=4 bands must (a) be a superset of B=1's pairs, (b) clear a
-    recall floor B=1 provably misses (single 8-plane bucket match is
-    ~29% per pair)."""
-    rng = np.random.default_rng(21)
-    rows = []
-    planted = []
-    for i in range(30):
-        base = rng.standard_normal(64)
-        rows.append((2 * i, [float(x) for x in base]))
-        rows.append((2 * i + 1, [float(x) for x in base + 0.15 * rng.standard_normal(64)]))
-        planted.append((2 * i, 2 * i + 1))
-    for i in range(60, 90):
-        rows.append((i + 100, [float(x) for x in rng.standard_normal(64)]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>").cache()
-
-    def found(n_bands):
-        got = {
-            (r["id_a"], r["id_b"])
-            for r in embedding_near_dup_pairs(
-                df, dim=64, threshold=0.9, n_bands=n_bands
-            ).collect()
-        }
-        return got
-
-    one, four = found(1), found(4)
-    assert one <= four
-    hits1 = sum(1 for p in planted if p in one)
-    hits4 = sum(1 for p in planted if p in four)
-    assert hits4 > hits1, (hits1, hits4)
-    assert hits4 >= 0.6 * len(planted), (hits1, hits4)
-
-
-def test_scale_shape_assign_parity(vectors, spark):
-    """The pandas-UDF assignment paths (the plan-size-safe shape for
-    production dims) must agree with the literal-expression paths, and
-    the dispatch must pick the pandas path once n*dim exceeds the
-    literal budget."""
-    from pyspark_codesearch.operators.simsearch import (
-        LITERAL_BUDGET,
-        deterministic_centroids,
-        hyperplanes,
-        bucket_expr,
-        ivf_assign,
-    )
-
-    cents = deterministic_centroids(vectors, 8)
-    lit = {r["vec_id"]: r["cell"] for r in ivf_assign(vectors, cents, use_pandas=False).collect()}
-    pdw = {r["vec_id"]: r["cell"] for r in ivf_assign(vectors, cents, use_pandas=True).collect()}
-    assert lit == pdw and len(lit) == 53
-
-    planes = hyperplanes(64, 8, 977)
-    a = vectors.select("vec_id", bucket_expr("embedding", planes, use_pandas=False).alias("b"))
-    b = vectors.select("vec_id", bucket_expr("embedding", planes, use_pandas=True).alias("b"))
-    assert {tuple(r) for r in a.collect()} == {tuple(r) for r in b.collect()}
-
-    # dispatch: a production shape (n_cells*dim > budget) goes to Arrow and
-    # the plan does NOT embed n_cells*dim literals
-    rng = np.random.default_rng(11)
-    big_cents = [[float(x) for x in rng.standard_normal(256)] for _ in range(32)]
-    assert 32 * 256 > LITERAL_BUDGET
-    big = spark.createDataFrame(
-        [(i, [float(x) for x in rng.standard_normal(256)]) for i in range(10)],
-        "vec_id long, embedding array<float>",
-    )
-    df = ivf_assign(big, big_cents)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan
-    assert df.count() == 10
-
-
-def test_deterministic_centroids_empty(spark):
-    from pyspark_codesearch.operators.simsearch import deterministic_centroids
-
-    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    assert deterministic_centroids(empty, 4) == []
-
-
-def test_ivf_topk_recall(vectors):
-    from pyspark_codesearch.operators.simsearch import ivf_topk
-
-    q_row = vectors.filter(F.col("vec_id") == 100).collect()[0]
-    q = [float(x) for x in q_row["embedding"]]
-    brute = [r["vec_id"] for r in cosine_topk(vectors, q, k=5).collect()]
-    ann = [r["vec_id"] for r in ivf_topk(vectors, q, k=5, n_cells=8, n_probe=3).collect()]
-    recall = len(set(brute) & set(ann)) / 5
-    assert 100 in ann, "query's own vector must be found"
-    assert recall >= 0.6, (brute, ann)
-    # full probe == brute force (lossless when probing every cell)
-    full = [r["vec_id"] for r in ivf_topk(vectors, q, k=5, n_cells=8, n_probe=8).collect()]
-    assert full == brute
-
-
 def test_near_pairs_signature_side_shuffle_free(planted):
     """simhash_near_pairs rides the Arrow signature path by default: the
     chunks side of the candidate join must contain NO Exchange (the only
@@ -294,94 +153,3 @@ def test_near_pairs_signature_side_shuffle_free(planted):
         for r in simhash_near_pairs(planted, max_hamming=6, use_pandas=False).collect()
     }
     assert a == b
-
-
-def test_nsw_topk_recall_and_determinism(spark, sf_dir):
-    """Per-partition NSW graph ANN (ARCHITECTURE §7 prototype): recall
-    >= 0.9@10 vs brute cosine on the real embeddings table, exact top-1
-    self-hit, deterministic across runs."""
-    from pyspark_codesearch.operators.simsearch import nsw_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
-    qrows = {r["vec_id"]: [float(x) for x in r["embedding"]]
-             for r in emb.filter(F.col("vec_id").isin([0, 7, 123, 321])).collect()}
-    queries = {f"q{vid}": vec for vid, vec in qrows.items()}
-
-    got = nsw_topk(emb, queries, k=10, n_partitions=4).collect()
-    by_q: dict = {}
-    for r in got:
-        by_q.setdefault(r["query_id"], []).append((r["rank"], r["vec_id"], r["cos"]))
-    assert set(by_q) == set(queries)
-
-    total_hits = 0
-    for vid, vec in qrows.items():
-        brute = [r["vec_id"] for r in cosine_topk(emb, vec, k=10).collect()]
-        ann = [v for _, v, _ in sorted(by_q[f"q{vid}"])]
-        assert ann[0] == vid, (vid, ann)            # exact self-hit at rank 1
-        total_hits += len(set(brute) & set(ann))
-    recall = total_hits / (10 * len(qrows))
-    assert recall >= 0.9, recall
-
-    got2 = nsw_topk(emb, queries, k=10, n_partitions=4).collect()
-    assert sorted(map(tuple, got2)) == sorted(map(tuple, got))
-
-
-def test_nsw_index_build_once_query_many(spark, sf_dir, tmp_path):
-    """Production NSW shape (r5 verdict item 4): adjacency persisted as
-    parquet by build_nsw_index; nsw_topk_indexed answers from the stored
-    graph — results bit-identical to the build+query-in-one-pass
-    nsw_topk at the same parameters, and stable across reads."""
-    from pyspark_codesearch.operators.simsearch import (
-        build_nsw_index,
-        nsw_topk,
-        nsw_topk_indexed,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
-    qrows = {r["vec_id"]: [float(x) for x in r["embedding"]]
-             for r in emb.filter(F.col("vec_id").isin([0, 7, 123])).collect()}
-    queries = {f"q{vid}": vec for vid, vec in qrows.items()}
-
-    idx_dir = str(tmp_path / "nsw_index")
-    build_nsw_index(emb, idx_dir, n_partitions=4)
-    # index persisted partition-pruned: one directory per graph partition
-    parts = {p.name for p in (tmp_path / "nsw_index").iterdir() if p.name.startswith("part=")}
-    assert len(parts) == 4, parts
-
-    got_idx = sorted(map(tuple, nsw_topk_indexed(spark, idx_dir, queries, k=10).collect()))
-    got_mem = sorted(map(tuple, nsw_topk(emb, queries, k=10, n_partitions=4).collect()))
-    assert got_idx == got_mem
-    # query-many: a second read answers identically without a rebuild
-    again = sorted(map(tuple, nsw_topk_indexed(spark, idx_dir, queries, k=10).collect()))
-    assert again == got_idx
-
-
-def test_nsw_reference_mirror_bit_identical(spark, sf_dir, tmp_path):
-    """The pure-numpy oracle mirror (nsw_reference_rows) reproduces the
-    persisted-index Spark path bit-for-bit under the 'mod' partitioner —
-    the basis for the driver-graded simsearch_ann_nsw_indexed VALUES
-    oracle."""
-    from pyspark_codesearch.operators.simsearch import (
-        build_nsw_index,
-        nsw_reference_rows,
-        nsw_topk_indexed,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
-    rows = emb.select("vec_id", "embedding").collect()
-    ids = [r["vec_id"] for r in rows]
-    vecs = [[float(x) for x in r["embedding"]] for r in rows]
-    by_id = dict(zip(ids, vecs))
-    queries = {"q0": by_id[0], "q7": by_id[7]}
-
-    idx_dir = str(tmp_path / "nsw_mod")
-    build_nsw_index(emb, idx_dir, n_partitions=4, partitioner="mod")
-    got = [
-        (r["query_id"], r["rank"], r["vec_id"], r["cos"])
-        for r in nsw_topk_indexed(spark, idx_dir, queries, k=10, round_to=None)
-        .orderBy("query_id", "rank")
-        .collect()
-    ]
-    ref = nsw_reference_rows(ids, vecs, queries, k=10, n_partitions=4)
-    assert len(got) == 20
-    assert got == ref  # raw float64 bit-identity, pre-rounding

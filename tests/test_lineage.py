@@ -3,14 +3,17 @@
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from pyspark_codesearch.codecs import delta_decode, varbyte_decode
-from pyspark_codesearch.corpus import corpus_df, ingest
+from pyspark_codesearch.corpus import corpus_df, ingest, ingest_documents_df
 from pyspark_codesearch.lineage import (
     BuildInterrupted,
     build_index_resumable,
     load_segments,
+    n_buckets_of,
     read_metrics,
+    read_table,
     unit_done,
 )
 
@@ -72,6 +75,56 @@ def test_fingerprint_invalidation(spark, tmp_path_factory):
     build_index_resumable(docs_a, d, n_buckets=2)
     res = build_index_resumable(docs_b, d, n_buckets=2)
     assert res["executed_units"] == 5  # everything re-ran: input changed
+
+
+def _docs_of(spark, texts):
+    rows = list(enumerate(texts))
+    return ingest_documents_df(
+        spark.createDataFrame(rows, "doc_id long, text string")
+    ).withColumn("lang", F.lit("python"))
+
+
+def _terms_of(df):
+    return {r["term"] for r in df.select("term").distinct().collect()}
+
+
+def _bucket_entries(n):
+    return sorted(
+        [f"bucket={b}" for b in range(n)] + [f".bucket={b}.versions" for b in range(n)]
+    )
+
+
+def test_build_publishes_buckets_no_term_hashes_into(spark, tmp_path):
+    """Two terms over eight buckets: every bucket is still published, the
+    ones no term hashes into as empty tables, and segments build for all."""
+    out = str(tmp_path / "idx")
+    docs = _docs_of(spark, ["merge sort", "sort merge merge"])
+    build_index_resumable(docs, out, n_buckets=8)
+    for sub in ("postings", "segments"):
+        assert sorted(os.listdir(os.path.join(out, sub))) == _bucket_entries(8)
+    assert n_buckets_of(out) == 8
+    tokens = _terms_of(docs.select(F.explode("tokens").alias("term")))
+    postings = [read_table(spark, out, f"postings/bucket={b}") for b in range(8)]
+    assert sum(p.count() for p in postings) == 4  # 2 docs x 2 distinct terms
+    assert _terms_of(load_segments(spark, out)) == tokens
+
+
+def test_rebuild_in_place_keeps_no_old_bucket(spark, tmp_path):
+    """Rebuilding into the same out_dir from other input with fewer
+    buckets: buckets the new input leaves empty hold no old postings,
+    and no bucket of the old layout remains to be counted."""
+    out = str(tmp_path / "idx")
+    old = _docs_of(spark, ["alpha beta gamma delta", "epsilon zeta eta theta"])
+    build_index_resumable(old, out, n_buckets=8)
+    new = _docs_of(spark, ["merge sort", "sort merge merge"])
+    build_index_resumable(new, out, n_buckets=4)
+    for sub in ("postings", "segments"):
+        assert sorted(os.listdir(os.path.join(out, sub))) == _bucket_entries(4)
+    assert n_buckets_of(out) == 4
+    tokens = _terms_of(new.select(F.explode("tokens").alias("term")))
+    for b in range(4):
+        assert _terms_of(read_table(spark, out, f"postings/bucket={b}")) <= tokens
+    assert _terms_of(load_segments(spark, out)) == tokens
 
 
 def test_metrics_table(spark, docs, tmp_path_factory):

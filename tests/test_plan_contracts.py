@@ -38,16 +38,26 @@ def index_dir(spark, tmp_path_factory):
 
 
 def test_no_per_row_python_in_core_plans(spark, sf_dir):
+    from pyspark_codesearch.corpus import ingest_bucketed
     from pyspark_codesearch.engine import documents_engine
+    from pyspark_codesearch.indexing import (
+        build_postings_with_dl,
+        build_segments,
+        corpus_stats,
+    )
     from pyspark_codesearch.operators.dedup import lsh_candidate_pairs
-    from pyspark_codesearch.operators.textstats import quality_score
 
     eng = documents_engine(spark, sf_dir)
+    docs = ingest_bucketed(corpus_df(spark, 200, seed=9), n_buckets=32)
+    segments = build_segments(
+        build_postings_with_dl(docs), corpus_stats(docs), salt_range=64
+    )
     plans = [
         plan_str(eng.search("data value", 10)),
         plan_str(eng.search_wand("data value", 10)),
         plan_str(lsh_candidate_pairs(spark.read.parquet(f"{sf_dir}/documents.parquet"))),
-        plan_str(quality_score(spark.read.parquet(f"{sf_dir}/documents.parquet"))),
+        plan_str(docs),
+        plan_str(segments),
     ]
     for p in plans:
         assert FORBIDDEN not in p
@@ -165,8 +175,13 @@ def test_merge_upsert_single_key_shuffle(spark, sf_dir):
 
 
 def test_arrow_udf_nodes_are_vectorized(spark, sf_dir):
-    from pyspark_codesearch.operators.textstats import token_counts
+    # the analyzer is JVM-side (tokens_col), so the chunker's pandas UDF
+    # is the kept scalar python node; it must be Arrow-batched
+    from pyspark_codesearch.chunker import chunk_docs
 
-    p = plan_str(token_counts(spark.read.parquet(f"{sf_dir}/documents.parquet")))
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    p = plan_str(
+        chunk_docs(docs, id_col="doc_id", text_col="text", chunk_size=30, chunk_overlap=5)
+    )
     assert "ArrowEvalPython" in p  # pandas UDF, Arrow-batched
     assert FORBIDDEN not in p

@@ -6,9 +6,11 @@
   ingest (the definition it optimizes)
 - single-stage exact plan: a doc_id-partitioned cached postings frame
   plans the literal BM25 query with ZERO exchanges above the cache
-- _in_expr: one-call IN lists semantically equal isin, with quoting
+- _in_expr: one-call IN lists semantically equal isin, with quoting;
+  values it would mis-quote (None, floats, bools, mixes) raise TypeError
 """
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -123,3 +125,9 @@ def test_in_expr_matches_isin(spark):
     assert got == want == [1, 2]
     got_i = sorted(r["s"] for r in df.filter(_in_expr("k", [2, 3])).collect())
     assert got_i == ["b'c", "d"]
+    got_np = sorted(r["s"] for r in df.filter(_in_expr("k", np.array([1, 3]))).collect())
+    assert got_np == ["a", "d"]
+    # values it would mis-quote are refused, never stringified
+    for bad in (["a", None], [None], [1.5], [1, 2.0], [True, 2], [np.bool_(True)], ["a", 1]):
+        with pytest.raises(TypeError):
+            _in_expr("k", bad)

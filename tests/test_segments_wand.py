@@ -227,7 +227,7 @@ def test_term_dictionary_filtered_lookups(env):
 def test_engine_wand_uses_filtered_dictionary(spark):
     """DocumentsEngine.search_wand must not collect the full vocabulary:
     after one query, the resident dictionary holds only that query's
-    terms (VERDICT r2: the full-vocab collect was the scale weak spot)."""
+    terms (the full-vocab collect was the scale weak spot)."""
     from pyspark_codesearch.engine import DocumentsEngine
 
     eng = DocumentsEngine(spark, "/root/testdata/sf0.001")

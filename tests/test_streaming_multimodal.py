@@ -10,7 +10,7 @@ from pyspark_codesearch.operators.multimodal import (
     frame_sample_plan,
     synth_media,
 )
-from pyspark_codesearch.streaming import incremental_index, windowed_event_counts
+from pyspark_codesearch.streaming import incremental_index
 
 
 def test_incremental_index_exactly_once(spark, tmp_path, sf_dir):
@@ -45,38 +45,6 @@ def test_incremental_index_exactly_once(spark, tmp_path, sf_dir):
         for r in p.filter(F.col("doc_id") == 7).collect()
     }
     assert got == dict(exp)
-
-
-def test_windowed_event_counts_stream(spark, sf_dir, tmp_path):
-    # run the windowed agg over a file stream of the events table
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    in_dir = str(tmp_path / "ev")
-    events.write.parquet(in_dir)
-    stream = spark.readStream.schema(events.schema).parquet(in_dir)
-    out = windowed_event_counts(stream, window="1 hour", watermark="2 hours")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("wincounts")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("SELECT sum(cnt) AS n FROM wincounts").collect()[0]["n"]
-    # append mode emits only windows older than the watermark; the tail
-    # windows are withheld, so strictly fewer-or-equal events than total
-    total = events.count()
-    assert got is not None and 0 < got <= total
-    # batch equivalent for the emitted windows matches exactly
-    batch = (
-        events.groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    bm = {
-        (r["window"]["start"], r["event_type"]): r["cnt"] for r in batch.collect()
-    }
-    for r in spark.sql("SELECT * FROM wincounts").collect():
-        assert bm[(r["window_start"], r["event_type"])] == r["cnt"]
 
 
 def test_media_features_deterministic(spark):

@@ -1,8 +1,9 @@
-"""Reader-safe versioned directory swaps (VERDICT r6 Missing #1).
+"""Reader-safe versioned directory swaps.
 
 `_swap_dir` publishes each rewrite as a new version dir behind an
 atomically-repointed symlink, retaining the previous generation for one
-swap — so a reader racing repeated upsert swaps never observes ENOENT
+swap and every superseded one for SUPERSEDED_GRACE_S after its swap —
+so a reader racing repeated upsert swaps never observes ENOENT
 (the old rename-pair protocol had a two-rename window) and a reader
 whose scan already resolved the old target keeps reading real files.
 Single-host analogue of Iceberg snapshot pinning (ARCHITECTURE §6)."""
@@ -16,7 +17,7 @@ from pyspark.sql import functions as F
 
 from pyspark_codesearch.corpus import corpus_df, ingest, ingest_documents_df
 from pyspark_codesearch.lineage import (
-    _recover_swap,
+    SUPERSEDED_GRACE_S,
     _swap_dir,
     _versions_root,
     build_index_resumable,
@@ -75,6 +76,8 @@ def test_swap_path_never_disappears(tmp_path):
 
 
 def test_previous_generation_retained_one_swap(tmp_path):
+    """The previous generation survives the next swap; an older one
+    survives until SUPERSEDED_GRACE_S after it was superseded."""
     path = str(tmp_path / "table")
     _swap_dir(path, _write_marker(0))
     vroot = _versions_root(path)
@@ -84,49 +87,70 @@ def test_previous_generation_retained_one_swap(tmp_path):
     # a reader mid-scan on gen0 still has real files under it
     assert os.path.exists(os.path.join(gen0, "content"))
     _swap_dir(path, _write_marker(2))
-    # now gen0 is two swaps behind (out of contract) and collected
-    assert not os.path.exists(gen0)
-    assert os.path.exists(os.path.join(gen1, "content"))
+    gen2 = os.path.realpath(path)
+    # gen0 is two swaps behind but was superseded moments ago: kept
+    assert os.path.exists(os.path.join(gen0, "content"))
+    # age gen0 and gen1 as if their swaps ran past the grace
+    past = time.time() - SUPERSEDED_GRACE_S - 1
+    for gen in (gen0, gen1):
+        os.utime(gen, (past, past))
+    _swap_dir(path, _write_marker(3))
+    assert not os.path.exists(gen0) and not os.path.exists(gen1)
+    assert os.path.exists(os.path.join(gen2, "content"))
     assert len(os.listdir(vroot)) == 2  # current + previous only
 
 
-def test_legacy_real_dir_migrates(tmp_path):
-    """A pre-versioning index (real dir at path) is migrated into the
-    versioned layout on its first swap; content swaps normally after."""
+def test_plain_directory_is_refused(tmp_path):
+    """A table written before builds published versions is a plain
+    directory; swapping it is refused before anything is written."""
     path = str(tmp_path / "table")
     os.makedirs(path)
-    with open(os.path.join(path, "content"), "w") as f:
-        f.write("legacy")
-    _swap_dir(path, _write_marker(7))
-    assert os.path.islink(path)
-    with open(os.path.join(path, "content")) as f:
-        assert f.read() == "7"
-    # the legacy dir is the retained previous generation
-    vroot = _versions_root(path)
-    assert len(os.listdir(vroot)) == 2
+    with pytest.raises(ValueError, match="rebuild"):
+        _swap_dir(path, _write_marker(1))
+    assert os.listdir(tmp_path) == ["table"]
 
 
-def test_legacy_staging_recovery_still_works(tmp_path):
-    """Old-protocol crash layout (path gone, .staging complete) is still
-    finished by _recover_swap, and a stray .lnktmp is removed."""
-    path = str(tmp_path / "table")
-    os.makedirs(path + ".staging")
-    with open(path + ".staging/content", "w") as f:
-        f.write("staged")
-    os.makedirs(_versions_root(path))
-    lnktmp = os.path.join(_versions_root(path), ".lnktmp")
-    os.symlink("nowhere", lnktmp)
-    _recover_swap(path)
-    assert os.path.isdir(path) and not os.path.islink(path)
-    with open(os.path.join(path, "content")) as f:
-        assert f.read() == "staged"
-    assert not os.path.lexists(lnktmp)
+def _upsert_wave(spark, out, wave):
+    rows = [
+        (i, f"swapwave9{wave}{i:04d} merge sort replaced content") for i in (3, 4, 5)
+    ]
+    delta = ingest_documents_df(
+        spark.createDataFrame(rows, "doc_id long, text string")
+    ).withColumn("lang", F.lit("python"))
+    upsert_index(spark, out, delta, salt_range=32)
+
+
+def test_scan_pinned_before_first_upsert_survives(spark, tmp_path):
+    """The build publishes every swappable table as a symlink to its
+    first version dir, each stored once (no plain table dir, no second
+    version, no leftover build dir). So a scan planned on the fresh index
+    still reads its files after the index's first upsert: the upsert
+    swaps versions instead of renaming the directory the scan listed."""
+    out = str(tmp_path / "idx")
+    build_index_resumable(ingest(corpus_df(spark, 60)), out, n_buckets=2, salt_range=32)
+    tables = ["docs", "doc_lens", "stats", "term_stats"] + [
+        f"{sub}/bucket={b}" for sub in ("postings", "segments") for b in range(2)
+    ]
+    for t in tables:
+        path = os.path.join(out, t)
+        assert os.path.islink(path), t
+        vroot = _versions_root(path)
+        assert os.listdir(vroot) == ["v000000001"], t
+        assert os.path.realpath(path) == os.path.join(os.path.realpath(vroot), "v000000001")
+    assert sorted(os.listdir(os.path.join(out, "postings"))) == [
+        ".bucket=0.versions", ".bucket=1.versions", "bucket=0", "bucket=1",
+    ]
+
+    pinned = read_table(spark, out, "docs")
+    n_before = pinned.count()
+    _upsert_wave(spark, out, 0)
+    assert pinned.count() == n_before == 60
 
 
 def test_reader_loops_during_repeated_upsert_swaps(spark, tmp_path):
-    """The VERDICT's done-test: a Spark reader looping over the index
-    tables while upserts repeatedly swap them underneath never hits an
-    unhandled error, and each observed snapshot is internally sane."""
+    """A Spark reader looping over the index tables while upserts
+    repeatedly swap them underneath never hits an unhandled error, and
+    each observed snapshot is internally sane."""
     out = str(tmp_path / "idx")
     docs = ingest(corpus_df(spark, 120))
     build_index_resumable(docs, out, n_buckets=2, salt_range=32)
@@ -151,14 +175,7 @@ def test_reader_loops_during_repeated_upsert_swaps(spark, tmp_path):
     t.start()
     try:
         for wave in range(3):
-            rows = [
-                (i, f"swapwave9{wave}{i:04d} merge sort replaced content")
-                for i in (3, 4, 5)
-            ]
-            delta = ingest_documents_df(
-                spark.createDataFrame(rows, "doc_id long, text string")
-            ).withColumn("lang", F.lit("python"))
-            upsert_index(spark, out, delta, salt_range=32)
+            _upsert_wave(spark, out, wave)
     finally:
         time.sleep(0.2)  # let the reader catch at least one post-swap read
         stop.set()

@@ -169,7 +169,7 @@ def test_flock_holder_refused_then_sigkill_auto_releases(tmp_path):
 
 
 def test_concurrent_racers_admit_exactly_one_writer(tmp_path):
-    # the r6 ADVICE TOCTOU: under the old unlink-then-O_EXCL stale break,
+    # the TOCTOU: under the old unlink-then-O_EXCL stale break,
     # racer A's delayed unlink could delete racer B's freshly acquired
     # LIVE lock, admitting two writers. Hammer the lock from 6 processes
     # (starting from a planted dead-pid claim); every holder plants a
