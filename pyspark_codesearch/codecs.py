@@ -12,21 +12,17 @@ Lucene (postings codec) — ours is explicit per BASELINE.json north_rule.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 
 _MAX_GROUPS = 10  # 70 bits > uint64
 
 
-def varbyte_encode(values: np.ndarray | list[int]) -> bytes:
+def _varbyte(values: np.ndarray) -> tuple[bytes, np.ndarray]:
+    """VByte buffer of ``values`` and the byte count of each value."""
     v = np.ascontiguousarray(values, dtype=np.uint64)
-    n = v.size
-    if n == 0:
-        return b""
-    nbytes = np.ones(n, dtype=np.int64)
-    rest = v >> np.uint64(7)
-    while rest.any():
-        nbytes += (rest > 0).astype(np.int64)
-        rest >>= np.uint64(7)
+    nbytes = varbyte_sizes(v)
     starts = np.concatenate(([0], np.cumsum(nbytes)[:-1]))
     out = np.zeros(int(nbytes.sum()), dtype=np.uint8)
     for g in range(_MAX_GROUPS):
@@ -37,7 +33,11 @@ def varbyte_encode(values: np.ndarray | list[int]) -> bytes:
         byte = ((v[mask] >> np.uint64(7 * g)) & np.uint64(0x7F)).astype(np.uint8)
         cont = (nbytes[mask] > g + 1).astype(np.uint8) << 7
         out[pos] = byte | cont
-    return out.tobytes()
+    return out.tobytes(), nbytes
+
+
+def varbyte_encode(values: np.ndarray | list[int]) -> bytes:
+    return _varbyte(values)[0]
 
 
 def varbyte_decode(buf: bytes) -> np.ndarray:
@@ -66,36 +66,64 @@ def varbyte_sizes(values: np.ndarray) -> np.ndarray:
     return nbytes
 
 
-def encode_blocked(ids: np.ndarray, tfs: np.ndarray, block: int):
-    """Encode a whole posting run in TWO varbyte passes, then slice per
-    block: gaps restart (absolute value) at each block boundary so blocks
-    stay independently decodable. Returns (ids_bufs, tfs_bufs) lists.
+class Blocks(NamedTuple):
+    """Encoded blocks of one or more posting runs, in stream order."""
 
-    One numpy pass per group instead of ~10 numpy calls per 128-doc
-    block — the applyInPandas encoder's hot loop.
-    """
+    starts: np.ndarray  # offset of each block's first posting
+    ordinals: np.ndarray  # index of each block within its run
+    ids: list[bytes]  # delta+varbyte doc ids, absolute at the block start
+    tfs: list[bytes]  # varbyte term frequencies
+
+
+def _block_layout(run_starts: np.ndarray, n: int, block: int) -> tuple[np.ndarray, np.ndarray]:
+    """(starts, ordinals) of the ``block``-posting blocks cut within each
+    run of ``n`` concatenated postings; ``run_starts`` are the sorted
+    offsets of the runs' first postings, beginning with 0."""
+    lens = np.diff(np.append(run_starts, n))
+    per_run = -(-lens // block)
+    first = np.cumsum(per_run) - per_run
+    ordinals = np.arange(int(per_run.sum()), dtype=np.int64) - np.repeat(first, per_run)
+    return np.repeat(run_starts, per_run) + ordinals * block, ordinals
+
+
+def encode_runs(ids: np.ndarray, tfs: np.ndarray, run_starts: np.ndarray, block: int) -> Blocks:
+    """Encode concatenated posting runs (each run's doc ids strictly
+    increasing; a run may start below the previous run's last id) as
+    blocks of ``block`` postings cut within each run, in TWO varbyte
+    passes over all runs — gaps restarting (absolute value) at every
+    block start so blocks stay independently decodable, then the tfs —
+    sliced per block by cumsum offsets.
+
+    The per-partition segment encoder's hot loop: its cost grows with
+    postings, not with runs or blocks."""
     n = ids.size
-    if n == 0:
-        return [], []
+    d = np.diff(ids)
+    bad = d <= 0
+    bad[run_starts[1:] - 1] = False  # a run start may step down
+    if bad.any():
+        raise ValueError("doc ids must be strictly increasing")
+    starts, ordinals = _block_layout(run_starts, n, block)
     gaps = np.empty(n, dtype=np.uint64)
-    gaps[0] = np.uint64(ids[0])
-    if n > 1:
-        d = np.diff(ids)
-        if (d <= 0).any():
-            raise ValueError("doc ids must be strictly increasing")
-        gaps[1:] = d.astype(np.uint64)
-    starts = np.arange(0, n, block)
+    gaps[1:] = d.astype(np.uint64)
     gaps[starts] = ids[starts].astype(np.uint64)  # absolute at block start
-    id_buf = varbyte_encode(gaps)
-    tf_buf = varbyte_encode(tfs.astype(np.uint64))
-    id_off = np.concatenate(([0], np.cumsum(varbyte_sizes(gaps))))
-    tf_off = np.concatenate(([0], np.cumsum(varbyte_sizes(tfs.astype(np.uint64)))))
-    ids_bufs, tfs_bufs = [], []
-    for b0 in starts:
-        b1 = min(b0 + block, n)
-        ids_bufs.append(id_buf[id_off[b0] : id_off[b1]])
-        tfs_bufs.append(tf_buf[tf_off[b0] : tf_off[b1]])
-    return ids_bufs, tfs_bufs
+    id_buf, id_sizes = _varbyte(gaps)
+    tf_buf, tf_sizes = _varbyte(tfs)
+    cut = np.append(starts, n)
+    id_off = np.concatenate(([0], np.cumsum(id_sizes)))[cut].tolist()
+    tf_off = np.concatenate(([0], np.cumsum(tf_sizes)))[cut].tolist()
+    return Blocks(
+        starts,
+        ordinals,
+        [id_buf[a:b] for a, b in zip(id_off[:-1], id_off[1:])],
+        [tf_buf[a:b] for a, b in zip(tf_off[:-1], tf_off[1:])],
+    )
+
+
+def encode_blocked(ids: np.ndarray, tfs: np.ndarray, block: int):
+    """One posting run as blocks of ``block`` postings: :func:`encode_runs`
+    on a single run. Returns (ids_bufs, tfs_bufs) lists."""
+    enc = encode_runs(ids, tfs, np.zeros(1, dtype=np.int64), block)
+    return enc.ids, enc.tfs
 
 
 def delta_encode(sorted_ids: np.ndarray | list[int]) -> bytes:

@@ -203,10 +203,10 @@ class DocumentsEngine:
     @property
     def segments(self) -> DataFrame:
         if self._segments is None:
-            from .indexing import build_postings_with_dl, build_segments
+            from .indexing import build_segments
 
             self._segments = build_segments(
-                build_postings_with_dl(self.docs), self.stats, salt_range=self.SALT_RANGE
+                self.postings, self.stats, salt_range=self.SALT_RANGE
             ).cache()
         return self._segments
 

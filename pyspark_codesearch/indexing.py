@@ -9,7 +9,8 @@ inside Elasticsearch — declared by the ES mapping, es_indexer.py:78-143):
     -> corpus_stats(n_docs, avgdl)                [2 scalars]
     -> segments(term, salt, block_id, ...)        [salted repartition +
                                                    sortWithinPartitions +
-                                                   applyInPandas encoder]
+                                                   mapInPandas encoder,
+                                                   one pass per partition]
 
 Salting: ``salt = doc_id // salt_range`` (a doc-id RANGE bucket, not a random
 salt) so a hot Zipfian term ("return", "data") is split across many shuffle
@@ -32,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .codecs import encode_blocked
+from .codecs import encode_runs
 
 BLOCK_SIZE = 128
 K1 = 1.2
@@ -121,44 +122,70 @@ def build_segments(
     kb = float(k1 * (1.0 - b))
     kbn = float(k1 * b / avgdl)
 
-    def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        # upstream sortWithinPartitions delivers the group doc_id-sorted;
-        # the re-sort is a no-op guard for direct callers (tests)
-        if not pdf["doc_id"].is_monotonic_increasing:
-            pdf = pdf.sort_values("doc_id")
-        term = pdf["term"].iloc[0]
-        salt = int(pdf["salt"].iloc[0])
-        ids = pdf["doc_id"].to_numpy(np.int64)
-        tfs = pdf["tf"].to_numpy(np.int64)
-        dls = pdf["dl"].to_numpy(np.float64)
+    def encode(cols: list[np.ndarray], heads: np.ndarray) -> pd.DataFrame:
+        """Block rows of complete (term, salt) groups; ``heads`` are the
+        offsets of the groups' first postings."""
+        term, salt, ids, tfs, dls = cols
+        blocks = encode_runs(ids, tfs, heads, BLOCK_SIZE)
+        starts = blocks.starts
+        ends = np.append(starts[1:], ids.size)
         tfd = tfs.astype(np.float64)
         imp = tfd / (tfd + kb + kbn * dls)
-        ids_bufs, tfs_bufs = encode_blocked(ids, tfs, BLOCK_SIZE)
-        nb = len(ids_bufs)
-        # per-block metadata in one reduceat pass per column instead of
-        # 2 small numpy .max() calls per 128-posting block (the
-        # small-array call overhead measurably dominates at build scale)
-        starts = np.arange(0, ids.size, BLOCK_SIZE, dtype=np.int64)
-        ends = np.minimum(starts + BLOCK_SIZE, ids.size)
         return pd.DataFrame(
             {
-                "term": [term] * nb,
-                "salt": [salt] * nb,
-                "block_id": np.arange(nb, dtype=np.int64),
+                "term": term[starts],
+                "salt": salt[starts],
+                "block_id": blocks.ordinals,
                 "n_docs": (ends - starts).astype(np.int32),
                 "first_doc": ids[starts],
                 "last_doc": ids[ends - 1],
-                "doc_ids_enc": ids_bufs,
-                "tfs_enc": tfs_bufs,
+                "doc_ids_enc": blocks.ids,
+                "tfs_enc": blocks.tfs,
                 "block_max_tf": np.maximum.reduceat(tfs, starts),
                 "block_max_impact": np.maximum.reduceat(imp, starts),
             }
         )
 
+    def encode_partition(batches):
+        """One pass over a partition's (term, salt, doc_id)-sorted Arrow
+        batches. Each batch's complete groups are encoded together; its
+        last group may continue in the next batch, so it is kept as a list
+        of pieces and concatenated once, when a later key closes it."""
+        pending: list[list[np.ndarray]] = []  # pieces of the open group
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            cols = [
+                pdf["term"].to_numpy(object),
+                pdf["salt"].to_numpy(np.int32),
+                pdf["doc_id"].to_numpy(np.int64),
+                pdf["tf"].to_numpy(np.int64),
+                pdf["dl"].to_numpy(np.float64),
+            ]
+            term, salt = cols[0], cols[1]
+            # offsets in this batch where a group starts; 0 too when the
+            # batch's first key differs from the open group's
+            heads = np.flatnonzero((term[1:] != term[:-1]) | (salt[1:] != salt[:-1])) + 1
+            if pending and (term[0], salt[0]) != (pending[-1][0][-1], pending[-1][1][-1]):
+                heads = np.concatenate(([0], heads))
+            if heads.size == 0:
+                pending.append(cols)
+                continue
+            cut = int(heads[-1])
+            done = pending + [[c[:cut] for c in cols]]
+            held = sum(p[2].size for p in pending)
+            yield encode(
+                [np.concatenate(c) for c in zip(*done)],
+                np.concatenate(([0], held + heads[:-1])),
+            )
+            pending = [[c[cut:] for c in cols]]
+        if pending:
+            yield encode([np.concatenate(c) for c in zip(*pending)], np.zeros(1, np.int64))
+
     parted = enriched.repartition("term", "salt").sortWithinPartitions(
         "term", "salt", "doc_id"
     )
-    encoded = parted.groupBy("term", "salt").applyInPandas(encode_group, SEGMENT_SCHEMA)
+    encoded = parted.mapInPandas(encode_partition, SEGMENT_SCHEMA)
     # publish the (small) block table hash-partitioned by salt: a cached
     # segments frame then co-partitions with the packed lens table, so a
     # query-time cogroup on salt plans ZERO exchanges (single-stage job

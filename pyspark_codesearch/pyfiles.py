@@ -1,7 +1,7 @@
 """Ship the package to executors (the --py-files contract, self-serve).
 
 Executor python workers don't inherit the driver's sys.path, so any
-closure that references this package (applyInPandas encoders/scorers)
+closure that references this package (pandas-UDF encoders/scorers)
 fails with ModuleNotFoundError unless the package is distributed. With
 ``spark-submit --py-files pyspark_codesearch.zip`` that's handled by
 Spark; for library/driver-contract use we add the zip at runtime via

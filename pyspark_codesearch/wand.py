@@ -378,7 +378,9 @@ def prepare_lens_by_salt(doc_lens: DataFrame, salt_range: int) -> DataFrame:
     per resident index. (Production analogue: store the packed doc-norm
     table bucketed by salt next to the segments.)"""
 
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # no type hints: partial ones make applyInPandas warn that it cannot
+    # infer the eval type
+    def pack(key, pdf):
         return pd.DataFrame(
             {
                 "salt": [int(key[0])],

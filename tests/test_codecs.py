@@ -8,6 +8,8 @@ from hypothesis import strategies as st
 from pyspark_codesearch.codecs import (
     delta_decode,
     delta_encode,
+    encode_blocked,
+    encode_runs,
     varbyte_decode,
     varbyte_encode,
 )
@@ -18,6 +20,7 @@ def test_empty():
     assert varbyte_decode(b"").size == 0
     assert delta_encode([]) == b""
     assert delta_decode(b"").size == 0
+    assert encode_blocked(np.empty(0, np.int64), np.empty(0, np.int64), 128) == ([], [])
 
 
 def test_known_values():
@@ -87,3 +90,51 @@ def test_decode_term_blocks_bucket_composed_ids_no_overflow():
     assert got_ids.dtype == np.int64
     assert (got_ids == ids).all()
     assert (got_tfs == 1.0).all()
+
+
+def _runs():
+    rng = np.random.default_rng(3)
+    runs = []
+    for n in (1, 127, 128, 129, 300, 5):
+        ids = np.cumsum(rng.integers(1, 1 << 20, n)).astype(np.int64)
+        runs.append((ids, rng.integers(1, 200, n).astype(np.int64)))
+    return runs
+
+
+def test_encode_runs_matches_encode_blocked_per_run():
+    runs = _runs()
+    heads = np.cumsum([0] + [ids.size for ids, _ in runs[:-1]])
+    enc = encode_runs(
+        np.concatenate([ids for ids, _ in runs]),
+        np.concatenate([tfs for _, tfs in runs]),
+        heads,
+        128,
+    )
+    exp_ids, exp_tfs, exp_ord = [], [], []
+    for ids, tfs in runs:
+        a, b = encode_blocked(ids, tfs, 128)
+        exp_ids += a
+        exp_tfs += b
+        exp_ord += range(len(a))
+    assert enc.ids == exp_ids and enc.tfs == exp_tfs
+    assert enc.ordinals.tolist() == exp_ord
+    assert enc.starts[np.flatnonzero(enc.ordinals == 0)].tolist() == heads.tolist()
+
+
+def test_encode_runs_rejects_non_increasing_id_inside_run():
+    ids = np.arange(300, dtype=np.int64)
+    ids[200] = ids[199]  # inside a run, not at a block start
+    with pytest.raises(ValueError, match="strictly increasing"):
+        encode_runs(ids, np.ones(300, np.int64), np.array([0, 100]), 128)
+    ids = np.arange(300, dtype=np.int64)
+    ids[128] = ids[127]  # at a block start inside the run
+    with pytest.raises(ValueError, match="strictly increasing"):
+        encode_runs(ids, np.ones(300, np.int64), np.array([0]), 128)
+
+
+def test_encode_runs_accepts_smaller_id_at_run_start():
+    ids = np.array([5, 9, 40, 2, 3, 7, 7], dtype=np.int64)
+    enc = encode_runs(ids, np.ones(7, np.int64), np.array([0, 3, 6]), 2)
+    assert enc.starts.tolist() == [0, 2, 3, 5, 6]
+    assert enc.ordinals.tolist() == [0, 1, 0, 1, 0]
+    assert [delta_decode(b).tolist() for b in enc.ids] == [[5, 9], [40], [2, 3], [7], [7]]

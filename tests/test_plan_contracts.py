@@ -61,6 +61,9 @@ def test_no_per_row_python_in_core_plans(spark, sf_dir):
     ]
     for p in plans:
         assert FORBIDDEN not in p
+    # segments are encoded in one pass per partition, never per group
+    assert "MapInPandas" in plans[-1]
+    assert "FlatMapGroupsInPandas" not in plans[-1]
 
 
 def test_term_filter_pushed_to_parquet_scan(spark, index_dir):

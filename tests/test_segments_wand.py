@@ -6,6 +6,8 @@
   pruning-active regime (small k, many candidates)
 """
 
+import warnings
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -21,7 +23,7 @@ from pyspark_codesearch.indexing import (
 )
 from pyspark_codesearch.oracle import OracleIndex
 from pyspark_codesearch.scoring import bm25_topk
-from pyspark_codesearch.wand import wand_topk
+from pyspark_codesearch.wand import prepare_lens_by_salt, wand_topk
 
 N_DOCS = 300
 SALT_RANGE = 64  # small so salting actually splits the corpus
@@ -100,6 +102,16 @@ def test_segment_doc_counts_match_df(env):
         .collect()
     }
     assert seg_df == true_df
+
+
+def test_prepare_lens_by_salt_infers_eval_type(env):
+    """The pack function's type hints must not make Spark warn that it
+    cannot infer the eval type (partial hints did)."""
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        lens = prepare_lens_by_salt(env["doc_lens"], SALT_RANGE)
+    assert lens.count() == -(-N_DOCS // SALT_RANGE)
+    lens.unpersist()
 
 
 WAND_QUERIES = [
