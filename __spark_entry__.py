@@ -27,10 +27,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
     entry() stays on search_wand: it exercises the scale path
     (compressed block-max segments + MaxScore pruning) even though the
-    cost-dispatched product path (engine.search_best) is faster at this
-    SF. Forced WAND is rank-identical to the exact scorer (the bm25_wand_*
-    entries share the exact path's SQL oracle); perfbench measures the
-    serving routes."""
+    cost-dispatched product path (engine.search_topk_auto) is faster at
+    this SF. Forced WAND is rank-identical to the exact scorer (the
+    bm25_wand_* entries share the exact path's SQL oracle); perfbench
+    measures the serving routes."""
     from pyspark_codesearch.engine import documents_engine
 
     eng = documents_engine(spark, "/root/testdata/sf0.001")

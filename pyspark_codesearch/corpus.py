@@ -5,7 +5,8 @@ Generates the BASELINE.json input_hint table
 with Zipfian repo sizes and Zipfian hot terms (skew exercise), then ingests
 it into the engine's canonical ``docs`` shape with derived columns:
 
-  doc_id   bigint  — dense, deterministic order by (repo, path, commit)
+  doc_id   bigint  — bucket << BUCKET_BITS | rank by (repo, path, commit)
+                     within the bucket (dense 0..n-1 at n_buckets=1)
   sha256   string  — sha2(content, 256); per-row invariant vs the generator
   doc_len  int     — token count post-analysis
 
@@ -101,27 +102,6 @@ def corpus_df(spark: SparkSession, n_docs: int = 500, seed: int = 42, n_partitio
     return spark.createDataFrame(pdf).repartition(n_partitions, "repo", "path")
 
 
-def ingest(corpus: DataFrame) -> DataFrame:
-    """corpus -> canonical docs(doc_id, repo, path, commit, lang, content,
-    sha256, doc_len, tokens) with DENSE ids: row_number over (repo, path,
-    commit).
-
-    A global row_number is a single-partition sort — fine at test scale
-    where tests pin dense-id semantics, a scale-killer at 10^12 files.
-    The production ingest is :func:`ingest_bucketed` (bucket-composed
-    ids, fully parallel); parity between the two is pinned by
-    tests/test_bm25_rank_identity.py::test_bucketed_ingest_rank_parity.
-    """
-    w = Window.orderBy("repo", "path", "commit")
-    toks = tokens_col("content")
-    return (
-        corpus.withColumn("doc_id", F.row_number().over(w).cast("long") - F.lit(1))
-        .withColumn("sha256", F.sha2(F.col("content"), 256))
-        .withColumn("tokens", toks)
-        .withColumn("doc_len", F.size("tokens"))
-    )
-
-
 BUCKET_BITS = 40  # local ids live in the low 40 bits: 1T docs per bucket
 
 
@@ -139,7 +119,10 @@ def ingest_bucketed(corpus: DataFrame, n_buckets: int = 1024) -> DataFrame:
     disjoint bit-ranges), deterministic (hash + total order within
     bucket), and doc-id-RANGE salting still behaves: each bucket's ids
     form a contiguous run, so a (term, salt) group never straddles
-    buckets for salt_range <= 2^BUCKET_BITS.
+    buckets for salt_range <= 2^BUCKET_BITS. ``n_buckets=1`` gives dense
+    ids 0..n-1 in (repo, path, commit) order, the shape tests pin;
+    score parity across bucket counts is pinned by
+    tests/test_bm25_rank_identity.py::test_bucketed_ingest_rank_parity.
 
     Replaces the reference's sequential lexicographic id loop
     (ingest_papers.py:457-542) at cluster scale.

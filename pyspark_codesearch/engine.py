@@ -244,19 +244,13 @@ class DocumentsEngine:
             self._term_dict = TermDictionary(self.term_stats, self.segments)
         return self._lens_by_salt, self._term_dict
 
-    def _query_lookups(self, query_text: str):
+    def search_wand(self, query: str, k: int = 10, round_to: int | None = None) -> DataFrame:
         from collections import Counter
 
-        from .analysis import tokenize_py
-
-        lens_by_salt, td = self._wand_residents()
-        dfs, salts, imps = td.lookup3(Counter(tokenize_py(query_text)).keys())
-        return lens_by_salt, dfs, salts, imps
-
-    def search_wand(self, query: str, k: int = 10, round_to: int | None = None) -> DataFrame:
         from .wand import wand_topk
 
-        lens_by_salt, df_lookup, salt_lookup, _ = self._query_lookups(query)
+        lens_by_salt, td = self._wand_residents()
+        df_lookup, salt_lookup, _ = td.lookup3(Counter(tokenize_py(query)).keys())
         out = wand_topk(
             self.segments, self.doc_lens, self.term_stats, self.stats, query, k,
             salt_range=self.SALT_RANGE, lens_by_salt=lens_by_salt,
@@ -265,40 +259,6 @@ class DocumentsEngine:
         if round_to is not None:
             out = out.select("doc_id", F.round("score", round_to).alias("score"))
         return out
-
-    def search_best(
-        self, query: str, k: int = 10, round_to: int | None = None,
-        *, max_exact_postings: int | None = None, route_out: dict | None = None,
-    ) -> DataFrame:
-        """Cost-dispatched single-query search: min-latency of the two
-        rank-identical paths (literal exact vs block-max WAND), routed on
-        the matched posting volume from the resident TermDictionary."""
-        lens_by_salt, df_lookup, salt_lookup, imp_lookup = self._query_lookups(query)
-        out = search_topk_auto(
-            self.postings, self.segments, self.doc_lens, self.term_stats,
-            self.stats, query, k,
-            salt_range=self.SALT_RANGE, lens_by_salt=lens_by_salt,
-            df_lookup=df_lookup, salt_lookup=salt_lookup, imp_lookup=imp_lookup,
-            max_exact_postings=(
-                SEARCH_EXACT_MAX_POSTINGS
-                if max_exact_postings is None
-                else max_exact_postings
-            ),
-            route_out=route_out,
-        )
-        if round_to is not None:
-            out = out.select("doc_id", F.round("score", round_to).alias("score"))
-        return out
-
-    def search_wand_batch(self, queries: dict[str, str], k: int = 10) -> DataFrame:
-        from .wand import wand_topk_batch
-
-        lens_by_salt, df_lookup, salt_lookup, _ = self._query_lookups(" ".join(queries.values()))
-        return wand_topk_batch(
-            self.segments, self.doc_lens, self.term_stats, self.stats, queries, k,
-            salt_range=self.SALT_RANGE, lens_by_salt=lens_by_salt,
-            df_lookup=df_lookup, salt_lookup=salt_lookup,
-        )
 
 
 _ENGINE_CACHE: dict[tuple[int, str], DocumentsEngine] = {}

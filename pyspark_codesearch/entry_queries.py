@@ -3,9 +3,9 @@
 Every search behaviour the engine keeps (exact and WAND BM25, the
 analyzer, best-fields, hybrid, bucket order, normalization, pagination,
 chunking, merge/delete, enrichment) and every operator still shipped
-beside it (dedup, multimodal, relational, the SURVEY.md §2 parity
-entries) gets (a) a Spark callable (spark, sf_dir) -> DataFrame and
-(b) where SQL-expressible, a DuckDB oracle SQL string over the driver's
+beside it (multimodal, the SURVEY.md §2 parity entries) gets (a) a
+Spark callable (spark, sf_dir) -> DataFrame and (b) where
+SQL-expressible, a DuckDB oracle SQL string over the driver's
 pre-registered views. Register with :func:`register` so both dicts stay
 in sync.
 
@@ -229,7 +229,7 @@ def document_frequencies_top50(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------------ relational operators
+# ------------------------------------- documents aggregations and top-n
 
 @register(
     "a4_categories_array_distribution",
@@ -472,45 +472,6 @@ def rel_hourly_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------------------ dedup family
-
-from .operators import dedup as _dd  # noqa: E402
-
-
-@register(
-    "dedup_exact",
-    _dd.exact_duplicates_sql(
-        f"md5(array_to_string(list_sort(list_distinct({duckdb_tokens_expr('text')})), ' '))"
-    ),
-)
-def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # hash-groupBy exact dedup on the canonical bag-of-words fingerprint
-    # (the raw-text sha256 variant is vacuous on this fixture — zero
-    # byte-identical texts; the BOW key catches the planted 'dup' docs)
-    bow = F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(tokens_col("text")))))
-    return _dd.exact_duplicates(_docs(spark, sf_dir), key=bow)
-
-
-@register("dedup_minhash_lsh_pairs", _dd.minhash_lsh_pairs_sql())
-def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _dd.lsh_candidate_pairs(_docs(spark, sf_dir))
-
-
-@register("dedup_ngram_jaccard", _dd.ngram_jaccard_pairs_sql(threshold=0.5))
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _dd.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5)
-
-
-@register("dedup_simhash", _dd.simhash_sql())
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _dd.simhash(_docs(spark, sf_dir))
-
-
-@register("dedup_simhash_near", _dd.simhash_near_pairs_sql(max_hamming=8))
-def dedup_simhash_near(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _dd.simhash_near_pairs(_docs(spark, sf_dir), max_hamming=8)
-
-
 # -------------------------------------------- rows-only pipeline surfaces
 
 
@@ -566,22 +527,6 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("media_id")
     )
-
-
-# ------------------------------------------------------- relational suite
-
-from .operators import relational as _rel  # noqa: E402
-
-register("rel_pricing_summary", _rel.PRICING_SUMMARY_SQL)(_rel.pricing_summary)
-register("rel_revenue_by_nation", _rel.REVENUE_BY_NATION_SQL)(_rel.revenue_by_nation)
-register("rel_sessionize_events", _rel.sessionize_events_sql())(_rel.sessionize_events)
-register("rel_events_json_agg", _rel.EVENTS_JSON_AGG_SQL)(_rel.events_json_agg)
-register("rel_orders_latest_per_customer", _rel.ORDERS_LATEST_SQL)(_rel.orders_latest_per_customer)
-# A3 HLL: the compared columns are the exact count + a bounded-error
-# boolean (the approximate value itself is engine-defined, see operator)
-register("rel_approx_distinct_users", _rel.APPROX_DISTINCT_USERS_SQL)(
-    _rel.approx_distinct_users
-)
 
 
 # ------------------------------------------- misc §2 operator parity entries
@@ -939,10 +884,6 @@ def _bm25_camel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 register("bm25_topk_camelcase", bm25_oracle_sql("tableScan mergeJoin the", 20))(_bm25_camel)
 
-# join + agg + ordered top-k (star-join shape already covered by
-# rel_revenue_by_nation; bounded top-k by longest_docs_top10)
-register("rel_top_customers", _rel.top_customers_sql())(_rel.top_customers)
-
 
 # A4 over a scalar column (demoted r3: the keyword-ARRAY variant
 # a4_categories_array_distribution is the closer reference parity)
@@ -959,13 +900,7 @@ def lang_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# exact countDistinct per group (demoted r3: a5_a7_events_per_user carries
-# the same countDistinct base; slot given to the MERGE/DELETE surface)
-register("rel_distinct_users_daily", _rel.DISTINCT_USERS_DAILY_SQL)(_rel.distinct_users_daily)
-
-
-# from_json extraction (demoted r3: rel_events_json_agg drives the same
-# JSON path through get_json_object + agg)
+# from_json extraction over the events props column
 @register(
     "s3_from_json_struct",
     """SELECT event_id, CAST(json_extract_string(props, '$.k') AS INT) AS k

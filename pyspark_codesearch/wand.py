@@ -283,12 +283,13 @@ def _score_salt(
     return pd.DataFrame({"doc_id": cand_ids[order], "score": cand_scores[order]})
 
 
-# 'auto' batch-strategy budget: max dense cells — docs x (terms +
-# queries), covering BOTH the contribution matrix C and the score matrix
-# S = C @ W — a single group task may allocate for the GEMM path. 8M
-# cells = 64 MB of float64, so even a full wave of concurrent tasks
-# stays far under executor memory. Above it the group falls back to the
-# MaxScore loop, whose working set is O(candidates), not O(docs x vocab).
+# wand_topk_batch's per-group GEMM budget: max dense cells — docs x
+# (terms + queries), covering BOTH the contribution matrix C and the
+# score matrix S = C @ W — a single group task may allocate for the
+# GEMM path. 8M cells = 64 MB of float64, so even a full wave of
+# concurrent tasks stays far under executor memory. Above it the group
+# falls back to the MaxScore loop, whose working set is O(candidates),
+# not O(docs x vocab).
 GEMM_BUDGET_CELLS = 8_000_000
 
 
@@ -769,22 +770,22 @@ def wand_topk_batch(
     salt_lookup: dict[str, tuple[int, ...]] | None = None,
     impact_scale: float = 1.0,
     salt_group_factor: int | None = 1,
-    strategy: str = "auto",
 ) -> DataFrame:
     """All queries in ONE cogroup pass: (query_id, rank, doc_id, score).
 
-    ``strategy='gemm'`` replaces the per-query MaxScore loop with one
-    scatter per TERM into a dense (group docs x batch terms) contribution
-    matrix C followed by a single ``C @ W`` matmul (W = terms x queries
-    qtf*idf weights) — per-query work collapses to one BLAS column +
-    top-k select. No per-query pruning, so it pays off when the batch is
-    wide enough that MaxScore's candidate freeze no longer saves decode
-    work (the contrib cache already decodes each term once either way):
+    Each group picks one of two exact scorers. The GEMM path replaces
+    the per-query MaxScore loop with one scatter per TERM into a dense
+    (group docs x batch terms) contribution matrix C followed by a
+    single ``C @ W`` matmul (W = terms x queries qtf*idf weights) —
+    per-query work collapses to one BLAS column + top-k select. No
+    per-query pruning, so it pays off when the batch is wide enough
+    that MaxScore's candidate freeze no longer saves decode work (the
+    contrib cache already decodes each term once either way):
     measured at sf0.1 x16 (80k docs, local[32]) the 36-query batch runs
     ~20% faster (1.0 vs 1.25 s), the 8-query batch at parity.
 
-    ``'auto'`` (default) decides PER GROUP, inside the task, where the
-    group's posting volume is known: gemm when the dense matrix stays
+    The pick is made PER GROUP, inside the task, where the group's
+    posting volume is known: gemm when the dense matrix stays
     under ``GEMM_BUDGET_CELLS`` (estimated as group postings x batch
     vocabulary — an upper bound of the true union x vocab), MaxScore
     otherwise — so a production-sized salt (2^20 docs) with a wide
@@ -810,8 +811,6 @@ def wand_topk_batch(
     ran 2.8x slower. Coarsening remains for latency-bound single
     queries (:func:`wand_topk` uses G=16 in the bench). Exactness is
     unaffected by G (doc ranges stay disjoint; pinned by tests)."""
-    if strategy not in ("maxscore", "gemm", "auto"):
-        raise ValueError(f"unknown batch strategy {strategy!r}")
     # snapshot on the DRIVER at plan time: score_fn runs in executor
     # python workers that re-import this module, where a test's (or
     # user's) module-level override would not be visible
@@ -871,18 +870,14 @@ def wand_topk_batch(
             t: g.sort_values(["salt", "block_id"])
             for t, g in seg_pdf.groupby("term", sort=False)
         }
-        pick = strategy
-        if pick == "auto":
-            # upper bound of the dense allocations without decoding
-            # anything: union of posting ids is capped by BOTH the
-            # group's total postings and the docs actually in this salt
-            # group (the cogrouped lens side lists exactly those). The
-            # budget covers C (docs x terms) AND the result S = C @ W
-            # (docs x queries) — a wide batch makes S the bigger matrix
-            est_docs = min(int(seg_pdf["n_docs"].sum()), _lens_count(lens_pdf))
-            est_cells = est_docs * (len(term_groups) + len(qtfs))
-            pick = "gemm" if est_cells <= gemm_budget else "maxscore"
-        if pick == "gemm":
+        # upper bound of the dense allocations without decoding
+        # anything: union of posting ids is capped by BOTH the group's
+        # total postings and the docs actually in this salt group (the
+        # cogrouped lens side lists exactly those). The budget covers C
+        # (docs x terms) AND the result S = C @ W (docs x queries) — a
+        # wide batch makes S the bigger matrix
+        est_docs = min(int(seg_pdf["n_docs"].sum()), _lens_count(lens_pdf))
+        if est_docs * (len(term_groups) + len(qtfs)) <= gemm_budget:
             return _score_group_gemm(
                 term_groups, lens_pdf, qtfs, dfs, n_docs, avgdl, k, k1, b,
                 qsalts, group_salts,

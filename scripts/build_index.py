@@ -29,12 +29,12 @@ def main() -> None:
     ap.add_argument("--salt-range", type=int, default=1 << 20)
     ap.add_argument(
         "--dense-ids", action="store_true",
-        help="dense doc ids via global row_number (single-partition sort; "
-             "test-scale only — default is scale-safe bucket-composed ids)",
+        help="dense doc ids 0..n-1: one id bucket (ingest_bucketed n_buckets=1) "
+             "instead of the default 1024",
     )
     args = ap.parse_args()
 
-    from pyspark_codesearch.corpus import ingest, ingest_bucketed, ingest_documents_df
+    from pyspark_codesearch.corpus import ingest_bucketed, ingest_documents_df
     from pyspark_codesearch.lineage import build_index_resumable, read_metrics
     from pyspark_codesearch.pyfiles import ensure_py_files
     from pyspark_codesearch.session import get_spark
@@ -43,7 +43,7 @@ def main() -> None:
     ensure_py_files(spark)
     raw = spark.read.parquet(args.input)
     if "content" in raw.columns:  # corpus shape (repo, path, commit, lang, content)
-        docs = ingest(raw) if args.dense_ids else ingest_bucketed(raw)
+        docs = ingest_bucketed(raw, n_buckets=1) if args.dense_ids else ingest_bucketed(raw)
     else:  # documents shape (doc_id, text, ...)
         docs = ingest_documents_df(raw)
     res = build_index_resumable(

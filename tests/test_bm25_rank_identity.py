@@ -9,7 +9,7 @@ source-code corpus and the driver documents table.
 import pytest
 from pyspark.sql import functions as F
 
-from pyspark_codesearch.corpus import corpus_df, generate_corpus, ingest
+from pyspark_codesearch.corpus import corpus_df, generate_corpus, ingest_bucketed
 from pyspark_codesearch.indexing import build_postings, build_term_stats, corpus_stats
 from pyspark_codesearch.oracle import OracleIndex
 from pyspark_codesearch.scoring import bm25_topk
@@ -31,7 +31,7 @@ N_DOCS = 400
 
 @pytest.fixture(scope="module")
 def engine(spark):
-    docs = ingest(corpus_df(spark, N_DOCS, seed=42)).cache()
+    docs = ingest_bucketed(corpus_df(spark, N_DOCS, seed=42), n_buckets=1).cache()
     postings = build_postings(docs).cache()
     return {
         "docs": docs,
@@ -115,17 +115,17 @@ def test_unique_term_exact_hit(engine, oracle):
 
 
 def test_bucketed_ingest_rank_parity(spark, engine, oracle):
-    """ingest_bucketed (scale-safe ids) must be score-identical to the
-    dense-id ingest: same docs, same tf/dl/df, same BM25 scores — only
+    """ingest_bucketed at 32 buckets must be score-identical to the
+    one-bucket (dense-id) ingest: same docs, same tf/dl/df, same BM25 scores — only
     the id values differ. Verified by mapping ids back to (repo, path)."""
-    from pyspark_codesearch.corpus import BUCKET_BITS, ingest_bucketed
+    from pyspark_codesearch.corpus import BUCKET_BITS
 
     docs_b = ingest_bucketed(corpus_df(spark, N_DOCS, seed=42), n_buckets=32).cache()
     # unique ids, bucket-composed
     n = docs_b.count()
     assert docs_b.select("doc_id").distinct().count() == n == N_DOCS
     assert docs_b.filter(F.col("doc_id") < 0).count() == 0
-    # identical (repo, path) -> (sha256, doc_len) mapping as the dense ingest
+    # identical (repo, path) -> (sha256, doc_len) mapping as the one-bucket ingest
     key = ["repo", "path", "commit"]
     a = {tuple(r[c] for c in key): (r["sha256"], r["doc_len"])
          for r in engine["docs"].select(*key, "sha256", "doc_len").collect()}

@@ -9,10 +9,17 @@ import pytest
 
 import __spark_entry__ as entry_mod
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["events", "documents", "embeddings"]
+
+# every search behaviour that remains keeps an entry AND an oracle; a
+# deletion that drops one of these fails here, not silently
+SEARCH_ENTRIES = {
+    "bm25_bestfields_multifield", "bm25_topk_camelcase", "bm25_topk_scan_merge",
+    "bm25_topk_with_miss", "bm25_wand_mixed_rarity", "bm25_wand_scan_merge",
+    "a1_bucket_order_best_chunk", "hybrid_bm25_cosine_topk",
+    "sc6_minmax_normalized_topk", "t4_offset_pagination", "chunker_1_to_n",
+    "merge_upsert_docs", "s9_delete_by_id", "s9_point_lookup",
+}
 
 
 def _duck(sf_dir):
@@ -55,6 +62,12 @@ def test_every_oracle_key_has_query():
     o = entry_mod.oracle_sql()
     assert set(o) <= set(q)
     assert len(q) > 0
+
+
+def test_search_entries_keep_their_oracles():
+    bm25 = {n for n in entry_mod.queries() if n.startswith("bm25_")}
+    missing = (SEARCH_ENTRIES | bm25) - set(entry_mod.oracle_sql())
+    assert not missing, sorted(missing)
 
 
 def test_bm25_queries_nonempty(spark, sf_dir):

@@ -1,5 +1,5 @@
 """Kill -9 the build mid-flight via the real spark-submit entrypoint,
-then resume and compare against an uninterrupted build (FIXTURES §8,
+then resume and compare against an uninterrupted build (FIXTURES §7,
 north rule checkpoint-resume)."""
 
 import json

@@ -1,4 +1,4 @@
-"""Checkpoint/resume: killed build resumes, output identical (FIXTURES §8)."""
+"""Checkpoint/resume: killed build resumes, output identical (FIXTURES §7)."""
 
 import os
 
@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pyspark_codesearch.codecs import delta_decode, varbyte_decode
-from pyspark_codesearch.corpus import corpus_df, ingest, ingest_documents_df
+from pyspark_codesearch.corpus import corpus_df, ingest_bucketed, ingest_documents_df
 from pyspark_codesearch.lineage import (
     BuildInterrupted,
     build_index_resumable,
@@ -22,7 +22,8 @@ N_DOCS = 200
 
 @pytest.fixture(scope="module")
 def docs(spark):
-    return ingest(corpus_df(spark, N_DOCS, seed=3, n_partitions=8)).cache()
+    raw = corpus_df(spark, N_DOCS, seed=3, n_partitions=8)
+    return ingest_bucketed(raw, n_buckets=1).cache()
 
 
 def _decode_all(rows):
@@ -70,8 +71,8 @@ def test_noop_on_rerun(spark, docs, tmp_path_factory):
 
 def test_fingerprint_invalidation(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("inval"))
-    docs_a = ingest(corpus_df(spark, 50, seed=1))
-    docs_b = ingest(corpus_df(spark, 50, seed=2))
+    docs_a = ingest_bucketed(corpus_df(spark, 50, seed=1), n_buckets=1)
+    docs_b = ingest_bucketed(corpus_df(spark, 50, seed=2), n_buckets=1)
     build_index_resumable(docs_a, d, n_buckets=2)
     res = build_index_resumable(docs_b, d, n_buckets=2)
     assert res["executed_units"] == 5  # everything re-ran: input changed

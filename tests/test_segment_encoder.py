@@ -13,7 +13,7 @@ import numpy as np
 import pytest
 
 from pyspark_codesearch.codecs import encode_blocked
-from pyspark_codesearch.corpus import corpus_df, ingest
+from pyspark_codesearch.corpus import corpus_df, ingest_bucketed
 from pyspark_codesearch.indexing import (
     BLOCK_SIZE,
     B,
@@ -31,7 +31,7 @@ def corpus(spark):
     # Zipfian terms; the hottest appear in all 140 docs, so at salt range
     # 1<<20 their groups run past one 128-posting block. Kept small: at
     # one record per Arrow batch every posting is its own batch.
-    docs = ingest(corpus_df(spark, 140, seed=11)).cache()
+    docs = ingest_bucketed(corpus_df(spark, 140, seed=11), n_buckets=1).cache()
     postings = build_postings_with_dl(docs).cache()
     rows = postings.collect()
     yield postings, corpus_stats(docs), rows

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pyspark_codesearch.codecs import delta_decode, varbyte_decode
-from pyspark_codesearch.corpus import corpus_df, ingest
+from pyspark_codesearch.corpus import corpus_df, ingest_bucketed
 from pyspark_codesearch.indexing import (
     build_postings,
     build_postings_with_dl,
@@ -31,7 +31,7 @@ SALT_RANGE = 64  # small so salting actually splits the corpus
 
 @pytest.fixture(scope="module")
 def env(spark):
-    docs = ingest(corpus_df(spark, N_DOCS, seed=7)).cache()
+    docs = ingest_bucketed(corpus_df(spark, N_DOCS, seed=7), n_buckets=1).cache()
     postings = build_postings(docs).cache()
     postings_dl = build_postings_with_dl(docs).cache()
     stats = corpus_stats(docs)
@@ -432,9 +432,12 @@ def test_wand_init_theta_soundness(env):
     assert none == []
 
 
-def test_wand_batch_gemm_strategy_exact(env):
-    """strategy='gemm' (one C @ W matmul per group) is result-identical
-    to the MaxScore loop: same docs, same ranks, scores to 1e-9."""
+def test_wand_batch_gemm_strategy_exact(env, monkeypatch):
+    """The GEMM group scorer (one C @ W matmul per group) is
+    result-identical to the MaxScore loop: same docs, same ranks, scores
+    to 1e-9. Each path is forced through the per-group budget: 0 cells
+    sends every group to MaxScore, 10**18 sends every group to GEMM."""
+    import pyspark_codesearch.wand as wand_mod
     from pyspark_codesearch.wand import (
         collect_term_salts,
         prepare_lens_by_salt,
@@ -453,35 +456,19 @@ def test_wand_batch_gemm_strategy_exact(env):
     }
     kw = dict(salt_range=SALT_RANGE, lens_by_salt=lens_by_salt,
               df_lookup=df_lookup, salt_lookup=salt_lookup)
-    base = wand_topk_batch(
-        env["segments"], env["doc_lens"], env["term_stats"], env["stats"],
-        qmap, 5, strategy="maxscore", **kw,
-    ).collect()
-    bk = {(r["query_id"], r["rank"]): (r["doc_id"], r["score"]) for r in base}
-    for strat in ("gemm", "auto"):
-        got = wand_topk_batch(
+
+    def run(budget):
+        monkeypatch.setattr(wand_mod, "GEMM_BUDGET_CELLS", budget)
+        rows = wand_topk_batch(
             env["segments"], env["doc_lens"], env["term_stats"], env["stats"],
-            qmap, 5, strategy=strat, **kw,
+            qmap, 5, **kw,
         ).collect()
-        gk = {(r["query_id"], r["rank"]): (r["doc_id"], r["score"]) for r in got}
-        assert bk.keys() == gk.keys(), strat
-        for key in bk:
-            assert bk[key][0] == gk[key][0], (strat, key)
-            assert gk[key][1] == pytest.approx(bk[key][1], abs=1e-9), (strat, key)
-    # auto falls back to maxscore when the dense matrix would exceed budget
-    import pyspark_codesearch.wand as wand_mod
-    old_budget = wand_mod.GEMM_BUDGET_CELLS
-    try:
-        wand_mod.GEMM_BUDGET_CELLS = 0
-        tiny = wand_topk_batch(
-            env["segments"], env["doc_lens"], env["term_stats"], env["stats"],
-            qmap, 5, strategy="auto", **kw,
-        ).collect()
-    finally:
-        wand_mod.GEMM_BUDGET_CELLS = old_budget
-    tk = {(r["query_id"], r["rank"]): (r["doc_id"], r["score"]) for r in tiny}
-    assert tk.keys() == bk.keys()
-    assert any(r["query_id"] == "b" for r in base)
-    with pytest.raises(ValueError):
-        wand_topk_batch(env["segments"], env["doc_lens"], env["term_stats"],
-                        env["stats"], qmap, 5, strategy="nope", **kw)
+        return {(r["query_id"], r["rank"]): (r["doc_id"], r["score"]) for r in rows}
+
+    bk = run(0)  # MaxScore everywhere
+    gk = run(10**18)  # GEMM everywhere
+    assert bk.keys() == gk.keys()
+    for key in bk:
+        assert bk[key][0] == gk[key][0], key
+        assert gk[key][1] == pytest.approx(bk[key][1], abs=1e-9), key
+    assert any(q == "b" for q, _ in bk)

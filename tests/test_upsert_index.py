@@ -8,7 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from pyspark_codesearch.corpus import corpus_df, ingest, ingest_documents_df
+from pyspark_codesearch.corpus import corpus_df, ingest_bucketed, ingest_documents_df
 from pyspark_codesearch.analysis import tokenize_py
 from pyspark_codesearch.indexing import CorpusStats
 from pyspark_codesearch.lineage import (
@@ -64,7 +64,7 @@ def _wand(spark, out, q, k=10, scale=1.0, salt_range=SALT_RANGE):
 @pytest.fixture(scope="module")
 def built(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("ix") / "base")
-    docs = ingest(corpus_df(spark, N_DOCS, seed=7)).cache()
+    docs = ingest_bucketed(corpus_df(spark, N_DOCS, seed=7), n_buckets=1).cache()
     build_index_resumable(docs, out, n_buckets=N_BUCKETS, salt_range=SALT_RANGE)
     # fresh reference index over the post-upsert corpus
     delta = _delta(spark)
@@ -176,7 +176,7 @@ def test_term_stats_consistent_after_upsert(spark, built):
 
 def test_delete_only(spark, tmp_path):
     out = str(tmp_path / "delix")
-    docs = ingest(corpus_df(spark, 60, seed=11))
+    docs = ingest_bucketed(corpus_df(spark, 60, seed=11), n_buckets=1)
     build_index_resumable(docs, out, n_buckets=2, salt_range=32)
     import re as _re
 
@@ -217,7 +217,7 @@ def test_upsert_crash_resume(spark, tmp_path):
 
     out = str(tmp_path / "cr")
     fresh = str(tmp_path / "cr_fresh")
-    docs = ingest(corpus_df(spark, 80, seed=13)).cache()
+    docs = ingest_bucketed(corpus_df(spark, 80, seed=13), n_buckets=1).cache()
     build_index_resumable(docs, out, n_buckets=2, salt_range=32)
 
     delta = _delta(spark)
@@ -272,7 +272,7 @@ def test_plan_is_parquet_sidetable(spark, built):
 
 def test_upsert_delete_overlap_raises(spark, tmp_path):
     out = str(tmp_path / "ov")
-    docs = ingest(corpus_df(spark, 40, seed=3))
+    docs = ingest_bucketed(corpus_df(spark, 40, seed=3), n_buckets=1)
     build_index_resumable(docs, out, n_buckets=2, salt_range=32)
     delta = _delta(spark)  # carries MOD_IDS = [5, 6, 7]
     with pytest.raises(ValueError, match="BOTH delta_docs and deleted_ids"):
@@ -285,7 +285,7 @@ def test_inprogress_upsert_refuses_different_delta(spark, tmp_path):
     from pyspark_codesearch.lineage import BuildInterrupted
 
     out = str(tmp_path / "ip")
-    docs = ingest(corpus_df(spark, 60, seed=5)).cache()
+    docs = ingest_bucketed(corpus_df(spark, 60, seed=5), n_buckets=1).cache()
     build_index_resumable(docs, out, n_buckets=2, salt_range=32)
     delta = _delta(spark)
     with pytest.raises(BuildInterrupted):
@@ -303,7 +303,7 @@ def test_inprogress_upsert_refuses_different_delta(spark, tmp_path):
 
 def test_deleted_ids_accepts_dataframe(spark, tmp_path):
     out = str(tmp_path / "dfdel")
-    docs = ingest(corpus_df(spark, 40, seed=9))
+    docs = ingest_bucketed(corpus_df(spark, 40, seed=9), n_buckets=1)
     build_index_resumable(docs, out, n_buckets=2, salt_range=32)
     dels = spark.createDataFrame([(2,), (3,)], "doc_id long")
     upsert_index(spark, out, None, deleted_ids=dels, salt_range=32)
@@ -314,7 +314,7 @@ def test_deleted_ids_accepts_dataframe(spark, tmp_path):
 
 def test_impact_scale_raises_without_built_avgdl(spark, tmp_path):
     out = str(tmp_path / "noavg")
-    docs = ingest(corpus_df(spark, 30, seed=4))
+    docs = ingest_bucketed(corpus_df(spark, 30, seed=4), n_buckets=1)
     build_index_resumable(docs, out, n_buckets=2, salt_range=32)
     # simulate an index built before built_avgdl existed
     p = os.path.join(out, "_lineage", "segments__bucket=0.json")
@@ -334,7 +334,7 @@ def test_large_vocab_delta_no_driver_lists(spark, tmp_path):
     test-suite-friendly (~2.4e4 distinct terms); the shape is identical
     at 1e6+ — no code path depends on the count."""
     out = str(tmp_path / "bigv")
-    docs = ingest(corpus_df(spark, 30, seed=21)).cache()
+    docs = ingest_bucketed(corpus_df(spark, 30, seed=21), n_buckets=1).cache()
     build_index_resumable(docs, out, n_buckets=2, salt_range=64)
     # 60 docs x 400 unique tokens each, generated JVM-side
     raw = (
@@ -369,7 +369,7 @@ def test_term_dictionary_for_index_refreshes_after_upsert(spark, tmp_path):
     from pyspark_codesearch.wand import TermDictionary
 
     out = str(tmp_path / "tdix")
-    docs = ingest(corpus_df(spark, 40, seed=15)).cache()
+    docs = ingest_bucketed(corpus_df(spark, 40, seed=15), n_buckets=1).cache()
     build_index_resumable(docs, out, n_buckets=2, salt_range=32)
     td = TermDictionary.for_index(spark, out)
     dfs0, _ = td.lookup(["merge", "upserterm"])

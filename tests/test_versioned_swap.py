@@ -15,7 +15,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from pyspark_codesearch.corpus import corpus_df, ingest, ingest_documents_df
+from pyspark_codesearch.corpus import corpus_df, ingest_bucketed, ingest_documents_df
 from pyspark_codesearch.lineage import (
     SUPERSEDED_GRACE_S,
     _swap_dir,
@@ -127,7 +127,8 @@ def test_scan_pinned_before_first_upsert_survives(spark, tmp_path):
     still reads its files after the index's first upsert: the upsert
     swaps versions instead of renaming the directory the scan listed."""
     out = str(tmp_path / "idx")
-    build_index_resumable(ingest(corpus_df(spark, 60)), out, n_buckets=2, salt_range=32)
+    docs = ingest_bucketed(corpus_df(spark, 60), n_buckets=1)
+    build_index_resumable(docs, out, n_buckets=2, salt_range=32)
     tables = ["docs", "doc_lens", "stats", "term_stats"] + [
         f"{sub}/bucket={b}" for sub in ("postings", "segments") for b in range(2)
     ]
@@ -152,7 +153,7 @@ def test_reader_loops_during_repeated_upsert_swaps(spark, tmp_path):
     repeatedly swap them underneath never hits an unhandled error, and
     each observed snapshot is internally sane."""
     out = str(tmp_path / "idx")
-    docs = ingest(corpus_df(spark, 120))
+    docs = ingest_bucketed(corpus_df(spark, 120), n_buckets=1)
     build_index_resumable(docs, out, n_buckets=2, salt_range=32)
 
     errors = []

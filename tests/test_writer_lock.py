@@ -15,7 +15,7 @@ import textwrap
 import pytest
 from pyspark.sql import functions as F
 
-from pyspark_codesearch.corpus import corpus_df, ingest, ingest_documents_df
+from pyspark_codesearch.corpus import corpus_df, ingest_bucketed, ingest_documents_df
 from pyspark_codesearch.lineage import (
     BuildInterrupted,
     ConcurrentWriteError,
@@ -41,7 +41,7 @@ def _plant_lock(out_dir: str, pid: int) -> str:
 
 
 def _tiny_docs(spark):
-    return ingest(corpus_df(spark, 20, seed=3)).cache()
+    return ingest_bucketed(corpus_df(spark, 20, seed=3), n_buckets=1).cache()
 
 
 def test_live_holder_refused_before_any_mutation(spark, tmp_path):
