@@ -18,8 +18,7 @@ wand        block-max WAND scorer over compressed segments (mapInPandas)
 search      reference-parity search service (multi_match best_fields,
             bool-sum, grouped best-chunk, min-max normalize, paginate)
 oracle      pure-python BM25 oracle for rank-identity tests
-operators/  keyed MERGE/upsert + DELETE by id (the upsert's docs merge),
-            plus the multimodal operators off the search path
+operators/  keyed MERGE/upsert + DELETE by id (the upsert's docs merge)
 streaming/  incremental index over a docs stream + delta compaction
 lineage     checkpoint/resume manifest + per-partition metrics
 """

@@ -15,29 +15,17 @@ from .indexing import B, K1, CorpusStats, build_term_stats, corpus_stats
 from .scoring import bm25_topk
 
 # -------------------------------------------------- single-query cost dispatch
-# Constants are MEASURED (scripts/crossover.py, replicated+needle sf0.1
+# The constant is MEASURED (scripts/crossover.py, replicated+needle sf0.1
 # corpora at 1.28M and 3.84M docs, local[32], warm caches, best-of-N
 # with exact/WAND/selective runs interleaved per point — r6, re-measured
 # r7 with per-point ALU controls; raw data BENCH/crossover_r7.json):
 #
-# COMMON shape (no dominant term — MaxScore cannot freeze, WAND
-# degenerates to a python full decode): the JVM exact plan wins at
-# EVERY measured volume through 83M matched postings in a clean-control
-# window (r7: exact 3.5/3.9/3.9/4.7/6.4/7.4 s vs WAND 4.9/5.2/5.6/6.4/
-# 7.9/8.3 s at 24/36/48/60/71/83M, per-point ALU 0.24-0.28 s). Two r6
-# artifacts had suggested a 16-28M crossover: a degraded-JVM window
-# (exact read 8.4-9.8 s at 27.7M there vs 3.5 s at 24M clean — the
-# python WAND workers were hit far less than the JVM) and a codegen
-# cliff in the old literal plan (a 28-branch CASE of full BM25
-# expressions crossed the JIT's 8KB generated-method limit: 22.8 s at
-# 28 terms vs 5.2 s flat at 20-24; fixed in scoring.py by folding only
-# the literal qtf*idf weight per branch). With the fix, exact's fixed
-# cost AND slope are below WAND's on healthy hardware — the constant
-# marks the edge of measured evidence, not an observed crossover, and
-# only hedges the unmeasured tail. Run D extends the evidence to
-# 110.9M: exact 7.39 s vs WAND 15.9 s (2.1x, clean control) — the
-# margin WIDENS with volume, because for the no-dominant-term shape
-# WAND has no pruning mechanism and is just a slower full decode.
+# COMMON shape (no dominant term): the JVM exact plan beat full-decode
+# WAND at every measured volume up to 110.9M matched postings (7.39 s
+# vs 15.9 s there, clean control), and the margin widened with volume:
+# without a dominant term WAND has no pruning mechanism and is only a
+# slower full decode. So a query with no dominant term always goes
+# exact.
 #
 # SELECTIVE shape (one dominant high-idf term — rare identifier plus
 # common context, the canonical code-search query): exact won through
@@ -55,20 +43,16 @@ from .scoring import bm25_topk
 # only when the head's max contribution bound (qtf·idf·max_impact from
 # the TermDictionary) dominates the rest's sum — the driver-side
 # predictor that phase 2 will be proved away or freeze immediately.
-# Non-dominated queries have zero prunable volume — no pruning mechanism
-# exists for them, which is WHY the common-shape threshold is so much
-# higher. Both paths are rank-identical (tests), so routing is purely a
+# Non-dominated queries have zero prunable volume and take the exact
+# plan. Both paths are rank-identical (tests), so routing is purely a
 # latency decision.
-# Selective band re-measured AFTER the codegen fix (run C,
-# BENCH/crossover_r7.json — 1.28M docs, interleaved, clean per-point
-# controls): exact 0.44/0.75/1.08 s vs WAND 0.83/0.84/0.81 s at
-# 2M/4M/8M prunable — the 2x-faster exact path moved the common-shape
-# threshold 4x but leaves this one where r6 put it: WAND's selective
-# cost is FLAT in volume (it decodes candidate-intersecting blocks
-# only), so the crossover tracks exact's slope, which halved along
-# with its intercept.
+# Selective band re-measured AFTER scoring.py's literal-plan codegen
+# fix (run C, BENCH/crossover_r7.json — 1.28M docs, interleaved, clean
+# per-point controls): exact 0.44/0.75/1.08 s vs WAND 0.83/0.84/0.81 s at
+# 2M/4M/8M prunable — WAND's selective cost is FLAT in volume (it
+# decodes candidate-intersecting blocks only), so the crossover tracks
+# exact's slope.
 SEARCH_EXACT_MAX_POSTINGS = 6_000_000  # selective band: exact ≤4M, WAND ≥8M
-SEARCH_COMMON_WAND_MIN_POSTINGS = 128_000_000  # exact measured winning ≤111M clean (r7)
 
 
 def search_topk_auto(
@@ -85,36 +69,26 @@ def search_topk_auto(
     df_lookup: dict[str, int] | None = None,
     salt_lookup: dict[str, tuple[int, ...]] | None = None,
     imp_lookup: dict[str, float] | None = None,
-    max_exact_postings: int = SEARCH_EXACT_MAX_POSTINGS,
-    common_wand_min_postings: int = SEARCH_COMMON_WAND_MIN_POSTINGS,
-    wand_salt_group_factor: int = 16,
     impact_scale: float = 1.0,
     route_out: dict | None = None,
 ) -> DataFrame:
     """Single-query top-k with shape-aware cost dispatch (see the
-    constants' comment for the measurements behind it):
+    constant's comment for the measurements behind it): PRUNABLE volume
+    above ``SEARCH_EXACT_MAX_POSTINGS`` — a dominant-term query whose
+    common-term tail is big — routes to the two-phase selective WAND
+    plan (global-θ hand-off, phase 2 usually proved away); everything
+    else takes the literal-CASE exact JVM plan. ``route_out`` (if a dict
+    is passed) records the routing decision and the selective plan's
+    phase diagnostics.
 
-    - PRUNABLE volume above ``max_exact_postings`` — a dominant-term
-      query whose common-term tail is big — routes to the two-phase
-      selective WAND plan (global-θ hand-off, phase 2 usually proved
-      away).
-    - otherwise TOTAL volume above ``common_wand_min_postings`` (the
-      measured full-decode crossover, no pruning possible) also routes
-      WAND.
-    - everything else takes the literal-CASE exact JVM plan.
-
-    ``max_exact_postings <= 0`` forces the WAND route (test/debug hook).
-    ``route_out`` (if a dict is passed) records the routing decision and
-    the selective plan's phase diagnostics.
-
-    EXECUTION SEMANTICS: the exact and full-WAND routes return lazy
-    DataFrames (cost paid at action time, composable into larger plans);
-    the SELECTIVE route executes eagerly — ``wand_topk_selective``'s
-    global-θ hand-off needs two driver collects, so its result is a
-    snapshot-at-call DataFrame of literal rows. Callers composing the
-    result into a bigger unexecuted plan get call-time data on that
-    route; collect()-immediately callers (tests, bench, the driver
-    entry) see no difference."""
+    EXECUTION SEMANTICS: the exact route returns a lazy DataFrame (cost
+    paid at action time, composable into larger plans); the SELECTIVE
+    route executes eagerly — ``wand_topk_selective``'s global-θ hand-off
+    needs two driver collects, so its result is a snapshot-at-call
+    DataFrame of literal rows. Callers composing the result into a
+    bigger unexecuted plan get call-time data on that route;
+    collect()-immediately callers (tests, bench, the driver entry) see
+    no difference."""
     from collections import Counter
 
     qtf = Counter(tokenize_py(query))
@@ -140,30 +114,18 @@ def search_topk_auto(
         v for t, v in c_of.items() if t != head
     )
     prunable = matched_volume - df_lookup[head] if dominated else 0
-    wand_plan = None
-    if max_exact_postings <= 0 or prunable > max_exact_postings:
-        wand_plan = "selective"  # pruning predicted to pay: two-phase θ plan
-    elif matched_volume > common_wand_min_postings:
-        wand_plan = "full"  # no pruning possible; full decode still wins here
+    # read at call time so a test can patch the module constant
+    selective = prunable > SEARCH_EXACT_MAX_POSTINGS
     if route_out is not None:
         route_out.update(
             matched_postings=matched_volume,
             prunable_postings=prunable,
-            route="wand" if wand_plan else "exact",
-            wand_plan=wand_plan,
+            route="wand" if selective else "exact",
+            wand_plan="selective" if selective else None,
         )
-    if wand_plan is None:
+    if not selective:
         return bm25_topk(
             postings, doc_lens, term_stats, stats, query, k, df_lookup=df_lookup
-        )
-    if wand_plan == "full":
-        from .wand import wand_topk
-
-        return wand_topk(
-            segments, doc_lens, term_stats, stats, query, k,
-            salt_range=salt_range, lens_by_salt=lens_by_salt,
-            df_lookup=df_lookup, salt_lookup=salt_lookup,
-            impact_scale=impact_scale, salt_group_factor=wand_salt_group_factor,
         )
     from .wand import collect_term_salts, wand_topk_selective
 
@@ -175,8 +137,7 @@ def search_topk_auto(
         segments, doc_lens, term_stats, stats, query, k,
         salt_range=salt_range, lens_by_salt=lens_by_salt,
         df_lookup=df_lookup, salt_lookup=salt_lookup, imp_lookup=imp_lookup,
-        impact_scale=impact_scale, salt_group_factor=wand_salt_group_factor,
-        route_out=route_out,
+        impact_scale=impact_scale, route_out=route_out,
     )
 
 

@@ -73,8 +73,8 @@ def build_postings_with_dl(docs: DataFrame, *, cluster_by_doc: bool = True) -> D
     measured 0.22 → 0.10 s/q at 80k docs). The batch scorer's
     groupBy(query_id, doc_id) elides the same way. Costs one
     postings-sized exchange per build — build-only consumers that
-    immediately re-partition by another key (lineage bucket rewrites,
-    write_index) pass False and skip it."""
+    immediately re-partition by another key (segment builds, lineage
+    bucket rewrites) pass False and skip it."""
     out = (
         docs.select("doc_id", F.col("doc_len").alias("dl"), F.explode("tokens").alias("term"))
         .groupBy("term", "doc_id", "dl")
@@ -193,40 +193,3 @@ def build_segments(
     # One extra build-time exchange of block rows (postings/128), which
     # the per-query savings repay after a handful of queries.
     return encoded.repartition("salt")
-
-
-def write_index(
-    docs: DataFrame,
-    out_dir: str,
-    *,
-    salt_range: int = 1 << 20,
-    k1: float = K1,
-    b: float = B,
-) -> CorpusStats:
-    """Materialize the full index (postings segments + doc side tables).
-
-    Segments parquet is sorted by term within files so parquet row-group
-    min/max stats prune term lookups (the scan-level analogue of Lucene's
-    term dictionary seek); at cluster scale you'd layer a term-hash bucket
-    partitioning on top (bucketBy) for static pruning.
-    """
-    stats = corpus_stats(docs)
-    doc_lens = docs.select("doc_id", "doc_len")
-    # build-only path: segments re-partition by (term, salt) and the
-    # parquet outputs carry their own layout — skip the doc_id exchange
-    postings_dl = build_postings_with_dl(docs, cluster_by_doc=False)
-    segs = build_segments(postings_dl, stats, salt_range=salt_range, k1=k1, b=b)
-    segs.sortWithinPartitions("term", "salt", "block_id").write.mode("overwrite").parquet(
-        f"{out_dir}/segments"
-    )
-    postings_dl.select("term", "doc_id", "tf").write.mode("overwrite").parquet(
-        f"{out_dir}/postings"
-    )
-    build_term_stats(postings_dl).write.mode("overwrite").parquet(f"{out_dir}/term_stats")
-    docs.drop("tokens").write.mode("overwrite").parquet(f"{out_dir}/docs")
-    doc_lens.write.mode("overwrite").parquet(f"{out_dir}/doc_lens")
-    spark = docs.sparkSession
-    spark.createDataFrame(
-        [(stats.n_docs, stats.avgdl, k1, b)], "n_docs long, avgdl double, k1 double, b double"
-    ).write.mode("overwrite").parquet(f"{out_dir}/stats")
-    return stats

@@ -9,17 +9,9 @@ standard library + numpy:
 - PNG  (8-bit gray/RGB/RGBA, non-interlaced): stdlib ``zlib`` inflate +
   the five scanline unfilters (sub/up/average/paeth) in numpy
 
-These back ``operators/multimodal.extract_features``'s real-decode path
-(reference analogue: the ingest pipeline's image handling around
-data_pipeline/ingest_papers.py figures + the has_images/base64 surface,
-SURVEY §2.8 F10-F13). Feature kernels are deterministic numpy, so the
-driver's DuckDB VALUES oracle can pin them by value: the SAME functions
-run at oracle-registration time (pure python, no Spark) and inside the
-Arrow batches on executors.
-
-Scale note: decode cost is per-row map-side work inside ``mapInPandas``
-— no shuffle, bounded batches; a 100 TB media corpus streams through
-exactly like the fake path did.
+No package module calls them: they served the multimodal feature
+operator, which is deleted, and are kept only with their own tests until
+their own deletion (ROADMAP direction 3).
 """
 
 from __future__ import annotations

@@ -414,7 +414,7 @@ class TermDictionary:
     The distributed side is one cached (term, salts, df) table (segments'
     per-term salt sets joined with term_stats — at 10^12-file scale this
     is vocab-sized but stays distributed, a few bytes per term like a
-    Lucene term dictionary). ``lookup(terms)`` collects exactly the rows
+    Lucene term dictionary). ``lookup3(terms)`` collects exactly the rows
     for terms it has not seen before (negative results cached too), so
     the resident dict is bounded by the QUERIED vocabulary, not the
     corpus vocabulary. ``fetched_terms`` records every term ever sent to
@@ -494,10 +494,6 @@ class TermDictionary:
         self._salts.clear()
         self._imp.clear()
         self._miss.clear()
-
-    def lookup(self, terms) -> tuple[dict[str, int], dict[str, tuple[int, ...]]]:
-        dfs, salts, _ = self.lookup3(terms)
-        return dfs, salts
 
     def lookup3(
         self, terms
@@ -769,7 +765,7 @@ def wand_topk_batch(
     df_lookup: dict[str, int] | None = None,
     salt_lookup: dict[str, tuple[int, ...]] | None = None,
     impact_scale: float = 1.0,
-    salt_group_factor: int | None = 1,
+    salt_group_factor: int = 1,
 ) -> DataFrame:
     """All queries in ONE cogroup pass: (query_id, rank, doc_id, score).
 
@@ -802,13 +798,12 @@ def wand_topk_batch(
     so untouched salts cost nothing.
 
     ``salt_group_factor`` (G) coarsens the cogroup key to ``salt // G``
-    like :func:`wand_topk`; ``None`` auto-sizes for ~2 tasks per core.
-    DEFAULT IS 1 — measured (3.84M docs, 36 queries, local[2] and
-    local[8]): once the per-task python work is pre-split (term_groups)
-    and the query-independent contrib vectors are cached, finer tasks
-    win at every parallelism level (better wave balancing, smaller
-    per-task lens span); G=8 at 8 cores left half the cores idle and
-    ran 2.8x slower. Coarsening remains for latency-bound single
+    like :func:`wand_topk`. DEFAULT IS 1 — measured (3.84M docs, 36
+    queries, local[2] and local[8]): once the per-task python work is
+    pre-split (term_groups) and the query-independent contrib vectors
+    are cached, finer tasks win at every parallelism level (better wave
+    balancing, smaller per-task lens span); G=8 at 8 cores left half the
+    cores idle and ran 2.8x slower. Coarsening remains for latency-bound single
     queries (:func:`wand_topk` uses G=16 in the bench). Exactness is
     unaffected by G (doc ranges stay disjoint; pinned by tests)."""
     # snapshot on the DRIVER at plan time: score_fn runs in executor
@@ -838,7 +833,6 @@ def wand_topk_batch(
     seg = segments.filter(_in_expr("term", list(dfs)))
     lens = _lens(doc_lens, lens_by_salt, salt_range)
     qsalts = None
-    union: list[int] = []
     if salt_lookup is not None:
         union = _touched_salts(dfs, salt_lookup)
         if not union:
@@ -849,10 +843,6 @@ def wand_topk_batch(
         # per-query touched-salt sets: a query skips salts that only
         # OTHER queries' terms touch (cheap set probe per group)
         qsalts = {qid: set(_touched_salts(m, salt_lookup)) for qid, m in qtfs.items()}
-    if salt_group_factor is None:
-        # auto: ~2 scorer tasks per core (needs the touched-salt union)
-        cores = max(1, spark.sparkContext.defaultParallelism)
-        salt_group_factor = max(1, len(union) // (cores * 2)) if union else 1
     n_docs, avgdl = stats.n_docs, stats.avgdl
 
     def score_fn(key, seg_pdf: pd.DataFrame, lens_pdf: pd.DataFrame) -> pd.DataFrame:

@@ -50,9 +50,8 @@ def ramp_queries(
     rare = min(df_by_term.items(), key=lambda kv: (kv[1], kv[0]))[0]
     out = [("common", rare)]
     # CROSSOVER_NS overrides the term-count ramp — used to add mid-band
-    # points (r6 verdict #3: the 16M point flipped winner with the
-    # window, leaving SEARCH_COMMON_WAND_MIN_POSTINGS in an [8M, 28M]
-    # band; a clean-window 12-20M point pins it)
+    # points (the 16M common point flipped winner with the host window;
+    # a clean-window 12-20M point pins it)
     ns = tuple(
         int(x)
         for x in os.environ.get("CROSSOVER_NS", "1,2,4,8,16,28").split(",")

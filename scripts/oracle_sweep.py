@@ -22,7 +22,7 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = ["events", "documents", "embeddings"]
+TABLES = ["documents", "embeddings"]
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:

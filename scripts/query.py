@@ -50,7 +50,7 @@ def main() -> None:
         )
     else:
         from pyspark_codesearch.analysis import tokenize_py
-        from pyspark_codesearch.lineage import load_segments_for_terms
+        from pyspark_codesearch.lineage import impact_scale, load_segments_for_terms
         from pyspark_codesearch.wand import wand_topk_batch
 
         # static bucket pruning: only the bucket directories the queries'
@@ -60,15 +60,10 @@ def main() -> None:
         segments = load_segments_for_terms(spark, ix, all_terms)
         # after upserts shift avgdl, stored block maxima need scaling for
         # pruning to stay lossless (no-op scale=1.0 on a fresh build)
-        scale = 1.0
-        if os.path.isdir(f"{ix}/_lineage"):
-            from pyspark_codesearch.lineage import impact_scale
-
-            scale = impact_scale(ix, stats.avgdl)
         out = wand_topk_batch(
             segments, doc_lens, term_stats, stats,
             {f"q{i}": q for i, q in enumerate(args.query)}, args.k,
-            salt_range=args.salt_range, impact_scale=scale,
+            salt_range=args.salt_range, impact_scale=impact_scale(ix, stats.avgdl),
         )
     for r in out.collect():
         print(json.dumps({"query_id": r["query_id"], "rank": r["rank"],

@@ -9,7 +9,7 @@ import pytest
 
 import __spark_entry__ as entry_mod
 
-TABLES = ["events", "documents", "embeddings"]
+TABLES = ["documents", "embeddings"]
 
 # every search behaviour that remains keeps an entry AND an oracle; a
 # deletion that drops one of these fails here, not silently

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pyspark_codesearch.corpus import corpus_df, ingest_bucketed
-from pyspark_codesearch.indexing import write_index
+from pyspark_codesearch.lineage import build_index_resumable, load_segments, read_table
 from pyspark_codesearch.scoring import bm25_topk
 
 
@@ -32,7 +32,7 @@ FORBIDDEN = "BatchEvalPython"  # row-at-a-time python UDF node
 def index_dir(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("ix"))
     docs = ingest_bucketed(corpus_df(spark, 200, seed=9), n_buckets=1)
-    write_index(docs, d, salt_range=64)
+    build_index_resumable(docs, d, n_buckets=2, salt_range=64)
     return d
 
 
@@ -63,21 +63,21 @@ def test_no_per_row_python_in_core_plans(spark, sf_dir):
 
 
 def test_term_filter_pushed_to_parquet_scan(spark, index_dir):
-    segs = spark.read.parquet(f"{index_dir}/segments")
+    segs = load_segments(spark, index_dir)
     q = segs.filter(F.col("term").isin("parse", "json", "string"))
     p = full_plan(q)
     assert re.search(r"PushedFilters: \[.*[Ii]n\(term", p), p
 
 
 def test_column_pruning_reaches_scan(spark, index_dir):
-    docs = spark.read.parquet(f"{index_dir}/docs")
+    docs = read_table(spark, index_dir, "docs")
     q = docs.select("doc_id", "lang")
     p = full_plan(q)
     m = re.search(r"ReadSchema: struct<([^>]*)>", p)
     assert m and set(f.split(":")[0] for f in m.group(1).split(",")) == {"doc_id", "lang"}
 
 
-def test_bm25_plan_shape(spark, index_dir):
+def test_bm25_plan_shape(spark):
     # exact scorer: heap top-k + broadcast + codegen
     docs = ingest_bucketed(corpus_df(spark, 200, seed=9), n_buckets=1)
     from pyspark_codesearch.indexing import (

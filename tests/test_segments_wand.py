@@ -225,14 +225,14 @@ def test_term_dictionary_filtered_lookups(env):
     full_salts = collect_term_salts(env["segments"])
 
     terms = ["parse", "json", "zzznotaterm"]
-    dfs, salts = td.lookup(terms)
+    dfs, salts, _ = td.lookup3(terms)
     assert dfs == {t: full_df[t] for t in ["parse", "json"]}
     assert salts == {t: full_salts[t] for t in ["parse", "json"]}
     # only the asked-for terms ever reached a collect
     assert td.fetched_terms == set(terms)
     assert set(td._df) <= set(terms)
     # repeat + subset: no new fetches (hits AND the miss are cached)
-    td.lookup(["json", "zzznotaterm"])
+    td.lookup3(["json", "zzznotaterm"])
     assert td.fetched_terms == set(terms)
 
 
@@ -280,8 +280,8 @@ def test_wand_batch_matches_single(env):
 
 
 def test_wand_batch_salt_group_factor_exact(env):
-    """Coarse cogroup keys (salt_group_factor > 1, incl. auto) are a pure
-    scheduling optimization: results identical to G=1."""
+    """Coarse cogroup keys (salt_group_factor > 1) are a pure scheduling
+    optimization: results identical to G=1."""
     from pyspark_codesearch.wand import (
         collect_term_salts,
         prepare_lens_by_salt,
@@ -302,7 +302,7 @@ def test_wand_batch_salt_group_factor_exact(env):
         env["segments"], env["doc_lens"], env["term_stats"], env["stats"],
         qmap, 5, salt_group_factor=1, **kw,
     ).collect()
-    for g in (8, 10**6, None):  # coarse, single-task, auto
+    for g in (8, 10**6):  # coarse, single-task
         got = wand_topk_batch(
             env["segments"], env["doc_lens"], env["term_stats"], env["stats"],
             qmap, 5, salt_group_factor=g, **kw,
@@ -311,10 +311,11 @@ def test_wand_batch_salt_group_factor_exact(env):
     assert any(r["query_id"] == "b" for r in base)
 
 
-def test_search_topk_auto_dispatch(env):
-    """Cost dispatch routes on matched posting volume and both routes
+def test_search_topk_auto_dispatch(env, monkeypatch):
+    """Cost dispatch routes on prunable posting volume and both routes
     return the same ranking (the two paths are rank-identical; dispatch
     is purely a latency decision)."""
+    from pyspark_codesearch import engine
     from pyspark_codesearch.engine import search_topk_auto
 
     q = "parse json string"
@@ -322,28 +323,31 @@ def test_search_topk_auto_dispatch(env):
         env["postings_dl"], env["doc_lens"], env["term_stats"], env["stats"], q, 10,
     ).collect()]
 
-    def run(budget):
+    def run(query=q, k=10):
         route: dict = {}
         out = search_topk_auto(
             env["postings_dl"], env["segments"], env["doc_lens"],
-            env["term_stats"], env["stats"], q, 10,
-            salt_range=SALT_RANGE, max_exact_postings=budget, route_out=route,
+            env["term_stats"], env["stats"], query, k,
+            salt_range=SALT_RANGE, route_out=route,
         )
+        assert route["wand_plan"] in (None, "selective")
         return out, route
 
     # small volume (300-doc corpus) -> exact path: one JVM plan, no
     # python scorer cogroup anywhere in it
-    out, route = run(10**9)
+    out, route = run()
     assert route["route"] == "exact" and route["matched_postings"] > 0
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapCoGroupsInPandas" not in plan
     got = [(r["doc_id"], r["score"]) for r in out.collect()]
     assert [d for d, _ in got] == [d for d, _ in base]
 
-    # budget 0 forces the WAND route (two-phase selective plan: the θ
-    # hand-off collects eagerly, so assert via route_out + results, not
-    # plan shape); rank-identical, scores to 1e-9
-    out, route = run(0)
+    # a threshold below zero forces the WAND route (two-phase selective
+    # plan: the θ hand-off collects eagerly, so assert via route_out +
+    # results, not plan shape); rank-identical, scores to 1e-9
+    with monkeypatch.context() as m:
+        m.setattr(engine, "SEARCH_EXACT_MAX_POSTINGS", -1)
+        out, route = run()
     assert route["route"] == "wand"
     assert route["phase2"] in ("proved_away", "seeded", "no_other_salts")
     got = [(r["doc_id"], r["score"]) for r in out.collect()]
@@ -352,12 +356,7 @@ def test_search_topk_auto_dispatch(env):
         assert s == pytest.approx(e, abs=1e-9)
 
     # no df_lookup provided -> the dispatcher seeks term_stats itself
-    route = {}
-    out = search_topk_auto(
-        env["postings_dl"], env["segments"], env["doc_lens"],
-        env["term_stats"], env["stats"], "uniqterm000042", 5,
-        salt_range=SALT_RANGE, route_out=route,
-    )
+    out, route = run("uniqterm000042", 5)
     assert route["route"] == "exact"
     assert out.count() >= 1
 

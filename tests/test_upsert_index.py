@@ -372,12 +372,12 @@ def test_term_dictionary_for_index_refreshes_after_upsert(spark, tmp_path):
     docs = ingest_bucketed(corpus_df(spark, 40, seed=15), n_buckets=1).cache()
     build_index_resumable(docs, out, n_buckets=2, salt_range=32)
     td = TermDictionary.for_index(spark, out)
-    dfs0, _ = td.lookup(["merge", "upserterm"])
+    dfs0, _, _ = td.lookup3(["merge", "upserterm"])
     assert "merge" in dfs0 and "upserterm" not in dfs0
 
     upsert_index(spark, out, _delta(spark), salt_range=32)
     td.invalidate()
-    dfs1, salts1 = td.lookup(["merge", "upserterm"])
+    dfs1, salts1, _ = td.lookup3(["merge", "upserterm"])
     # the delta's brand-new term is now visible with its true df (3 mods
     # + 2 inserts carry 'upserterm'/'insertterm' markers -> df >= 3)
     assert dfs1.get("upserterm", 0) >= 3
