@@ -124,9 +124,7 @@ def search_topk_auto(
             wand_plan="selective" if selective else None,
         )
     if not selective:
-        return bm25_topk(
-            postings, doc_lens, term_stats, stats, query, k, df_lookup=df_lookup
-        )
+        return bm25_topk(postings, term_stats, stats, query, k, df_lookup=df_lookup)
     from .wand import collect_term_salts, wand_topk_selective
 
     if salt_lookup is None:
@@ -172,9 +170,7 @@ class DocumentsEngine:
         return self._segments
 
     def search(self, query: str, k: int = 10, round_to: int | None = None) -> DataFrame:
-        out = bm25_topk(
-            self.postings, self.doc_lens, self.term_stats, self.stats, query, k
-        )
+        out = bm25_topk(self.postings, self.term_stats, self.stats, query, k)
         if round_to is not None:
             out = out.select("doc_id", F.round("score", round_to).alias("score"))
         return out
@@ -184,9 +180,7 @@ class DocumentsEngine:
         group/rank downstream (e.g. the A1 terms-agg entry)."""
         from .scoring import bm25_scores
 
-        out = bm25_scores(
-            self.postings, self.doc_lens, self.term_stats, self.stats, query
-        )
+        out = bm25_scores(self.postings, self.term_stats, self.stats, query)
         if round_to is not None:
             out = out.select("doc_id", F.round("score", round_to).alias("score"))
         return out

@@ -48,7 +48,7 @@ def oracle_sf_dir() -> str:
     )
 
 
-def register(name: str, sql: str | Callable[[], str] | None = None):
+def register(name: str, sql: str | Callable[[], str]):
     def deco(fn):
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             # executors must be able to import this package (pandas UDF
@@ -65,8 +65,7 @@ def register(name: str, sql: str | Callable[[], str] | None = None):
 
         wrapped.__name__ = getattr(fn, "__name__", name)
         QUERIES[name] = wrapped
-        if sql is not None:
-            ORACLE_SQL[name] = sql
+        ORACLE_SQL[name] = sql
         return fn
 
     return deco

@@ -4,7 +4,7 @@ Spark-first design (vs the reference, which delegates all of this to Lucene
 inside Elasticsearch — declared by the ES mapping, es_indexer.py:78-143):
 
   docs(doc_id, tokens, doc_len)
-    -> postings(term, doc_id, tf)                 [explode + groupBy]
+    -> postings(term, doc_id, tf, dl)             [explode + groupBy]
     -> term_stats(term, df)                       [groupBy, broadcastable]
     -> corpus_stats(n_docs, avgdl)                [2 scalars]
     -> segments(term, salt, block_id, ...)        [salted repartition +
@@ -49,15 +49,6 @@ SEGMENT_SCHEMA = (
 class CorpusStats(NamedTuple):
     n_docs: int
     avgdl: float
-
-
-def build_postings(docs: DataFrame) -> DataFrame:
-    """(doc_id, tokens) -> (term, doc_id, tf). One shuffle, map-side combined."""
-    return (
-        docs.select("doc_id", F.explode("tokens").alias("term"))
-        .groupBy("term", "doc_id")
-        .agg(F.count(F.lit(1)).cast("int").alias("tf"))
-    )
 
 
 def build_postings_with_dl(docs: DataFrame, *, cluster_by_doc: bool = True) -> DataFrame:

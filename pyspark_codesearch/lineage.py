@@ -412,7 +412,10 @@ def _build_index_resumable_unlocked(
     stats = CorpusStats(int(st_row["n_docs"]), float(st_row["avgdl"]))
     for b in range(n_buckets):
         unit = f"segments/bucket={b}"
-        fp = f"{docs_fp}:bucket={b}"
+        # salt_range is part of the bucket's fingerprint: a build resumed
+        # with another value rebuilds every bucket instead of mixing two
+        # salt layouts in one index
+        fp = f"{docs_fp}:bucket={b}:salt={salt_range}"
 
         def do_bucket(b=b):
             part = read_table(spark, out_dir, f"postings/bucket={b}")
@@ -567,19 +570,42 @@ def impact_scale(out_dir: str, current_avgdl: float) -> float:
     would make MaxScore pruning UNSOUND after an avgdl-increasing upsert
     — rebuild the bucket (or the index) to restore the invariant."""
     scale = 1.0
-    mdir = _manifest_dir(out_dir)
-    for fn in os.listdir(mdir):
-        if fn.startswith("segments__") and fn.endswith(".json"):
-            with open(os.path.join(mdir, fn)) as f:
-                built = json.load(f).get("built_avgdl")
-            if not built:
-                raise ValueError(
-                    f"segments manifest {fn} lacks built_avgdl — cannot derive "
-                    "a sound MaxScore bound; rebuild this bucket before "
-                    "relying on impact-scaled pruning"
-                )
-            scale = max(scale, float(current_avgdl) / float(built))
+    for fn, rec in _segment_manifests(out_dir):
+        built = rec.get("built_avgdl")
+        if not built:
+            raise ValueError(
+                f"segments manifest {fn} lacks built_avgdl — cannot derive "
+                "a sound MaxScore bound; rebuild this bucket before "
+                "relying on impact-scaled pruning"
+            )
+        scale = max(scale, float(current_avgdl) / float(built))
     return scale
+
+
+def salt_range_of(out_dir: str) -> int:
+    """The doc-id salt range the index's segments were built with.
+
+    It is a property of the built index, not a query option: scoring or
+    rewriting a bucket with any other value keys the doc_lens side by the
+    wrong salts and silently drops documents from the top-k. Raises
+    ValueError when a segments manifest lacks the field or the buckets
+    disagree — rebuild the index then."""
+    found = set()
+    for fn, rec in _segment_manifests(out_dir):
+        if not rec.get("salt_range"):
+            raise ValueError(f"segments manifest {fn} lacks salt_range; rebuild the index")
+        found.add(int(rec["salt_range"]))
+    if len(found) != 1:
+        raise ValueError(f"segments of {out_dir} record salt ranges {sorted(found)}")
+    return found.pop()
+
+
+def _segment_manifests(out_dir: str):
+    """(file name, record) of each live segments bucket's manifest."""
+    for b in segment_bucket_ids(out_dir):
+        p = _manifest_path(out_dir, f"segments/bucket={b}")
+        with open(p) as f:
+            yield os.path.basename(p), json.load(f)
 
 
 def upsert_index(
@@ -588,7 +614,6 @@ def upsert_index(
     delta_docs: DataFrame | None = None,
     *,
     deleted_ids: list[int] | DataFrame | None = None,
-    salt_range: int = 1 << 20,
     fail_after_units: int | None = None,
 ) -> dict:
     """Public entry: :func:`_upsert_index_unlocked` under the index
@@ -599,7 +624,6 @@ def upsert_index(
             out_dir,
             delta_docs,
             deleted_ids=deleted_ids,
-            salt_range=salt_range,
             fail_after_units=fail_after_units,
         )
 
@@ -610,7 +634,6 @@ def _upsert_index_unlocked(
     delta_docs: DataFrame | None = None,
     *,
     deleted_ids: list[int] | DataFrame | None = None,
-    salt_range: int = 1 << 20,
     fail_after_units: int | None = None,
 ) -> dict:
     """Apply a keyed upsert (+ deletes) to a built index, incrementally.
@@ -633,7 +656,8 @@ def _upsert_index_unlocked(
        recomputed from the rewritten buckets only (joins against the plan
        table, not literal lists).
     5. per affected segments bucket: rebuild from the new postings with
-       CURRENT stats; manifests record built_avgdl for impact_scale().
+       CURRENT stats and the index's own salt range (:func:`salt_range_of`);
+       manifests record built_avgdl for impact_scale().
 
     Guards:
     - a doc_id present in BOTH delta_docs and deleted_ids raises
@@ -656,6 +680,7 @@ def _upsert_index_unlocked(
     n_buckets = len(
         [d for d in os.listdir(f"{out_dir}/postings") if d.startswith("bucket=")]
     )
+    salt_range = salt_range_of(out_dir)
     base_docs = spark.read.parquet(f"{out_dir}/docs")
 
     if deleted_ids is None:
@@ -949,13 +974,11 @@ def _check_no_inprogress_upsert(out_dir: str, delta_fp: str) -> None:
         )
 
 
-def delete_from_index(
-    spark: SparkSession, out_dir: str, ids: list[int], *, salt_range: int = 1 << 20
-) -> dict:
+def delete_from_index(spark: SparkSession, out_dir: str, ids: list[int]) -> dict:
     """DELETE FROM the index by doc id — the delta-less half of
     :func:`upsert_index` (docs, postings, term_stats, segments all drop
     the rows; only the buckets holding the deleted docs' terms rewrite)."""
-    return upsert_index(spark, out_dir, None, deleted_ids=ids, salt_range=salt_range)
+    return upsert_index(spark, out_dir, None, deleted_ids=ids)
 
 
 def _resolve_snapshot(path: str) -> str:

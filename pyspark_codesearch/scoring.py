@@ -1,11 +1,13 @@
 """Exact BM25 top-k over uncompressed postings — the pure-DataFrame path.
 
-The whole query is ONE Catalyst plan: broadcast the (tiny) query-term set
-against postings (J5 in SURVEY §2.3), compute per-(doc, term) BM25 as a
-column expression (whole-stage codegen, no python), sum per doc, and let
-``orderBy(...).limit(k)`` plan a TakeOrderedAndProject (per-partition
-bounded heap + driver merge — exactly the north rule's "bounded top-k
-heap", provided by Spark's physical planner).
+The whole query is ONE Catalyst plan over dl-carrying postings (term,
+doc_id, tf, dl): filter the postings to the query terms, fold the term
+weights in as literals (a broadcast query-term frame only past
+``LITERAL_TERM_BUDGET`` terms, J5 in SURVEY §2.3), compute per-(doc,
+term) BM25 as a column expression (whole-stage codegen, no python), sum
+per doc, and let ``orderBy(...).limit(k)`` plan a TakeOrderedAndProject
+(per-partition bounded heap + driver merge — exactly the north rule's
+"bounded top-k heap", provided by Spark's physical planner).
 
 BM25 (reference-declared semantics, SURVEY §2.5 SC1; ES/Lucene defaults
 k1=1.2, b=0.75):
@@ -46,7 +48,6 @@ LITERAL_TERM_BUDGET = 32
 
 def bm25_topk(
     postings: DataFrame,
-    doc_lens: DataFrame,
     term_stats: DataFrame,
     stats: CorpusStats,
     query: str,
@@ -56,21 +57,22 @@ def bm25_topk(
     b: float = B,
     df_lookup: dict[str, float] | None = None,
 ) -> DataFrame:
-    """Top-k (doc_id, score) for a free-text query. Columns: doc_id, score.
+    """Top-k (doc_id, score) for a free-text query over dl-carrying
+    postings (term, doc_id, tf, dl) from
+    :func:`indexing.build_postings_with_dl`. Columns: doc_id, score.
 
     ``df_lookup`` (term -> df), e.g. from a resident wand.TermDictionary,
     skips the per-query term_stats collect — with the literal plan path
     that makes a single query exactly ONE Spark job (scan + agg + top-k).
     """
     return bm25_scores(
-        postings, doc_lens, term_stats, stats, query,
+        postings, term_stats, stats, query,
         k1=k1, b=b, df_lookup=df_lookup,
     ).orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def bm25_scores(
     postings: DataFrame,
-    doc_lens: DataFrame,
     term_stats: DataFrame,
     stats: CorpusStats,
     query: str,
@@ -138,82 +140,11 @@ def bm25_scores(
         from .wand import _in_expr
 
         matched = postings.filter(_in_expr("term", [t for t, _, _ in rows]))
-        if "dl" not in postings.columns:
-            matched = matched.join(
-                doc_lens.select("doc_id", F.col("doc_len").alias("dl")), "doc_id"
-            )
         scored = matched.withColumn("partial", weight * tfnorm)
     else:
         qdf = spark.createDataFrame(weights, "term string, w double")
         # broadcast tiny query-term set into the postings scan; Catalyst
         # pushes the term IN-filter down to the parquet scan
         matched = postings.join(F.broadcast(qdf), "term")
-        if "dl" not in postings.columns:  # postings_with_dl skips the join
-            matched = matched.join(
-                doc_lens.select("doc_id", F.col("doc_len").alias("dl")), "doc_id"
-            )
         scored = matched.withColumn("partial", F.col("w") * tfnorm)
     return scored.groupBy("doc_id").agg(F.sum("partial").alias("score"))
-
-
-def bm25_topk_batch(
-    postings: DataFrame,
-    doc_lens: DataFrame,
-    term_stats: DataFrame,
-    stats: CorpusStats,
-    queries: dict[str, str],
-    k: int = 10,
-    *,
-    k1: float = K1,
-    b: float = B,
-) -> DataFrame:
-    """Score MANY queries in one plan: (query_id, rank, doc_id, score).
-
-    The throughput shape for batch/offline retrieval at cluster scale:
-    one postings scan + one shuffle amortized over the whole query set,
-    per-query top-k via a window partitioned by query_id (parallel
-    across queries) instead of Q sequential jobs.
-    """
-    spark = postings.sparkSession
-    rows = []
-    for qid, q in queries.items():
-        for t, c in Counter(tokenize_py(q)).items():
-            rows.append((qid, t, float(c)))
-    if not rows:
-        return spark.createDataFrame(
-            [], "query_id string, rank int, doc_id long, score double"
-        )
-    qdf = spark.createDataFrame(rows, "query_id string, term string, qtf double")
-    terms_df = qdf.select("term").distinct().join(term_stats, "term")
-    matched = postings.join(F.broadcast(qdf), "term").join(F.broadcast(terms_df), "term")
-    if "dl" not in postings.columns:
-        matched = matched.join(
-            doc_lens.select("doc_id", F.col("doc_len").alias("dl")), "doc_id"
-        )
-    scored = (
-        matched
-        .withColumn(
-            "partial",
-            F.col("qtf")
-            * bm25_score_col(
-                F.col("tf").cast("double"),
-                F.col("df").cast("double"),
-                F.col("dl").cast("double"),
-                stats.n_docs,
-                stats.avgdl,
-                k1,
-                b,
-            ),
-        )
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("partial").alias("score"))
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
-        .orderBy("query_id", "rank")
-    )

@@ -83,9 +83,7 @@ def incremental_index(
     return q
 
 
-def compact_delta_into_index(
-    spark: SparkSession, index_dir: str, delta_dir: str, *, salt_range: int = 1 << 20
-) -> dict:
+def compact_delta_into_index(spark: SparkSession, index_dir: str, delta_dir: str) -> dict:
     """Fold the streamed ``docs_delta`` into a lineage-built base index —
     the compaction half of the streaming story (reference analogue: the
     periodic full reindex, full_pipeline.py; Iceberg analogue: rewriting
@@ -111,4 +109,4 @@ def compact_delta_into_index(
         .drop("_rn", "batch_id", "sha256", "doc_len")
     )
     delta = ingest_documents_df(latest)
-    return upsert_index(spark, index_dir, delta, salt_range=salt_range)
+    return upsert_index(spark, index_dir, delta)

@@ -92,13 +92,6 @@ def _lens_arrays(lens_pdf: pd.DataFrame):
     )
 
 
-def _lens_count(lens_pdf: pd.DataFrame) -> int:
-    """Number of docs a lens frame covers (layout-aware, no decode)."""
-    if "ids" in lens_pdf.columns:
-        return int(sum(len(b) for b in lens_pdf["ids"]) // 8)
-    return len(lens_pdf)
-
-
 def _prep_lens(lens_pdf: pd.DataFrame, avgdl: float, k1: float, b: float):
     """(base, per-doc norm constant array) for one salt — query-independent,
     computed once per salt and shared across a batch's queries."""
@@ -281,90 +274,6 @@ def _score_salt(
     top = min(k, cand_ids.size)
     order = np.lexsort((cand_ids, -cand_scores))[:top]
     return pd.DataFrame({"doc_id": cand_ids[order], "score": cand_scores[order]})
-
-
-# wand_topk_batch's per-group GEMM budget: max dense cells — docs x
-# (terms + queries), covering BOTH the contribution matrix C and the
-# score matrix S = C @ W — a single group task may allocate for the
-# GEMM path. 8M cells = 64 MB of float64, so even a full wave of
-# concurrent tasks stays far under executor memory. Above it the group
-# falls back to the MaxScore loop, whose working set is O(candidates),
-# not O(docs x vocab).
-GEMM_BUDGET_CELLS = 8_000_000
-
-
-def _score_group_gemm(
-    term_groups: dict[str, pd.DataFrame],
-    lens_pdf: pd.DataFrame,
-    qtfs: dict[str, dict[str, float]],
-    dfs: dict[str, int],
-    n_docs: int,
-    avgdl: float,
-    k: int,
-    k1: float,
-    b: float,
-    qsalts: dict[str, set] | None,
-    group_salts: set,
-) -> pd.DataFrame:
-    """One group's whole query batch as a single matmul.
-
-    C[doc, term] = tf/(tf + norm)  (query-independent, ONE scatter per
-    term); W[term, query] = qtf * idf; S = C @ W. Each query then costs
-    one BLAS column plus a top-k select — no per-query python loop over
-    terms. Matched docs always score > 0 (every partial is positive), so
-    S == 0 exactly identifies docs a query did not match."""
-    base, norm_c = _prep_lens(lens_pdf, avgdl, k1, b)
-    terms = sorted(term_groups)
-    ids_list, contribs = [], []
-    for t in terms:
-        ids, tfs = _decode_term_blocks(term_groups[t])
-        ids_list.append(ids)
-        contribs.append(tfs / (tfs + norm_c[ids - base]))
-    all_ids = np.unique(np.concatenate(ids_list))
-    C = np.zeros((all_ids.size, len(terms)), dtype=np.float64)
-    for j, (ids, con) in enumerate(zip(ids_list, contribs)):
-        C[np.searchsorted(all_ids, ids), j] = con
-    tindex = {t: j for j, t in enumerate(terms)}
-    qids = [
-        qid
-        for qid, qtf in qtfs.items()
-        if any(t in tindex for t in qtf)
-        and (qsalts is None or qsalts[qid] & group_salts)
-    ]
-    if not qids:
-        return pd.DataFrame(
-            {"query_id": pd.Series(dtype="object"),
-             "doc_id": pd.Series(dtype="int64"),
-             "score": pd.Series(dtype="float64")}
-        )
-    W = np.zeros((len(terms), len(qids)), dtype=np.float64)
-    for qi, qid in enumerate(qids):
-        for t, c in qtfs[qid].items():
-            j = tindex.get(t)
-            if j is not None:
-                W[j, qi] = c * _idf(n_docs, float(dfs[t]))
-    S = C @ W
-    out_q, out_id, out_s = [], [], []
-    for qi, qid in enumerate(qids):
-        col = S[:, qi]
-        nz = np.nonzero(col)[0]
-        if nz.size == 0:
-            continue
-        take = nz[np.lexsort((all_ids[nz], -col[nz]))[: min(k, nz.size)]]
-        out_q.extend([qid] * take.size)
-        out_id.append(all_ids[take])
-        out_s.append(col[take])
-    if not out_q:
-        return pd.DataFrame(
-            {"query_id": pd.Series(dtype="object"),
-             "doc_id": pd.Series(dtype="int64"),
-             "score": pd.Series(dtype="float64")}
-        )
-    return pd.DataFrame(
-        {"query_id": out_q,
-         "doc_id": np.concatenate(out_id),
-         "score": np.concatenate(out_s)}
-    )
 
 
 def prepare_lens_by_salt(doc_lens: DataFrame, salt_range: int) -> DataFrame:
@@ -769,30 +678,11 @@ def wand_topk_batch(
 ) -> DataFrame:
     """All queries in ONE cogroup pass: (query_id, rank, doc_id, score).
 
-    Each group picks one of two exact scorers. The GEMM path replaces
-    the per-query MaxScore loop with one scatter per TERM into a dense
-    (group docs x batch terms) contribution matrix C followed by a
-    single ``C @ W`` matmul (W = terms x queries qtf*idf weights) —
-    per-query work collapses to one BLAS column + top-k select. No
-    per-query pruning, so it pays off when the batch is wide enough
-    that MaxScore's candidate freeze no longer saves decode work (the
-    contrib cache already decodes each term once either way):
-    measured at sf0.1 x16 (80k docs, local[32]) the 36-query batch runs
-    ~20% faster (1.0 vs 1.25 s), the 8-query batch at parity.
-
-    The pick is made PER GROUP, inside the task, where the group's
-    posting volume is known: gemm when the dense matrix stays
-    under ``GEMM_BUDGET_CELLS`` (estimated as group postings x batch
-    vocabulary — an upper bound of the true union x vocab), MaxScore
-    otherwise — so a production-sized salt (2^20 docs) with a wide
-    batch never allocates a multi-GB C. Results are identical either
-    way (both exact; summation order differs by the usual float 1 ULP —
-    tests pin 1e-9 parity).
-
     Segments are scanned once, term-pruned to the union of all query
     terms; every salt partition runs the MaxScore scorer once per query
-    over its (already decoded-ready) term groups. One shuffle amortized
-    over the whole query batch — the scalable offline-retrieval shape.
+    over its term groups, sharing one decode-and-divide per (term,
+    group) across the batch's queries. One shuffle amortized over the
+    whole query batch — the scalable offline-retrieval shape.
     With ``salt_lookup``, each query scores ONLY inside salts its own
     terms touch (and the lens side is pruned to the batch-wide union),
     so untouched salts cost nothing.
@@ -806,10 +696,6 @@ def wand_topk_batch(
     cores idle and ran 2.8x slower. Coarsening remains for latency-bound single
     queries (:func:`wand_topk` uses G=16 in the bench). Exactness is
     unaffected by G (doc ranges stay disjoint; pinned by tests)."""
-    # snapshot on the DRIVER at plan time: score_fn runs in executor
-    # python workers that re-import this module, where a test's (or
-    # user's) module-level override would not be visible
-    gemm_budget = GEMM_BUDGET_CELLS
     spark = segments.sparkSession
     qtfs = {
         qid: {t: float(c) for t, c in Counter(tokenize_py(q)).items()}
@@ -860,18 +746,6 @@ def wand_topk_batch(
             t: g.sort_values(["salt", "block_id"])
             for t, g in seg_pdf.groupby("term", sort=False)
         }
-        # upper bound of the dense allocations without decoding
-        # anything: union of posting ids is capped by BOTH the group's
-        # total postings and the docs actually in this salt group (the
-        # cogrouped lens side lists exactly those). The budget covers C
-        # (docs x terms) AND the result S = C @ W (docs x queries) — a
-        # wide batch makes S the bigger matrix
-        est_docs = min(int(seg_pdf["n_docs"].sum()), _lens_count(lens_pdf))
-        if est_docs * (len(term_groups) + len(qtfs)) <= gemm_budget:
-            return _score_group_gemm(
-                term_groups, lens_pdf, qtfs, dfs, n_docs, avgdl, k, k1, b,
-                qsalts, group_salts,
-            )
         # shared across this group's queries: per-doc norm constants, a
         # term -> (ids, contrib) cache (decode + divide once per group,
         # not per query), and the frame pre-split by term ONCE (no

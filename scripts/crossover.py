@@ -169,7 +169,7 @@ def main() -> None:
             spark.conf.set("spark.sql.shuffle.partitions", "8")
             try:
                 return bm25_topk(
-                    postings, doc_lens, term_stats, stats, q, 10, df_lookup=dfs
+                    postings, term_stats, stats, q, 10, df_lookup=dfs
                 ).collect()
             finally:
                 spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)

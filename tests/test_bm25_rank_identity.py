@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pyspark_codesearch.corpus import corpus_df, generate_corpus, ingest_bucketed
-from pyspark_codesearch.indexing import build_postings, build_term_stats, corpus_stats
+from pyspark_codesearch.indexing import build_postings_with_dl, build_term_stats, corpus_stats
 from pyspark_codesearch.oracle import OracleIndex
 from pyspark_codesearch.scoring import bm25_topk
 
@@ -32,11 +32,10 @@ N_DOCS = 400
 @pytest.fixture(scope="module")
 def engine(spark):
     docs = ingest_bucketed(corpus_df(spark, N_DOCS, seed=42), n_buckets=1).cache()
-    postings = build_postings(docs).cache()
+    postings = build_postings_with_dl(docs).cache()
     return {
         "docs": docs,
         "postings": postings,
-        "doc_lens": docs.select("doc_id", "doc_len"),
         "term_stats": build_term_stats(postings),
         "stats": corpus_stats(docs),
     }
@@ -91,8 +90,7 @@ def test_rank_identity(engine, oracle, query):
     k = 10
     expected = oracle.search(query, k)
     got = bm25_topk(
-        engine["postings"], engine["doc_lens"], engine["term_stats"],
-        engine["stats"], query, k,
+        engine["postings"], engine["term_stats"], engine["stats"], query, k,
     ).collect()
     assert [r["doc_id"] for r in got] == [d for d, _ in expected], query
     for r, (_, s) in zip(got, expected):
@@ -104,8 +102,7 @@ def test_unique_term_exact_hit(engine, oracle):
     # is unique to one doc, so the top hit must contain the literal string
     expected = oracle.search("uniqterm000007", 10)
     got = bm25_topk(
-        engine["postings"], engine["doc_lens"], engine["term_stats"],
-        engine["stats"], "uniqterm000007", 10,
+        engine["postings"], engine["term_stats"], engine["stats"], "uniqterm000007", 10,
     ).collect()
     assert got[0]["doc_id"] == expected[0][0]
     top = (
@@ -134,12 +131,11 @@ def test_bucketed_ingest_rank_parity(spark, engine, oracle):
     assert a == b
     # BM25 scores per document identical (ids differ; join back to paths).
     # k = corpus size so tie-breaks at the k boundary cannot differ.
-    po_b = build_postings(docs_b)
+    po_b = build_postings_with_dl(docs_b)
     for query in ["parse json string", "read file buffer", "index"]:
-        got_b = bm25_topk(po_b, docs_b.select("doc_id", "doc_len"),
-                          build_term_stats(po_b), corpus_stats(docs_b), query, N_DOCS)
-        got_a = bm25_topk(engine["postings"], engine["doc_lens"],
-                          engine["term_stats"], engine["stats"], query, N_DOCS)
+        got_b = bm25_topk(po_b, build_term_stats(po_b), corpus_stats(docs_b), query, N_DOCS)
+        got_a = bm25_topk(engine["postings"], engine["term_stats"], engine["stats"],
+                          query, N_DOCS)
         ra = sorted(
             (tuple(r[c] for c in key), round(r["score"], 9))
             for r in got_a.join(engine["docs"].select("doc_id", *key), "doc_id").collect()
@@ -149,28 +145,6 @@ def test_bucketed_ingest_rank_parity(spark, engine, oracle):
             for r in got_b.join(docs_b.select("doc_id", *key), "doc_id").collect()
         )
         assert ra == rb, query
-
-
-def test_batch_scorer_matches_single(engine):
-    from pyspark_codesearch.scoring import bm25_topk_batch
-
-    qmap = {"q0": "parse json string", "q1": "merge sort", "q2": "the and of"}
-    batch = bm25_topk_batch(
-        engine["postings"], engine["doc_lens"], engine["term_stats"],
-        engine["stats"], qmap, 10,
-    ).collect()
-    by_q = {}
-    for r in batch:
-        by_q.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
-    for qid, q in qmap.items():
-        single = bm25_topk(
-            engine["postings"], engine["doc_lens"], engine["term_stats"],
-            engine["stats"], q, 10,
-        ).collect()
-        got = by_q.get(qid, [])
-        assert [d for d, _ in got] == [r["doc_id"] for r in single], qid
-        for (_, s), r in zip(got, single):
-            assert s == pytest.approx(r["score"], abs=1e-9)
 
 
 @pytest.mark.parametrize("query", QUERIES)
@@ -185,8 +159,7 @@ def test_literal_and_join_paths_identical(engine, query):
     import pyspark_codesearch.scoring as scoring
 
     k = 10
-    args = (engine["postings"], engine["doc_lens"], engine["term_stats"],
-            engine["stats"], query, k)
+    args = (engine["postings"], engine["term_stats"], engine["stats"], query, k)
     lit = [(r["doc_id"], r["score"]) for r in bm25_topk(*args).collect()]
     # force the join path by shrinking the budget
     old = scoring.LITERAL_TERM_BUDGET

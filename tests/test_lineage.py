@@ -1,5 +1,7 @@
 """Checkpoint/resume: killed build resumes, output identical (FIXTURES §7)."""
 
+import hashlib
+import json
 import os
 
 import pytest
@@ -14,6 +16,7 @@ from pyspark_codesearch.lineage import (
     n_buckets_of,
     read_metrics,
     read_table,
+    salt_range_of,
     unit_done,
 )
 
@@ -53,11 +56,31 @@ def test_kill_and_resume_identical(spark, docs, tmp_path_factory):
     a = _decode_all(load_segments(spark, clean_dir).collect())
     b = _decode_all(load_segments(spark, resumed_dir).collect())
     assert a == b
+    # and byte for byte: every table's parquet files are identical, so
+    # the index's size does not depend on whether the build was resumed
+    clean = _parquet_digests(clean_dir, 4)
+    assert all(clean.values()), clean
+    assert clean == _parquet_digests(resumed_dir, 4)
+
+
+def _parquet_digests(out_dir, n_buckets):
+    """table -> sorted sha256 of its parquet files (file names carry a
+    per-write id, so only contents are compared)."""
+    tables = ["docs", "quarantine", "doc_lens", "stats", "term_stats"] + [
+        f"{sub}/bucket={b}" for sub in ("postings", "segments") for b in range(n_buckets)
+    ]
+    out = {}
+    for name in tables:
+        d = os.path.realpath(os.path.join(out_dir, name))
+        out[name] = sorted(
+            hashlib.sha256(open(os.path.join(d, f), "rb").read()).hexdigest()
+            for f in os.listdir(d)
+            if f.endswith(".parquet")
+        )
+    return out
 
 
 def _fp(out_dir):
-    import json
-
     with open(os.path.join(out_dir, "_lineage", "docs.json")) as f:
         return json.load(f)["input_fingerprint"]
 
@@ -76,6 +99,20 @@ def test_fingerprint_invalidation(spark, tmp_path_factory):
     build_index_resumable(docs_a, d, n_buckets=2)
     res = build_index_resumable(docs_b, d, n_buckets=2)
     assert res["executed_units"] == 5  # everything re-ran: input changed
+    # another salt range re-runs only the segments buckets
+    assert salt_range_of(d) == 1 << 20
+    res = build_index_resumable(docs_b, d, n_buckets=2, salt_range=64)
+    assert res["executed_units"] == 2
+    assert salt_range_of(d) == 64
+    # buckets that disagree, or a manifest without the field, raise
+    p = os.path.join(d, "_lineage", "segments__bucket=1.json")
+    with open(p) as f:
+        m = json.load(f)
+    for m["salt_range"], msg in ((32, "salt ranges"), (None, "lacks salt_range")):
+        with open(p, "w") as f:
+            json.dump(m, f)
+        with pytest.raises(ValueError, match=msg):
+            salt_range_of(d)
 
 
 def _docs_of(spark, texts):

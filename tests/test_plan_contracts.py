@@ -78,24 +78,24 @@ def test_column_pruning_reaches_scan(spark, index_dir):
 
 
 def test_bm25_plan_shape(spark):
-    # exact scorer: heap top-k + broadcast + codegen
+    # exact scorer: heap top-k + codegen, and no join: postings carry dl
+    # and the query-term weights are literals
     docs = ingest_bucketed(corpus_df(spark, 200, seed=9), n_buckets=1)
     from pyspark_codesearch.indexing import (
-        build_postings,
+        build_postings_with_dl,
         build_term_stats,
         corpus_stats,
     )
 
-    po = build_postings(docs)
-    q = bm25_topk(po, docs.select("doc_id", "doc_len"), build_term_stats(po),
-                  corpus_stats(docs), "parse json string", 10)
+    po = build_postings_with_dl(docs)
+    q = bm25_topk(po, build_term_stats(po), corpus_stats(docs), "parse json string", 10)
     q.collect()  # AQE: codegen spans appear only in the FINAL plan
     p = plan_str(q)
     assert "TakeOrderedAndProject" in p, "top-k must be heap-based, not global sort"
     # '*(N)' operator prefixes mark WholeStageCodegen spans in compact form
     assert re.search(r"\*\(\d+\) (HashAggregate|Project)", p), "scoring must be codegen'd"
     assert FORBIDDEN not in p
-    assert "BroadcastHashJoin" in p  # query terms broadcast into postings
+    assert "Join" not in p, p
 
 
 def test_bm25_literal_case_carries_only_constants(spark):
@@ -108,17 +108,16 @@ def test_bm25_literal_case_carries_only_constants(spark):
     shared tf/(tf+norm) factor — NOT one per branch), at a term count
     beyond the old cliff."""
     from pyspark_codesearch.indexing import (
-        build_postings,
+        build_postings_with_dl,
         build_term_stats,
         corpus_stats,
     )
 
     docs = ingest_bucketed(corpus_df(spark, 200, seed=9), n_buckets=1)
-    po = build_postings(docs)
+    po = build_postings_with_dl(docs)
     # 28 distinct terms, resolved or not — the plan shape is what counts
     terms = [r["term"] for r in build_term_stats(po).limit(28).collect()]
-    q = bm25_topk(po, docs.select("doc_id", "doc_len"), build_term_stats(po),
-                  corpus_stats(docs), " ".join(terms), 10)
+    q = bm25_topk(po, build_term_stats(po), corpus_stats(docs), " ".join(terms), 10)
     opt = q._jdf.queryExecution().optimizedPlan().toString()
     proj = next(ln for ln in opt.splitlines() if "CASE WHEN" in ln)
     assert "LOG" not in proj.upper(), proj[:300]

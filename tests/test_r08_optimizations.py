@@ -103,8 +103,7 @@ def test_exact_literal_plan_is_single_stage_over_doc_id_cache(env):
     NO exchange above the cache — scan, filter, constant CASE, agg and
     TakeOrderedAndProject in one stage."""
     q = bm25_topk(
-        env["postings"], env["doc_lens"], env["term_stats"], env["stats"],
-        "data value result", 10,
+        env["postings"], env["term_stats"], env["stats"], "data value result", 10
     )
     q.collect()
     plan = q._jdf.queryExecution().executedPlan().toString()

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from pyspark_codesearch.codecs import delta_decode, varbyte_decode
 from pyspark_codesearch.corpus import corpus_df, ingest_bucketed
 from pyspark_codesearch.indexing import (
-    build_postings,
     build_postings_with_dl,
     build_segments,
     build_term_stats,
@@ -32,15 +31,13 @@ SALT_RANGE = 64  # small so salting actually splits the corpus
 @pytest.fixture(scope="module")
 def env(spark):
     docs = ingest_bucketed(corpus_df(spark, N_DOCS, seed=7), n_buckets=1).cache()
-    postings = build_postings(docs).cache()
-    postings_dl = build_postings_with_dl(docs).cache()
+    postings = build_postings_with_dl(docs).cache()
     stats = corpus_stats(docs)
     doc_lens = docs.select("doc_id", "doc_len").cache()
-    segments = build_segments(postings_dl, stats, salt_range=SALT_RANGE).cache()
+    segments = build_segments(postings, stats, salt_range=SALT_RANGE).cache()
     return {
         "docs": docs,
         "postings": postings,
-        "postings_dl": postings_dl,
         "stats": stats,
         "doc_lens": doc_lens,
         "segments": segments,
@@ -87,7 +84,7 @@ def test_segment_block_invariants(env):
 def test_salting_invariance(env):
     """salted output must decode byte-identically to a single-salt build
     (SURVEY §7 hard parts)."""
-    unsalted = build_segments(env["postings_dl"], env["stats"], salt_range=1 << 40)
+    unsalted = build_segments(env["postings"], env["stats"], salt_range=1 << 40)
     assert _decode_all(unsalted.collect()) == _decode_all(env["segments"].collect())
 
 
@@ -128,7 +125,7 @@ WAND_QUERIES = [
 @pytest.mark.parametrize("k", [3, 10])
 def test_wand_rank_identity(env, oracle_ix, query, k):
     exact = bm25_topk(
-        env["postings"], env["doc_lens"], env["term_stats"], env["stats"], query, k
+        env["postings"], env["term_stats"], env["stats"], query, k
     ).collect()
     wand = wand_topk(
         env["segments"], env["doc_lens"], env["term_stats"], env["stats"],
@@ -320,13 +317,13 @@ def test_search_topk_auto_dispatch(env, monkeypatch):
 
     q = "parse json string"
     base = [(r["doc_id"], r["score"]) for r in bm25_topk(
-        env["postings_dl"], env["doc_lens"], env["term_stats"], env["stats"], q, 10,
+        env["postings"], env["term_stats"], env["stats"], q, 10,
     ).collect()]
 
     def run(query=q, k=10):
         route: dict = {}
         out = search_topk_auto(
-            env["postings_dl"], env["segments"], env["doc_lens"],
+            env["postings"], env["segments"], env["doc_lens"],
             env["term_stats"], env["stats"], query, k,
             salt_range=SALT_RANGE, route_out=route,
         )
@@ -393,8 +390,7 @@ def test_wand_topk_selective_exactness_and_phases(env):
             imp_lookup=imps, route_out=route,
         ).collect()
         base = bm25_topk(
-            env["postings_dl"], env["doc_lens"], env["term_stats"],
-            env["stats"], q, k,
+            env["postings"], env["term_stats"], env["stats"], q, k,
         ).collect()
         assert [r["doc_id"] for r in got] == [r["doc_id"] for r in base], q
         for g, e in zip(got, base):
@@ -429,45 +425,3 @@ def test_wand_init_theta_soundness(env):
         salt_range=SALT_RANGE, init_theta=float("inf"),
     ).collect()
     assert none == []
-
-
-def test_wand_batch_gemm_strategy_exact(env, monkeypatch):
-    """The GEMM group scorer (one C @ W matmul per group) is
-    result-identical to the MaxScore loop: same docs, same ranks, scores
-    to 1e-9. Each path is forced through the per-group budget: 0 cells
-    sends every group to MaxScore, 10**18 sends every group to GEMM."""
-    import pyspark_codesearch.wand as wand_mod
-    from pyspark_codesearch.wand import (
-        collect_term_salts,
-        prepare_lens_by_salt,
-        wand_topk_batch,
-    )
-
-    df_lookup = {r["term"]: int(r["df"]) for r in env["term_stats"].collect()}
-    salt_lookup = collect_term_salts(env["segments"])
-    lens_by_salt = prepare_lens_by_salt(env["doc_lens"], SALT_RANGE)
-    qmap = {
-        "a": "parse json string",
-        "b": "uniqterm000042",
-        "c": "return data index query token merge",
-        "d": "zzznotaterm only unknowns qq",
-        "e": "index",
-    }
-    kw = dict(salt_range=SALT_RANGE, lens_by_salt=lens_by_salt,
-              df_lookup=df_lookup, salt_lookup=salt_lookup)
-
-    def run(budget):
-        monkeypatch.setattr(wand_mod, "GEMM_BUDGET_CELLS", budget)
-        rows = wand_topk_batch(
-            env["segments"], env["doc_lens"], env["term_stats"], env["stats"],
-            qmap, 5, **kw,
-        ).collect()
-        return {(r["query_id"], r["rank"]): (r["doc_id"], r["score"]) for r in rows}
-
-    bk = run(0)  # MaxScore everywhere
-    gk = run(10**18)  # GEMM everywhere
-    assert bk.keys() == gk.keys()
-    for key in bk:
-        assert bk[key][0] == gk[key][0], key
-        assert gk[key][1] == pytest.approx(bk[key][1], abs=1e-9), key
-    assert any(q == "b" for q, _ in bk)

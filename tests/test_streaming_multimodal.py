@@ -88,10 +88,10 @@ def test_compact_delta_into_index(spark, tmp_path, sf_dir):
     ).write.parquet(in_dir)
     incremental_index(spark, in_dir, delta_dir)
 
-    res = compact_delta_into_index(spark, base_ix, delta_dir, salt_range=64)
+    res = compact_delta_into_index(spark, base_ix, delta_dir)
     assert res["affected_buckets"]
     # idempotent recompaction
-    res2 = compact_delta_into_index(spark, base_ix, delta_dir, salt_range=64)
+    res2 = compact_delta_into_index(spark, base_ix, delta_dir)
     assert res2["executed_units"] == 0
 
     # fresh reference over the merged corpus

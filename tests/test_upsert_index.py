@@ -98,7 +98,7 @@ def test_upsert_then_rank_identity(spark, built):
 
     seg_manifests_before = _seg_manifests(out)
     res = upsert_index(
-        spark, out, built["delta"], deleted_ids=[DEL_ID], salt_range=SALT_RANGE
+        spark, out, built["delta"], deleted_ids=[DEL_ID]
     )
     assert res["affected_buckets"], "delta must touch at least one bucket"
 
@@ -153,7 +153,7 @@ def test_upsert_is_idempotent(spark, built):
     """Re-running the same upsert is a no-op (lineage fingerprint match)."""
     out = built["out"]
     res = upsert_index(
-        spark, out, built["delta"], deleted_ids=[DEL_ID], salt_range=SALT_RANGE
+        spark, out, built["delta"], deleted_ids=[DEL_ID]
     )
     assert res["executed_units"] == 0
 
@@ -185,7 +185,7 @@ def test_delete_only(spark, tmp_path):
         spark.read.parquet(f"{out}/docs").filter(F.col("doc_id") == 3).collect()[0]["content"],
     ).group(1)
     assert _wand(spark, out, uniq, k=5) != []
-    delete_from_index(spark, out, [3], salt_range=32)
+    delete_from_index(spark, out, [3])
     st = spark.read.parquet(f"{out}/stats").collect()[0]
     assert int(st["n_docs"]) == 59
     scale = impact_scale(out, float(st["avgdl"]))
@@ -224,9 +224,9 @@ def test_upsert_crash_resume(spark, tmp_path):
     # crash after (plan, docs) units — docs table already swapped, the
     # old content of the modified docs is GONE
     with pytest.raises(BuildInterrupted):
-        upsert_index(spark, out, delta, deleted_ids=[2], salt_range=32,
+        upsert_index(spark, out, delta, deleted_ids=[2],
                      fail_after_units=2)
-    res = upsert_index(spark, out, delta, deleted_ids=[2], salt_range=32)
+    res = upsert_index(spark, out, delta, deleted_ids=[2])
     assert res["executed_units"] > 0
 
     merged = (
@@ -276,7 +276,7 @@ def test_upsert_delete_overlap_raises(spark, tmp_path):
     build_index_resumable(docs, out, n_buckets=2, salt_range=32)
     delta = _delta(spark)  # carries MOD_IDS = [5, 6, 7]
     with pytest.raises(ValueError, match="BOTH delta_docs and deleted_ids"):
-        upsert_index(spark, out, delta, deleted_ids=[5], salt_range=32)
+        upsert_index(spark, out, delta, deleted_ids=[5])
 
 
 def test_inprogress_upsert_refuses_different_delta(spark, tmp_path):
@@ -289,15 +289,15 @@ def test_inprogress_upsert_refuses_different_delta(spark, tmp_path):
     build_index_resumable(docs, out, n_buckets=2, salt_range=32)
     delta = _delta(spark)
     with pytest.raises(BuildInterrupted):
-        upsert_index(spark, out, delta, salt_range=32, fail_after_units=2)
+        upsert_index(spark, out, delta, fail_after_units=2)
     # different delta (a delete) while the upsert is interrupted -> refused
     with pytest.raises(RuntimeError, match="interrupted upsert"):
-        delete_from_index(spark, out, [1], salt_range=32)
+        delete_from_index(spark, out, [1])
     # resuming the SAME delta completes
-    res = upsert_index(spark, out, delta, salt_range=32)
+    res = upsert_index(spark, out, delta)
     assert res["executed_units"] > 0
     # and once complete, a different delta is accepted again
-    delete_from_index(spark, out, [1], salt_range=32)
+    delete_from_index(spark, out, [1])
     assert spark.read.parquet(f"{out}/docs").filter(F.col("doc_id") == 1).count() == 0
 
 
@@ -306,7 +306,7 @@ def test_deleted_ids_accepts_dataframe(spark, tmp_path):
     docs = ingest_bucketed(corpus_df(spark, 40, seed=9), n_buckets=1)
     build_index_resumable(docs, out, n_buckets=2, salt_range=32)
     dels = spark.createDataFrame([(2,), (3,)], "doc_id long")
-    upsert_index(spark, out, None, deleted_ids=dels, salt_range=32)
+    upsert_index(spark, out, None, deleted_ids=dels)
     assert (
         spark.read.parquet(f"{out}/docs").filter(F.col("doc_id").isin([2, 3])).count() == 0
     )
@@ -353,7 +353,7 @@ def test_large_vocab_delta_no_driver_lists(spark, tmp_path):
         )
     )
     delta = ingest_documents_df(raw).withColumn("lang", F.lit("python"))
-    res = upsert_index(spark, out, delta, salt_range=64)
+    res = upsert_index(spark, out, delta)
     assert res["affected_terms"] >= 60 * 400  # bigvN digits tokenize apart
     with open(os.path.join(out, "_lineage", "upsert_plan.json")) as f:
         plan = json.load(f)
@@ -375,7 +375,7 @@ def test_term_dictionary_for_index_refreshes_after_upsert(spark, tmp_path):
     dfs0, _, _ = td.lookup3(["merge", "upserterm"])
     assert "merge" in dfs0 and "upserterm" not in dfs0
 
-    upsert_index(spark, out, _delta(spark), salt_range=32)
+    upsert_index(spark, out, _delta(spark))
     td.invalidate()
     dfs1, salts1, _ = td.lookup3(["merge", "upserterm"])
     # the delta's brand-new term is now visible with its true df (3 mods

@@ -117,7 +117,7 @@ def _upsert_wave(spark, out, wave):
     delta = ingest_documents_df(
         spark.createDataFrame(rows, "doc_id long, text string")
     ).withColumn("lang", F.lit("python"))
-    upsert_index(spark, out, delta, salt_range=32)
+    upsert_index(spark, out, delta)
 
 
 def test_scan_pinned_before_first_upsert_survives(spark, tmp_path):

@@ -53,7 +53,7 @@ def test_live_holder_refused_before_any_mutation(spark, tmp_path):
         spark.createDataFrame([(1, "conflict probe scan")], "doc_id long, text string")
     )
     with pytest.raises(ConcurrentWriteError, match="live pid"):
-        upsert_index(spark, out, delta, salt_range=32)
+        upsert_index(spark, out, delta)
     with pytest.raises(ConcurrentWriteError, match="live pid"):
         build_index_resumable(_tiny_docs(spark), out, n_buckets=2, salt_range=32)
     assert os.path.exists(os.path.join(out, "_writer.lock")), (
@@ -66,7 +66,7 @@ def test_stale_lock_broken_then_released(spark, tmp_path):
     docs = _tiny_docs(spark)
     build_index_resumable(docs, out, n_buckets=2, salt_range=32)
     _plant_lock(out, _dead_pid())  # simulates a SIGKILLed writer
-    delete_from_index(spark, out, [1], salt_range=32)
+    delete_from_index(spark, out, [1])
     assert not os.path.exists(os.path.join(out, "_writer.lock"))
     remaining = spark.read.parquet(f"{out}/docs").filter(F.col("doc_id") == 1).count()
     assert remaining == 0
@@ -80,7 +80,7 @@ def test_torn_lock_treated_as_stale(spark, tmp_path):
     os.makedirs(out, exist_ok=True)
     with open(os.path.join(out, "_writer.lock"), "w") as f:
         f.write('{"pid": 12')
-    delete_from_index(spark, out, [2], salt_range=32)
+    delete_from_index(spark, out, [2])
     assert not os.path.exists(os.path.join(out, "_writer.lock"))
 
 
@@ -94,12 +94,12 @@ def test_injected_failure_releases_lock_and_resume_succeeds(spark, tmp_path):
         )
     ).withColumn("lang", F.lit("python"))
     with pytest.raises(BuildInterrupted):
-        upsert_index(spark, out, delta, salt_range=32, fail_after_units=1)
+        upsert_index(spark, out, delta, fail_after_units=1)
     assert not os.path.exists(os.path.join(out, "_writer.lock")), (
         "a clean python failure is not a crash: mutation stopped, so the "
         "lock must release and the resume path must not need a lock break"
     )
-    res = upsert_index(spark, out, delta, salt_range=32)
+    res = upsert_index(spark, out, delta)
     assert res["executed_units"] > 0
     assert not os.path.exists(os.path.join(out, "_writer.lock"))
 
