@@ -20,7 +20,12 @@ uninterrupted run (pinned by tests/test_lineage.py).
 Term-hash bucketing doubles as the static pruning story at scale: a
 query's terms map to buckets, so query-time scans touch only those
 bucket directories (partition pruning), the DataFrame analogue of a term
-dictionary seek.
+dictionary seek. The driver answers that routing itself: Spark's
+``hash`` is reproduced in Python (:func:`spark_string_hash`, pinned
+equal to ``F.pmod(F.hash("term"), n)`` by tests/test_lineage.py), and
+the tables whose columns the writer fixes are read with their declared
+schema (:data:`TABLE_SCHEMAS`), so opening a request's scans runs no
+Spark job.
 """
 
 from __future__ import annotations
@@ -30,15 +35,30 @@ import json
 import os
 import re
 import shutil
+import struct
 import time
 from contextlib import contextmanager as _contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .indexing import build_segments, corpus_stats
+from .indexing import SEGMENT_SCHEMA, build_segments, corpus_stats
 
 N_BUCKETS = 8
+
+# The schema of every table whose columns the writer fixes, keyed by the
+# table's name up to the first "/" (segments/bucket=N -> segments).
+# read_table declares it, so planning a scan reads no parquet footer (a
+# Spark job each); the writers conform to it and
+# tests/test_upsert_index.py pins it equal to what Spark infers from the
+# files. docs and quarantine carry the ingest's columns and are inferred.
+TABLE_SCHEMAS = {
+    "segments": SEGMENT_SCHEMA,
+    "postings": "term string, doc_id long, dl int, tf int",
+    "doc_lens": "doc_id long, doc_len int",
+    "term_stats": "term string, df long",
+    "stats": "n_docs long, avgdl double",
+}
 
 
 class BuildInterrupted(RuntimeError):
@@ -359,9 +379,9 @@ def _build_index_resumable_unlocked(
 
         # cluster_by_doc=False: the rows are re-partitioned by term
         # bucket on the next line, so the doc_id exchange would be dead
-        postings = build_postings_with_dl(docs, cluster_by_doc=False).withColumn(
-            "bucket", F.pmod(F.hash("term"), F.lit(n_buckets))
-        )
+        postings = _conform(
+            build_postings_with_dl(docs, cluster_by_doc=False), "postings"
+        ).withColumn("bucket", F.pmod(F.hash("term"), F.lit(n_buckets)))
         # one partitioned write into a hidden build dir, then each
         # bucket=N dir is renamed (not copied) into its first version
         staged = f"{out_dir}/postings/.build"
@@ -392,13 +412,13 @@ def _build_index_resumable_unlocked(
         _drop_buckets_from(out_dir, n_buckets)
         _swap_dir(
             f"{out_dir}/doc_lens",
-            lambda p: docs.select("doc_id", "doc_len").write.parquet(p),
+            lambda p: _conform(docs, "doc_lens").write.parquet(p),
         )
         st = corpus_stats(docs)
         _swap_dir(
             f"{out_dir}/stats",
             lambda p: spark.createDataFrame(
-                [(st.n_docs, st.avgdl)], "n_docs long, avgdl double"
+                [(st.n_docs, st.avgdl)], TABLE_SCHEMAS["stats"]
             ).write.parquet(p),
         )
         return n
@@ -450,9 +470,10 @@ def _build_index_resumable_unlocked(
 
 def _drop_buckets_from(out_dir: str, n_buckets: int) -> None:
     """Remove the postings and segments buckets numbered n_buckets and
-    up, symlink first, then its versions: a rebuild into the same
-    out_dir with fewer buckets leaves none of the old layout's behind
-    for `segment_bucket_ids` to count."""
+    up, symlink first, then its versions, and then the segments
+    buckets' manifests: a rebuild into the same out_dir with fewer
+    buckets leaves none of the old layout's behind for
+    `segment_bucket_ids` or `read_metrics` to count."""
     for sub in ("postings", "segments"):
         root = os.path.join(out_dir, sub)
         if not os.path.isdir(root):
@@ -464,6 +485,11 @@ def _drop_buckets_from(out_dir: str, n_buckets: int) -> None:
             if os.path.lexists(path):
                 os.unlink(path)
             shutil.rmtree(_versions_root(path), ignore_errors=True)
+    mdir = _manifest_dir(out_dir)
+    for fn in os.listdir(mdir):
+        m = re.fullmatch(r"segments__bucket=(\d+)\.json", fn)
+        if m and int(m.group(1)) >= n_buckets:
+            os.unlink(os.path.join(mdir, fn))
 
 
 def _versions_root(path: str) -> str:
@@ -841,7 +867,7 @@ def _upsert_index_unlocked(
         new_docs = spark.read.parquet(f"{out_dir}/docs")
         _swap_dir(
             f"{out_dir}/doc_lens",
-            lambda p: new_docs.select("doc_id", "doc_len").write.parquet(p),
+            lambda p: _conform(new_docs, "doc_lens").write.parquet(p),
         )
         st = new_docs.agg(
             F.count(F.lit(1)).alias("n"), F.avg("doc_len").alias("avgdl")
@@ -849,7 +875,7 @@ def _upsert_index_unlocked(
         _swap_dir(
             f"{out_dir}/stats",
             lambda p: spark.createDataFrame(
-                [(int(st["n"]), float(st["avgdl"] or 0.0))], "n_docs long, avgdl double"
+                [(int(st["n"]), float(st["avgdl"] or 0.0))], TABLE_SCHEMAS["stats"]
             ).write.parquet(p),
         )
         merged.unpersist()
@@ -874,7 +900,8 @@ def _upsert_index_unlocked(
                 part = keep.unionByName(
                     delta_postings.filter(F.col("bucket") == b).drop("bucket")
                 )
-            part = part.cache()
+            # the anti join puts doc_id first; the table keeps its order
+            part = _conform(part, "postings").cache()
             n = part.count()
             _swap_dir(path, lambda p: part.write.parquet(p))
             part.unpersist()
@@ -997,8 +1024,17 @@ def _resolve_snapshot(path: str) -> str:
 
 def read_table(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
     """Snapshot-pinned read of one index table (docs, doc_lens, stats,
-    term_stats, postings/bucket=N, ...) — see :func:`_resolve_snapshot`."""
-    return spark.read.parquet(_resolve_snapshot(os.path.join(out_dir, name)))
+    term_stats, postings/bucket=N, ...) — see :func:`_resolve_snapshot`.
+    A table in :data:`TABLE_SCHEMAS` is read with its declared schema."""
+    schema = TABLE_SCHEMAS.get(name.split("/", 1)[0])
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(_resolve_snapshot(os.path.join(out_dir, name)))
+
+
+def _conform(df: DataFrame, table: str) -> DataFrame:
+    """``df``'s columns in the order and types ``table`` declares."""
+    cols = (c.split() for c in TABLE_SCHEMAS[table].split(","))
+    return df.select([F.col(name).cast(typ) for name, typ in cols])
 
 
 def segment_bucket_ids(out_dir: str) -> list[int]:
@@ -1034,20 +1070,47 @@ def n_buckets_of(out_dir: str) -> int:
     return len(segment_bucket_ids(out_dir))
 
 
+_M32 = 0xFFFFFFFF
+
+
+def _murmur3_mix(h: int, k: int) -> int:
+    k = (k * 0xCC9E2D51) & _M32
+    k = ((k << 15) | (k >> 17)) & _M32
+    h ^= (k * 0x1B873593) & _M32
+    h = ((h << 13) | (h >> 19)) & _M32
+    return (h * 5 + 0xE6546B64) & _M32
+
+
+def spark_string_hash(term: str) -> int:
+    """Spark's ``hash(term)`` for a string, on the driver: Murmur3_x86_32
+    with seed 42 over the UTF-8 bytes, 4-byte little-endian blocks, then
+    Spark's legacy tail — each trailing byte sign-extended and mixed as a
+    block of its own (not the standard one-block tail)."""
+    data = term.encode("utf-8")
+    n = len(data)
+    cut = n - n % 4
+    h = 42
+    for (k,) in struct.iter_unpack("<I", data[:cut]):
+        h = _murmur3_mix(h, k)
+    for byte in data[cut:]:
+        h = _murmur3_mix(h, (byte - 256 if byte > 127 else byte) & _M32)
+    h ^= n
+    h = ((h ^ (h >> 16)) * 0x85EBCA6B) & _M32
+    h = ((h ^ (h >> 13)) * 0xC2B2AE35) & _M32
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
 def buckets_for_terms(spark: SparkSession, terms, n_buckets: int) -> list[int]:
     """Static term->bucket pruning (the directory-level term-dictionary
-    seek): which bucket partitions can possibly hold these terms. Uses
-    the SAME pmod(hash(term), n) expression as the build, evaluated on a
-    tiny literal frame, so the mapping cannot drift from the writer."""
-    if not terms:
-        return []
-    rows = (
-        spark.createDataFrame([(t,) for t in sorted(set(terms))], "term string")
-        .select(F.pmod(F.hash("term"), F.lit(n_buckets)).alias("b"))
-        .distinct()
-        .collect()
-    )
-    return sorted(int(r["b"]) for r in rows)
+    seek): which bucket partitions can possibly hold these terms.
+
+    Computes the writers' ``pmod(hash(term), n_buckets)`` on the driver
+    (Python's ``%`` of a positive modulus is Spark's ``pmod``), so no
+    Spark job runs; ``spark`` is unused. tests/test_lineage.py pins the
+    two equal on 10k seeded terms (every UTF-8 tail length, multi-byte
+    and 4-byte characters) for several bucket counts."""
+    return sorted({spark_string_hash(t) % n_buckets for t in terms})
 
 
 def load_segments_for_terms(spark: SparkSession, out_dir: str, terms) -> DataFrame:

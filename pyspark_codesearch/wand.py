@@ -498,7 +498,7 @@ def wand_topk(
     else:
         dfs = {
             r["term"]: int(r["df"])
-            for r in term_stats.filter(F.col("term").isin(list(qtf))).collect()
+            for r in term_stats.filter(_in_expr("term", qtf)).collect()
         }
     qtf = {t: c for t, c in qtf.items() if t in dfs}
     if not qtf:
@@ -711,7 +711,7 @@ def wand_topk_batch(
     else:
         dfs = {
             r["term"]: int(r["df"])
-            for r in term_stats.filter(F.col("term").isin(all_terms)).collect()
+            for r in term_stats.filter(_in_expr("term", all_terms)).collect()
         }
     qtfs = {
         qid: {t: c for t, c in m.items() if t in dfs} for qid, m in qtfs.items()
@@ -778,9 +778,12 @@ def wand_topk_batch(
     from pyspark.sql import Window
 
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+    # at most k rows per query: one partition sorts them all, where a
+    # global orderBy would run its own range-partition sampling job
     return (
         per_salt.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "doc_id", "score")
-        .orderBy("query_id", "rank")
+        .coalesce(1)
+        .sortWithinPartitions("query_id", "rank")
     )

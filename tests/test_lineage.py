@@ -12,6 +12,7 @@ from pyspark_codesearch.corpus import corpus_df, ingest_bucketed, ingest_documen
 from pyspark_codesearch.lineage import (
     BuildInterrupted,
     build_index_resumable,
+    buckets_for_terms,
     load_segments,
     n_buckets_of,
     read_metrics,
@@ -163,6 +164,41 @@ def test_rebuild_in_place_keeps_no_old_bucket(spark, tmp_path):
     for b in range(4):
         assert _terms_of(read_table(spark, out, f"postings/bucket={b}")) <= tokens
     assert _terms_of(load_segments(spark, out)) == tokens
+    # nor any manifest or metrics unit of a dropped bucket
+    manifests = [f for f in os.listdir(os.path.join(out, "_lineage"))
+                 if f.startswith("segments__bucket=")]
+    assert sorted(manifests) == [f"segments__bucket={b}.json" for b in range(4)]
+    units = [r["unit"] for r in read_metrics(spark, out).collect()]
+    assert sorted(u for u in units if u.startswith("segments/")) == [
+        f"segments/bucket={b}" for b in range(4)
+    ]
+
+
+def test_buckets_for_terms_matches_spark_pmod_hash(spark):
+    """The driver-side term->bucket mapping equals the writers'
+    pmod(hash(term), n) on 10k seeded terms: the empty string, every
+    UTF-8 tail length 0-3, 2- and 3-byte characters and 4-byte emoji."""
+    import random
+
+    rng = random.Random(20261018)
+    alphabet = "abcxyz_09" + "éßж" + "漢字ア" + "😀🚀"
+    terms = ["", "a", "ab", "abc", "abcd", "é", "漢", "😀", "a😀", "ab😀"] + [
+        "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 12)))
+        for _ in range(10_000)
+    ]
+    utf8 = [t.encode("utf-8") for t in terms]
+    assert {len(b) % 4 for b in utf8} == {0, 1, 2, 3}
+    assert any(len(b) > len(t) for b, t in zip(utf8, terms))
+    assert any(ord(c) > 0xFFFF for t in terms for c in t)
+    ns = (1, 2, 3, 8, 1024)
+    rows = spark.createDataFrame([(t,) for t in terms], "term string").select(
+        "term", *[F.pmod(F.hash("term"), F.lit(n)).alias(f"b{n}") for n in ns]
+    ).collect()
+    assert len(rows) == len(terms)
+    for n in ns:
+        assert all(buckets_for_terms(spark, [r["term"]], n) == [r[f"b{n}"]] for r in rows), n
+        assert buckets_for_terms(spark, terms, n) == sorted({r[f"b{n}"] for r in rows})
+    assert buckets_for_terms(spark, [], 8) == []
 
 
 def test_metrics_table(spark, docs, tmp_path_factory):
@@ -182,11 +218,7 @@ def test_bucket_pruned_query_matches_full(spark, docs, tmp_path_factory):
     """Static term->bucket directory pruning: identical results to the
     full-segment scan, and the plan actually partition-prunes."""
     from pyspark_codesearch.indexing import CorpusStats
-    from pyspark_codesearch.lineage import (
-        buckets_for_terms,
-        load_segments_for_terms,
-        n_buckets_of,
-    )
+    from pyspark_codesearch.lineage import load_segments_for_terms
     from pyspark_codesearch.wand import wand_topk_batch
 
     d = str(tmp_path_factory.mktemp("prune"))

@@ -8,6 +8,7 @@
 """
 
 import re
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -67,6 +68,47 @@ def test_term_filter_pushed_to_parquet_scan(spark, index_dir):
     q = segs.filter(F.col("term").isin("parse", "json", "string"))
     p = full_plan(q)
     assert re.search(r"PushedFilters: \[.*[Ii]n\(term", p), p
+
+
+def _jobs_started_by(spark, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn()`` starts, counted through a fresh
+    job group and the status tracker."""
+    sc = spark.sparkContext
+    group = f"contract-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts reach the tracker
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_request_metadata_runs_no_spark_job(spark, index_dir):
+    """What a batch request asks of the index before scoring — its terms'
+    segment buckets, the pruning scale, the salt range and handles on
+    the side tables — is answered on the driver: no Spark job starts."""
+    from pyspark_codesearch.lineage import (
+        impact_scale,
+        load_segments_for_terms,
+        salt_range_of,
+    )
+
+    calls = {
+        "load_segments_for_terms": lambda: load_segments_for_terms(
+            spark, index_dir, {"parse", "json", "string", "merge"}
+        ),
+        "impact_scale": lambda: impact_scale(index_dir, 10.0),
+        "salt_range_of": lambda: salt_range_of(index_dir),
+        **{
+            f"read_table {t}": (lambda t=t: read_table(spark, index_dir, t))
+            for t in ("segments/bucket=0", "doc_lens", "term_stats", "stats")
+        },
+    }
+    for name, fn in calls.items():
+        assert _jobs_started_by(spark, fn) == [], name
+    # the counter sees jobs: inferring the docs table's schema runs one
+    assert _jobs_started_by(spark, lambda: read_table(spark, index_dir, "docs"))
 
 
 def test_column_pruning_reaches_scan(spark, index_dir):

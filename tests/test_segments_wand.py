@@ -276,6 +276,35 @@ def test_wand_batch_matches_single(env):
             assert s == pytest.approx(r["score"], abs=1e-9)
 
 
+def test_wand_batch_rows_in_query_rank_order(env):
+    """The batch result arrives in (query_id, rank) order — the order a
+    driver-side sort of the same rows gives — with ranks 1..n per query."""
+    from pyspark_codesearch.wand import wand_topk_batch
+
+    texts = ["parse json string", "merge sort index", "return data", "token query",
+             "uniqterm000042", "read file buffer", "index merge", "data value",
+             "json parse", "sort", "string token", "zzznotaterm"]
+    qmap = {f"q{i}": q for i, q in enumerate(texts)}  # q10 sorts before q2
+    # uncoalesced shuffle partitions: the rows of several partitions
+    # meet at the end, so the order cannot come from one window task
+    spark = env["segments"].sparkSession
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        rows = wand_topk_batch(
+            env["segments"], env["doc_lens"], env["term_stats"], env["stats"],
+            qmap, 5, salt_range=SALT_RANGE,
+        ).collect()
+    finally:
+        spark.conf.set(key, prev)
+    assert len({r["query_id"] for r in rows}) >= 10
+    assert rows == sorted(rows, key=lambda r: (r["query_id"], r["rank"]))
+    for qid in qmap:
+        ranks = [r["rank"] for r in rows if r["query_id"] == qid]
+        assert ranks == list(range(1, len(ranks) + 1)), qid
+
+
 def test_wand_batch_salt_group_factor_exact(env):
     """Coarse cogroup keys (salt_group_factor > 1) are a pure scheduling
     optimization: results identical to G=1."""

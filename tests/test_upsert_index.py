@@ -12,10 +12,12 @@ from pyspark_codesearch.corpus import corpus_df, ingest_bucketed, ingest_documen
 from pyspark_codesearch.analysis import tokenize_py
 from pyspark_codesearch.indexing import CorpusStats
 from pyspark_codesearch.lineage import (
+    TABLE_SCHEMAS,
     build_index_resumable,
     delete_from_index,
     impact_scale,
     load_segments,
+    read_table,
     upsert_index,
 )
 from pyspark_codesearch.wand import wand_topk
@@ -195,6 +197,37 @@ def test_delete_only(spark, tmp_path):
         salt_range=32, impact_scale=scale,
     ).collect()
     assert got == []
+
+
+def _assert_declared_schemas_match_files(spark, out):
+    """Each table of TABLE_SCHEMAS, every bucket of the bucketed ones:
+    the schema read_table declares is the one Spark infers from the
+    files the writer left."""
+    checked = 0
+    for table in TABLE_SCHEMAS:
+        root = os.path.join(out, table)
+        names = (
+            [f"{table}/{d}" for d in sorted(os.listdir(root)) if d.startswith("bucket=")]
+            if table in ("postings", "segments") else [table]
+        )
+        for name in names:
+            inferred = spark.read.parquet(os.path.realpath(os.path.join(out, name))).schema
+            assert read_table(spark, out, name).schema == inferred, name
+            checked += 1
+    assert checked == 3 + 2 * N_BUCKETS
+
+
+def test_declared_schemas_match_written_files(spark, tmp_path):
+    """The writers and the declared schemas cannot drift apart: checked
+    on a fresh build, after an upsert and after a delete."""
+    out = str(tmp_path / "schemas")
+    docs = ingest_bucketed(corpus_df(spark, 60, seed=13), n_buckets=1)
+    build_index_resumable(docs, out, n_buckets=N_BUCKETS, salt_range=SALT_RANGE)
+    _assert_declared_schemas_match_files(spark, out)
+    upsert_index(spark, out, _delta(spark))
+    _assert_declared_schemas_match_files(spark, out)
+    delete_from_index(spark, out, [NEW_IDS[0]])
+    _assert_declared_schemas_match_files(spark, out)
 
 
 def _seg_manifests(out):
