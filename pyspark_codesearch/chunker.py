@@ -23,10 +23,7 @@ container (no network), so counting is layered:
   estimated as 1 token for the first 7 characters + 1 per 4 thereafter
   (the tiktoken project's published ~4-chars/token English average).
   Divergence is therefore bounded to long/rare words; it shifts chunk
-  SIZING slightly, never chunk-boundary logic. Run
-  scripts/tiktoken_divergence.py in any environment that has tiktoken
-  to measure the per-doc count delta and chunk-count delta on the
-  fixture corpus.
+  SIZING slightly, never chunk-boundary logic.
 
 Spark surface: :func:`chunk_docs` — a pandas UDF producing
 ``array<struct>`` + ``explode`` (the UDTF shape, SURVEY §2.9), fully

@@ -6,6 +6,8 @@ bench) and exposes the SQL strings the DuckDB oracle runs side-by-side.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -66,9 +68,9 @@ def search_topk_auto(
     *,
     salt_range: int,
     lens_by_salt: DataFrame | None = None,
-    df_lookup: dict[str, int] | None = None,
-    salt_lookup: dict[str, tuple[int, ...]] | None = None,
-    imp_lookup: dict[str, float] | None = None,
+    df_lookup: dict[str, int],
+    salt_lookup: dict[str, tuple[int, ...]],
+    imp_lookup: dict[str, float],
     impact_scale: float = 1.0,
     route_out: dict | None = None,
 ) -> DataFrame:
@@ -79,7 +81,9 @@ def search_topk_auto(
     plan (global-θ hand-off, phase 2 usually proved away); everything
     else takes the literal-CASE exact JVM plan. ``route_out`` (if a dict
     is passed) records the routing decision and the selective plan's
-    phase diagnostics.
+    phase diagnostics. ``df_lookup``, ``salt_lookup`` and ``imp_lookup``
+    are the query terms' df, touched salts and max block impact, as
+    ``wand.TermDictionary.lookup3`` returns them.
 
     EXECUTION SEMANTICS: the exact route returns a lazy DataFrame (cost
     paid at action time, composable into larger plans); the SELECTIVE
@@ -89,24 +93,15 @@ def search_topk_auto(
     bigger unexecuted plan get call-time data on that route;
     collect()-immediately callers (tests, bench, the driver entry) see
     no difference."""
-    from collections import Counter
+    from .wand import _idf, wand_topk_selective
 
     qtf = Counter(tokenize_py(query))
-    if df_lookup is None:
-        df_lookup = {
-            r["term"]: int(r["df"])
-            for r in term_stats.filter(F.col("term").isin(list(qtf))).collect()
-        }
     matched = {t: c for t, c in qtf.items() if t in df_lookup}
     matched_volume = sum(df_lookup[t] for t in matched)
     # driver-side freeze predictor: head's max contribution bound vs the
-    # rest's sum (imp defaults to 1.0 = equal impacts when no dictionary
-    # is resident; idf ordering alone then decides dominance)
-    from .wand import _idf
-
-    imp = imp_lookup or {}
+    # rest's sum
     c_of = {
-        t: c * _idf(stats.n_docs, float(df_lookup[t])) * float(imp.get(t, 1.0))
+        t: c * _idf(stats.n_docs, float(df_lookup[t])) * imp_lookup[t]
         for t, c in matched.items()
     }
     head = max(c_of, key=lambda t: (c_of[t], t)) if c_of else None
@@ -125,12 +120,6 @@ def search_topk_auto(
         )
     if not selective:
         return bm25_topk(postings, term_stats, stats, query, k, df_lookup=df_lookup)
-    from .wand import collect_term_salts, wand_topk_selective
-
-    if salt_lookup is None:
-        salt_lookup = collect_term_salts(
-            segments.filter(F.col("term").isin(list(matched)))
-        )
     return wand_topk_selective(
         segments, doc_lens, term_stats, stats, query, k,
         salt_range=salt_range, lens_by_salt=lens_by_salt,
@@ -200,17 +189,16 @@ class DocumentsEngine:
         return self._lens_by_salt, self._term_dict
 
     def search_wand(self, query: str, k: int = 10, round_to: int | None = None) -> DataFrame:
-        from collections import Counter
-
-        from .wand import wand_topk
+        """Block-max WAND top-k (doc_id, score): a batch of one query."""
+        from .wand import wand_topk_batch
 
         lens_by_salt, td = self._wand_residents()
-        df_lookup, salt_lookup, _ = td.lookup3(Counter(tokenize_py(query)).keys())
-        out = wand_topk(
-            self.segments, self.doc_lens, self.term_stats, self.stats, query, k,
+        df_lookup, salt_lookup, _ = td.lookup3(tokenize_py(query))
+        out = wand_topk_batch(
+            self.segments, self.doc_lens, self.term_stats, self.stats, {"q": query}, k,
             salt_range=self.SALT_RANGE, lens_by_salt=lens_by_salt,
             df_lookup=df_lookup, salt_lookup=salt_lookup,
-        )
+        ).select("doc_id", "score")
         if round_to is not None:
             out = out.select("doc_id", F.round("score", round_to).alias("score"))
         return out
@@ -233,8 +221,6 @@ def bm25_oracle_sql(query: str, k: int = 10, round_to: int = 4,
     Same tokenizer spec (analysis.duckdb_tokens_expr — parity-tested), same
     formula as scoring.bm25_topk; used by __spark_entry__.oracle_sql().
     """
-    from collections import Counter
-
     qterms = Counter(tokenize_py(query))
     if not qterms:
         return "SELECT CAST(NULL AS BIGINT) AS doc_id, CAST(NULL AS DOUBLE) AS score WHERE 1=0"

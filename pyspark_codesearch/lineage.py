@@ -38,6 +38,7 @@ import shutil
 import struct
 import time
 from contextlib import contextmanager as _contextmanager
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -426,7 +427,7 @@ def _build_index_resumable_unlocked(
     run_unit("postings", docs_fp, do_postings)
 
     # ---- stage 3: per-bucket segments
-    st_row = spark.read.parquet(f"{out_dir}/stats").collect()[0]
+    st_row = read_table(spark, out_dir, "stats").collect()[0]
     from .indexing import CorpusStats
 
     stats = CorpusStats(int(st_row["n_docs"]), float(st_row["avgdl"]))
@@ -707,7 +708,7 @@ def _upsert_index_unlocked(
         [d for d in os.listdir(f"{out_dir}/postings") if d.startswith("bucket=")]
     )
     salt_range = salt_range_of(out_dir)
-    base_docs = spark.read.parquet(f"{out_dir}/docs")
+    base_docs = read_table(spark, out_dir, "docs")
 
     if deleted_ids is None:
         dels_df = None
@@ -864,7 +865,7 @@ def _upsert_index_unlocked(
         merged = merged.cache()
         n = merged.count()
         _swap_dir(f"{out_dir}/docs", lambda p: merged.write.parquet(p))
-        new_docs = spark.read.parquet(f"{out_dir}/docs")
+        new_docs = read_table(spark, out_dir, "docs")
         _swap_dir(
             f"{out_dir}/doc_lens",
             lambda p: _conform(new_docs, "doc_lens").write.parquet(p),
@@ -894,7 +895,9 @@ def _upsert_index_unlocked(
 
         def do_bucket(b=b):
             path = f"{out_dir}/postings/bucket={b}"
-            keep = spark.read.parquet(path).join(ids_df, "doc_id", "left_anti")
+            keep = read_table(spark, out_dir, f"postings/bucket={b}").join(
+                ids_df, "doc_id", "left_anti"
+            )
             part = keep
             if delta_postings is not None:
                 part = keep.unionByName(
@@ -918,12 +921,17 @@ def _upsert_index_unlocked(
     )
 
     def do_term_stats():
-        kept = spark.read.parquet(f"{out_dir}/term_stats").join(
+        kept = read_table(spark, out_dir, "term_stats").join(
             terms_df, "term", "left_anti"
         )
+        # an upsert that touches no term (a delete of an absent id) has
+        # no bucket to read: start from an empty postings table
         touched = (
-            spark.read.option("basePath", f"{out_dir}/postings")
-            .parquet(*[f"{out_dir}/postings/bucket={b}" for b in affected_buckets])
+            reduce(
+                DataFrame.unionByName,
+                [read_table(spark, out_dir, f"postings/bucket={b}") for b in affected_buckets],
+                spark.createDataFrame([], TABLE_SCHEMAS["postings"]),
+            )
             .join(terms_df, "term", "left_semi")
             .groupBy("term")
             .agg(F.count(F.lit(1)).alias("df"))
@@ -937,20 +945,20 @@ def _upsert_index_unlocked(
     run_unit("upsert_term_stats", do_term_stats)
 
     # ---- stage 4: affected segments buckets (with CURRENT stats)
-    st_row = spark.read.parquet(f"{out_dir}/stats").collect()[0]
+    st_row = read_table(spark, out_dir, "stats").collect()[0]
     from .indexing import CorpusStats
 
     stats = CorpusStats(int(st_row["n_docs"]), float(st_row["avgdl"]))
     for b in affected_buckets:
 
         def do_seg(b=b):
-            part = spark.read.parquet(f"{out_dir}/postings/bucket={b}")
+            part = read_table(spark, out_dir, f"postings/bucket={b}")
             segs = build_segments(part, stats, salt_range=salt_range)
             # versioned swap, NOT mode("overwrite"): overwrite deletes the
             # live dir before writing — a racing reader would see ENOENT
             # or a partial bucket
             _swap_dir(f"{out_dir}/segments/bucket={b}", lambda p: segs.write.parquet(p))
-            return spark.read.parquet(f"{out_dir}/segments/bucket={b}").count()
+            return read_table(spark, out_dir, f"segments/bucket={b}").count()
 
         # unit name matches the build's so impact_scale() sees ONE manifest
         # per bucket carrying the avgdl its impacts were computed with

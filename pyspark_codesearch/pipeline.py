@@ -1,33 +1,14 @@
-"""End-to-end ingest pipeline: markdown corpus -> paper + chunk docs.
+"""Paper metadata enrichment: extracted paper rows ⋈ a metadata table.
 
-Distributed re-expression of the reference's single-threaded ingest loop
-(ingest_papers.py:457-542 / process_paper :271-455): per markdown doc —
-extract title (regex fallback, :319-322), abstract (:323-326), word
-count (:311), has_images (:313), figure captions (:329-348); chunk the
-content (document_chunker semantics); emit ONE paper doc and N chunk
-docs with denormalized parent metadata (:380-449). Deterministic ids
-make re-ingest idempotent (es_indexer.py:176-179).
-
-The whole pipeline is one DataFrame plan per output table — the
-reference processes ~10-15 papers/min sequentially; this distributes
-every step.
+Distributed re-expression of the reference ingest's metadata merge
+(ingest_papers.py:72-129, :241-269, :319-326): the metadata value wins,
+the value extracted from the paper's content is the fallback.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .chunker import chunk_docs
-from .functions import (
-    arxiv_id_to_publish_date,
-    chunk_doc_id,
-    extract_abstract,
-    extract_title,
-    figure_caption_lines,
-    has_images,
-    word_count,
-)
 
 
 def enrich_with_metadata(
@@ -52,51 +33,3 @@ def enrich_with_metadata(
     for f in present:
         out = out.withColumn(f, F.coalesce(F.col(f"_meta_{f}"), F.col(f))).drop(f"_meta_{f}")
     return out
-
-
-def ingest_markdown_corpus(
-    md_docs: DataFrame,
-    *,
-    id_col: str = "paper_id",
-    content_col: str = "content",
-    chunk_size: int = 512,
-    chunk_overlap: int = 100,
-) -> tuple[DataFrame, DataFrame]:
-    """(paper_id, content [, authors, categories]) -> (papers, chunks)."""
-    meta_cols = [c for c in ("authors", "categories") if c in md_docs.columns]
-    papers = md_docs.select(
-        F.col(id_col).alias("paper_id"),
-        extract_title(F.col(content_col)).alias("title"),
-        extract_abstract(F.col(content_col)).alias("abstract"),
-        word_count(F.col(content_col)).alias("word_count"),
-        has_images(F.col(content_col)).alias("has_images"),
-        figure_caption_lines(F.col(content_col)).alias("figure_captions"),
-        arxiv_id_to_publish_date(F.col(id_col)).alias("publish_date"),
-        F.lit("paper").alias("doc_type"),
-        *meta_cols,
-    )
-    raw_chunks = chunk_docs(
-        md_docs, id_col=id_col, text_col=content_col,
-        chunk_size=chunk_size, chunk_overlap=chunk_overlap,
-    ).withColumnRenamed("id", "paper_id")
-    # denormalize parent metadata onto chunk docs (join avoidance at
-    # query time — reference ingest_papers.py:417-435, SURVEY J3)
-    parent = papers.select("paper_id", "title", "publish_date")
-    chunks = (
-        raw_chunks.join(F.broadcast(parent), "paper_id")
-        .select(
-            chunk_doc_id("paper_id", "chunk_index").alias("doc_id"),
-            "paper_id",
-            "chunk_index",
-            "chunk_text",
-            "chunk_start",
-            "chunk_end",
-            "token_count",
-            "title",
-            "publish_date",
-            F.lit("chunk").alias("doc_type"),
-        )
-    )
-    # total_chunks back onto papers (reference paper doc field)
-    counts = chunks.groupBy("paper_id").agg(F.count(F.lit(1)).alias("total_chunks"))
-    return papers.join(counts, "paper_id", "left").fillna({"total_chunks": 0}), chunks

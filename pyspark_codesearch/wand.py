@@ -2,10 +2,13 @@
 
 This is the scale path the north rule asks for (the reference delegates the
 equivalent to Lucene's WAND/MAXSCORE inside Elasticsearch — implied by its
-multi_match DSL, es_indexer.py:276-284). Per doc-id-range salt:
+multi_match DSL, es_indexer.py:276-284). One Spark plan,
+:func:`wand_topk_batch`, wraps the one scorer, :func:`_score_salt`; a
+single query is a batch of one. Per doc-id-range salt:
 
   segments(term, salt, blocks...)  cogroup  doc_lens(salt, doc_id, doc_len)
-      -> applyInPandas MaxScore scorer -> per-salt top-k -> global top-k
+      -> applyInPandas MaxScore scorer, once per query of the batch
+      -> per-salt top-k -> per-query top-k
 
 Pruning (lossless for top-k):
 - terms processed in descending max-contribution C_t = qtf * idf_t * max
@@ -14,9 +17,13 @@ Pruning (lossless for top-k):
   no longer introduce new candidate docs, so their blocks are decoded only
   where [first_doc, last_doc] intersects the candidate set (block-max
   metadata = the skip index).
-- per-salt top-k lists are unioned and re-limited globally; doc-range
+- per-salt top-k lists are unioned and re-limited per query; doc-range
   salting guarantees a doc's postings never straddle salts, so the union
   is exact.
+- :func:`wand_topk_selective` runs the plan twice on one query: the head
+  term's salts first, then the other touched salts seeded with the
+  global θ₀ of the first phase (or not at all, when a driver-side bound
+  proves them out).
 
 Parallelism story at 100 TB: every (salt) group holds at most
 ``salt_range`` postings per term; hot Zipfian terms fan out across salts =
@@ -130,58 +137,52 @@ def _decode_term_blocks(g: pd.DataFrame):
     return ids, tfs
 
 
+def _no_hits(**lead: str) -> pd.DataFrame:
+    """An empty scorer result; ``lead`` names extra leading columns and
+    their dtypes (the batch's ``query_id``)."""
+    dtypes = {**lead, "doc_id": "int64", "score": "float64"}
+    return pd.DataFrame({c: pd.Series(dtype=t) for c, t in dtypes.items()})
+
+
 def _score_salt(
-    seg_pdf: pd.DataFrame,
-    lens_pdf: pd.DataFrame,
+    term_groups: dict[str, pd.DataFrame],
+    prep: tuple,
+    cache: dict,
     qtf: dict[str, float],
     dfs: dict[str, int],
     n_docs: int,
-    avgdl: float,
     k: int,
-    k1: float,
-    b: float,
-    prep: tuple | None = None,
-    cache: dict | None = None,
-    impact_scale: float = 1.0,
-    term_groups: dict[str, pd.DataFrame] | None = None,
-    init_theta: float | None = None,
+    impact_scale: float,
+    init_theta: float,
 ) -> pd.DataFrame:
-    """MaxScore scoring of one salt. ``prep`` (base, norm_c), ``cache``
-    (term -> (ids, query-independent contrib)) and ``term_groups`` (term
-    -> pre-sorted block rows, split ONCE per task) are shared across the
-    queries of a batch — hot terms decode and divide ONCE per group, and
-    no per-query isin/groupby re-scans the group frame.
+    """MaxScore scoring of one query in one cogroup group. ``term_groups``
+    (term -> block rows sorted by (salt, block_id), split ONCE per
+    group), ``prep`` (base, norm_c) and ``cache`` (term -> (ids,
+    query-independent contrib)) are shared by the queries of a batch —
+    hot terms decode and divide ONCE per group, and no per-query
+    isin/groupby re-scans the group frame. A coarse group
+    (salt_group_factor > 1) holds several salts' block runs; doc-range
+    salting makes each term's run ascending in doc_id, so one fused
+    decode still works.
 
     ``init_theta`` seeds the MaxScore threshold with a GLOBAL k-th-best
-    score already known to the caller (two-phase selective search,
-    :func:`wand_topk_selective`): per-salt scoring alone can never freeze
-    a salt that lacks the query's dominant term — its local θ comes only
-    from its own low-scoring docs — so the global seed is what lets
-    whole salts skip decode. Correctness: freezing drops only docs
-    provably below a score the GLOBAL top-k already reached; emitted
-    scores are untouched, the final cross-salt merge is unchanged."""
-    if (term_groups is None and seg_pdf.empty) or lens_pdf.empty:
-        return pd.DataFrame({"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")})
-    if prep is None:
-        prep = _prep_lens(lens_pdf, avgdl, k1, b)
+    score already known to the caller (``-inf`` when none is known; phase
+    2 of :func:`wand_topk_selective` passes phase 1's k-th score):
+    per-salt scoring alone can never freeze a salt that lacks the
+    query's dominant term — its local θ comes only from its own
+    low-scoring docs — so the global seed is what lets whole salts skip
+    decode. Correctness: freezing drops only docs provably below a score
+    the GLOBAL top-k already reached; emitted scores are untouched, the
+    final cross-salt merge is unchanged."""
     base, norm_c = prep
 
     # per-term block table + max contribution C_t (df from the broadcast
     # term_stats side table, not duplicated into segment rows)
-    if term_groups is None:
-        # (salt, block_id): a coarse-grouped task (salt_group_factor > 1)
-        # holds several salts' block runs; doc-range salting makes the
-        # concatenation ascending in doc_id, so one fused decode still works
-        pairs = (
-            (term, g.sort_values(["salt", "block_id"]))
-            for term, g in seg_pdf.groupby("term", sort=True)
-        )
-    else:
-        pairs = (
-            (term, term_groups[term]) for term in sorted(qtf) if term in term_groups
-        )
     terms = []
-    for term, g in pairs:
+    for term in sorted(qtf):
+        if term not in term_groups:
+            continue
+        g = term_groups[term]
         w = qtf[term] * _idf(n_docs, float(dfs[term]))
         # impact_scale > 1 after index upserts shifted avgdl: stored block
         # maxima were computed with built_avgdl, scaling keeps the MaxScore
@@ -189,7 +190,7 @@ def _score_salt(
         c_t = w * float(g["block_max_impact"].max()) * impact_scale
         terms.append((term, w, c_t, g))
     if not terms:
-        return pd.DataFrame({"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")})
+        return _no_hits()
     terms.sort(key=lambda t: (-t[2], t[0]))
 
     def term_arrays(g: pd.DataFrame, term: str):
@@ -199,19 +200,16 @@ def _score_salt(
         (the two heaviest memory-streaming ops) run once per term, not
         once per (query, term); each query then pays one scalar
         multiply by w = qtf * idf."""
-        if cache is not None and term in cache:
-            return cache[term]
-        ids, tfs = _decode_term_blocks(g)
-        out = (ids, tfs / (tfs + norm_c[ids - base]))
-        if cache is not None:
-            cache[term] = out
-        return out
+        if term not in cache:
+            ids, tfs = _decode_term_blocks(g)
+            cache[term] = (ids, tfs / (tfs + norm_c[ids - base]))
+        return cache[term]
 
     def lookup_arrays(g: pd.DataFrame, term: str, hi_ids):
         """(ids, contrib) restricted to blocks that can intersect the
         candidate set. A cached full decode is strictly cheaper than a
         fresh partial decode, so prefer it."""
-        if cache is not None and term in cache:
+        if term in cache:
             return cache[term]
         if hi_ids.size == 0:
             # frozen-from-the-start salt (global init_theta): nothing can
@@ -234,14 +232,14 @@ def _score_salt(
     lookup_mode = False
     for i, (term, w, c_t, g) in enumerate(terms):
         if not lookup_mode:
-            theta = init_theta if init_theta is not None else None
+            theta = init_theta
             if cand_ids.size >= k:
                 kth = float(
                     np.partition(cand_scores, cand_scores.size - k)[
                         cand_scores.size - k
                     ]
                 )
-                theta = kth if theta is None else max(theta, kth)
+                theta = max(theta, kth)
             # MaxScore switch: docs NOT yet candidates can gain at most the
             # sum of ALL remaining max-contributions; below θ they can never
             # enter the top-k, so the candidate set freezes. Every remaining
@@ -250,7 +248,7 @@ def _score_salt(
             # only provably-losing docs, never contributions of winners).
             # With a global init_theta the freeze can fire at i=0 with an
             # EMPTY candidate set: the whole salt is provably out.
-            if theta is not None and float(sum(c_values[i:])) < theta:
+            if float(sum(c_values[i:])) < theta:
                 lookup_mode = True
         if lookup_mode:
             ids, contrib = lookup_arrays(g, term, cand_ids)
@@ -270,7 +268,7 @@ def _score_salt(
             np.add.at(cand_scores, inv, all_sc)
 
     if cand_ids.size == 0:
-        return pd.DataFrame({"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")})
+        return _no_hits()
     top = min(k, cand_ids.size)
     order = np.lexsort((cand_ids, -cand_scores))[:top]
     return pd.DataFrame({"doc_id": cand_ids[order], "score": cand_scores[order]})
@@ -426,116 +424,8 @@ class TermDictionary:
         )
 
 
-def collect_term_salts(segments: DataFrame) -> dict[str, tuple[int, ...]]:
-    """Resident term -> touched-salts dictionary (one distinct scan).
-
-    The query-time use: prune BOTH cogroup sides to the salts that
-    actually hold postings for the query's terms, so no python scorer
-    (and no Arrow transfer of that salt's doc-length slice) ever spins
-    for an untouched salt. This is the salt-bitmap column of a Lucene-
-    style term dictionary; at 10^12-file scale it lives next to
-    term_stats as a (term, salts array) side table — still tiny relative
-    to the index (vocab x a few bytes per touched salt) — and the
-    driver looks up only the query's terms instead of collecting all."""
-    rows = segments.select("term", "salt").distinct().collect()
-    acc: dict[str, set[int]] = {}
-    for r in rows:
-        acc.setdefault(r["term"], set()).add(int(r["salt"]))
-    return {t: tuple(sorted(s)) for t, s in acc.items()}
-
-
 def _touched_salts(terms, salt_lookup) -> list[int]:
     return sorted({s for t in terms for s in salt_lookup.get(t, ())})
-
-
-def wand_topk(
-    segments: DataFrame,
-    doc_lens: DataFrame,
-    term_stats: DataFrame,
-    stats: CorpusStats,
-    query: str,
-    k: int = 10,
-    *,
-    salt_range: int = 1 << 20,
-    k1: float = K1,
-    b: float = B,
-    lens_by_salt: DataFrame | None = None,
-    df_lookup: dict[str, int] | None = None,
-    salt_lookup: dict[str, tuple[int, ...]] | None = None,
-    impact_scale: float = 1.0,
-    salt_group_factor: int = 1,
-    restrict_salts: list[int] | None = None,
-    exclude_salts: list[int] | None = None,
-    init_theta: float | None = None,
-) -> DataFrame:
-    """Top-k (doc_id, score) via pruned scoring over compressed segments.
-
-    ``salt_group_factor`` (G) coarsens the cogroup key to ``salt // G``:
-    fewer, larger python scorer tasks. For latency-bound single queries
-    the per-task dispatch (python worker + Arrow round trip) dominates —
-    G in the 8-64 range measurably cuts per-query wall time — while
-    throughput batches keep G=1 for full parallelism. Exactness is
-    unaffected (per-task doc ranges stay disjoint; scores identical —
-    pinned by tests). Per-task memory grows with G: the scorer's dl
-    array spans at most G * salt_range doc ids.
-
-    ``restrict_salts`` / ``exclude_salts`` bound the scored doc ranges
-    (both cogroup sides) to / away from an explicit salt list — the two
-    phases of :func:`wand_topk_selective`. ``init_theta`` seeds every
-    salt's MaxScore threshold with a globally-known k-th score (see
-    :func:`_score_salt`); a salt whose total max-contribution sum falls
-    below it decodes NOTHING."""
-    spark = segments.sparkSession
-    qtf = {t: float(c) for t, c in Counter(tokenize_py(query)).items()}
-    if not qtf:
-        return spark.createDataFrame([], "doc_id long, score double")
-    # df for the handful of query terms: driver-side lookup of the small
-    # side table (the reference's analogue: Lucene term dictionary seek);
-    # pass df_lookup to skip the per-query collect when the term
-    # dictionary is already resident on the driver
-    if df_lookup is not None:
-        dfs = {t: df_lookup[t] for t in qtf if t in df_lookup}
-    else:
-        dfs = {
-            r["term"]: int(r["df"])
-            for r in term_stats.filter(_in_expr("term", qtf)).collect()
-        }
-    qtf = {t: c for t, c in qtf.items() if t in dfs}
-    if not qtf:
-        return spark.createDataFrame([], "doc_id long, score double")
-    # IN-filter on term is pushed down to the segments parquet scan
-    # (_in_expr: one py4j call per filter instead of one per literal)
-    seg = segments.filter(_in_expr("term", list(qtf)))
-    lens = _lens(doc_lens, lens_by_salt, salt_range)
-    if restrict_salts is not None:
-        seg = seg.filter(_in_expr("salt", restrict_salts))
-        lens = lens.filter(_in_expr("salt", restrict_salts))
-    if exclude_salts is not None:
-        seg = seg.filter(~_in_expr("salt", exclude_salts))
-        lens = lens.filter(~_in_expr("salt", exclude_salts))
-    if salt_lookup is not None:
-        # static salt pruning: the cogroup iterates the UNION of both
-        # sides' keys, and the lens side holds EVERY salt — without this
-        # filter a python scorer spins (and a doc-length slice ships over
-        # Arrow) for every salt in the corpus even when the query's terms
-        # touch three of them
-        touched = _touched_salts(qtf, salt_lookup)
-        if not touched:
-            return spark.createDataFrame([], "doc_id long, score double")
-        lens = lens.filter(_in_expr("salt", touched))
-    n_docs, avgdl = stats.n_docs, stats.avgdl
-
-    def score_fn(key, seg_pdf: pd.DataFrame, lens_pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score_salt(seg_pdf, lens_pdf, qtf, dfs, n_docs, avgdl, k, k1, b,
-                           impact_scale=impact_scale, init_theta=init_theta)
-
-    gkey = _group_key(salt_group_factor)
-    per_salt = (
-        seg.groupBy(gkey)
-        .cogroup(lens.groupBy(gkey))
-        .applyInPandas(score_fn, "doc_id long, score double")
-    )
-    return per_salt.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def wand_topk_selective(
@@ -552,7 +442,7 @@ def wand_topk_selective(
     lens_by_salt: DataFrame | None = None,
     df_lookup: dict[str, int],
     salt_lookup: dict[str, tuple[int, ...]],
-    imp_lookup: dict[str, float] | None = None,
+    imp_lookup: dict[str, float],
     impact_scale: float = 1.0,
     salt_group_factor: int = 16,
     route_out: dict | None = None,
@@ -567,18 +457,21 @@ def wand_topk_selective(
     1.28M docs): that makes single-phase WAND a python full-decode that
     loses to the JVM exact plan at every volume below ~16M postings.
 
-    Phase 1 scores ONLY the salts containing the head term (every doc
-    holding the head term lives there, and each doc's postings for ALL
-    query terms live in its own salt, so phase-1 scores are final).
-    The driver then takes θ₀ = global k-th score and the residual bound
-    Σ_{t≠head} C_t from the TermDictionary's per-term max impacts:
-    if the bound < θ₀, NO doc outside the head salts can reach the
-    top-k — phase 2 is provably unnecessary and the whole query touched
-    only df(head) docs' worth of index. Otherwise phase 2 scores the
-    remaining salts seeded with ``init_theta=θ₀`` (salts whose total
-    contribution bound falls below it decode nothing) and the driver
-    merges the two k-row sets. Scores are EXACT either way — pruning
-    only ever drops provably-losing docs.
+    Both phases are :func:`wand_topk_batch` calls on a batch of one
+    query, each given ``salt_lookup`` cut down to its own salt set (the
+    batch prunes both cogroup sides to it). Phase 1 scores ONLY the
+    salts containing the head term (every doc holding the head term
+    lives there, and each doc's postings for ALL query terms live in its
+    own salt, so phase-1 scores are final). The driver then takes θ₀ =
+    global k-th score and the residual bound Σ_{t≠head} C_t from the
+    TermDictionary's per-term max impacts (``imp_lookup``): if the bound
+    < θ₀, NO doc outside the head salts can reach the top-k — phase 2 is
+    provably unnecessary and the whole query touched only df(head) docs'
+    worth of index. Otherwise phase 2 scores the query's other touched
+    salts seeded with ``init_theta`` θ₀ (salts whose total contribution
+    bound falls below it decode nothing) and the driver merges the two
+    k-row sets. Scores are EXACT either way — pruning only ever drops
+    provably-losing docs.
 
     The reference's ES runs the same idea inside one Lucene process
     (WAND over a shared live θ); this is its shared-nothing analogue —
@@ -599,31 +492,32 @@ def wand_topk_selective(
     empty = "doc_id long, score double"
     if not qtf:
         return spark.createDataFrame([], empty)
-    imp = imp_lookup or {}
     c_of = {
-        t: qtf[t]
-        * _idf(stats.n_docs, float(df_lookup[t]))
-        * float(imp.get(t, 1.0))
-        * impact_scale
+        t: qtf[t] * _idf(stats.n_docs, float(df_lookup[t])) * imp_lookup[t] * impact_scale
         for t in qtf
     }
     head = max(c_of, key=lambda t: (c_of[t], t))
-    head_salts = sorted(salt_lookup.get(head, ()))
+    head_salts = set(salt_lookup.get(head, ()))
     if not head_salts:
         return spark.createDataFrame([], empty)
     rest_bound = float(sum(c for t, c in c_of.items() if t != head))
 
-    common = dict(
-        salt_range=salt_range, k1=k1, b=b, lens_by_salt=lens_by_salt,
-        df_lookup=df_lookup, salt_lookup=salt_lookup,
-        impact_scale=impact_scale, salt_group_factor=salt_group_factor,
-    )
-    rows1 = wand_topk(
-        segments, doc_lens, term_stats, stats, query, k,
-        restrict_salts=head_salts, **common,
-    ).collect()
-    theta0 = float(rows1[k - 1]["score"]) if len(rows1) >= k else None
-    other = set(_touched_salts(qtf, salt_lookup)) - set(head_salts)
+    def phase(in_head: bool, init_theta: dict[str, float] | None):
+        salts = {
+            t: tuple(s for s in salt_lookup.get(t, ()) if (s in head_salts) == in_head)
+            for t in qtf
+        }
+        rows = wand_topk_batch(
+            segments, doc_lens, term_stats, stats, {"q": query}, k,
+            salt_range=salt_range, k1=k1, b=b, lens_by_salt=lens_by_salt,
+            df_lookup=df_lookup, salt_lookup=salts, impact_scale=impact_scale,
+            salt_group_factor=salt_group_factor, init_theta=init_theta,
+        ).collect()
+        return [(int(r["doc_id"]), float(r["score"])) for r in rows]
+
+    rows1 = phase(True, None)
+    theta0 = rows1[k - 1][1] if len(rows1) >= k else None
+    other = set(_touched_salts(qtf, salt_lookup)) - head_salts
     if route_out is not None:
         route_out.update(
             head=head, head_salts=len(head_salts), theta0=theta0,
@@ -636,20 +530,11 @@ def wand_topk_selective(
         # only the provably-below case is skipped
         if route_out is not None:
             route_out["phase2"] = "proved_away" if other else "no_other_salts"
-        return spark.createDataFrame(
-            [(int(r["doc_id"]), float(r["score"])) for r in rows1], empty
-        )
+        return spark.createDataFrame(rows1, empty)
     if route_out is not None:
         route_out["phase2"] = "seeded"
-    rows2 = wand_topk(
-        segments, doc_lens, term_stats, stats, query, k,
-        exclude_salts=head_salts, init_theta=theta0, **common,
-    ).collect()
-    merged = sorted(
-        [(int(r["doc_id"]), float(r["score"])) for r in rows1]
-        + [(int(r["doc_id"]), float(r["score"])) for r in rows2],
-        key=lambda t: (-t[1], t[0]),
-    )[:k]
+    rows2 = phase(False, None if theta0 is None else {"q": theta0})
+    merged = sorted(rows1 + rows2, key=lambda t: (-t[1], t[0]))[:k]
     return spark.createDataFrame(merged, empty)
 
 
@@ -675,37 +560,48 @@ def wand_topk_batch(
     salt_lookup: dict[str, tuple[int, ...]] | None = None,
     impact_scale: float = 1.0,
     salt_group_factor: int = 1,
+    init_theta: dict[str, float] | None = None,
 ) -> DataFrame:
     """All queries in ONE cogroup pass: (query_id, rank, doc_id, score).
+    This is the one Spark plan around :func:`_score_salt`; a single query
+    is a batch of one (``DocumentsEngine.search_wand``, both phases of
+    :func:`wand_topk_selective`).
 
     Segments are scanned once, term-pruned to the union of all query
     terms; every salt partition runs the MaxScore scorer once per query
     over its term groups, sharing one decode-and-divide per (term,
     group) across the batch's queries. One shuffle amortized over the
     whole query batch — the scalable offline-retrieval shape.
-    With ``salt_lookup``, each query scores ONLY inside salts its own
-    terms touch (and the lens side is pruned to the batch-wide union),
-    so untouched salts cost nothing.
+    With ``salt_lookup``, BOTH cogroup sides are pruned to the salts the
+    batch's terms touch in it (the segments filter reaches the parquet
+    scan), and each query scores ONLY inside salts its own terms touch,
+    so untouched salts cost nothing. A caller restricts the scored doc
+    ranges by passing a lookup cut down to the salts it wants.
+    ``init_theta`` (query id -> θ₀) seeds that query's MaxScore threshold
+    with a globally-known k-th score (see :func:`_score_salt`); a salt
+    whose total max-contribution sum falls below it decodes NOTHING.
 
-    ``salt_group_factor`` (G) coarsens the cogroup key to ``salt // G``
-    like :func:`wand_topk`. DEFAULT IS 1 — measured (3.84M docs, 36
-    queries, local[2] and local[8]): once the per-task python work is
-    pre-split (term_groups) and the query-independent contrib vectors
-    are cached, finer tasks win at every parallelism level (better wave
-    balancing, smaller per-task lens span); G=8 at 8 cores left half the
-    cores idle and ran 2.8x slower. Coarsening remains for latency-bound single
-    queries (:func:`wand_topk` uses G=16 in the bench). Exactness is
-    unaffected by G (doc ranges stay disjoint; pinned by tests)."""
+    ``salt_group_factor`` (G) coarsens the cogroup key to ``salt // G``:
+    fewer, larger python scorer tasks. DEFAULT IS 1 — measured (3.84M
+    docs, 36 queries, local[2] and local[8]): once the per-task python
+    work is pre-split (term_groups) and the query-independent contrib
+    vectors are cached, finer tasks win at every parallelism level
+    (better wave balancing, smaller per-task lens span); G=8 at 8 cores
+    left half the cores idle and ran 2.8x slower. Coarsening remains for
+    latency-bound single queries, where the per-task dispatch (python
+    worker + Arrow round trip) dominates (:func:`wand_topk_selective`
+    uses G=16). Exactness is unaffected by G (doc ranges stay disjoint;
+    pinned by tests); per-task memory grows with it, as the scorer's dl
+    array spans at most G * salt_range doc ids."""
     spark = segments.sparkSession
+    empty = "query_id string, rank int, doc_id long, score double"
     qtfs = {
         qid: {t: float(c) for t, c in Counter(tokenize_py(q)).items()}
         for qid, q in queries.items()
     }
     all_terms = sorted({t for m in qtfs.values() for t in m})
     if not all_terms:
-        return spark.createDataFrame(
-            [], "query_id string, rank int, doc_id long, score double"
-        )
+        return spark.createDataFrame([], empty)
     if df_lookup is not None:
         dfs = {t: df_lookup[t] for t in all_terms if t in df_lookup}
     else:
@@ -722,51 +618,46 @@ def wand_topk_batch(
     if salt_lookup is not None:
         union = _touched_salts(dfs, salt_lookup)
         if not union:
-            return spark.createDataFrame(
-                [], "query_id string, rank int, doc_id long, score double"
-            )
+            return spark.createDataFrame([], empty)
+        # the cogroup iterates the UNION of both sides' keys, and the lens
+        # side holds EVERY salt: without these filters a python scorer
+        # spins (and a doc-length slice ships over Arrow) for every salt
+        # in the corpus, and segments of salts outside the lookup are read
+        seg = seg.filter(_in_expr("salt", union))
         lens = lens.filter(_in_expr("salt", union))
         # per-query touched-salt sets: a query skips salts that only
         # OTHER queries' terms touch (cheap set probe per group)
         qsalts = {qid: set(_touched_salts(m, salt_lookup)) for qid, m in qtfs.items()}
+    thetas = init_theta or {}
     n_docs, avgdl = stats.n_docs, stats.avgdl
 
     def score_fn(key, seg_pdf: pd.DataFrame, lens_pdf: pd.DataFrame) -> pd.DataFrame:
         outs = []
         if seg_pdf.empty or lens_pdf.empty:
-            return pd.DataFrame(
-                {"query_id": pd.Series(dtype="object"),
-                 "doc_id": pd.Series(dtype="int64"),
-                 "score": pd.Series(dtype="float64")}
-            )
+            return _no_hits(query_id="object")
         # salts actually present in this (possibly coarse) group — the
         # per-query skip below intersects against them
         group_salts = set(int(s) for s in seg_pdf["salt"].unique())
+        # shared across this group's queries: the frame pre-split by term
+        # ONCE (no per-query isin/groupby re-scan of the group frame),
+        # per-doc norm constants and a term -> (ids, contrib) cache
+        # (decode + divide once per group, not per query)
         term_groups = {
             t: g.sort_values(["salt", "block_id"])
             for t, g in seg_pdf.groupby("term", sort=False)
         }
-        # shared across this group's queries: per-doc norm constants, a
-        # term -> (ids, contrib) cache (decode + divide once per group,
-        # not per query), and the frame pre-split by term ONCE (no
-        # per-query isin/groupby re-scan of the group frame)
         prep = _prep_lens(lens_pdf, avgdl, k1, b)
         cache: dict = {}
         for qid, qtf in qtfs.items():
             if not qtf or (qsalts is not None and not (qsalts[qid] & group_salts)):
                 continue
-            r = _score_salt(seg_pdf, lens_pdf, qtf, dfs, n_docs, avgdl, k, k1, b,
-                            prep=prep, cache=cache, impact_scale=impact_scale,
-                            term_groups=term_groups)
+            r = _score_salt(term_groups, prep, cache, qtf, dfs, n_docs, k,
+                            impact_scale, thetas.get(qid, -np.inf))
             if len(r):
                 r.insert(0, "query_id", qid)
                 outs.append(r)
         if not outs:
-            return pd.DataFrame(
-                {"query_id": pd.Series(dtype="object"),
-                 "doc_id": pd.Series(dtype="int64"),
-                 "score": pd.Series(dtype="float64")}
-            )
+            return _no_hits(query_id="object")
         return pd.concat(outs, ignore_index=True)
 
     gkey = _group_key(salt_group_factor)

@@ -87,7 +87,7 @@ def main() -> None:
     from pyspark_codesearch.wand import (
         TermDictionary,
         prepare_lens_by_salt,
-        wand_topk,
+        wand_topk_batch,
         wand_topk_selective,
     )
 
@@ -180,8 +180,8 @@ def main() -> None:
             # queries decode dominates and fine tasks stream better
             # through Arrow; dispatch cost only matters for light ones.
             g = int(os.environ.get("CROSSOVER_G", "16"))
-            return wand_topk(
-                segments, doc_lens, term_stats, stats, q, 10,
+            return wand_topk_batch(
+                segments, doc_lens, term_stats, stats, {"q": q}, 10,
                 salt_range=salt_range, lens_by_salt=lens_by_salt,
                 df_lookup=dfs, salt_lookup=salts, salt_group_factor=g,
             ).collect()

@@ -1,70 +1,40 @@
-"""End-to-end markdown ingest -> papers/chunks -> search (SURVEY §3.3)."""
+"""Metadata enrichment and search over literal papers/chunks frames."""
 
 import pytest
-from pyspark.sql import functions as F
 
-from pyspark_codesearch.chunker import chunk_text_py
-from pyspark_codesearch.pipeline import ingest_markdown_corpus
+from pyspark_codesearch.pipeline import enrich_with_metadata
 from pyspark_codesearch.search import SearchService
 
-
-def _md(i: int, topic: str) -> str:
-    body = " ".join(
-        f"Sentence {j} about {topic} with details and measurements." for j in range(30)
-    )
-    return (
-        f"# Paper {i} on {topic}\n\n## Abstract\n\nWe study {topic} carefully.\n\n"
-        f"## Body\n\n{body}\n\n![fig](x.png)\nFigure 1: {topic} overview\n"
-    )
+TOPICS = ["transformer attention", "graph networks", "query optimization"] * 3
 
 
 @pytest.fixture(scope="module")
 def corpus(spark):
-    rows = [
-        (f"23{i:02d}.1000{i}", _md(i, t))
-        for i, t in enumerate(
-            ["transformer attention", "graph networks", "query optimization"] * 3
-        )
-    ]
-    return spark.createDataFrame(rows, "paper_id string, content string")
-
-
-def test_papers_and_chunks(spark, corpus):
-    papers, chunks = ingest_markdown_corpus(corpus, chunk_size=60, chunk_overlap=10)
-    p = {r["paper_id"]: r for r in papers.collect()}
-    assert len(p) == 9
-    first = p["2300.10000"]
-    assert first["title"] == "Paper 0 on transformer attention"
-    assert first["abstract"] == "We study transformer attention carefully."
-    assert first["has_images"] is True
-    assert str(first["publish_date"]) == "2023-00-01" or first["publish_date"] is None or True
-    assert first["total_chunks"] >= 2
-    assert any("Figure 1" in c for c in first["figure_captions"])
-    c = chunks.filter(F.col("paper_id") == "2300.10000").orderBy("chunk_index").collect()
-    assert c[0]["doc_id"] == "2300.10000_chunk_0"
-    assert [r["chunk_index"] for r in c] == list(range(len(c)))
-    # chunk texts equal the shared python chunker output
-    exp = chunk_text_py(
-        corpus.filter(F.col("paper_id") == "2300.10000").collect()[0]["content"], 60, 10
+    """(papers, chunks): nine papers of two chunks each, three per topic."""
+    papers, chunks = [], []
+    for i, topic in enumerate(TOPICS):
+        pid, title = f"23{i:02d}.1000{i}", f"Paper {i} on {topic}"
+        papers.append((pid, title, f"We study {topic} carefully.", 2))
+        for j, text in enumerate(
+            [f"{title}. We study {topic} carefully.",
+             f"Sentences about {topic} with details and measurements."]
+        ):
+            chunks.append((f"{pid}_chunk_{j}", pid, j, text, title))
+    return (
+        spark.createDataFrame(
+            papers, "paper_id string, title string, abstract string, total_chunks long"
+        ),
+        spark.createDataFrame(
+            chunks,
+            "doc_id string, paper_id string, chunk_index int, chunk_text string, title string",
+        ),
     )
-    assert [r["chunk_text"] for r in c] == [e["text"] for e in exp]
-    # denormalized parent metadata present
-    assert all(r["title"] == first["title"] for r in c)
-
-
-def test_ingest_is_idempotent(spark, corpus):
-    p1, c1 = ingest_markdown_corpus(corpus, chunk_size=60, chunk_overlap=10)
-    p2, c2 = ingest_markdown_corpus(corpus, chunk_size=60, chunk_overlap=10)
-    assert sorted(map(tuple, p1.collect())) == sorted(map(tuple, p2.collect()))
-    assert sorted(map(tuple, c1.collect())) == sorted(map(tuple, c2.collect()))
 
 
 def test_enrich_with_metadata_coalesce(spark, corpus):
     """J1 (reference ingest_papers.py:72-129): meta value preferred, regex-
     extracted value is the fallback when the meta row OR field is missing."""
-    from pyspark_codesearch.pipeline import enrich_with_metadata
-
-    papers, _ = ingest_markdown_corpus(corpus, chunk_size=60, chunk_overlap=10)
+    papers, _ = corpus
     meta = spark.createDataFrame(
         [
             ("2300.10000", "Meta Title 0", None),          # field fallback: abstract
@@ -88,7 +58,7 @@ def test_enrich_with_metadata_coalesce(spark, corpus):
 
 
 def test_search_over_ingested(spark, corpus):
-    papers, chunks = ingest_markdown_corpus(corpus, chunk_size=60, chunk_overlap=10)
+    papers, chunks = corpus
     svc = SearchService(spark, papers.cache(), chunks.cache())
     got = svc.search("transformer attention", 5, normalize=False).collect()
     assert len(got) == 3  # three transformer papers

@@ -70,6 +70,31 @@ def test_term_filter_pushed_to_parquet_scan(spark, index_dir):
     assert re.search(r"PushedFilters: \[.*[Ii]n\(term", p), p
 
 
+def test_batch_salt_lookup_filters_segments_by_salt(spark, index_dir):
+    """Given a salt_lookup, the batch prunes the SEGMENTS side of its
+    cogroup to the looked-up salts (pushed into the parquet scan), not
+    only the doc-lens side, so a phase restricted to some salts reads
+    only theirs."""
+    from pyspark_codesearch.indexing import CorpusStats
+    from pyspark_codesearch.wand import wand_topk_batch
+
+    st = read_table(spark, index_dir, "stats").collect()[0]
+    q = wand_topk_batch(
+        load_segments(spark, index_dir), read_table(spark, index_dir, "doc_lens"),
+        read_table(spark, index_dir, "term_stats"),
+        CorpusStats(int(st["n_docs"]), float(st["avgdl"])),
+        {"q": "parse json"}, 5, salt_range=64,
+        df_lookup={"parse": 1, "json": 1}, salt_lookup={"parse": (1,), "json": (1, 2)},
+    )
+    p = full_plan(q)
+    scans = [ln for ln in p.splitlines() if "FileScan parquet" in ln and "block_max_impact" in ln]
+    assert scans, p
+    for ln in scans:
+        assert re.search(r"PushedFilters: \[.*In\(salt, \[1,2\]\)", ln), ln
+    rows = q.collect()
+    assert rows and all(64 <= r["doc_id"] < 192 for r in rows)
+
+
 def _jobs_started_by(spark, fn) -> list[int]:
     """Ids of the Spark jobs ``fn()`` starts, counted through a fresh
     job group and the status tracker."""

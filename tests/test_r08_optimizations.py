@@ -22,7 +22,7 @@ from pyspark_codesearch.indexing import (
     corpus_stats,
 )
 from pyspark_codesearch.scoring import bm25_topk
-from pyspark_codesearch.wand import _in_expr, prepare_lens_by_salt, wand_topk
+from pyspark_codesearch.wand import _in_expr, prepare_lens_by_salt, wand_topk_batch
 
 SALT_RANGE = 64
 
@@ -50,13 +50,13 @@ def test_packed_lens_matches_row_format(env):
     packed = prepare_lens_by_salt(env["doc_lens"], SALT_RANGE)
     assert packed.columns == ["salt", "ids", "lens"]
     for q in ("data value result", "hash join", "dup"):
-        via_packed = wand_topk(
+        via_packed = wand_topk_batch(
             env["segments"], env["doc_lens"], env["term_stats"], env["stats"],
-            q, 10, salt_range=SALT_RANGE, lens_by_salt=packed,
+            {"q": q}, 10, salt_range=SALT_RANGE, lens_by_salt=packed,
         ).collect()
-        via_rows = wand_topk(
+        via_rows = wand_topk_batch(
             env["segments"], env["doc_lens"], env["term_stats"], env["stats"],
-            q, 10, salt_range=SALT_RANGE,  # row-format fallback path
+            {"q": q}, 10, salt_range=SALT_RANGE,  # row-format fallback path
         ).collect()
         assert [tuple(r) for r in via_packed] == [tuple(r) for r in via_rows]
         assert via_packed, q  # vacuity guard

@@ -2,8 +2,9 @@
 
 - segment roundtrip: decode(segments) == raw postings
 - salting invariance: different salt_range -> identical decoded postings
-- WAND rank identity: wand_topk == exact bm25_topk == oracle, incl. the
-  pruning-active regime (small k, many candidates)
+- WAND rank identity: wand_topk_batch (a single query is a batch of
+  one) == exact bm25_topk == oracle, incl. the pruning-active regime
+  (small k, many candidates)
 """
 
 import warnings
@@ -22,7 +23,7 @@ from pyspark_codesearch.indexing import (
 )
 from pyspark_codesearch.oracle import OracleIndex
 from pyspark_codesearch.scoring import bm25_topk
-from pyspark_codesearch.wand import prepare_lens_by_salt, wand_topk
+from pyspark_codesearch.wand import prepare_lens_by_salt, wand_topk_batch
 
 N_DOCS = 300
 SALT_RANGE = 64  # small so salting actually splits the corpus
@@ -43,6 +44,29 @@ def env(spark):
         "segments": segments,
         "term_stats": build_term_stats(postings),
     }
+
+
+def _wand(env, query, k, **kw):
+    """One query as a batch of one: [(doc_id, score), ...] in rank order."""
+    rows = wand_topk_batch(
+        env["segments"], env["doc_lens"], env["term_stats"], env["stats"],
+        {"q": query}, k, salt_range=SALT_RANGE, **kw,
+    ).collect()
+    return [(r["doc_id"], r["score"]) for r in rows]
+
+
+def _salts_of(segments) -> dict[str, tuple[int, ...]]:
+    """term -> sorted touched salts, computed on the driver."""
+    acc: dict[str, set[int]] = {}
+    for r in segments.select("term", "salt").collect():
+        acc.setdefault(r["term"], set()).add(int(r["salt"]))
+    return {t: tuple(sorted(v)) for t, v in acc.items()}
+
+
+def _same_ranking(got, want, msg=None):
+    assert [d for d, _ in got] == [d for d, _ in want], msg
+    for (_, a), (_, b) in zip(got, want):
+        assert a == pytest.approx(b, abs=1e-9), msg
 
 
 def _decode_all(segments_rows):
@@ -124,20 +148,12 @@ WAND_QUERIES = [
 @pytest.mark.parametrize("query", WAND_QUERIES)
 @pytest.mark.parametrize("k", [3, 10])
 def test_wand_rank_identity(env, oracle_ix, query, k):
-    exact = bm25_topk(
+    exact = [(r["doc_id"], r["score"]) for r in bm25_topk(
         env["postings"], env["term_stats"], env["stats"], query, k
-    ).collect()
-    wand = wand_topk(
-        env["segments"], env["doc_lens"], env["term_stats"], env["stats"],
-        query, k, salt_range=SALT_RANGE,
-    ).collect()
-    assert [r["doc_id"] for r in wand] == [r["doc_id"] for r in exact], query
-    for w, e in zip(wand, exact):
-        assert w["score"] == pytest.approx(e["score"], abs=1e-9)
-    expected = oracle_ix.search(query, k)
-    assert [r["doc_id"] for r in wand] == [d for d, _ in expected], query
-    for w, (_, s) in zip(wand, expected):
-        assert w["score"] == pytest.approx(s, abs=1e-9)
+    ).collect()]
+    wand = _wand(env, query, k)
+    _same_ranking(wand, exact, query)
+    _same_ranking(wand, oracle_ix.search(query, k), query)
 
 
 @pytest.fixture(scope="module")
@@ -150,14 +166,8 @@ def test_wand_pruned_residents_match_unpruned(env):
     """salt pruning + resident term dictionaries are pure optimizations:
     results must be identical to the unpruned paths, including queries
     whose terms touch only a few salts."""
-    from pyspark_codesearch.wand import (
-        collect_term_salts,
-        prepare_lens_by_salt,
-        wand_topk_batch,
-    )
-
     df_lookup = {r["term"]: int(r["df"]) for r in env["term_stats"].collect()}
-    salt_lookup = collect_term_salts(env["segments"])
+    salt_lookup = _salts_of(env["segments"])
     lens_by_salt = prepare_lens_by_salt(env["doc_lens"], SALT_RANGE)
     assert salt_lookup and all(len(v) >= 1 for v in salt_lookup.values())
     qmap = {
@@ -177,37 +187,22 @@ def test_wand_pruned_residents_match_unpruned(env):
     ).collect()
     assert sorted(map(tuple, pruned)) == sorted(map(tuple, plain))
     assert any(r["query_id"] == "b" for r in pruned)  # non-vacuous
-    # single-query pruned path too
-    for q in ["uniqterm000042", "parse json string"]:
-        plain1 = wand_topk(
-            env["segments"], env["doc_lens"], env["term_stats"], env["stats"],
-            q, 5, salt_range=SALT_RANGE,
-        ).collect()
-        pruned1 = wand_topk(
-            env["segments"], env["doc_lens"], env["term_stats"], env["stats"],
-            q, 5, salt_range=SALT_RANGE, lens_by_salt=lens_by_salt,
-            df_lookup=df_lookup, salt_lookup=salt_lookup,
-        ).collect()
-        assert [tuple(r) for r in pruned1] == [tuple(r) for r in plain1], q
+    # a batch of one, pruned to its single salt
+    q = "uniqterm000042"
+    pruned1 = _wand(env, q, 5, lens_by_salt=lens_by_salt,
+                    df_lookup=df_lookup, salt_lookup=salt_lookup)
+    assert pruned1 == _wand(env, q, 5), q
 
 
 @pytest.mark.parametrize("g", [2, 4, 100])
 def test_wand_salt_group_factor_exact(env, g):
     """Coarse cogroup keys (salt_group_factor) are a pure task-dispatch
-    optimization: results must be identical to G=1 at any factor,
-    including one coarser than the salt count."""
+    optimization: a single query's results must be identical to G=1 at
+    any factor, including one coarser than the salt count."""
     for q in ["parse json string", "return data index query token merge sort hash"]:
-        base = wand_topk(
-            env["segments"], env["doc_lens"], env["term_stats"], env["stats"],
-            q, 10, salt_range=SALT_RANGE,
-        ).collect()
-        coarse = wand_topk(
-            env["segments"], env["doc_lens"], env["term_stats"], env["stats"],
-            q, 10, salt_range=SALT_RANGE, salt_group_factor=g,
-        ).collect()
-        assert [r["doc_id"] for r in coarse] == [r["doc_id"] for r in base], (q, g)
-        for c, b in zip(coarse, base):
-            assert c["score"] == pytest.approx(b["score"], abs=1e-9)
+        base = _wand(env, q, 10)
+        coarse = _wand(env, q, 10, salt_group_factor=g)
+        _same_ranking(coarse, base, (q, g))
 
 
 def test_term_dictionary_filtered_lookups(env):
@@ -215,11 +210,11 @@ def test_term_dictionary_filtered_lookups(env):
     salt sets as the full collects, (b) send ONLY the query's terms to
     its filtered collect — never the corpus vocabulary — and (c) cache
     hits and misses so repeats cost nothing."""
-    from pyspark_codesearch.wand import TermDictionary, collect_term_salts
+    from pyspark_codesearch.wand import TermDictionary
 
     td = TermDictionary(env["term_stats"], env["segments"])
     full_df = {r["term"]: int(r["df"]) for r in env["term_stats"].collect()}
-    full_salts = collect_term_salts(env["segments"])
+    full_salts = _salts_of(env["segments"])
 
     terms = ["parse", "json", "zzznotaterm"]
     dfs, salts, _ = td.lookup3(terms)
@@ -233,16 +228,23 @@ def test_term_dictionary_filtered_lookups(env):
     assert td.fetched_terms == set(terms)
 
 
-def test_engine_wand_uses_filtered_dictionary(spark):
+def test_engine_wand_uses_filtered_dictionary(spark, sf_dir):
     """DocumentsEngine.search_wand must not collect the full vocabulary:
     after one query, the resident dictionary holds only that query's
-    terms (the full-vocab collect was the scale weak spot)."""
+    terms (the full-vocab collect was the scale weak spot). Its batch of
+    one is rank- and score-identical to the exact scorer and the
+    oracle."""
     from pyspark_codesearch.engine import DocumentsEngine
 
-    eng = DocumentsEngine(spark, "/root/testdata/sf0.001")
+    eng = DocumentsEngine(spark, sf_dir)
     try:
-        rows = eng.search_wand("table scan merge join", k=5).collect()
+        q = "table scan merge join"
+        rows = [(r["doc_id"], r["score"]) for r in eng.search_wand(q, k=5).collect()]
         assert len(rows) > 0
+        _same_ranking(rows, [(r["doc_id"], r["score"]) for r in eng.search(q, 5).collect()])
+        docs = eng.docs.select("doc_id", "content").collect()
+        oracle = OracleIndex({r["doc_id"]: r["content"] for r in docs})
+        _same_ranking(rows, oracle.search(q, 5))
         td = eng._term_dict
         assert td.fetched_terms == {"table", "scan", "merge", "join"}
         assert set(td._df) | td._miss == td.fetched_terms
@@ -251,13 +253,16 @@ def test_engine_wand_uses_filtered_dictionary(spark):
     finally:
         from pyspark_codesearch.engine import _ENGINE_CACHE
 
-        _ENGINE_CACHE.pop((id(spark), "/root/testdata/sf0.001"), None)
+        _ENGINE_CACHE.pop((id(spark), sf_dir), None)
 
 
 def test_wand_batch_matches_single(env):
-    from pyspark_codesearch.wand import wand_topk_batch
-
-    qmap = {"a": "parse json string", "b": "merge sort index", "c": "zzznotaterm"}
+    """A batch of N queries equals N batches of one: the per-group
+    decode cache the batch's queries share leaks nothing between them.
+    The queries overlap in terms (a cached full decode of one query's
+    term is reused by the next) and one misses every term."""
+    qmap = {"a": "parse json string", "b": "merge sort index", "c": "zzznotaterm",
+            "d": "json index", "e": "return data index query token merge sort hash"}
     batch = wand_topk_batch(
         env["segments"], env["doc_lens"], env["term_stats"], env["stats"],
         qmap, 5, salt_range=SALT_RANGE,
@@ -266,21 +271,16 @@ def test_wand_batch_matches_single(env):
     for r in batch:
         by_q.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
     for qid, q in qmap.items():
-        single = wand_topk(
-            env["segments"], env["doc_lens"], env["term_stats"], env["stats"],
-            q, 5, salt_range=SALT_RANGE,
-        ).collect()
-        got = by_q.get(qid, [])
-        assert [d for d, _ in got] == [r["doc_id"] for r in single], qid
-        for (_, s), r in zip(got, single):
-            assert s == pytest.approx(r["score"], abs=1e-9)
+        single = _wand(env, q, 5)
+        # scores equal bit for bit, not to a tolerance: the same arrays
+        # are summed in the same order
+        assert by_q.get(qid, []) == single, qid
+    assert set(by_q) == {"a", "b", "d", "e"}
 
 
 def test_wand_batch_rows_in_query_rank_order(env):
     """The batch result arrives in (query_id, rank) order — the order a
     driver-side sort of the same rows gives — with ranks 1..n per query."""
-    from pyspark_codesearch.wand import wand_topk_batch
-
     texts = ["parse json string", "merge sort index", "return data", "token query",
              "uniqterm000042", "read file buffer", "index merge", "data value",
              "json parse", "sort", "string token", "zzznotaterm"]
@@ -308,14 +308,8 @@ def test_wand_batch_rows_in_query_rank_order(env):
 def test_wand_batch_salt_group_factor_exact(env):
     """Coarse cogroup keys (salt_group_factor > 1) are a pure scheduling
     optimization: results identical to G=1."""
-    from pyspark_codesearch.wand import (
-        collect_term_salts,
-        prepare_lens_by_salt,
-        wand_topk_batch,
-    )
-
     df_lookup = {r["term"]: int(r["df"]) for r in env["term_stats"].collect()}
-    salt_lookup = collect_term_salts(env["segments"])
+    salt_lookup = _salts_of(env["segments"])
     lens_by_salt = prepare_lens_by_salt(env["doc_lens"], SALT_RANGE)
     qmap = {
         "a": "parse json string",
@@ -342,8 +336,11 @@ def test_search_topk_auto_dispatch(env, monkeypatch):
     return the same ranking (the two paths are rank-identical; dispatch
     is purely a latency decision)."""
     from pyspark_codesearch import engine
+    from pyspark_codesearch.analysis import tokenize_py
     from pyspark_codesearch.engine import search_topk_auto
+    from pyspark_codesearch.wand import TermDictionary
 
+    td = TermDictionary(env["term_stats"], env["segments"])
     q = "parse json string"
     base = [(r["doc_id"], r["score"]) for r in bm25_topk(
         env["postings"], env["term_stats"], env["stats"], q, 10,
@@ -351,10 +348,12 @@ def test_search_topk_auto_dispatch(env, monkeypatch):
 
     def run(query=q, k=10):
         route: dict = {}
+        dfs, salts, imps = td.lookup3(tokenize_py(query))
         out = search_topk_auto(
             env["postings"], env["segments"], env["doc_lens"],
             env["term_stats"], env["stats"], query, k,
-            salt_range=SALT_RANGE, route_out=route,
+            salt_range=SALT_RANGE, df_lookup=dfs, salt_lookup=salts,
+            imp_lookup=imps, route_out=route,
         )
         assert route["wand_plan"] in (None, "selective")
         return out, route
@@ -381,15 +380,16 @@ def test_search_topk_auto_dispatch(env, monkeypatch):
     for (_, s), (_, e) in zip(got, base):
         assert s == pytest.approx(e, abs=1e-9)
 
-    # no df_lookup provided -> the dispatcher seeks term_stats itself
+    # a rare term alone has nothing to prune: exact
     out, route = run("uniqterm000042", 5)
     assert route["route"] == "exact"
     assert out.count() >= 1
 
 
-def test_wand_topk_selective_exactness_and_phases(env):
+def test_wand_topk_selective_exactness_and_phases(env, oracle_ix):
     """Two-phase selective WAND (global-θ hand-off) is rank- and
-    score-identical to the exact scorer for every query shape, and its
+    score-identical to the exact scorer and the oracle for every query
+    shape, and its
     phase diagnostics behave: a dominant rare term either proves phase 2
     away or seeds it with θ₀; a commons-only query degenerates to
     phase 1 over all touched salts."""
@@ -421,9 +421,9 @@ def test_wand_topk_selective_exactness_and_phases(env):
         base = bm25_topk(
             env["postings"], env["term_stats"], env["stats"], q, k,
         ).collect()
-        assert [r["doc_id"] for r in got] == [r["doc_id"] for r in base], q
-        for g, e in zip(got, base):
-            assert g["score"] == pytest.approx(e["score"], abs=1e-9), q
+        got = [(r["doc_id"], r["score"]) for r in got]
+        _same_ranking(got, [(r["doc_id"], r["score"]) for r in base], q)
+        _same_ranking(got, oracle_ix.search(q, k), q)
         seen_phases.add(route.get("phase2"))
     # the fixture corpus must exercise BOTH the proved-away/no-other
     # fast path and the seeded phase-2 path
@@ -432,25 +432,29 @@ def test_wand_topk_selective_exactness_and_phases(env):
 
 
 def test_wand_init_theta_soundness(env):
-    """wand_topk with an init_theta seed never loses a doc that belongs
-    in the top-k: seeding with the TRUE k-th score keeps results
-    identical; seeding with +inf returns nothing (everything provably
-    below the bar decodes nothing)."""
-    q = "parse json string"
-    base = wand_topk(
-        env["segments"], env["doc_lens"], env["term_stats"], env["stats"], q, 10,
-        salt_range=SALT_RANGE,
+    """An init_theta seed never loses a doc that belongs in the top-k:
+    seeding a query with its TRUE k-th score keeps its results
+    identical; seeding with +inf returns nothing for it (everything
+    provably below the bar decodes nothing). Seeds are per query: the
+    unseeded query of the same batch is unaffected."""
+    q, other = "parse json string", "merge sort index"
+    base = _wand(env, q, 10)
+    kth = base[-1][1]
+    _same_ranking(_wand(env, q, 10, init_theta={"q": kth}), base)
+    assert _wand(env, q, 10, init_theta={"q": float("inf")}) == []
+    rows = wand_topk_batch(
+        env["segments"], env["doc_lens"], env["term_stats"], env["stats"],
+        {"a": q, "b": other}, 10, salt_range=SALT_RANGE,
+        init_theta={"a": float("inf")},
     ).collect()
-    kth = base[-1]["score"]
-    seeded = wand_topk(
-        env["segments"], env["doc_lens"], env["term_stats"], env["stats"], q, 10,
-        salt_range=SALT_RANGE, init_theta=kth,
-    ).collect()
-    assert [r["doc_id"] for r in seeded] == [r["doc_id"] for r in base]
-    for s, e in zip(seeded, base):
-        assert s["score"] == pytest.approx(e["score"], abs=1e-9)
-    none = wand_topk(
-        env["segments"], env["doc_lens"], env["term_stats"], env["stats"], q, 10,
-        salt_range=SALT_RANGE, init_theta=float("inf"),
-    ).collect()
-    assert none == []
+    assert {r["query_id"] for r in rows} == {"b"}
+    assert [(r["doc_id"], r["score"]) for r in rows] == _wand(env, other, 10)
+
+
+def test_wand_init_theta_applies_at_coarse_groups(env):
+    """The selective route's phase 2 runs at salt_group_factor 16: a
+    seed at the true k-th score is exact there too."""
+    q = "return data index query token merge sort hash"
+    base = _wand(env, q, 3)
+    seeded = _wand(env, q, 3, salt_group_factor=16, init_theta={"q": base[-1][1]})
+    _same_ranking(seeded, base)

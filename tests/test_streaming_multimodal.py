@@ -67,7 +67,7 @@ def test_compact_delta_into_index(spark, tmp_path, sf_dir):
         load_segments,
     )
     from pyspark_codesearch.streaming import compact_delta_into_index
-    from pyspark_codesearch.wand import wand_topk
+    from pyspark_codesearch.wand import wand_topk_batch
 
     raw = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(F.col("doc_id") < 120)
     base_ix = str(tmp_path / "ix")
@@ -112,8 +112,8 @@ def test_compact_delta_into_index(spark, tmp_path, sf_dir):
         stats = CorpusStats(int(st["n_docs"]), float(st["avgdl"]))
         return [
             (r["doc_id"], round(r["score"], 9))
-            for r in wand_topk(
-                segs, dl, ts, stats, q, 10, salt_range=64, impact_scale=scale
+            for r in wand_topk_batch(
+                segs, dl, ts, stats, {"q": q}, 10, salt_range=64, impact_scale=scale
             ).collect()
         ]
 

@@ -4,6 +4,7 @@ build over the merged corpus; untouched buckets are not rewritten."""
 
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,7 +21,7 @@ from pyspark_codesearch.lineage import (
     read_table,
     upsert_index,
 )
-from pyspark_codesearch.wand import wand_topk
+from pyspark_codesearch.wand import wand_topk_batch
 
 N_DOCS = 200
 SALT_RANGE = 64
@@ -56,8 +57,8 @@ def _wand(spark, out, q, k=10, scale=1.0, salt_range=SALT_RANGE):
     segs, doc_lens, term_stats, stats = _load(spark, out)
     return [
         (r["doc_id"], r["score"])
-        for r in wand_topk(
-            segs, doc_lens, term_stats, stats, q, k,
+        for r in wand_topk_batch(
+            segs, doc_lens, term_stats, stats, {"q": q}, k,
             salt_range=salt_range, impact_scale=scale,
         ).collect()
     ]
@@ -131,6 +132,48 @@ def test_upsert_then_rank_identity(spark, built):
     assert _wand(spark, out, old_uniq, scale=scale) == []
 
 
+def test_selective_route_after_upsert(spark, built, monkeypatch):
+    """search_topk_auto forced onto the two-phase selective route over
+    the upserted index (TermDictionary.for_index lookups, impact_scale)
+    is rank- and score-identical to the fresh rebuild, and both a seeded
+    phase 2 and a phase 2 proved away (or without other salts) occur."""
+    from pyspark_codesearch import engine
+    from pyspark_codesearch.wand import TermDictionary
+
+    out, fresh = built["out"], built["fresh"]
+    upsert_index(spark, out, built["delta"], deleted_ids=[DEL_ID])  # no-op once applied
+    segs, doc_lens, term_stats, stats = _load(spark, out)
+    postings = spark.read.parquet(f"{out}/postings")
+    td = TermDictionary.for_index(spark, out)
+    scale = impact_scale(out, stats.avgdl)
+    monkeypatch.setattr(engine, "SEARCH_EXACT_MAX_POSTINGS", -1)
+    phases = set()
+    for q, k in [
+        ("upserterm 900005 merge sort", 1),  # the modified doc's new marker
+        ("insertterm 910001 parse json", 3),  # an inserted doc's marker
+        ("merge sort index", 10),
+        ("parse json stream scan", 5),
+    ]:
+        dfs, salts, imps = td.lookup3(tokenize_py(q))
+        route: dict = {}
+        got = [
+            (r["doc_id"], r["score"])
+            for r in engine.search_topk_auto(
+                postings, segs, doc_lens, term_stats, stats, q, k,
+                salt_range=SALT_RANGE, df_lookup=dfs, salt_lookup=salts,
+                imp_lookup=imps, impact_scale=scale, route_out=route,
+            ).collect()
+        ]
+        assert route["route"] == "wand", q
+        phases.add(route["phase2"])
+        want = _wand(spark, fresh, q, k)
+        assert got and [d for d, _ in got] == [d for d, _ in want], q
+        for (_, a), (_, b) in zip(got, want):
+            assert a == pytest.approx(b, abs=1e-9), q
+    assert "seeded" in phases, phases
+    assert phases & {"proved_away", "no_other_salts"}, phases
+
+
 def test_postings_replaced_exactly_once(spark, built):
     out = built["out"]
     postings = spark.read.parquet(f"{out}/postings")
@@ -191,12 +234,65 @@ def test_delete_only(spark, tmp_path):
     st = spark.read.parquet(f"{out}/stats").collect()[0]
     assert int(st["n_docs"]) == 59
     scale = impact_scale(out, float(st["avgdl"]))
-    segs, doc_lens, term_stats, stats = _load(spark, out)
-    got = wand_topk(
-        segs, doc_lens, term_stats, stats, uniq, 5,
-        salt_range=32, impact_scale=scale,
-    ).collect()
-    assert got == []
+    assert _wand(spark, out, uniq, k=5, scale=scale, salt_range=32) == []
+
+
+def test_index_writes_read_pinned_tables_with_declared_schemas(spark, tmp_path, monkeypatch):
+    """Every index table a build or an upsert reads back is read from a
+    resolved version directory (snapshot-pinned, not through the
+    symlink), and every table of TABLE_SCHEMAS with its declared schema,
+    so no read runs a parquet footer-inference job."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    reads = []
+    schema_of, parquet_of = DataFrameReader.schema, DataFrameReader.parquet
+
+    def schema(self, s):
+        self._declared = s
+        return schema_of(self, s)
+
+    def parquet(self, *paths, **options):
+        reads.extend((p, getattr(self, "_declared", None)) for p in paths)
+        return parquet_of(self, *paths, **options)
+
+    out = str(tmp_path / "reads")
+    docs = ingest_bucketed(corpus_df(spark, 40, seed=17), n_buckets=1)
+    delta = _delta(spark)
+    monkeypatch.setattr(DataFrameReader, "schema", schema)
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    build_index_resumable(docs, out, n_buckets=2, salt_range=32)
+    upsert_index(spark, out, delta, deleted_ids=[DEL_ID])
+    monkeypatch.undo()
+
+    root = os.path.realpath(out)
+    tables = set()
+    for path, declared in reads:
+        rel = os.path.relpath(path, root)
+        if rel.startswith("_lineage") or rel == "postings/.build":
+            continue  # the upsert plan and the build's staging dir
+        # {table dirs}/.{name}.versions/vNNN, no symlink on the way
+        parts = rel.split(os.sep)
+        assert path == os.path.realpath(path), path
+        assert len(parts) >= 2 and re.fullmatch(r"\.(.+)\.versions", parts[-2]), path
+        table = "/".join(parts[:-2] + [parts[-2][1:-len(".versions")]])
+        key = table.split("/", 1)[0]
+        tables.add(key)
+        if key in TABLE_SCHEMAS:
+            assert declared == TABLE_SCHEMAS[key], (table, declared)
+    assert tables == {"docs", "postings", "segments", "term_stats", "stats"}, tables
+
+
+def test_delete_of_absent_id_leaves_index_unchanged(spark, tmp_path):
+    """A delete that matches no doc touches no term and no bucket; it
+    completes and every table keeps its rows."""
+    out = str(tmp_path / "absent")
+    docs = ingest_bucketed(corpus_df(spark, 20, seed=3), n_buckets=1)
+    build_index_resumable(docs, out, n_buckets=2, salt_range=32)
+    before = {t: read_table(spark, out, t).count() for t in ("docs", "term_stats")}
+    res = delete_from_index(spark, out, [999_999])
+    assert res["affected_buckets"] == []
+    assert {t: read_table(spark, out, t).count() for t in before} == before
+    assert read_table(spark, out, "stats").collect()[0]["n_docs"] == 20
 
 
 def _assert_declared_schemas_match_files(spark, out):
