@@ -160,22 +160,18 @@ def ensure_nfc_udf(spark) -> bool:
         return False
 
 
-def nfc_col(col: Column | str, *, spark=None) -> Column:
+def nfc_col(col: Column | str) -> Column:
     """NFC-normalize a string column. JVM-side (java.text.Normalizer via
     the checked-in jars/spark-graft-nfc.jar, one ScalaUDF call — no
     python boundary, with an isNormalized quick-check so ASCII/NFC input
-    is pass-through); Arrow pandas fallback otherwise.
-
-    ``spark``: pass the session that OWNS the DataFrame this column will
-    attach to (``df.sparkSession``) when it may differ from the globally
-    active one — streaming ``foreachBatch`` binds frames to a CLONED
-    session, and a UDF registered on the wrong session fails analysis
-    with an unresolved ``spark_graft_nfc``. Without it the active
-    session is used (correct for the common single-session case)."""
+    is pass-through); Arrow pandas fallback otherwise. The UDF is
+    registered on the active session, so build the column in the session
+    that owns its DataFrame (a streaming ``foreachBatch`` frame belongs
+    to a cloned session, where the name would not resolve)."""
     from pyspark.sql import SparkSession
 
     c = F.col(col) if isinstance(col, str) else col
-    spark = spark or SparkSession.getActiveSession() or getattr(
+    spark = SparkSession.getActiveSession() or getattr(
         SparkSession, "_instantiatedSession", None
     )
     if spark is not None and ensure_nfc_udf(spark):
@@ -184,16 +180,13 @@ def nfc_col(col: Column | str, *, spark=None) -> Column:
 
 
 # ---------------------------------------------------------------- column expr
-def tokens_col(col: Column | str, *, keep_stopwords: bool = False, spark=None) -> Column:
+def tokens_col(col: Column | str, *, keep_stopwords: bool = False) -> Column:
     """array<string> of analyzed tokens, as a pure Column expression.
 
     Stays inside whole-stage codegen — the only non-codegen call is the
     single JVM NFC UDF. This is the index-build hot path.
-
-    ``spark``: the session owning the target DataFrame, when it may
-    differ from the active one (see :func:`nfc_col`).
     """
-    c = nfc_col(col, spark=spark)
+    c = nfc_col(col)
     for pat, java_rep, _ in _ALL_RULES:
         c = F.regexp_replace(c, pat, java_rep)
     arr = F.split(F.lower(c), _SPLIT_PATTERN_JAVA)

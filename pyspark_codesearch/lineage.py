@@ -1,21 +1,31 @@
-"""Checkpoint-resumable index build with per-unit lineage + metrics.
+"""Checkpoint-resumable index writer with per-unit lineage + metrics.
 
 The reference's resumability is ad-hoc (resume-from-paper-id loop,
 ingest_papers.py:491-497; skip-if-exists, full_pipeline.py:88-89;
 deterministic ids => idempotent upsert, es_indexer.py:176-179). Here it
-is structural (SURVEY §2.10 / §7 step 8):
+is structural (SURVEY §2.10 / §7 step 8). One writer has two entries
+that run the same stages; a build is the all-buckets case of an
+upsert's bucket rewrite:
 
-  stage docs      canonical docs parquet          (one unit)
-  stage postings  postings parquet, bucketed by   (one unit)
-                  pmod(hash(term), n_buckets)
-  stage segments  per-bucket compressed segments  (n_buckets units)
+  stage      build_index_resumable  upsert_index
+  plan       -                      upsert_plan: affected buckets
+  docs       docs, quarantine       upsert_docs        (_publish_docs)
+  postings   postings               upsert_postings    (_publish_postings)
+  segments   segments/bucket=N      segments/bucket=N  (_rebuild_segments)
 
-Every unit commits (a) its parquet output, (b) a manifest JSON file
-(atomic tmp+rename) carrying an input fingerprint, and (c) a row in the
-_metrics parquet (unit, rows, wall_ms, fingerprint). Restart skips any
-unit whose manifest exists with a matching fingerprint — a killed build
-resumes where it stopped and produces output identical to an
-uninterrupted run (pinned by tests/test_lineage.py).
+:func:`_publish_docs` swaps in the docs table and derives doc_lens and
+stats from it. :func:`_publish_postings` stages the new content of the
+buckets it is given in one partitioned write, recounts their terms' df
+into term_stats and renames each bucket into its next version: a build
+gives every bucket, an upsert only those its delta touches.
+:func:`_rebuild_segments` re-encodes those buckets' segments.
+
+Every unit commits (a) its output, (b) a manifest JSON file (atomic
+tmp+rename) carrying an input fingerprint, and (c) a row in the
+_metrics table (unit, rows, wall_ms, fingerprint). :class:`_Units`
+skips any unit whose manifest exists with a matching fingerprint — a
+killed build resumes where it stopped and produces output identical to
+an uninterrupted run (pinned by tests/test_lineage.py).
 
 Term-hash bucketing doubles as the static pruning story at scale: a
 query's terms map to buckets, so query-time scans touch only those
@@ -31,6 +41,7 @@ Spark job.
 from __future__ import annotations
 
 import fcntl
+import hashlib
 import json
 import os
 import re
@@ -43,7 +54,16 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .indexing import SEGMENT_SCHEMA, build_segments, corpus_stats
+from .analysis import tokens_col
+from .indexing import (
+    SEGMENT_SCHEMA,
+    CorpusStats,
+    build_postings_with_dl,
+    build_segments,
+    build_term_stats,
+    corpus_stats,
+)
+from .operators.merge import merge_upsert
 
 N_BUCKETS = 8
 
@@ -287,6 +307,149 @@ def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
     )
 
 
+class _Units:
+    """The unit runner of both writers. A unit whose manifest records
+    the same input fingerprint is skipped; any other runs, and its
+    manifest commits after its output. ``fail_after`` injects a crash
+    after that many newly-executed units (tests only)."""
+
+    def __init__(self, spark: SparkSession, out_dir: str, fail_after: int | None):
+        self.spark, self.out_dir, self.fail_after = spark, out_dir, fail_after
+        self.executed = 0
+
+    def run(self, unit: str, fingerprint: str, fn, extra: dict | None = None) -> None:
+        """Run ``fn`` (it returns the unit's row count) unless the unit
+        is done. ``extra`` joins the manifest after ``fn`` ran, so ``fn``
+        may fill it in."""
+        if unit_done(self.out_dir, unit, fingerprint):
+            return
+        if self.fail_after is not None and self.executed >= self.fail_after:
+            raise BuildInterrupted(f"injected failure after {self.executed} units")
+        t0 = time.perf_counter()
+        rows = fn()
+        commit_unit(
+            self.out_dir, unit, fingerprint, rows, (time.perf_counter() - t0) * 1000, extra
+        )
+        self.executed += 1
+
+
+def _fp_agg(df: DataFrame) -> list[str]:
+    """Order-independent fingerprint of a frame: its row count and the
+    sum of ONE xxhash64 per row over every column, taken in name order.
+    One hash per row commits to how the columns pair up (per-column sums
+    would collide for two frames with swapped contents), and summing
+    (decimal(38,0) first, since ANSI mode raises on long overflow) lets
+    the driver collect two numbers, never a list of ids or hashes."""
+    r = df.agg(
+        F.count(F.lit(1)), F.sum(F.xxhash64(*sorted(df.columns)).cast("decimal(38,0)"))
+    ).collect()[0]
+    return [str(x) for x in r]
+
+
+def _bucket_of(n_buckets: int):
+    """The term-hash bucket of the ``term`` column
+    (:func:`buckets_for_terms` computes the same on the driver)."""
+    return F.pmod(F.hash("term"), F.lit(n_buckets))
+
+
+def _publish_docs(out_dir: str, frame: DataFrame) -> int:
+    """Swap in ``frame`` as the docs table, then derive doc_lens and
+    stats from the published table. Returns the number of docs."""
+    spark = frame.sparkSession
+    _swap_dir(f"{out_dir}/docs", lambda p: frame.write.parquet(p))
+    docs = read_table(spark, out_dir, "docs")
+    _swap_dir(
+        f"{out_dir}/doc_lens", lambda p: _conform(docs, "doc_lens").write.parquet(p)
+    )
+    st = corpus_stats(docs)
+    _swap_dir(
+        f"{out_dir}/stats",
+        lambda p: spark.createDataFrame([tuple(st)], TABLE_SCHEMAS["stats"]).write.parquet(p),
+    )
+    return st.n_docs
+
+
+# the staging dir of _publish_postings: the postings and their bucket
+_STAGED_POSTINGS_SCHEMA = TABLE_SCHEMAS["postings"] + ", bucket int"
+
+
+def _publish_postings(
+    out_dir: str, postings: DataFrame, buckets, n_buckets: int
+) -> int:
+    """Publish ``postings`` as the whole new content of ``buckets``.
+
+    One partitioned write stages them in ``postings/.build``, read back
+    with its declared schema. term_stats keeps the rows of the other
+    buckets and recounts the staged ones, which is exact because all of
+    a term's postings live in its bucket; a build gives every bucket
+    and reads no old term_stats. Each bucket dir is then renamed (not
+    copied) into its next version; a bucket no term hashes into becomes
+    an empty table. Returns the number of postings staged."""
+    spark = postings.sparkSession
+    staged = f"{out_dir}/postings/.build"
+    (
+        _conform(postings, "postings")
+        .withColumn("bucket", _bucket_of(n_buckets))
+        .repartition("bucket")
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(staged)
+    )
+    written = spark.read.schema(_STAGED_POSTINGS_SCHEMA).parquet(staged)
+    term_stats = build_term_stats(written)
+    if len(buckets) < n_buckets:
+        kept = read_table(spark, out_dir, "term_stats").filter(
+            ~_bucket_of(n_buckets).isin(list(buckets))
+        )
+        term_stats = kept.unionByName(term_stats)
+    _swap_dir(f"{out_dir}/term_stats", lambda p: term_stats.write.parquet(p))
+    n = written.count()
+    empty = spark.createDataFrame([], TABLE_SCHEMAS["postings"])
+
+    def publish(p, src):
+        if os.path.isdir(src):
+            os.rename(src, p)
+        else:
+            empty.write.parquet(p)
+
+    for b in buckets:
+        src = os.path.join(staged, f"bucket={b}")
+        _swap_dir(f"{out_dir}/postings/bucket={b}", lambda p: publish(p, src))
+    shutil.rmtree(staged)
+    return n
+
+
+def _rebuild_segments(units: _Units, buckets, salt_range: int, fingerprint: str) -> CorpusStats:
+    """Re-encode ``buckets``' segments from their published postings
+    with the current stats, one ``segments/bucket=N`` unit each: the
+    build and the upsert name it alike, so impact_scale() sees one
+    manifest per bucket. The manifest records built_avgdl — the avgdl
+    baked into the bucket's block_max_impact values, from which
+    impact_scale() derives a sound pruning bound after an upsert shifts
+    it — and the salt_range. Returns the stats."""
+    spark, out_dir = units.spark, units.out_dir
+    st = read_table(spark, out_dir, "stats").collect()[0]
+    stats = CorpusStats(int(st["n_docs"]), float(st["avgdl"]))
+    for b in buckets:
+
+        def do_bucket(b=b):
+            part = read_table(spark, out_dir, f"postings/bucket={b}")
+            segs = build_segments(part, stats, salt_range=salt_range)
+            # versioned swap, NOT mode("overwrite"): overwrite deletes the
+            # live dir before writing — a racing reader would see ENOENT
+            # or a partial bucket
+            _swap_dir(f"{out_dir}/segments/bucket={b}", lambda p: segs.write.parquet(p))
+            return read_table(spark, out_dir, f"segments/bucket={b}").count()
+
+        units.run(
+            f"segments/bucket={b}",
+            fingerprint,
+            do_bucket,
+            extra={"built_avgdl": stats.avgdl, "salt_range": salt_range},
+        )
+    return stats
+
+
 def build_index_resumable(
     docs: DataFrame,
     out_dir: str,
@@ -296,162 +459,59 @@ def build_index_resumable(
     fail_after_units: int | None = None,
     expected_sha_col: str | None = None,
 ) -> dict:
-    """Public entry: :func:`_build_index_resumable_unlocked` under the
-    index :func:`writer_lock` (a live concurrent writer — another build
-    or an upsert on the same out_dir — raises ConcurrentWriteError
-    instead of corrupting in-place state)."""
-    with writer_lock(out_dir, "build"):
-        return _build_index_resumable_unlocked(
-            docs,
-            out_dir,
-            n_buckets=n_buckets,
-            salt_range=salt_range,
-            fail_after_units=fail_after_units,
-            expected_sha_col=expected_sha_col,
-        )
-
-
-def _build_index_resumable_unlocked(
-    docs: DataFrame,
-    out_dir: str,
-    *,
-    n_buckets: int = N_BUCKETS,
-    salt_range: int = 1 << 20,
-    fail_after_units: int | None = None,
-    expected_sha_col: str | None = None,
-) -> dict:
     """Build the full index under out_dir, unit by unit, skipping
-    already-committed units. ``fail_after_units`` injects a crash after N
-    newly-executed units (tests only).
+    already-committed units, under the index :func:`writer_lock` (a
+    live concurrent writer — another build or an upsert on the same
+    out_dir — raises ConcurrentWriteError instead of corrupting in-place
+    state). ``fail_after_units`` injects a crash after N newly-executed
+    units (tests only).
 
     Poison rows (null id / empty content / sha mismatch when
     ``expected_sha_col`` is set) are diverted to ``{out_dir}/quarantine``
     with a reason column (S8); the build completes on the valid rows and
     the quarantine row count is a lineage unit like any other.
 
-    Fingerprints: docs stage fingerprints the (deterministic) input via
-    count + sha256-xor of content hashes; downstream stages fingerprint
-    their upstream manifest — a change in input invalidates everything.
+    Fingerprints: docs and quarantine fingerprint every column the docs
+    table stores (:func:`_fp_agg`), postings adds n_buckets and the
+    segments buckets add the salt range — a change in input invalidates
+    every unit downstream of it.
     """
-    spark = docs.sparkSession
-    executed = {"n": 0}
-    docs, quarantined = split_quarantine(docs, expected_sha_col)
+    with writer_lock(out_dir, "build"):
+        spark = docs.sparkSession
+        units = _Units(spark, out_dir, fail_after_units)
+        docs, quarantined = split_quarantine(docs, expected_sha_col)
+        stored = docs.drop("tokens")
+        docs_fp = ":".join(_fp_agg(stored))
+        units.run("docs", docs_fp, lambda: _publish_docs(out_dir, stored))
 
-    def maybe_fail():
-        if fail_after_units is not None and executed["n"] >= fail_after_units:
-            raise BuildInterrupted(f"injected failure after {executed['n']} units")
+        def do_quarantine():
+            q = quarantined.drop("tokens")
+            q.write.mode("overwrite").parquet(f"{out_dir}/quarantine")
+            return q.count()
 
-    def run_unit(unit: str, fingerprint: str, fn, extra: dict | None = None):
-        if unit_done(out_dir, unit, fingerprint):
-            return False
-        maybe_fail()
-        t0 = time.perf_counter()
-        rows = fn()
-        commit_unit(
-            out_dir, unit, fingerprint, rows, (time.perf_counter() - t0) * 1000, extra
-        )
-        executed["n"] += 1
-        return True
+        units.run("quarantine", docs_fp, do_quarantine)
 
-    # ---- stage 1: canonical docs
-    fp_row = docs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sha2(F.concat_ws("", F.sort_array(F.collect_list("sha256"))), 256).alias("fp"),
-    ).collect()[0]
-    docs_fp = f"{fp_row['n']}:{fp_row['fp']}"
+        def do_postings():
+            # cluster_by_doc=False: the rows are re-partitioned by term
+            # bucket, so the doc_id exchange would be dead
+            n = _publish_postings(
+                out_dir, build_postings_with_dl(docs, cluster_by_doc=False),
+                range(n_buckets), n_buckets,
+            )
+            _drop_buckets_from(out_dir, n_buckets)
+            return n
 
-    def do_docs():
-        _swap_dir(f"{out_dir}/docs", lambda p: docs.drop("tokens").write.parquet(p))
-        return int(fp_row["n"])
-
-    run_unit("docs", docs_fp, do_docs)
-
-    # ---- stage 1b: quarantine table (S8) — poison rows + reason
-    def do_quarantine():
-        q = quarantined.drop("tokens")
-        q.write.mode("overwrite").parquet(f"{out_dir}/quarantine")
-        return q.count()
-
-    run_unit("quarantine", docs_fp, do_quarantine)
-
-    # ---- stage 2: bucketed postings (+ doc_lens + stats side tables)
-    def do_postings():
-        from .indexing import build_postings_with_dl, build_term_stats
-
-        # cluster_by_doc=False: the rows are re-partitioned by term
-        # bucket on the next line, so the doc_id exchange would be dead
-        postings = _conform(
-            build_postings_with_dl(docs, cluster_by_doc=False), "postings"
-        ).withColumn("bucket", F.pmod(F.hash("term"), F.lit(n_buckets)))
-        # one partitioned write into a hidden build dir, then each
-        # bucket=N dir is renamed (not copied) into its first version
-        staged = f"{out_dir}/postings/.build"
-        (
-            postings.repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(staged)
-        )
-        written = spark.read.parquet(staged)
-        _swap_dir(
-            f"{out_dir}/term_stats",
-            lambda p: build_term_stats(written).write.parquet(p),
-        )
-        n = written.count()
-        empty = spark.createDataFrame([], postings.drop("bucket").schema)
-
-        def publish(p, src):
-            if os.path.isdir(src):
-                os.rename(src, p)
-            else:  # a bucket no term hashes into: an empty table
-                empty.write.parquet(p)
-
-        for b in range(n_buckets):
-            src = os.path.join(staged, f"bucket={b}")
-            _swap_dir(f"{out_dir}/postings/bucket={b}", lambda p: publish(p, src))
-        shutil.rmtree(staged)
-        _drop_buckets_from(out_dir, n_buckets)
-        _swap_dir(
-            f"{out_dir}/doc_lens",
-            lambda p: _conform(docs, "doc_lens").write.parquet(p),
-        )
-        st = corpus_stats(docs)
-        _swap_dir(
-            f"{out_dir}/stats",
-            lambda p: spark.createDataFrame(
-                [(st.n_docs, st.avgdl)], TABLE_SCHEMAS["stats"]
-            ).write.parquet(p),
-        )
-        return n
-
-    run_unit("postings", docs_fp, do_postings)
-
-    # ---- stage 3: per-bucket segments
-    st_row = read_table(spark, out_dir, "stats").collect()[0]
-    from .indexing import CorpusStats
-
-    stats = CorpusStats(int(st_row["n_docs"]), float(st_row["avgdl"]))
-    for b in range(n_buckets):
-        unit = f"segments/bucket={b}"
-        # salt_range is part of the bucket's fingerprint: a build resumed
+        postings_fp = f"{docs_fp}:buckets={n_buckets}"
+        units.run("postings", postings_fp, do_postings)
+        # salt_range is part of the segments' fingerprint: a build resumed
         # with another value rebuilds every bucket instead of mixing two
         # salt layouts in one index
-        fp = f"{docs_fp}:bucket={b}:salt={salt_range}"
-
-        def do_bucket(b=b):
-            part = read_table(spark, out_dir, f"postings/bucket={b}")
-            segs = build_segments(part, stats, salt_range=salt_range)
-            _swap_dir(f"{out_dir}/segments/bucket={b}", lambda p: segs.write.parquet(p))
-            return read_table(spark, out_dir, f"segments/bucket={b}").count()
-
-        # built_avgdl: the avgdl baked into this bucket's block_max_impact
-        # values — after an upsert shifts corpus avgdl, impact_scale()
-        # derives a sound pruning bound from it (see upsert_index)
-        run_unit(unit, fp, do_bucket, extra={"built_avgdl": stats.avgdl, "salt_range": salt_range})
-
+        stats = _rebuild_segments(
+            units, range(n_buckets), salt_range, f"{postings_fp}:salt={salt_range}"
+        )
     return {
         "out_dir": out_dir,
-        "executed_units": executed["n"],
+        "executed_units": units.executed,
         "n_buckets": n_buckets,
         "stats": stats,
     }
@@ -643,48 +703,33 @@ def upsert_index(
     deleted_ids: list[int] | DataFrame | None = None,
     fail_after_units: int | None = None,
 ) -> dict:
-    """Public entry: :func:`_upsert_index_unlocked` under the index
-    :func:`writer_lock`."""
-    with writer_lock(out_dir, "upsert"):
-        return _upsert_index_unlocked(
-            spark,
-            out_dir,
-            delta_docs,
-            deleted_ids=deleted_ids,
-            fail_after_units=fail_after_units,
-        )
-
-
-def _upsert_index_unlocked(
-    spark: SparkSession,
-    out_dir: str,
-    delta_docs: DataFrame | None = None,
-    *,
-    deleted_ids: list[int] | DataFrame | None = None,
-    fail_after_units: int | None = None,
-) -> dict:
-    """Apply a keyed upsert (+ deletes) to a built index, incrementally.
+    """Apply a keyed upsert (+ deletes) to a built index, incrementally,
+    under the index :func:`writer_lock`.
 
     ``delta_docs`` must be in the canonical ingested shape (doc_id,
     content, sha256, tokens, doc_len, ...) with doc_ids equal to the base
-    rows they replace (new ids = inserts). Steps, each lineage-committed
-    under the delta fingerprint so a killed upsert resumes idempotently:
+    rows they replace (new ids = inserts). Units, each lineage-committed
+    under the delta's fingerprint (:func:`_fp_agg` over every column the
+    docs table stores, plus the deleted ids) so a killed upsert resumes
+    idempotently:
 
-    1. docs/doc_lens/stats: base MERGE delta MINUS deletes (keyed window).
-    2. affected terms = tokens of the OLD versions (re-derived from the
-       stored docs — a semi-join against the delta ids) UNION the delta's
-       tokens; persisted as a PARQUET plan side table (never a driver
-       list — a 1% re-ingest wave of a 10^12-doc corpus has ~1e6+ distinct
-       terms); affected buckets = their term-hash buckets (bounded by
-       n_buckets, so those DO live in the manifest JSON).
-    3. per affected postings bucket: drop rows of upserted/deleted doc_ids,
-       append the delta's postings — one staged swap per bucket.
-    4. term_stats: untouched terms keep their rows; affected terms get df
-       recomputed from the rewritten buckets only (joins against the plan
-       table, not literal lists).
-    5. per affected segments bucket: rebuild from the new postings with
-       CURRENT stats and the index's own salt range (:func:`salt_range_of`);
-       manifests record built_avgdl for impact_scale().
+    1. ``upsert_plan``: the affected term-hash buckets — those of the
+       old versions' terms (re-tokenized from the stored docs of the
+       upserted and deleted ids) and of the delta's terms — and the
+       count of those distinct terms, from one aggregate, kept in the
+       manifest. It commits BEFORE the docs swap: a resume after the
+       swap could not recompute it from the replaced docs.
+    2. ``upsert_docs``: base MERGE delta MINUS deletes, through
+       :func:`_publish_docs` (doc_lens and stats follow the new docs).
+    3. ``upsert_postings``: each affected bucket's new content — its
+       rows minus the upserted and deleted ids, plus the delta's
+       postings — through :func:`_publish_postings`, which also recounts
+       the df of those buckets' terms. A rerun after a crash between two
+       bucket renames rewrites the same content.
+    4. ``segments/bucket=N`` per affected bucket, through
+       :func:`_rebuild_segments`, with CURRENT stats and the index's own
+       salt range (:func:`salt_range_of`); manifests record built_avgdl
+       for impact_scale().
 
     Guards:
     - a doc_id present in BOTH delta_docs and deleted_ids raises
@@ -701,289 +746,129 @@ def _upsert_index_unlocked(
     Query-side note: driver-resident state (TermDictionary, cached lens)
     snapshots the pre-upsert index; invalidate()/rebuild it afterwards.
     """
-    from .indexing import build_postings_with_dl
-    from .operators.merge import merge_upsert
+    with writer_lock(out_dir, "upsert"):
+        n_buckets = n_buckets_of(out_dir)
+        salt_range = salt_range_of(out_dir)
+        base_docs = read_table(spark, out_dir, "docs")
 
-    n_buckets = len(
-        [d for d in os.listdir(f"{out_dir}/postings") if d.startswith("bucket=")]
-    )
-    salt_range = salt_range_of(out_dir)
-    base_docs = read_table(spark, out_dir, "docs")
-
-    if deleted_ids is None:
-        dels_df = None
-    elif isinstance(deleted_ids, DataFrame):
-        dels_df = deleted_ids.toDF("doc_id").select(F.col("doc_id").cast("long"))
-    else:
-        dels_df = (
-            spark.createDataFrame([(int(i),) for i in deleted_ids], "doc_id long")
-            if deleted_ids
-            else None
-        )
-
-    if delta_docs is None:
-        delta_plain = None
-    else:
-        # align to the stored docs schema; columns the delta doesn't carry
-        # (e.g. repo/path metadata on a content-only re-ingest) become NULL
-        base_types = dict(base_docs.dtypes)
-        d = delta_docs.drop("tokens")
-        delta_plain = d.select(
-            *[
-                (F.col(c) if c in d.columns else F.lit(None).cast(base_types[c])).alias(c)
-                for c in base_docs.columns
-            ]
-        )
-
-    # delta fingerprint: content of the upsert, not of the base. All
-    # components are order-independent aggregates (counts + decimal sums
-    # of per-row hashes) so no id or sha list ever materializes on the
-    # driver — ANSI-safe: xxhash64 sums are cast to decimal(38,0) first.
-    def _fp_agg(df: DataFrame, *hash_cols: str) -> list:
-        # ONE xxhash64 over all the columns together per row, then summed:
-        # the fingerprint commits to the (doc_id, sha256) PAIRING —
-        # independent per-column sums would collide for two deltas with
-        # equal column multisets but swapped content, and a crash-resume
-        # would then skip committed units for the wrong delta
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64(*hash_cols).cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        return [str(x) for x in r]
-
-    import hashlib as _hl
-
-    parts: dict = {}
-    if delta_docs is not None:
-        parts["delta"] = _fp_agg(delta_docs, "doc_id", "sha256")
-        n_delta = int(parts["delta"][0])
-    else:
-        n_delta = 0
-    if dels_df is not None:
-        parts["dels"] = _fp_agg(dels_df, "doc_id")
-        n_dels = int(parts["dels"][0])
-    else:
-        n_dels = 0
-    if n_delta == 0 and n_dels == 0:
-        return {"out_dir": out_dir, "affected_buckets": [], "executed_units": 0}
-    delta_fp = _hl.sha256(json.dumps(parts, sort_keys=True).encode()).hexdigest()[:16]
-
-    # refuse to start a DIFFERENT upsert while a prior one is interrupted
-    _check_no_inprogress_upsert(out_dir, delta_fp)
-
-    # upsert+delete of the same id in one call is ambiguous — and applying
-    # both would re-append the deleted doc's postings after its doc_lens
-    # row is gone (ghost postings that corrupt scoring). Refuse loudly.
-    if delta_plain is not None and dels_df is not None:
-        overlap = (
-            delta_plain.select("doc_id")
-            .join(F.broadcast(dels_df), "doc_id", "left_semi")
-            .limit(1)
-            .count()
-        )
-        if overlap:
-            raise ValueError(
-                "doc_ids appear in BOTH delta_docs and deleted_ids — split the "
-                "call (delete first, then upsert) to make the intent explicit"
+        if deleted_ids is None:
+            dels_df = None
+        elif isinstance(deleted_ids, DataFrame):
+            dels_df = deleted_ids.toDF("doc_id").select(F.col("doc_id").cast("long"))
+        else:
+            dels_df = (
+                spark.createDataFrame([(int(i),) for i in deleted_ids], "doc_id long")
+                if deleted_ids
+                else None
             )
 
-    # affected ids side table (delta keys ∪ deletes) — broadcast into the
-    # per-bucket anti-joins; realistic deltas (1e4-1e6 ids) broadcast fine
-    # and Catalyst plan size stays O(1), unlike isin(...) literal lists
-    id_frames = [f.select("doc_id") for f in (delta_plain, dels_df) if f is not None]
-    ids_all = id_frames[0] if len(id_frames) == 1 else id_frames[0].union(id_frames[1])
-    ids_df = F.broadcast(ids_all.distinct())
+        if delta_docs is None:
+            delta_plain = None
+        else:
+            # align to the stored docs schema; columns the delta doesn't
+            # carry (e.g. repo/path metadata on a content-only re-ingest)
+            # become NULL
+            base_types = dict(base_docs.dtypes)
+            d = delta_docs.drop("tokens")
+            delta_plain = d.select(
+                *[
+                    (F.col(c) if c in d.columns else F.lit(None).cast(base_types[c])).alias(c)
+                    for c in base_docs.columns
+                ]
+            )
 
-    executed = {"n": 0}
+        # the fingerprint covers the content of the upsert, not of the base
+        parts = {
+            name: _fp_agg(df)
+            for name, df in (("delta", delta_plain), ("dels", dels_df))
+            if df is not None
+        }
+        if all(int(p[0]) == 0 for p in parts.values()):
+            return {"out_dir": out_dir, "affected_buckets": [], "executed_units": 0}
+        delta_fp = hashlib.sha256(json.dumps(parts, sort_keys=True).encode()).hexdigest()[:16]
 
-    def run_unit(unit, fn, extra=None):
-        if unit_done(out_dir, unit, delta_fp):
-            return False
-        if fail_after_units is not None and executed["n"] >= fail_after_units:
-            raise BuildInterrupted(f"injected failure after {executed['n']} units")
-        t0 = time.perf_counter()
-        rows = fn()
-        commit_unit(out_dir, unit, delta_fp, rows, (time.perf_counter() - t0) * 1000, extra)
-        executed["n"] += 1
-        return True
+        # refuse to start a DIFFERENT upsert while a prior one is interrupted
+        _check_no_inprogress_upsert(out_dir, delta_fp)
 
-    # ---- affected terms: old versions' tokens + delta's tokens.
-    # Committed as the FIRST unit: a crash after the docs swap loses the
-    # old versions' content, so a resumed upsert must read the plan from
-    # durable storage, not recompute it from the (already-replaced) docs.
-    # The terms themselves are a PARQUET side table keyed by the delta
-    # fingerprint (a re-ingest wave's distinct vocabulary would OOM a
-    # driver-side JSON list); the manifest JSON carries only the
-    # fingerprint, the term count, and the (<= n_buckets) bucket ids.
-    plan_data = _plan_dir(out_dir, delta_fp)
-    if unit_done(out_dir, "upsert_plan", delta_fp):
+        # upsert+delete of the same id in one call is ambiguous — and
+        # applying both would re-append the deleted doc's postings after
+        # its doc_lens row is gone (ghost postings that corrupt scoring).
+        # Refuse loudly.
+        if delta_plain is not None and dels_df is not None:
+            overlap = (
+                delta_plain.select("doc_id")
+                .join(F.broadcast(dels_df), "doc_id", "left_semi")
+                .limit(1)
+                .count()
+            )
+            if overlap:
+                raise ValueError(
+                    "doc_ids appear in BOTH delta_docs and deleted_ids — split the "
+                    "call (delete first, then upsert) to make the intent explicit"
+                )
+
+        # affected ids side table (delta keys ∪ deletes) — broadcast into
+        # the anti-joins; realistic deltas (1e4-1e6 ids) broadcast fine and
+        # Catalyst plan size stays O(1), unlike isin(...) literal lists
+        ids_df = F.broadcast(
+            reduce(
+                DataFrame.union,
+                [f.select("doc_id") for f in (delta_plain, dels_df) if f is not None],
+            ).distinct()
+        )
+        units = _Units(spark, out_dir, fail_after_units)
+
+        found: dict = {}
+
+        def do_plan():
+            terms = base_docs.join(ids_df, "doc_id", "left_semi").select(
+                F.explode(tokens_col("content")).alias("term")
+            )
+            if delta_docs is not None:
+                terms = terms.union(delta_docs.select(F.explode("tokens").alias("term")))
+            r = terms.agg(
+                F.count_distinct("term"), F.collect_set(_bucket_of(n_buckets))
+            ).collect()[0]
+            found["affected_buckets"] = sorted(r[1])
+            return int(r[0])
+
+        units.run("upsert_plan", delta_fp, do_plan, extra=found)
         with open(_manifest_path(out_dir, "upsert_plan")) as f:
             plan = json.load(f)
-        affected_buckets = plan["affected_buckets"]
-        n_terms = int(plan["rows"])
-    else:
-        from .analysis import tokens_col
+        buckets = plan["affected_buckets"]
 
-        old_terms = (
-            base_docs.join(ids_df, "doc_id", "left_semi")
-            .select(F.explode(tokens_col("content")).alias("term"))
-        )
-        frames = [old_terms]
-        if delta_docs is not None:
-            frames.append(delta_docs.select(F.explode("tokens").alias("term")))
-        terms_plan = (
-            frames[0] if len(frames) == 1 else frames[0].union(frames[1])
-        ).distinct().withColumn("bucket", F.pmod(F.hash("term"), F.lit(n_buckets)))
-        # prior upserts completed (checked above) — their plan data is dead
-        for d in os.listdir(_manifest_dir(out_dir)) if os.path.isdir(_manifest_dir(out_dir)) else []:
-            if d.startswith("upsert_plan_data_") and d != os.path.basename(plan_data):
-                shutil.rmtree(os.path.join(_manifest_dir(out_dir), d), ignore_errors=True)
-        # plan data lands BEFORE its manifest commits: a crash mid-write
-        # leaves an uncommitted unit and the (still-unswapped) docs table
-        # lets the resume recompute the plan from scratch
-        t0 = time.perf_counter()
-        terms_plan.write.mode("overwrite").parquet(plan_data)
-        terms_plan = spark.read.parquet(plan_data)
-        affected_buckets = sorted(
-            int(r["bucket"]) for r in terms_plan.select("bucket").distinct().collect()
-        )
-        n_terms = terms_plan.count()
-        commit_unit(
-            out_dir, "upsert_plan", delta_fp, n_terms,
-            (time.perf_counter() - t0) * 1000,
-            extra={"affected_buckets": affected_buckets, "plan_data": plan_data},
-        )
-        executed["n"] += 1
+        def do_docs():
+            merged = base_docs
+            if delta_plain is not None:
+                merged = merge_upsert(base_docs, delta_plain, key="doc_id").drop("src")
+            if dels_df is not None:
+                merged = merged.join(F.broadcast(dels_df), "doc_id", "left_anti")
+            # the join puts doc_id first; the table keeps its order
+            return _publish_docs(out_dir, merged.select(base_docs.columns))
 
-    # ---- stage 1: docs table (merge + delete), then doc_lens + stats
-    def do_docs():
-        merged = base_docs
-        if delta_plain is not None:
-            merged = merge_upsert(base_docs, delta_plain, key="doc_id").drop("src")
-        if dels_df is not None:
-            merged = merged.join(F.broadcast(dels_df), "doc_id", "left_anti")
-        merged = merged.cache()
-        n = merged.count()
-        _swap_dir(f"{out_dir}/docs", lambda p: merged.write.parquet(p))
-        new_docs = read_table(spark, out_dir, "docs")
-        _swap_dir(
-            f"{out_dir}/doc_lens",
-            lambda p: _conform(new_docs, "doc_lens").write.parquet(p),
-        )
-        st = new_docs.agg(
-            F.count(F.lit(1)).alias("n"), F.avg("doc_len").alias("avgdl")
-        ).collect()[0]
-        _swap_dir(
-            f"{out_dir}/stats",
-            lambda p: spark.createDataFrame(
-                [(int(st["n"]), float(st["avgdl"] or 0.0))], TABLE_SCHEMAS["stats"]
-            ).write.parquet(p),
-        )
-        merged.unpersist()
-        return n
+        units.run("upsert_docs", delta_fp, do_docs)
 
-    run_unit("upsert_docs", do_docs)
-
-    # ---- stage 2: affected postings buckets
-    delta_postings = None
-    if delta_docs is not None:
-        delta_postings = build_postings_with_dl(
-            delta_docs, cluster_by_doc=False
-        ).withColumn("bucket", F.pmod(F.hash("term"), F.lit(n_buckets)))
-
-    for b in affected_buckets:
-
-        def do_bucket(b=b):
-            path = f"{out_dir}/postings/bucket={b}"
-            keep = read_table(spark, out_dir, f"postings/bucket={b}").join(
-                ids_df, "doc_id", "left_anti"
-            )
-            part = keep
-            if delta_postings is not None:
-                part = keep.unionByName(
-                    delta_postings.filter(F.col("bucket") == b).drop("bucket")
-                )
-            # the anti join puts doc_id first; the table keeps its order
-            part = _conform(part, "postings").cache()
-            n = part.count()
-            _swap_dir(path, lambda p: part.write.parquet(p))
-            part.unpersist()
-            return n
-
-        run_unit(f"upsert_postings/bucket={b}", do_bucket)
-
-    # ---- stage 3: term_stats (incremental: only affected terms recount).
-    # The plan table joins in distributed; broadcast only while it is
-    # small enough that shipping beats shuffling (AQE handles the rest).
-    terms_plan_df = spark.read.parquet(plan_data).select("term")
-    terms_df = (
-        F.broadcast(terms_plan_df) if n_terms <= 2_000_000 else terms_plan_df
-    )
-
-    def do_term_stats():
-        kept = read_table(spark, out_dir, "term_stats").join(
-            terms_df, "term", "left_anti"
-        )
-        # an upsert that touches no term (a delete of an absent id) has
-        # no bucket to read: start from an empty postings table
-        touched = (
-            reduce(
+        def do_postings():
+            part = reduce(
                 DataFrame.unionByName,
-                [read_table(spark, out_dir, f"postings/bucket={b}") for b in affected_buckets],
-                spark.createDataFrame([], TABLE_SCHEMAS["postings"]),
-            )
-            .join(terms_df, "term", "left_semi")
-            .groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df"))
-        )
-        merged = kept.unionByName(touched).cache()
-        n = merged.count()
-        _swap_dir(f"{out_dir}/term_stats", lambda p: merged.write.parquet(p))
-        merged.unpersist()
-        return n
+                [read_table(spark, out_dir, f"postings/bucket={b}") for b in buckets],
+            ).join(ids_df, "doc_id", "left_anti")
+            if delta_docs is not None:
+                part = part.unionByName(build_postings_with_dl(delta_docs, cluster_by_doc=False))
+            return _publish_postings(out_dir, part, buckets, n_buckets)
 
-    run_unit("upsert_term_stats", do_term_stats)
-
-    # ---- stage 4: affected segments buckets (with CURRENT stats)
-    st_row = read_table(spark, out_dir, "stats").collect()[0]
-    from .indexing import CorpusStats
-
-    stats = CorpusStats(int(st_row["n_docs"]), float(st_row["avgdl"]))
-    for b in affected_buckets:
-
-        def do_seg(b=b):
-            part = read_table(spark, out_dir, f"postings/bucket={b}")
-            segs = build_segments(part, stats, salt_range=salt_range)
-            # versioned swap, NOT mode("overwrite"): overwrite deletes the
-            # live dir before writing — a racing reader would see ENOENT
-            # or a partial bucket
-            _swap_dir(f"{out_dir}/segments/bucket={b}", lambda p: segs.write.parquet(p))
-            return read_table(spark, out_dir, f"segments/bucket={b}").count()
-
-        # unit name matches the build's so impact_scale() sees ONE manifest
-        # per bucket carrying the avgdl its impacts were computed with
-        run_unit(
-            f"segments/bucket={b}",
-            do_seg,
-            extra={"built_avgdl": stats.avgdl, "salt_range": salt_range},
-        )
-
+        # an upsert that touches no term (a delete of an absent id) has no
+        # bucket to rewrite
+        if buckets:
+            units.run("upsert_postings", delta_fp, do_postings)
+        stats = _rebuild_segments(units, buckets, salt_range, delta_fp)
     return {
         "out_dir": out_dir,
-        "affected_buckets": affected_buckets,
-        "affected_terms": n_terms,
-        "executed_units": executed["n"],
+        "affected_buckets": buckets,
+        "affected_terms": int(plan["rows"]),
+        "executed_units": units.executed,
         "stats": stats,
     }
-
-
-def _plan_dir(out_dir: str, delta_fp: str) -> str:
-    return os.path.join(_manifest_dir(out_dir), f"upsert_plan_data_{delta_fp}")
-
-
-def _upsert_terminal_unit(plan: dict) -> str:
-    buckets = plan.get("affected_buckets") or []
-    return f"segments/bucket={buckets[-1]}" if buckets else "upsert_term_stats"
 
 
 def _check_no_inprogress_upsert(out_dir: str, delta_fp: str) -> None:
@@ -1001,7 +886,9 @@ def _check_no_inprogress_upsert(out_dir: str, delta_fp: str) -> None:
     prior_fp = plan.get("input_fingerprint")
     if prior_fp == delta_fp:
         return
-    if not unit_done(out_dir, _upsert_terminal_unit(plan), prior_fp):
+    buckets = plan.get("affected_buckets") or []
+    last = f"segments/bucket={buckets[-1]}" if buckets else "upsert_docs"
+    if not unit_done(out_dir, last, prior_fp):
         raise RuntimeError(
             f"an interrupted upsert (fingerprint {prior_fp}) is in progress on "
             f"{out_dir}; resume it to completion with the SAME delta before "

@@ -1,14 +1,16 @@
 """Incremental index maintenance.
 
 - :func:`incremental_index` — readStream over a docs parquet directory,
-  tokenize + posting-build per micro-batch (foreachBatch), written to a
-  postings-delta table. ``Trigger.AvailableNow`` drains everything
+  each micro-batch's raw rows written to a docs-delta table
+  (foreachBatch) with their ``batch_id``; tokenizing and building
+  postings is left to the compaction, which ingests the delta through
+  the index upsert. ``Trigger.AvailableNow`` drains everything
   pending then stops: the streaming-native version of the reference's
   resume-from-paper-id batch loop (ingest_papers.py:491-497); the
   checkpoint dir replaces its manual resume bookkeeping.
   foreachBatch alone is at-least-once — a crash between the delta write
   and the checkpoint commit re-delivers the batch on restart — so each
-  batch write is made IDEMPOTENT: outputs are partitioned by ``batch_id``
+  batch write is made IDEMPOTENT: the table is partitioned by ``batch_id``
   with dynamic partition overwrite, and a re-delivered batch (same
   batch_id, same input files) overwrites its own partition instead of
   appending duplicates. Doc ids pass through from the input unchanged
@@ -23,8 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..analysis import tokens_col
-
 DOCS_STREAM_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
 
@@ -35,37 +35,21 @@ def incremental_index(
     *,
     await_termination: bool = True,
 ):
-    """Drain all pending files from input_dir into a postings-delta table.
+    """Drain all pending files from input_dir into the docs-delta table.
 
     Returns the StreamingQuery (already finished if await_termination).
     """
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch hands a DataFrame bound to the streaming run's
-        # CLONED session; the thread's active session can be the original
-        # one, so the analyzer NFC UDF must target the clone explicitly
-        # (spark=) or call_udf fails to resolve there
-        ingested = (
-            batch_df.withColumn("sha256", F.sha2("text", 256))
-            .withColumn("tokens", tokens_col("text", spark=batch_df.sparkSession))
-            .withColumn("doc_len", F.size("tokens"))
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        postings = (
-            ingested.select("doc_id", "doc_len", F.explode("tokens").alias("term"))
-            .groupBy("term", "doc_id", "doc_len")
-            .agg(F.count(F.lit(1)).cast("int").alias("tf"))
-            .withColumn("batch_id", F.lit(batch_id))
-        )
         # idempotent on re-delivery: overwrite ONLY this batch_id partition
         # (dynamic mode), so a crash-replayed batch replaces its own output
-        for df, table in ((postings, "postings_delta"), (ingested.drop("tokens"), "docs_delta")):
-            (
-                df.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(f"{out_dir}/{table}")
-            )
+        (
+            batch_df.withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(f"{out_dir}/docs_delta")
+        )
 
     stream = (
         spark.readStream.schema(DOCS_STREAM_SCHEMA)
@@ -106,7 +90,7 @@ def compact_delta_into_index(spark: SparkSession, index_dir: str, delta_dir: str
     latest = (
         dd.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .drop("_rn", "batch_id", "sha256", "doc_len")
+        .drop("_rn", "batch_id")
     )
     delta = ingest_documents_df(latest)
     return upsert_index(spark, index_dir, delta)

@@ -105,6 +105,10 @@ def test_fingerprint_invalidation(spark, tmp_path_factory):
     res = build_index_resumable(docs_b, d, n_buckets=2, salt_range=64)
     assert res["executed_units"] == 2
     assert salt_range_of(d) == 64
+    # another bucket count re-runs postings and every segments bucket
+    res = build_index_resumable(docs_b, d, n_buckets=4, salt_range=64)
+    assert res["executed_units"] == 1 + 4
+    assert n_buckets_of(d) == 4
     # buckets that disagree, or a manifest without the field, raise
     p = os.path.join(d, "_lineage", "segments__bucket=1.json")
     with open(p) as f:
@@ -114,6 +118,19 @@ def test_fingerprint_invalidation(spark, tmp_path_factory):
             json.dump(m, f)
         with pytest.raises(ValueError, match=msg):
             salt_range_of(d)
+
+    # the fingerprint covers every stored column: the same contents
+    # ingested with other doc ids are a new input
+    raw = corpus_df(spark, 40, seed=5)
+    ids_of = {n: sorted(r["doc_id"] for r in ingest_bucketed(raw, n_buckets=n).collect())
+              for n in (1, 4)}
+    assert ids_of[1] != ids_of[4]
+    d = str(tmp_path_factory.mktemp("inval_ids"))
+    for n in (1, 4):
+        res = build_index_resumable(ingest_bucketed(raw, n_buckets=n), d, n_buckets=2)
+        assert res["executed_units"] == 5, n
+        stored = sorted(r["doc_id"] for r in read_table(spark, d, "docs").collect())
+        assert stored == ids_of[n], n
 
 
 def _docs_of(spark, texts):
@@ -302,3 +319,48 @@ def test_quarantine_poison_rows(spark, docs, tmp_path_factory):
     # resume semantics unchanged: second run is a no-op
     res2 = build_index_resumable(poisoned, d, n_buckets=2, expected_sha_col="sha256")
     assert res2["executed_units"] == 0
+
+
+def _unpinned_parquet_reads(source: str) -> list[int]:
+    """Lines of ``source`` that read parquet neither through read_table
+    nor with a reader given ``.schema(...)``. A call ``X.parquet(...)``
+    is a write when X's chain passes through ``.write``; any other must
+    pass through ``.schema``."""
+    import ast
+
+    tree = ast.parse(source)
+    skip = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.FunctionDef) and node.name == "read_table":
+            skip |= set(range(node.lineno, node.end_lineno + 1))
+    bad = []
+    for node in ast.walk(tree):
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet") or node.lineno in skip:
+            continue
+        chain, x = [], node.func.value
+        while isinstance(x, (ast.Attribute, ast.Call)):
+            if isinstance(x, ast.Attribute):
+                chain.append(x.attr)
+                x = x.value
+            else:
+                x = x.func
+        if "write" not in chain and "schema" not in chain:
+            bad.append(node.lineno)
+    return bad
+
+
+def test_every_parquet_read_in_lineage_declares_its_schema():
+    """A parquet read that leaves Spark to infer the schema from a
+    footer runs a Spark job each time; lineage.py reads through
+    read_table or a reader given its schema."""
+    import pyspark_codesearch.lineage as lineage
+
+    assert _unpinned_parquet_reads(
+        "def f(spark, p):\n"
+        "    spark.read.parquet(p)\n"
+        "    spark.read.schema('a int').parquet(p)\n"
+        "    df.write.mode('overwrite').parquet(p)\n"
+    ) == [2]
+    with open(lineage.__file__) as f:
+        assert _unpinned_parquet_reads(f.read()) == []

@@ -14,6 +14,7 @@ from pyspark_codesearch.analysis import tokenize_py
 from pyspark_codesearch.indexing import CorpusStats
 from pyspark_codesearch.lineage import (
     TABLE_SCHEMAS,
+    buckets_for_terms,
     build_index_resumable,
     delete_from_index,
     impact_scale,
@@ -45,6 +46,15 @@ def _delta(spark):
     return ingest_documents_df(raw).withColumn("lang", F.lit("python"))
 
 
+def _aligned(delta, docs):
+    """``delta`` with the columns of ``docs``, NULL where it has none."""
+    types = dict(docs.dtypes)
+    return delta.select(
+        *[(F.col(c) if c in delta.columns else F.lit(None).cast(types[c])).alias(c)
+          for c in docs.columns]
+    )
+
+
 def _load(spark, out):
     segs = load_segments(spark, out)
     doc_lens = spark.read.parquet(f"{out}/doc_lens")
@@ -71,16 +81,8 @@ def built(spark, tmp_path_factory):
     build_index_resumable(docs, out, n_buckets=N_BUCKETS, salt_range=SALT_RANGE)
     # fresh reference index over the post-upsert corpus
     delta = _delta(spark)
-    base_cols = [c for c in docs.columns]
-    delta_aligned = delta.select(
-        *[
-            (delta[c] if c in delta.columns else F.lit(None).cast(dict(docs.dtypes)[c])).alias(c)
-            for c in base_cols
-        ]
-    )
-    merged = (
-        docs.filter(~F.col("doc_id").isin(MOD_IDS + [DEL_ID]))
-        .unionByName(delta_aligned.filter(F.col("doc_id").isin(MOD_IDS + NEW_IDS)))
+    merged = docs.filter(~F.col("doc_id").isin(MOD_IDS + [DEL_ID])).unionByName(
+        _aligned(delta, docs)
     )
     fresh = str(tmp_path_factory.mktemp("ix") / "fresh")
     build_index_resumable(merged, fresh, n_buckets=N_BUCKETS, salt_range=SALT_RANGE)
@@ -241,8 +243,12 @@ def test_index_writes_read_pinned_tables_with_declared_schemas(spark, tmp_path, 
     """Every index table a build or an upsert reads back is read from a
     resolved version directory (snapshot-pinned, not through the
     symlink), and every table of TABLE_SCHEMAS with its declared schema,
-    so no read runs a parquet footer-inference job."""
+    so no read runs a parquet footer-inference job. The staged postings
+    are read with their declared schema too, and nothing under
+    ``_lineage`` is read as a table."""
     from pyspark.sql.readwriter import DataFrameReader
+
+    from pyspark_codesearch.lineage import _STAGED_POSTINGS_SCHEMA
 
     reads = []
     schema_of, parquet_of = DataFrameReader.schema, DataFrameReader.parquet
@@ -261,15 +267,18 @@ def test_index_writes_read_pinned_tables_with_declared_schemas(spark, tmp_path, 
     monkeypatch.setattr(DataFrameReader, "schema", schema)
     monkeypatch.setattr(DataFrameReader, "parquet", parquet)
     build_index_resumable(docs, out, n_buckets=2, salt_range=32)
-    upsert_index(spark, out, delta, deleted_ids=[DEL_ID])
+    res = upsert_index(spark, out, delta, deleted_ids=[DEL_ID])
     monkeypatch.undo()
 
     root = os.path.realpath(out)
-    tables = set()
+    tables, staged = set(), 0
     for path, declared in reads:
         rel = os.path.relpath(path, root)
-        if rel.startswith("_lineage") or rel == "postings/.build":
-            continue  # the upsert plan and the build's staging dir
+        assert not rel.startswith("_lineage"), path
+        if rel == "postings/.build":  # the staging dir of both writers
+            assert declared == _STAGED_POSTINGS_SCHEMA, declared
+            staged += 1
+            continue
         # {table dirs}/.{name}.versions/vNNN, no symlink on the way
         parts = rel.split(os.sep)
         assert path == os.path.realpath(path), path
@@ -279,7 +288,14 @@ def test_index_writes_read_pinned_tables_with_declared_schemas(spark, tmp_path, 
         tables.add(key)
         if key in TABLE_SCHEMAS:
             assert declared == TABLE_SCHEMAS[key], (table, declared)
-    assert tables == {"docs", "postings", "segments", "term_stats", "stats"}, tables
+    assert staged == 2  # the build's postings unit and the upsert's
+    # term_stats is read only to keep the rows of the buckets an upsert
+    # leaves untouched; a build, or an upsert touching every bucket,
+    # recounts all of it from the staged postings
+    expected = {"docs", "postings", "segments", "stats"}
+    if len(res["affected_buckets"]) < 2:
+        expected.add("term_stats")
+    assert tables == expected, tables
 
 
 def test_delete_of_absent_id_leaves_index_unchanged(spark, tmp_path):
@@ -339,9 +355,9 @@ def _seg_manifests(out):
 
 def test_upsert_crash_resume(spark, tmp_path):
     """A killed upsert resumes to the same result as an uninterrupted
-    one: the upsert plan (affected terms/buckets) is manifest-committed
+    one: the upsert plan (affected buckets) is manifest-committed
     BEFORE the docs swap, so the resume never needs the replaced old
-    content; a crash between _swap_dir renames is also recovered."""
+    content."""
     from pyspark_codesearch.lineage import BuildInterrupted
 
     out = str(tmp_path / "cr")
@@ -358,17 +374,8 @@ def test_upsert_crash_resume(spark, tmp_path):
     res = upsert_index(spark, out, delta, deleted_ids=[2])
     assert res["executed_units"] > 0
 
-    merged = (
-        docs.filter(~F.col("doc_id").isin(MOD_IDS + [2]))
-        .unionByName(
-            _delta(spark).select(
-                *[
-                    (F.col(c) if c in _delta(spark).columns
-                     else F.lit(None).cast(dict(docs.dtypes)[c])).alias(c)
-                    for c in docs.columns
-                ]
-            )
-        )
+    merged = docs.filter(~F.col("doc_id").isin(MOD_IDS + [2])).unionByName(
+        _aligned(delta, docs)
     )
     build_index_resumable(merged, fresh, n_buckets=2, salt_range=32)
     st = spark.read.parquet(f"{out}/stats").collect()[0]
@@ -379,24 +386,29 @@ def test_upsert_crash_resume(spark, tmp_path):
         assert [d for d, _ in got] == [d for d, _ in want], q
 
 
-def test_plan_is_parquet_sidetable(spark, built):
-    """The upsert plan's term set lives in a fingerprint-keyed parquet
-    side table, NOT in the manifest JSON (a re-ingest wave's vocabulary
-    would OOM a driver-side list)."""
+def test_plan_is_affected_buckets_in_manifest(spark, built):
+    """The upsert plan is the affected bucket ids and the count of the
+    distinct terms that put them there, kept in the manifest: no term
+    list, on the driver or on disk (a re-ingest wave's vocabulary is
+    unbounded; the bucket ids are bounded by n_buckets)."""
     out = built["out"]
+    upsert_index(spark, out, built["delta"], deleted_ids=[DEL_ID])  # no-op once applied
     with open(os.path.join(out, "_lineage", "upsert_plan.json")) as f:
         plan = json.load(f)
-    assert "affected_terms" not in plan, "terms must not be in the JSON manifest"
-    assert plan["affected_buckets"], "bucket ids (bounded by n_buckets) stay in JSON"
-    plan_df = spark.read.parquet(plan["plan_data"])
-    assert set(plan_df.columns) == {"term", "bucket"}
-    assert plan_df.count() == plan["rows"] > 0
-    # every term the delta carries is in the plan
+    assert set(plan) == {"unit", "input_fingerprint", "rows", "wall_ms", "affected_buckets"}
+    assert not [d for d in os.listdir(os.path.join(out, "_lineage"))
+                if not d.endswith(".json")], "the plan writes no side table"
+    # rows: the distinct terms of the replaced and deleted versions and
+    # of the delta
+    old = built["docs"].filter(F.col("doc_id").isin(MOD_IDS + [DEL_ID]))
+    terms = {t for r in old.select("content").collect() for t in tokenize_py(r["content"])}
     delta_terms = {
         r["t"] for r in built["delta"].select(F.explode("tokens").alias("t")).collect()
     }
-    stored = {r["term"] for r in plan_df.collect()}
-    assert delta_terms <= stored
+    assert plan["rows"] == len(terms | delta_terms) > 0
+    # every delta term's bucket is listed, and nothing else
+    assert plan["affected_buckets"] == buckets_for_terms(spark, terms | delta_terms, N_BUCKETS)
+    assert set(buckets_for_terms(spark, delta_terms, N_BUCKETS)) <= set(plan["affected_buckets"])
 
 
 def test_upsert_delete_overlap_raises(spark, tmp_path):
@@ -458,8 +470,9 @@ def test_impact_scale_raises_without_built_avgdl(spark, tmp_path):
 
 @pytest.mark.slow
 def test_large_vocab_delta_no_driver_lists(spark, tmp_path):
-    """A delta with a large distinct vocabulary completes with the plan
-    on parquet (nothing vocab-sized crosses the driver). Sized to stay
+    """A delta with a large distinct vocabulary completes with only its
+    bucket ids and term count in the plan (nothing vocab-sized crosses
+    the driver or lands in the manifest). Sized to stay
     test-suite-friendly (~2.4e4 distinct terms); the shape is identical
     at 1e6+ — no code path depends on the count."""
     out = str(tmp_path / "bigv")
@@ -517,3 +530,114 @@ def test_term_dictionary_for_index_refreshes_after_upsert(spark, tmp_path):
         .filter(F.col("term") == "merge").count()
     )
     assert dfs1["merge"] == true_df
+
+
+def _tables(spark, out, n_buckets):
+    """Every table of an index as sorted rows; segments decoded to
+    (term, doc_id, tf), since their block_max_impact bounds depend on
+    the avgdl each bucket was built with."""
+    from pyspark_codesearch.codecs import delta_decode, varbyte_decode
+
+    def rows(name):
+        return sorted((tuple(r) for r in read_table(spark, out, name).collect()), key=repr)
+
+    out_tables = {t: rows(t) for t in ("docs", "doc_lens", "stats", "term_stats")}
+    for b in range(n_buckets):
+        out_tables[f"postings/bucket={b}"] = rows(f"postings/bucket={b}")
+        out_tables[f"segments/bucket={b}"] = sorted(
+            (r["term"], int(d), int(t))
+            for r in read_table(spark, out, f"segments/bucket={b}").collect()
+            for d, t in zip(delta_decode(r["doc_ids_enc"]), varbyte_decode(r["tfs_enc"]))
+        )
+    return out_tables
+
+
+def _small_docs(spark, texts):
+    raw = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    return ingest_documents_df(raw).withColumn("lang", F.lit("python"))
+
+
+@pytest.mark.parametrize("touched", ["some_buckets", "every_bucket"])
+def test_upsert_equals_fresh_build_table_by_table(spark, tmp_path, touched):
+    """An upserted index equals a fresh build of the merged corpus,
+    table by table. With a delta that leaves buckets untouched, the kept
+    term_stats rows of those buckets must match the fresh count; with
+    one that touches every bucket, term_stats is recounted whole."""
+    if touched == "some_buckets":
+        n_buckets = 8
+        docs = _small_docs(spark, ["merge sort", "parse json", "scan join filter", "alpha beta"])
+        delta = _small_docs(spark, ["merge sort", "parse xml"]).filter(F.col("doc_id") == 1)
+        delta = delta.unionByName(
+            _small_docs(spark, ["merge xml"]).withColumn("doc_id", F.lit(100).cast("long"))
+        )
+        deleted = []
+    else:
+        n_buckets = N_BUCKETS
+        docs = ingest_bucketed(corpus_df(spark, 60, seed=23), n_buckets=1).cache()
+        delta, deleted = _delta(spark), [DEL_ID]
+    out, fresh = str(tmp_path / "up"), str(tmp_path / "fresh")
+    build_index_resumable(docs, out, n_buckets=n_buckets, salt_range=32)
+    res = upsert_index(spark, out, delta, deleted_ids=deleted)
+    if touched == "some_buckets":
+        assert 0 < len(res["affected_buckets"]) < n_buckets, res
+    else:
+        assert res["affected_buckets"] == list(range(n_buckets)), res
+
+    gone = [r["doc_id"] for r in delta.select("doc_id").collect()] + deleted
+    merged = docs.filter(~F.col("doc_id").isin(gone)).unionByName(_aligned(delta, docs))
+    build_index_resumable(merged, fresh, n_buckets=n_buckets, salt_range=32)
+    got, want = _tables(spark, out, n_buckets), _tables(spark, fresh, n_buckets)
+    assert got.keys() == want.keys()
+    for name in want:
+        assert got[name] == want[name], name
+
+
+def test_upsert_crash_between_bucket_renames_resumes(spark, tmp_path, monkeypatch):
+    """A crash inside the single upsert_postings unit, after one bucket
+    was renamed into its next version and before the next: the resumed
+    upsert rewrites the same content and equals an uninterrupted one."""
+    import shutil
+
+    from pyspark_codesearch import lineage
+
+    base = str(tmp_path / "base")
+    docs = ingest_bucketed(corpus_df(spark, 60, seed=29), n_buckets=1)
+    build_index_resumable(docs, base, n_buckets=N_BUCKETS, salt_range=32)
+    crashed, clean = str(tmp_path / "crashed"), str(tmp_path / "clean")
+    shutil.copytree(base, crashed, symlinks=True)
+    shutil.copytree(base, clean, symlinks=True)
+    delta = _delta(spark)
+    upsert_index(spark, clean, delta, deleted_ids=[DEL_ID])
+
+    swap, renamed = lineage._swap_dir, []
+
+    def crash_on_second_bucket(path, write_fn):
+        if "/postings/bucket=" in path:
+            if renamed:
+                raise RuntimeError("crash between two bucket renames")
+            renamed.append(path)
+        return swap(path, write_fn)
+
+    monkeypatch.setattr(lineage, "_swap_dir", crash_on_second_bucket)
+    with pytest.raises(RuntimeError, match="between two bucket renames"):
+        upsert_index(spark, crashed, delta, deleted_ids=[DEL_ID])
+    monkeypatch.undo()
+    assert renamed, "the crash must land after a bucket was renamed"
+    res = upsert_index(spark, crashed, delta, deleted_ids=[DEL_ID])
+    assert res["executed_units"] == 1 + len(res["affected_buckets"])  # postings + segments
+    assert _tables(spark, crashed, N_BUCKETS) == _tables(spark, clean, N_BUCKETS)
+
+
+def test_upsert_fingerprint_covers_stored_columns(spark, tmp_path):
+    """Re-upserting a doc with the same content but another stored
+    column value is a new upsert, not a fingerprint-matched no-op."""
+    out = str(tmp_path / "lang")
+    docs = ingest_bucketed(corpus_df(spark, 30, seed=19), n_buckets=1)
+    build_index_resumable(docs, out, n_buckets=2, salt_range=32)
+    content = read_table(spark, out, "docs").filter(F.col("doc_id") == 5).collect()[0]["content"]
+    raw = spark.createDataFrame([(5, content)], "doc_id long, text string")
+    for lang in ("python", "go"):
+        res = upsert_index(spark, out, ingest_documents_df(raw).withColumn("lang", F.lit(lang)))
+        assert res["executed_units"] > 0, lang
+        row = read_table(spark, out, "docs").filter(F.col("doc_id") == 5).collect()[0]
+        assert row["lang"] == lang
