@@ -64,6 +64,7 @@ from .indexing import (
     corpus_stats,
 )
 from .operators.merge import merge_upsert
+from .session import local_frame
 
 N_BUCKETS = 8
 
@@ -364,12 +365,16 @@ def _publish_docs(out_dir: str, frame: DataFrame) -> int:
     st = corpus_stats(docs)
     _swap_dir(
         f"{out_dir}/stats",
-        lambda p: spark.createDataFrame([tuple(st)], TABLE_SCHEMAS["stats"]).write.parquet(p),
+        lambda p: local_frame(spark, TABLE_SCHEMAS["stats"], [tuple(st)]).write.parquet(p),
     )
     return st.n_docs
 
 
-# the staging dir of _publish_postings: the postings and their bucket
+# the staging dir of _publish_postings, relative to the index, and its
+# rows: the postings and their bucket. Its name starts with neither "."
+# nor "_" (Hadoop's listing would call it hidden and log "All paths were
+# ignored" on every read back) and matches no `bucket=*` glob
+_STAGED_POSTINGS = "postings/staging"
 _STAGED_POSTINGS_SCHEMA = TABLE_SCHEMAS["postings"] + ", bucket int"
 
 
@@ -378,7 +383,7 @@ def _publish_postings(
 ) -> int:
     """Publish ``postings`` as the whole new content of ``buckets``.
 
-    One partitioned write stages them in ``postings/.build``, read back
+    One partitioned write stages them in ``postings/staging``, read back
     with its declared schema. term_stats keeps the rows of the other
     buckets and recounts the staged ones, which is exact because all of
     a term's postings live in its bucket; a build gives every bucket
@@ -386,7 +391,7 @@ def _publish_postings(
     copied) into its next version; a bucket no term hashes into becomes
     an empty table. Returns the number of postings staged."""
     spark = postings.sparkSession
-    staged = f"{out_dir}/postings/.build"
+    staged = os.path.join(out_dir, _STAGED_POSTINGS)
     (
         _conform(postings, "postings")
         .withColumn("bucket", _bucket_of(n_buckets))
@@ -404,7 +409,7 @@ def _publish_postings(
         term_stats = kept.unionByName(term_stats)
     _swap_dir(f"{out_dir}/term_stats", lambda p: term_stats.write.parquet(p))
     n = written.count()
-    empty = spark.createDataFrame([], TABLE_SCHEMAS["postings"])
+    empty = local_frame(spark, TABLE_SCHEMAS["postings"])
 
     def publish(p, src):
         if os.path.isdir(src):
@@ -757,7 +762,7 @@ def upsert_index(
             dels_df = deleted_ids.toDF("doc_id").select(F.col("doc_id").cast("long"))
         else:
             dels_df = (
-                spark.createDataFrame([(int(i),) for i in deleted_ids], "doc_id long")
+                local_frame(spark, "doc_id long", [(int(i),) for i in deleted_ids])
                 if deleted_ids
                 else None
             )

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from .analysis import tokenize_py
 from .indexing import B, K1, CorpusStats
+from .session import local_frame
 
 
 def bm25_score_col(tf, df, dl, n_docs: int, avgdl: float, k1: float = K1, b: float = B):
@@ -88,7 +89,7 @@ def bm25_scores(
     spark = postings.sparkSession
     qterms = Counter(tokenize_py(query))
     if not qterms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, "doc_id long, score double")
     # term-dictionary seek on the driver: df for the handful of query terms
     if df_lookup is not None:
         dfs = {t: float(df_lookup[t]) for t in qterms if t in df_lookup}
@@ -99,7 +100,7 @@ def bm25_scores(
         }
     rows = [(t, float(c), dfs[t]) for t, c in qterms.items() if t in dfs]
     if not rows:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, "doc_id long, score double")
 
     # Both plan paths share the factored form w_t * tfnorm: the per-term
     # weight qtf*idf(df) is a driver-computed float64 CONSTANT (df is
@@ -142,7 +143,7 @@ def bm25_scores(
         matched = postings.filter(_in_expr("term", [t for t, _, _ in rows]))
         scored = matched.withColumn("partial", weight * tfnorm)
     else:
-        qdf = spark.createDataFrame(weights, "term string, w double")
+        qdf = local_frame(spark, "term string, w double", weights)
         # broadcast tiny query-term set into the postings scan; Catalyst
         # pushes the term IN-filter down to the parquet scan
         matched = postings.join(F.broadcast(qdf), "term")

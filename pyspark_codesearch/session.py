@@ -3,13 +3,16 @@
 Defaults are tuned so the same code runs on local[N] here and would run on a
 1000-executor cluster unchanged: AQE on (runtime re-plan + skew-join), Arrow
 on (vectorized python boundary), shuffle partitions sized by parallelism.
+:func:`local_frame` turns small driver-side tables into DataFrames without
+a Python task.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 
 
 def host_cpus() -> int:
@@ -68,3 +71,25 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(spark: SparkSession, schema: str, rows=()) -> DataFrame:
+    """A driver-side table (``rows``: tuples or a pandas frame) as a
+    DataFrame that starts no Python task.
+
+    ``spark.createDataFrame(list, schema)`` pickles its rows through a
+    Python RDD, so every action on it runs ``defaultParallelism`` Python
+    worker tasks: collecting an empty one took 0.52–0.55 s (local[4],
+    4-core host). Pandas through Arrow plans a LocalRelation, whose
+    ``collect()`` runs no job (57–59 ms with the build). Arrow refuses
+    an empty pandas frame, so no rows becomes ``SELECT ... WHERE
+    false``, which the optimizer folds to an empty LocalRelation
+    (29–45 ms).
+    ``schema`` is a DDL string of ``name type`` pairs."""
+    cols = [c.split() for c in schema.split(",")]
+    if len(rows) == 0:
+        nulls = ", ".join(f"CAST(NULL AS {t}) AS {n}" for n, t in cols)
+        return spark.sql(f"SELECT {nulls} WHERE false")
+    if not isinstance(rows, pd.DataFrame):
+        rows = pd.DataFrame(list(rows), columns=[n for n, _ in cols])
+    return spark.createDataFrame(rows, schema)

@@ -2,13 +2,26 @@
 
 This is the scale path the north rule asks for (the reference delegates the
 equivalent to Lucene's WAND/MAXSCORE inside Elasticsearch — implied by its
-multi_match DSL, es_indexer.py:276-284). One Spark plan,
-:func:`wand_topk_batch`, wraps the one scorer, :func:`_score_salt`; a
-single query is a batch of one. Per doc-id-range salt:
+multi_match DSL, es_indexer.py:276-284). One WAND plan,
+:func:`wand_topk_batch`, wraps the one group scorer, :func:`_score_group`
+(every query of the batch through :func:`_score_salt`); a single query is
+a batch of one. Per doc-id-range salt:
 
   segments(term, salt, blocks...)  cogroup  doc_lens(salt, doc_id, doc_len)
-      -> applyInPandas MaxScore scorer, once per query of the batch
+      -> group scorer, once per query of the batch
       -> per-salt top-k -> per-query top-k
+
+Two dispatchers run that group scorer, chosen by predicted cost:
+- the DRIVER route, when the batch's matched postings (Σ df of its
+  in-index terms) plus a bound on its lens rows fall below
+  ``LOCAL_MAX_POSTINGS``: both pruned frames are collected through Arrow
+  (JVM scans: no shuffle, no Python worker task, whose fixed start cost
+  is most of a small batch's time) and scored in this process, once per
+  group key; the ranked rows come back as a LocalRelation;
+- the COGROUP plan above it: ``applyInPandas`` runs the group scorer on
+  the executors and a window ranks each query.
+The scorer and the groups are the same, so the two routes are
+rank-identical by construction (tests/test_wand_routes.py).
 
 Pruning (lossless for top-k):
 - terms processed in descending max-contribution C_t = qtf * idf_t * max
@@ -34,15 +47,19 @@ real deployment both sides are bucketed by salt, making this co-located).
 from __future__ import annotations
 
 from collections import Counter
+from concurrent.futures import ThreadPoolExecutor
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .analysis import tokenize_py
 from .codecs import varbyte_decode
 from .indexing import B, K1, CorpusStats
+from .session import local_frame
 
 
 def _idf(n_docs: int, df: float) -> float:
@@ -209,12 +226,13 @@ def _score_salt(
         """(ids, contrib) restricted to blocks that can intersect the
         candidate set. A cached full decode is strictly cheaper than a
         fresh partial decode, so prefer it."""
-        if term in cache:
-            return cache[term]
         if hi_ids.size == 0:
             # frozen-from-the-start salt (global init_theta): nothing can
-            # enter, decode nothing
+            # enter, decode nothing — not even a term another query of
+            # the batch cached (the candidate probe needs a candidate)
             return np.empty(0, np.int64), np.empty(0, np.float64)
+        if term in cache:
+            return cache[term]
         # block-range skip: keep only blocks whose [first_doc, last_doc]
         # intersects the (sorted) candidate ids, then one fused decode
         first = g["first_doc"].to_numpy(np.int64)
@@ -491,7 +509,7 @@ def wand_topk_selective(
     qtf = {t: c for t, c in qtf.items() if t in df_lookup}
     empty = "doc_id long, score double"
     if not qtf:
-        return spark.createDataFrame([], empty)
+        return local_frame(spark, empty)
     c_of = {
         t: qtf[t] * _idf(stats.n_docs, float(df_lookup[t])) * imp_lookup[t] * impact_scale
         for t in qtf
@@ -499,7 +517,7 @@ def wand_topk_selective(
     head = max(c_of, key=lambda t: (c_of[t], t))
     head_salts = set(salt_lookup.get(head, ()))
     if not head_salts:
-        return spark.createDataFrame([], empty)
+        return local_frame(spark, empty)
     rest_bound = float(sum(c for t, c in c_of.items() if t != head))
 
     def phase(in_head: bool, init_theta: dict[str, float] | None):
@@ -530,18 +548,129 @@ def wand_topk_selective(
         # only the provably-below case is skipped
         if route_out is not None:
             route_out["phase2"] = "proved_away" if other else "no_other_salts"
-        return spark.createDataFrame(rows1, empty)
+        return local_frame(spark, empty, rows1)
     if route_out is not None:
         route_out["phase2"] = "seeded"
     rows2 = phase(False, None if theta0 is None else {"q": theta0})
     merged = sorted(rows1 + rows2, key=lambda t: (-t[1], t[0]))[:k]
-    return spark.createDataFrame(merged, empty)
+    return local_frame(spark, empty, merged)
 
 
 def _group_key(salt_group_factor: int):
     if salt_group_factor <= 1:
         return F.col("salt")
     return (F.col("salt") / F.lit(int(salt_group_factor))).cast("int").alias("sg")
+
+
+class _Batch(NamedTuple):
+    """What every group of one :func:`wand_topk_batch` call scores: the
+    queries' in-index term counts, their touched salts (``None`` without
+    a ``salt_lookup``), θ seeds, dfs and the BM25 constants."""
+
+    qtfs: dict[str, dict[str, float]]
+    qsalts: dict[str, set[int]] | None
+    thetas: dict[str, float]
+    dfs: dict[str, int]
+    n_docs: int
+    avgdl: float
+    k1: float
+    b: float
+    k: int
+    impact_scale: float
+
+
+def _score_group(seg_pdf: pd.DataFrame, lens_pdf: pd.DataFrame, batch: _Batch) -> pd.DataFrame:
+    """(query_id, doc_id, score): every query of ``batch`` scored by
+    :func:`_score_salt` in one group, its local top-k each. The one
+    group scorer of both dispatchers: the cogroup runs it on the
+    executors, the driver route once per group key."""
+    if seg_pdf.empty or lens_pdf.empty:
+        return _no_hits(query_id="object")
+    # salts actually present in this (possibly coarse) group — the
+    # per-query skip below intersects against them
+    group_salts = set(int(s) for s in seg_pdf["salt"].unique())
+    # shared across this group's queries: the frame pre-split by term
+    # ONCE (no per-query isin/groupby re-scan of the group frame),
+    # per-doc norm constants and a term -> (ids, contrib) cache
+    # (decode + divide once per group, not per query)
+    term_groups = {
+        t: g.sort_values(["salt", "block_id"])
+        for t, g in seg_pdf.groupby("term", sort=False)
+    }
+    prep = _prep_lens(lens_pdf, batch.avgdl, batch.k1, batch.b)
+    cache: dict = {}
+    outs = []
+    for qid, qtf in batch.qtfs.items():
+        if not qtf or (batch.qsalts is not None and not (batch.qsalts[qid] & group_salts)):
+            continue
+        r = _score_salt(term_groups, prep, cache, qtf, batch.dfs, batch.n_docs, batch.k,
+                        batch.impact_scale, batch.thetas.get(qid, -np.inf))
+        if len(r):
+            r.insert(0, "query_id", qid)
+            outs.append(r)
+    if not outs:
+        return _no_hits(query_id="object")
+    return pd.concat(outs, ignore_index=True)
+
+
+BATCH_SCHEMA = "query_id string, rank int, doc_id long, score double"
+
+# The driver route of wand_topk_batch runs when a batch's matched
+# postings (Σ df of its in-index terms) plus a bound on its lens rows
+# stay below this. Measured crossover: 8-query batches drawn from
+# perfbench's query pool (seed 7) over perfbench corpora indexed with
+# salt_range 1024 and 2 term buckets, the scripts/query.py call shape
+# (bucket-pruned segments, no df_lookup), local[4] on a shared 4-core
+# host, warm, median of 5 batches per route:
+#
+#   docs     salts  Σdf + n_docs   driver   cogroup
+#   500          1        5.5k     0.90 s   1.52 s
+#   4,000        4         45k     0.64 s   1.87 s
+#   16,000      16        180k     1.36 s   2.10 s
+#   64,000      63        719k     2.14 s   2.86 s
+#   128,000    125        1.44M    3.91 s   4.06 s
+#
+# The driver scores on one Python thread, so its time grows faster than
+# the cogroup's four tasks; the lines meet near 1.4M (near 1.1M in an
+# earlier run whose two collects ran one after the other). The budget
+# sits below both.
+LOCAL_MAX_POSTINGS = 1_000_000
+
+
+# runs the lens collect of the driver route next to its segments collect
+# (measured 387 -> 311 ms median per perfbench batch); a few threads, so
+# concurrent callers do not queue behind one another
+_COLLECTOR = ThreadPoolExecutor(4, thread_name_prefix="wand-collect")
+
+
+def _score_on_driver(seg: DataFrame, lens: DataFrame, salt_group_factor: int,
+                     batch: _Batch) -> DataFrame:
+    """The driver dispatcher: collect both pruned frames through Arrow
+    (JVM scans, no shuffle, no Python worker task), run
+    :func:`_score_group` once per group key and rank each query by
+    score desc, doc_id asc, as the cogroup plan's window does. The
+    result is a LocalRelation: collecting it runs no Spark job."""
+    spark = seg.sparkSession
+    # the two collects overlap; the helper thread runs its job in the
+    # caller's job group and local properties
+    lens_pdf = _COLLECTOR.submit(inheritable_thread_target(spark)(lens.toPandas))
+    seg_pdf, lens_pdf = seg.toPandas(), lens_pdf.result()
+    g = max(1, int(salt_group_factor))
+    lens_groups = {int(key): part for key, part in lens_pdf.groupby(lens_pdf["salt"] // g)}
+    outs = [
+        _score_group(part, lens_groups[int(key)], batch)
+        for key, part in seg_pdf.groupby(seg_pdf["salt"] // g)
+        if int(key) in lens_groups
+    ]
+    outs = [o for o in outs if len(o)]
+    if not outs:
+        return local_frame(spark, BATCH_SCHEMA)
+    hits = pd.concat(outs, ignore_index=True).sort_values(
+        ["query_id", "score", "doc_id"], ascending=[True, False, True]
+    )
+    hits["rank"] = (hits.groupby("query_id").cumcount() + 1).astype("int32")
+    hits = hits[hits["rank"] <= batch.k]
+    return local_frame(spark, BATCH_SCHEMA, hits[["query_id", "rank", "doc_id", "score"]])
 
 
 def wand_topk_batch(
@@ -562,10 +691,20 @@ def wand_topk_batch(
     salt_group_factor: int = 1,
     init_theta: dict[str, float] | None = None,
 ) -> DataFrame:
-    """All queries in ONE cogroup pass: (query_id, rank, doc_id, score).
-    This is the one Spark plan around :func:`_score_salt`; a single query
-    is a batch of one (``DocumentsEngine.search_wand``, both phases of
+    """All queries in ONE pass: (query_id, rank, doc_id, score). This is
+    the one WAND plan around :func:`_score_group`; a single query is a
+    batch of one (``DocumentsEngine.search_wand``, both phases of
     :func:`wand_topk_selective`).
+
+    Two dispatchers run the one group scorer. Below
+    ``LOCAL_MAX_POSTINGS`` (matched postings = Σ df of the batch's
+    in-index terms, plus ``n_docs`` lens rows, or touched salts ×
+    ``salt_range`` when that is smaller and a ``salt_lookup`` is given)
+    the DRIVER route collects the pruned segments and lens frames
+    through Arrow and scores them in this process. EXECUTION SEMANTICS:
+    that route executes eagerly — its result is a snapshot-at-call
+    DataFrame of literal rows, whose ``collect()`` runs no Spark job.
+    Above the budget the cogroup plan below is returned lazily.
 
     Segments are scanned once, term-pruned to the union of all query
     terms; every salt partition runs the MaxScore scorer once per query
@@ -594,14 +733,13 @@ def wand_topk_batch(
     pinned by tests); per-task memory grows with it, as the scorer's dl
     array spans at most G * salt_range doc ids."""
     spark = segments.sparkSession
-    empty = "query_id string, rank int, doc_id long, score double"
     qtfs = {
         qid: {t: float(c) for t, c in Counter(tokenize_py(q)).items()}
         for qid, q in queries.items()
     }
     all_terms = sorted({t for m in qtfs.values() for t in m})
     if not all_terms:
-        return spark.createDataFrame([], empty)
+        return local_frame(spark, BATCH_SCHEMA)
     if df_lookup is not None:
         dfs = {t: df_lookup[t] for t in all_terms if t in df_lookup}
     else:
@@ -609,62 +747,43 @@ def wand_topk_batch(
             r["term"]: int(r["df"])
             for r in term_stats.filter(_in_expr("term", all_terms)).collect()
         }
+    if not dfs:
+        return local_frame(spark, BATCH_SCHEMA)
     qtfs = {
         qid: {t: c for t, c in m.items() if t in dfs} for qid, m in qtfs.items()
     }
     seg = segments.filter(_in_expr("term", list(dfs)))
     lens = _lens(doc_lens, lens_by_salt, salt_range)
+    lens_rows = stats.n_docs
     qsalts = None
     if salt_lookup is not None:
         union = _touched_salts(dfs, salt_lookup)
         if not union:
-            return spark.createDataFrame([], empty)
+            return local_frame(spark, BATCH_SCHEMA)
         # the cogroup iterates the UNION of both sides' keys, and the lens
         # side holds EVERY salt: without these filters a python scorer
         # spins (and a doc-length slice ships over Arrow) for every salt
         # in the corpus, and segments of salts outside the lookup are read
         seg = seg.filter(_in_expr("salt", union))
         lens = lens.filter(_in_expr("salt", union))
+        lens_rows = min(lens_rows, len(union) * salt_range)
         # per-query touched-salt sets: a query skips salts that only
         # OTHER queries' terms touch (cheap set probe per group)
         qsalts = {qid: set(_touched_salts(m, salt_lookup)) for qid, m in qtfs.items()}
-    thetas = init_theta or {}
-    n_docs, avgdl = stats.n_docs, stats.avgdl
-
-    def score_fn(key, seg_pdf: pd.DataFrame, lens_pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = []
-        if seg_pdf.empty or lens_pdf.empty:
-            return _no_hits(query_id="object")
-        # salts actually present in this (possibly coarse) group — the
-        # per-query skip below intersects against them
-        group_salts = set(int(s) for s in seg_pdf["salt"].unique())
-        # shared across this group's queries: the frame pre-split by term
-        # ONCE (no per-query isin/groupby re-scan of the group frame),
-        # per-doc norm constants and a term -> (ids, contrib) cache
-        # (decode + divide once per group, not per query)
-        term_groups = {
-            t: g.sort_values(["salt", "block_id"])
-            for t, g in seg_pdf.groupby("term", sort=False)
-        }
-        prep = _prep_lens(lens_pdf, avgdl, k1, b)
-        cache: dict = {}
-        for qid, qtf in qtfs.items():
-            if not qtf or (qsalts is not None and not (qsalts[qid] & group_salts)):
-                continue
-            r = _score_salt(term_groups, prep, cache, qtf, dfs, n_docs, k,
-                            impact_scale, thetas.get(qid, -np.inf))
-            if len(r):
-                r.insert(0, "query_id", qid)
-                outs.append(r)
-        if not outs:
-            return _no_hits(query_id="object")
-        return pd.concat(outs, ignore_index=True)
+    batch = _Batch(qtfs, qsalts, init_theta or {}, dfs, stats.n_docs, stats.avgdl,
+                   k1, b, k, impact_scale)
+    # read at call time so a test can patch the module constant
+    if sum(dfs.values()) + lens_rows < LOCAL_MAX_POSTINGS:
+        return _score_on_driver(seg, lens, salt_group_factor, batch)
 
     gkey = _group_key(salt_group_factor)
     per_salt = (
         seg.groupBy(gkey)
         .cogroup(lens.groupBy(gkey))
-        .applyInPandas(score_fn, "query_id string, doc_id long, score double")
+        .applyInPandas(
+            lambda key, seg_pdf, lens_pdf: _score_group(seg_pdf, lens_pdf, batch),
+            "query_id string, doc_id long, score double",
+        )
     )
     from pyspark.sql import Window
 

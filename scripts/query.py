@@ -6,7 +6,9 @@
 
 Block-max WAND over the compressed segments (term-pruned parquet scan);
 the scores are exact. The salt range is read from the index's segments
-manifests. Multiple --query flags batch into ONE job (wand_topk_batch).
+manifests. Multiple --query flags batch into ONE wand_topk_batch call; a
+small batch is scored in this process (its driver route), a large one by
+one cogroup job.
 """
 
 from __future__ import annotations

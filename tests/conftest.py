@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -23,3 +24,17 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def _jobs_started_by(spark, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn()`` starts, counted through a fresh
+    job group and the status tracker."""
+    sc = spark.sparkContext
+    group = f"contract-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts reach the tracker
+    return list(sc.statusTracker().getJobIdsForGroup(group))

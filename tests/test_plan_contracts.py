@@ -8,9 +8,9 @@
 """
 
 import re
-import uuid
 
 import pytest
+from conftest import _jobs_started_by
 from pyspark.sql import functions as F
 
 from pyspark_codesearch.corpus import corpus_df, ingest_bucketed
@@ -37,7 +37,8 @@ def index_dir(spark, tmp_path_factory):
     return d
 
 
-def test_no_per_row_python_in_core_plans(spark, sf_dir):
+def test_no_per_row_python_in_core_plans(spark, sf_dir, monkeypatch):
+    from pyspark_codesearch import wand
     from pyspark_codesearch.engine import documents_engine
     from pyspark_codesearch.indexing import (
         build_postings_with_dl,
@@ -46,6 +47,8 @@ def test_no_per_row_python_in_core_plans(spark, sf_dir):
     )
 
     eng = documents_engine(spark, sf_dir)
+    # the WAND cogroup plan, not the driver route a small batch takes
+    monkeypatch.setattr(wand, "LOCAL_MAX_POSTINGS", 0)
     docs = ingest_bucketed(corpus_df(spark, 200, seed=9), n_buckets=32)
     segments = build_segments(
         build_postings_with_dl(docs), corpus_stats(docs), salt_range=64
@@ -70,13 +73,16 @@ def test_term_filter_pushed_to_parquet_scan(spark, index_dir):
     assert re.search(r"PushedFilters: \[.*[Ii]n\(term", p), p
 
 
-def test_batch_salt_lookup_filters_segments_by_salt(spark, index_dir):
+def test_batch_salt_lookup_filters_segments_by_salt(spark, index_dir, monkeypatch):
     """Given a salt_lookup, the batch prunes the SEGMENTS side of its
     cogroup to the looked-up salts (pushed into the parquet scan), not
     only the doc-lens side, so a phase restricted to some salts reads
     only theirs."""
+    from pyspark_codesearch import wand
     from pyspark_codesearch.indexing import CorpusStats
     from pyspark_codesearch.wand import wand_topk_batch
+
+    monkeypatch.setattr(wand, "LOCAL_MAX_POSTINGS", 0)  # the cogroup plan
 
     st = read_table(spark, index_dir, "stats").collect()[0]
     q = wand_topk_batch(
@@ -93,20 +99,6 @@ def test_batch_salt_lookup_filters_segments_by_salt(spark, index_dir):
         assert re.search(r"PushedFilters: \[.*In\(salt, \[1,2\]\)", ln), ln
     rows = q.collect()
     assert rows and all(64 <= r["doc_id"] < 192 for r in rows)
-
-
-def _jobs_started_by(spark, fn) -> list[int]:
-    """Ids of the Spark jobs ``fn()`` starts, counted through a fresh
-    job group and the status tracker."""
-    sc = spark.sparkContext
-    group = f"contract-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts reach the tracker
-    return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_request_metadata_runs_no_spark_job(spark, index_dir):

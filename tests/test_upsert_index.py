@@ -248,7 +248,7 @@ def test_index_writes_read_pinned_tables_with_declared_schemas(spark, tmp_path, 
     ``_lineage`` is read as a table."""
     from pyspark.sql.readwriter import DataFrameReader
 
-    from pyspark_codesearch.lineage import _STAGED_POSTINGS_SCHEMA
+    from pyspark_codesearch.lineage import _STAGED_POSTINGS, _STAGED_POSTINGS_SCHEMA
 
     reads = []
     schema_of, parquet_of = DataFrameReader.schema, DataFrameReader.parquet
@@ -275,7 +275,7 @@ def test_index_writes_read_pinned_tables_with_declared_schemas(spark, tmp_path, 
     for path, declared in reads:
         rel = os.path.relpath(path, root)
         assert not rel.startswith("_lineage"), path
-        if rel == "postings/.build":  # the staging dir of both writers
+        if rel == _STAGED_POSTINGS:  # the staging dir of both writers
             assert declared == _STAGED_POSTINGS_SCHEMA, declared
             staged += 1
             continue
