@@ -300,11 +300,9 @@ def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
         if fn.endswith(".json"):
             with open(os.path.join(mdir, fn)) as f:
                 r = json.load(f)
-            recs.append(
-                {k: r.get(k) for k in ("unit", "input_fingerprint", "rows", "wall_ms")}
-            )
-    return spark.createDataFrame(
-        recs, "unit string, input_fingerprint string, rows long, wall_ms double"
+            recs.append(tuple(r.get(k) for k in ("unit", "input_fingerprint", "rows", "wall_ms")))
+    return local_frame(
+        spark, "unit string, input_fingerprint string, rows long, wall_ms double", recs
     )
 
 
@@ -948,22 +946,21 @@ def segment_bucket_ids(out_dir: str) -> list[int]:
 def load_segments(
     spark: SparkSession, out_dir: str, buckets: list[int] | None = None
 ) -> DataFrame:
-    """Union of snapshot-pinned per-bucket scans, `bucket` column attached.
+    """ONE snapshot-pinned scan over the segments bucket dirs.
 
-    Per-bucket reads (instead of one `bucket=*` glob) are what make the
-    snapshot pinning work: each bucket dir resolves to ITS version dir at
-    plan time. Bucket pruning becomes explicit path selection via
+    Each bucket dir is resolved to ITS version dir at plan time (that,
+    not one `bucket=*` glob, is what makes the snapshot pinning work),
+    and the pinned dirs feed a single parquet read with the declared
+    schema: one relation however many buckets, no per-bucket plan to
+    build and union. Bucket pruning is explicit path selection via
     ``buckets`` — same files skipped as Catalyst's partition pruning on
     the old glob layout, decided one level earlier."""
-    segs = None
-    for b in segment_bucket_ids(out_dir) if buckets is None else sorted(buckets):
-        df = read_table(spark, out_dir, f"segments/bucket={b}").withColumn(
-            "bucket", F.lit(b)
-        )
-        segs = df if segs is None else segs.unionByName(df)
-    if segs is None:
+    ids = segment_bucket_ids(out_dir) if buckets is None else sorted(buckets)
+    if not ids:
         raise ValueError(f"no segment buckets under {out_dir}/segments")
-    return segs
+    return spark.read.schema(SEGMENT_SCHEMA).parquet(
+        *(_resolve_snapshot(f"{out_dir}/segments/bucket={b}") for b in ids)
+    )
 
 
 def n_buckets_of(out_dir: str) -> int:
@@ -1021,7 +1018,5 @@ def load_segments_for_terms(spark: SparkSession, out_dir: str, terms) -> DataFra
     all_buckets = segment_bucket_ids(out_dir)
     buckets = buckets_for_terms(spark, terms, len(all_buckets))
     if not buckets:  # no terms: empty frame with the segments schema
-        return load_segments(spark, out_dir, buckets=all_buckets[:1]).filter(
-            F.lit(False)
-        ).drop("bucket")
-    return load_segments(spark, out_dir, buckets=buckets).drop("bucket")
+        return load_segments(spark, out_dir, buckets=all_buckets[:1]).filter(F.lit(False))
+    return load_segments(spark, out_dir, buckets=buckets)

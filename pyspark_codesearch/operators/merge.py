@@ -21,6 +21,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def merge_upsert(base: DataFrame, delta: DataFrame, key: str = "doc_id") -> DataFrame:
     """Keyed upsert: for every key, the delta row wins; keys only in base
@@ -50,7 +52,7 @@ def delete_by_ids(df: DataFrame, ids: Sequence, key: str = "doc_id") -> DataFram
     side never shuffles (an IN-list filter would also work for literal
     lists; the anti-join shape generalizes to a delete-table side)."""
     spark = df.sparkSession
-    dels = spark.createDataFrame([(i,) for i in ids], f"{key} {dict(df.dtypes)[key]}")
+    dels = local_frame(spark, f"{key} {dict(df.dtypes)[key]}", [(i,) for i in ids])
     return df.join(F.broadcast(dels), key, "left_anti")
 
 

@@ -17,7 +17,13 @@ Two dispatchers run that group scorer, chosen by predicted cost:
   ``LOCAL_MAX_POSTINGS``: both pruned frames are collected through Arrow
   (JVM scans: no shuffle, no Python worker task, whose fixed start cost
   is most of a small batch's time) and scored in this process, once per
-  group key; the ranked rows come back as a LocalRelation;
+  group key; the ranked rows come back as a LocalRelation. When the
+  caller has no df or salt lookup and even the WORST case fits the
+  budget — every query term in every doc, (terms + 1) × ``n_docs`` —
+  the route is taken without looking df up at all: a term's df is the
+  sum of ``n_docs`` over the blocks the route collects anyway, as
+  Lucene reads docFreq from the dictionary entry that points at the
+  postings;
 - the COGROUP plan above it: ``applyInPandas`` runs the group scorer on
   the executors and a window ranks each query.
 The scorer and the groups are the same, so the two routes are
@@ -565,18 +571,37 @@ def _group_key(salt_group_factor: int):
 class _Batch(NamedTuple):
     """What every group of one :func:`wand_topk_batch` call scores: the
     queries' in-index term counts, their touched salts (``None`` without
-    a ``salt_lookup``), θ seeds, dfs and the BM25 constants."""
+    a ``salt_lookup``), θ seeds, dfs and the BM25 constants. ``dfs`` is
+    ``None`` until the driver route has collected the blocks it sums
+    them from."""
 
     qtfs: dict[str, dict[str, float]]
     qsalts: dict[str, set[int]] | None
     thetas: dict[str, float]
-    dfs: dict[str, int]
+    dfs: dict[str, int] | None
     n_docs: int
     avgdl: float
     k1: float
     b: float
     k: int
     impact_scale: float
+
+
+def _in_index(qtfs: dict[str, dict[str, float]], dfs: dict[str, int]):
+    """Each query's term counts cut down to the terms ``dfs`` knows."""
+    return {qid: {t: c for t, c in m.items() if t in dfs} for qid, m in qtfs.items()}
+
+
+def _term_groups(seg_pdf: pd.DataFrame) -> dict[str, pd.DataFrame]:
+    """term -> its block rows sorted by (salt, block_id): ONE lexsort on
+    (term, salt, block_id), split at the term boundaries, instead of a
+    groupby and a sort per term."""
+    codes, terms = pd.factorize(seg_pdf["term"], sort=True)
+    rows = seg_pdf.take(np.lexsort((seg_pdf["block_id"].to_numpy(),
+                                    seg_pdf["salt"].to_numpy(), codes)))
+    ends = np.cumsum(np.bincount(codes, minlength=len(terms)))
+    starts = np.concatenate(([0], ends[:-1]))
+    return {t: rows.iloc[a:e] for t, a, e in zip(terms, starts, ends)}
 
 
 def _score_group(seg_pdf: pd.DataFrame, lens_pdf: pd.DataFrame, batch: _Batch) -> pd.DataFrame:
@@ -593,10 +618,7 @@ def _score_group(seg_pdf: pd.DataFrame, lens_pdf: pd.DataFrame, batch: _Batch) -
     # ONCE (no per-query isin/groupby re-scan of the group frame),
     # per-doc norm constants and a term -> (ids, contrib) cache
     # (decode + divide once per group, not per query)
-    term_groups = {
-        t: g.sort_values(["salt", "block_id"])
-        for t, g in seg_pdf.groupby("term", sort=False)
-    }
+    term_groups = _term_groups(seg_pdf)
     prep = _prep_lens(lens_pdf, batch.avgdl, batch.k1, batch.b)
     cache: dict = {}
     outs = []
@@ -617,7 +639,10 @@ BATCH_SCHEMA = "query_id string, rank int, doc_id long, score double"
 
 # The driver route of wand_topk_batch runs when a batch's matched
 # postings (Σ df of its in-index terms) plus a bound on its lens rows
-# stay below this. Measured crossover: 8-query batches drawn from
+# stay below this. Without a df or salt lookup, a batch whose worst case
+# — (query terms + 1) × n_docs, as Σ df can be no larger than terms ×
+# n_docs — is below it takes the route with no term_stats lookup first.
+# Measured crossover: 8-query batches drawn from
 # perfbench's query pool (seed 7) over perfbench corpora indexed with
 # salt_range 1024 and 2 term buckets, the scripts/query.py call shape
 # (bucket-pruned segments, no df_lookup), local[4] on a shared 4-core
@@ -655,6 +680,11 @@ def _score_on_driver(seg: DataFrame, lens: DataFrame, salt_group_factor: int,
     # caller's job group and local properties
     lens_pdf = _COLLECTOR.submit(inheritable_thread_target(spark)(lens.toPandas))
     seg_pdf, lens_pdf = seg.toPandas(), lens_pdf.result()
+    if batch.dfs is None:
+        # every posting sits in exactly one block, so a term's n_docs
+        # summed over its collected blocks is its term_stats df
+        dfs = {t: int(n) for t, n in seg_pdf.groupby("term")["n_docs"].sum().items()}
+        batch = batch._replace(qtfs=_in_index(batch.qtfs, dfs), dfs=dfs)
     g = max(1, int(salt_group_factor))
     lens_groups = {int(key): part for key, part in lens_pdf.groupby(lens_pdf["salt"] // g)}
     outs = [
@@ -701,7 +731,12 @@ def wand_topk_batch(
     in-index terms, plus ``n_docs`` lens rows, or touched salts ×
     ``salt_range`` when that is smaller and a ``salt_lookup`` is given)
     the DRIVER route collects the pruned segments and lens frames
-    through Arrow and scores them in this process. EXECUTION SEMANTICS:
+    through Arrow and scores them in this process; a batch with neither
+    lookup whose worst case (query terms + 1) × ``n_docs`` is below the
+    budget skips the term_stats lookup and takes the dfs from the
+    collected blocks (Σ ``n_docs`` per term), so ``segments`` must hold
+    every block of those terms: a bucket-pruned scan does, a caller that
+    prunes segments by salt passes a ``df_lookup``. EXECUTION SEMANTICS:
     that route executes eagerly — its result is a snapshot-at-call
     DataFrame of literal rows, whose ``collect()`` runs no Spark job.
     Above the budget the cogroup plan below is returned lazily.
@@ -740,6 +775,17 @@ def wand_topk_batch(
     all_terms = sorted({t for m in qtfs.values() for t in m})
     if not all_terms:
         return local_frame(spark, BATCH_SCHEMA)
+    lens = _lens(doc_lens, lens_by_salt, salt_range)
+    # read at call time so a test can patch the module constant
+    if (df_lookup is None and salt_lookup is None
+            and (len(all_terms) + 1) * stats.n_docs < LOCAL_MAX_POSTINGS):
+        # the worst case (every term in every doc, plus the lens rows)
+        # fits the driver budget: skip the term_stats lookup, the driver
+        # route sums each term's df from the blocks it collects
+        batch = _Batch(qtfs, None, init_theta or {}, None, stats.n_docs, stats.avgdl,
+                       k1, b, k, impact_scale)
+        return _score_on_driver(segments.filter(_in_expr("term", all_terms)), lens,
+                                salt_group_factor, batch)
     if df_lookup is not None:
         dfs = {t: df_lookup[t] for t in all_terms if t in df_lookup}
     else:
@@ -749,11 +795,8 @@ def wand_topk_batch(
         }
     if not dfs:
         return local_frame(spark, BATCH_SCHEMA)
-    qtfs = {
-        qid: {t: c for t, c in m.items() if t in dfs} for qid, m in qtfs.items()
-    }
+    qtfs = _in_index(qtfs, dfs)
     seg = segments.filter(_in_expr("term", list(dfs)))
-    lens = _lens(doc_lens, lens_by_salt, salt_range)
     lens_rows = stats.n_docs
     qsalts = None
     if salt_lookup is not None:
@@ -772,7 +815,6 @@ def wand_topk_batch(
         qsalts = {qid: set(_touched_salts(m, salt_lookup)) for qid, m in qtfs.items()}
     batch = _Batch(qtfs, qsalts, init_theta or {}, dfs, stats.n_docs, stats.avgdl,
                    k1, b, k, impact_scale)
-    # read at call time so a test can patch the module constant
     if sum(dfs.values()) + lens_rows < LOCAL_MAX_POSTINGS:
         return _score_on_driver(seg, lens, salt_group_factor, batch)
 

@@ -5,6 +5,7 @@ import json
 import os
 
 import pytest
+from conftest import _jobs_started_by
 from pyspark.sql import functions as F
 
 from pyspark_codesearch.codecs import delta_decode, varbyte_decode
@@ -229,6 +230,19 @@ def test_metrics_table(spark, docs, tmp_path_factory):
     assert all(r["wall_ms"] > 0 for r in rows.values())
     assert rows["docs"]["rows"] == N_DOCS
     assert rows["quarantine"]["rows"] == 0  # clean fixture
+    # one row per unit manifest, in file-name order, with the manifest's
+    # values; a driver-side frame, so collecting it runs no Spark job
+    want = []
+    mdir = os.path.join(d, "_lineage")
+    for fn in sorted(os.listdir(mdir)):
+        if fn.endswith(".json"):
+            with open(os.path.join(mdir, fn)) as f:
+                r = json.load(f)
+            want.append((r["unit"], r["input_fingerprint"], r["rows"], r["wall_ms"]))
+    assert m.columns == ["unit", "input_fingerprint", "rows", "wall_ms"]
+    got = []
+    assert _jobs_started_by(spark, lambda: got.extend(map(tuple, m.collect()))) == []
+    assert got == want
 
 
 def test_bucket_pruned_query_matches_full(spark, docs, tmp_path_factory):
@@ -253,7 +267,7 @@ def test_bucket_pruned_query_matches_full(spark, docs, tmp_path_factory):
     assert 0 < len(bks) <= 4
     pruned_segs = load_segments_for_terms(spark, d, terms)
     full = wand_topk_batch(
-        load_segments(spark, d).drop("bucket"), doc_lens, term_stats, stats,
+        load_segments(spark, d), doc_lens, term_stats, stats,
         qmap, 5, salt_range=64,
     ).collect()
     pruned = wand_topk_batch(

@@ -125,6 +125,21 @@ def test_segment_doc_counts_match_df(env):
     assert seg_df == true_df
 
 
+def test_term_groups_match_per_term_sort(env):
+    """The scorer's one-lexsort term split gives every term the rows and
+    the (salt, block_id) order a per-term sort_values gives, on a frame
+    whose rows arrive shuffled."""
+    from pyspark_codesearch.wand import _term_groups
+
+    pdf = env["segments"].toPandas().sample(frac=1.0, random_state=5)
+    got = _term_groups(pdf)
+    want = {t: g.sort_values(["salt", "block_id"]) for t, g in pdf.groupby("term")}
+    assert list(got) == sorted(want) and len(got) > 100
+    assert any(g["salt"].nunique() > 1 for g in want.values())
+    for t, g in want.items():
+        assert got[t].index.equals(g.index), t
+
+
 def test_prepare_lens_by_salt_infers_eval_type(env):
     """The pack function's type hints must not make Spark warn that it
     cannot infer the eval type (partial hints did)."""

@@ -1,7 +1,9 @@
 """The two dispatchers of wand_topk_batch: the driver route (small
 batches) and the cogroup plan run one group scorer, so they return the
 same rows with the same scores; and the driver route starts no Python
-worker task and no job beyond its two Arrow collects.
+worker task and no job beyond its two Arrow collects. A small batch
+without a df lookup takes its dfs from the blocks the driver route
+collects, which is exact because every posting sits in one block.
 
 Each route is forced by patching ``wand.LOCAL_MAX_POSTINGS``: 0 sends
 every batch to the cogroup plan, a huge value every batch to the driver.
@@ -17,6 +19,7 @@ from pyspark_codesearch.corpus import corpus_df, ingest_bucketed, ingest_documen
 from pyspark_codesearch.indexing import CorpusStats
 from pyspark_codesearch.lineage import (
     build_index_resumable,
+    delete_from_index,
     impact_scale,
     load_segments,
     load_segments_for_terms,
@@ -43,7 +46,7 @@ def _open(spark, out):
     them, plus the driver-side df and salt lookups of every term."""
     st = read_table(spark, out, "stats").collect()[0]
     stats = CorpusStats(int(st["n_docs"]), float(st["avgdl"]))
-    segs = load_segments(spark, out).drop("bucket")
+    segs = load_segments(spark, out)
     salts: dict[str, set[int]] = {}
     for r in segs.select("term", "salt").distinct().collect():
         salts.setdefault(r["term"], set()).add(int(r["salt"]))
@@ -63,7 +66,8 @@ def _open(spark, out):
 
 @pytest.fixture(scope="module")
 def indexes(spark, tmp_path_factory):
-    """A fresh multi-salt index and one after an upsert that raised avgdl
+    """A fresh multi-salt index and one that first lost six docs spread
+    over the salts to a delete, then took an upsert that raised avgdl
     (two long docs in new salts, touching only some buckets), so its
     pruning bound is scaled: impact_scale > 1."""
     root = tmp_path_factory.mktemp("routes")
@@ -76,10 +80,13 @@ def indexes(spark, tmp_path_factory):
         spark.createDataFrame([(10_000, long_text), (10_001, long_text + " data")],
                               "doc_id long, text string")
     ).withColumn("lang", F.lit("python"))
+    ids = sorted(r["doc_id"] for r in read_table(spark, fresh, "doc_lens").collect())
+    delete_from_index(spark, upserted, ids[7::50])
     upsert_index(spark, upserted, delta)
     out = {"fresh": _open(spark, fresh), "upserted": _open(spark, upserted)}
     assert out["fresh"]["scale"] == 1.0
     assert out["upserted"]["scale"] > 1.0
+    assert out["upserted"]["stats"].n_docs == out["fresh"]["stats"].n_docs - 6 + 2
     assert len({s for v in out["fresh"]["salt_lookup"].values() for s in v}) > 2
     return out
 
@@ -140,12 +147,61 @@ def test_routes_rank_identical(spark, indexes, monkeypatch, which, variant):
     assert singles["driver"]["oov"] == singles["driver"]["empty"] == []
 
 
+@pytest.mark.parametrize("which", ["fresh", "upserted"])
+def test_block_doc_counts_sum_to_df(spark, indexes, which):
+    """The invariant the df-from-blocks path rests on: per term, n_docs
+    summed over the term's segment blocks equals its term_stats df, on a
+    fresh index and after an upsert with deletes."""
+    ix = indexes[which]
+    sums = {r["term"]: r["n"] for r in ix["segments"].groupBy("term")
+            .agg(F.sum("n_docs").alias("n")).collect()}
+    assert sums == ix["df_lookup"]
+    assert len(sums) > 100
+
+
+def _terms_of(queries):
+    return sorted({t for q in queries.values() for t in tokenize_py(q)})
+
+
+@pytest.mark.parametrize("which", ["fresh", "upserted"])
+def test_df_from_blocks_matches_lookups(spark, indexes, monkeypatch, which):
+    """The df-from-blocks path (no lookup; it never reads term_stats),
+    the df_lookup path and the forced cogroup route (term_stats lookup)
+    return the same rows with bit-identical scores."""
+    ix = indexes[which]
+    assert (len(_terms_of(QUERIES)) + 1) * ix["stats"].n_docs < wand.LOCAL_MAX_POSTINGS
+    from_blocks = _batch(dict(ix, term_stats=None), QUERIES)
+    assert from_blocks == _batch(ix, QUERIES, df_lookup=ix["df_lookup"])
+    monkeypatch.setattr(wand, "LOCAL_MAX_POSTINGS", 0)
+    assert from_blocks == _batch(ix, QUERIES)
+    assert {r[0] for r in from_blocks} == {"keywords", "ident", "unique", "many"}
+
+
+def test_budget_below_worst_case_takes_the_lookup(spark, indexes, monkeypatch):
+    """A budget above the batch's real Σ df + n_docs but below its worst
+    case (query terms + 1) × n_docs: the batch looks its dfs up in
+    term_stats first (one more job than the two collects), stays on the
+    driver route and returns the same rows."""
+    ix = indexes["fresh"]
+    terms = _terms_of(QUERIES)
+    n_docs = ix["stats"].n_docs
+    real = sum(ix["df_lookup"].get(t, 0) for t in terms) + n_docs
+    budget = real + 1
+    assert budget < (len(terms) + 1) * n_docs
+    want = _batch(ix, QUERIES)
+    monkeypatch.setattr(wand, "LOCAL_MAX_POSTINGS", budget)
+    got = []
+    assert len(_jobs_started_by(spark, lambda: got.extend(_batch(ix, QUERIES)))) == 3
+    assert got == want
+
+
 def test_small_disk_batch_job_contract(spark, indexes):
     """A small batch over the disk index, as scripts/query.py runs it
-    (no df_lookup): the term_stats lookup and the two Arrow collects are
-    its only jobs, and collecting its result runs none."""
+    (no df_lookup): the driver route's two Arrow collects are its only
+    jobs, as its dfs come from the collected blocks with no term_stats
+    lookup, and collecting its result runs none."""
     ix = indexes["fresh"]
-    terms = {t for q in QUERIES.values() for t in tokenize_py(q)}
+    terms = _terms_of(QUERIES)
 
     def call():
         segs = load_segments_for_terms(spark, ix["out"], terms)
@@ -156,7 +212,7 @@ def test_small_disk_batch_job_contract(spark, indexes):
 
     call().collect()  # warm
     out = {}
-    assert len(_jobs_started_by(spark, lambda: out.update(df=call()))) == 3
+    assert len(_jobs_started_by(spark, lambda: out.update(df=call()))) == 2
     rows = []
     assert _jobs_started_by(spark, lambda: rows.extend(out["df"].collect())) == []
     assert rows
