@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from .analysis import tokenize_py
 from .indexing import B, K1, CorpusStats
-from .session import local_frame
+from .session import in_expr, local_frame
 
 
 def bm25_score_col(tf, df, dl, n_docs: int, avgdl: float, k1: float = K1, b: float = B):
@@ -138,9 +138,8 @@ def bm25_scores(
                 if weight is None
                 else weight.when(F.col("term") == t, F.lit(w))
             )
-        from .wand import _in_expr
 
-        matched = postings.filter(_in_expr("term", [t for t, _, _ in rows]))
+        matched = postings.filter(in_expr("term", [t for t, _, _ in rows]))
         scored = matched.withColumn("partial", weight * tfnorm)
     else:
         qdf = local_frame(spark, "term string, w double", weights)

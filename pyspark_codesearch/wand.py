@@ -14,16 +14,19 @@ a batch of one. Per doc-id-range salt:
 Two dispatchers run that group scorer, chosen by predicted cost:
 - the DRIVER route, when the batch's matched postings (Σ df of its
   in-index terms) plus a bound on its lens rows fall below
-  ``LOCAL_MAX_POSTINGS``: both pruned frames are collected through Arrow
-  (JVM scans: no shuffle, no Python worker task, whose fixed start cost
-  is most of a small batch's time) and scored in this process, once per
-  group key; the ranked rows come back as a LocalRelation. When the
-  caller has no df or salt lookup and even the WORST case fits the
-  budget — every query term in every doc, (terms + 1) × ``n_docs`` —
-  the route is taken without looking df up at all: a term's df is the
-  sum of ``n_docs`` over the blocks the route collects anyway, as
-  Lucene reads docFreq from the dictionary entry that points at the
-  postings;
+  ``LOCAL_MAX_POSTINGS``: the pruned segments rows, then the lens rows
+  of the salts they touch, are read into this process and scored there,
+  once per group key; the ranked rows come back as a LocalRelation. A
+  frame that is a bare parquet scan (the disk index) is read by pyarrow
+  from its snapshot-pinned files, as a Lucene reader opens its segment
+  files, so no Spark job runs, whose fixed start-up cost is most of a
+  small batch's time; any other frame is one Arrow collect of a JVM
+  scan (``session.read_rows``). When the caller has no df or salt
+  lookup and even the WORST case fits the budget — every query term in
+  every doc, (terms + 1) × ``n_docs`` — the route is taken without
+  looking df up at all: a term's df is the sum of ``n_docs`` over the
+  blocks the route reads anyway, as Lucene reads docFreq from the
+  dictionary entry that points at the postings;
 - the COGROUP plan above it: ``applyInPandas`` runs the group scorer on
   the executors and a window ranks each query.
 The scorer and the groups are the same, so the two routes are
@@ -52,6 +55,7 @@ real deployment both sides are bucketed by salt, making this co-located).
 
 from __future__ import annotations
 
+import threading
 from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
 from typing import NamedTuple
@@ -65,42 +69,11 @@ from pyspark.sql import functions as F
 from .analysis import tokenize_py
 from .codecs import varbyte_decode
 from .indexing import B, K1, CorpusStats
-from .session import local_frame
+from .session import in_expr, local_frame, read_rows
 
 
 def _idf(n_docs: int, df: float) -> float:
     return float(np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
-
-
-def _in_expr(col: str, values):
-    """``col IN (...)`` as ONE SQL string. ``F.col(..).isin(list)`` costs
-    a py4j round-trip per literal — at 64 touched salts plus the term
-    list that was ~460 py4j calls (~60 ms measured) of per-query PLAN
-    BUILD latency; the expr string is a single call and plans to the
-    same Catalyst ``In`` (pushdown unchanged). String values are
-    backslash- and single-quote-escaped (analyzer tokens never contain
-    either, but the helper should not rely on that — Spark SQL string
-    literals process backslash escapes by default).
-
-    Only all-``str`` or all-integer (bool excluded) lists are accepted:
-    anything else — None, floats, bools, a mix — raises TypeError instead
-    of being stringified into a wrong predicate."""
-    vals = list(values)
-    if not vals:
-        # SQL `IN ()` does not parse; match isin([])'s semantics
-        return F.lit(False)
-    if all(isinstance(v, (int, np.integer)) and not isinstance(v, bool) for v in vals):
-        body = ", ".join(str(int(v)) for v in vals)
-    elif all(isinstance(v, str) for v in vals):
-        body = ", ".join(
-            "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'" for v in vals
-        )
-    else:
-        raise TypeError(
-            f"_in_expr takes all-str or all-int values, got "
-            f"{sorted({type(v).__name__ for v in vals})}"
-        )
-    return F.expr(f"{col} IN ({body})")
 
 
 def _lens_arrays(lens_pdf: pd.DataFrame):
@@ -360,6 +333,10 @@ class TermDictionary:
     ``frames_factory``): a DataFrame object pins the file listing it was
     planned with, so invalidate() must re-plan from fresh reads — merely
     re-caching the old plan would read renamed/deleted files.
+
+    Threads: serve's workers share one dictionary. A lock covers the
+    miss fill, the result build and :meth:`invalidate`, so a lookup never
+    sees a half-filled or half-cleared dictionary.
     """
 
     def __init__(
@@ -370,6 +347,7 @@ class TermDictionary:
         frames_factory=None,
     ):
         self._frames_factory = frames_factory
+        self._lock = threading.Lock()
         self._build(term_stats, segments)
         self._df: dict[str, int] = {}
         self._salts: dict[str, tuple[int, ...]] = {}
@@ -416,15 +394,16 @@ class TermDictionary:
         upsert swaps the underlying parquet directories; without one it
         recomputes from the originally supplied frames (correct for
         in-memory frames, stale for file-backed ones)."""
-        self._side.unpersist()
-        if self._frames_factory is not None:
-            self._build(*self._frames_factory())
-        else:
-            self._side = self._side.cache()
-        self._df.clear()
-        self._salts.clear()
-        self._imp.clear()
-        self._miss.clear()
+        with self._lock:
+            self._side.unpersist()
+            if self._frames_factory is not None:
+                self._build(*self._frames_factory())
+            else:
+                self._side = self._side.cache()
+            self._df.clear()
+            self._salts.clear()
+            self._imp.clear()
+            self._miss.clear()
 
     def lookup3(
         self, terms
@@ -432,20 +411,21 @@ class TermDictionary:
         """(df, touched salts, max block impact) per term — one filtered
         collect for terms not yet resident."""
         want = set(terms)
-        missing = sorted(want - self._df.keys() - self._miss)
-        if missing:
-            self.fetched_terms.update(missing)
-            rows = self._side.filter(_in_expr("term", missing)).collect()
-            for r in rows:
-                self._df[r["term"]] = int(r["df"])
-                self._salts[r["term"]] = tuple(sorted(int(s) for s in r["salts"]))
-                self._imp[r["term"]] = float(r["max_impact"])
-            self._miss.update(t for t in missing if t not in self._df)
-        return (
-            {t: self._df[t] for t in want if t in self._df},
-            {t: self._salts[t] for t in want if t in self._salts},
-            {t: self._imp[t] for t in want if t in self._imp},
-        )
+        with self._lock:
+            missing = sorted(want - self._df.keys() - self._miss)
+            if missing:
+                self.fetched_terms.update(missing)
+                rows = self._side.filter(in_expr("term", missing)).collect()
+                for r in rows:
+                    self._df[r["term"]] = int(r["df"])
+                    self._salts[r["term"]] = tuple(sorted(int(s) for s in r["salts"]))
+                    self._imp[r["term"]] = float(r["max_impact"])
+                self._miss.update(t for t in missing if t not in self._df)
+            return (
+                {t: self._df[t] for t in want if t in self._df},
+                {t: self._salts[t] for t in want if t in self._salts},
+                {t: self._imp[t] for t in want if t in self._imp},
+            )
 
 
 def _touched_salts(terms, salt_lookup) -> list[int]:
@@ -572,7 +552,7 @@ class _Batch(NamedTuple):
     """What every group of one :func:`wand_topk_batch` call scores: the
     queries' in-index term counts, their touched salts (``None`` without
     a ``salt_lookup``), θ seeds, dfs and the BM25 constants. ``dfs`` is
-    ``None`` until the driver route has collected the blocks it sums
+    ``None`` until the driver route has read the blocks it sums
     them from."""
 
     qtfs: dict[str, dict[str, float]]
@@ -646,7 +626,10 @@ BATCH_SCHEMA = "query_id string, rank int, doc_id long, score double"
 # perfbench's query pool (seed 7) over perfbench corpora indexed with
 # salt_range 1024 and 2 term buckets, the scripts/query.py call shape
 # (bucket-pruned segments, no df_lookup), local[4] on a shared 4-core
-# host, warm, median of 5 batches per route:
+# host, warm, median of 5 batches per route. The driver column was
+# measured while the route still collected both frames through two Spark
+# jobs; it now reads a disk index's files without a job, so it is lower
+# and the crossover higher than this table says:
 #
 #   docs     salts  Σdf + n_docs   driver   cogroup
 #   500          1        5.5k     0.90 s   1.52 s
@@ -662,27 +645,58 @@ BATCH_SCHEMA = "query_id string, rank int, doc_id long, score double"
 LOCAL_MAX_POSTINGS = 1_000_000
 
 
-# runs the lens collect of the driver route next to its segments collect
-# (measured 387 -> 311 ms median per perfbench batch); a few threads, so
-# concurrent callers do not queue behind one another
+# reads the packed lens_by_salt table (a cached frame, so its read is a
+# Spark job) next to the segments read of the driver route (measured
+# 387 -> 311 ms median per perfbench batch when both were jobs); a few
+# threads, so concurrent callers do not queue behind one another
 _COLLECTOR = ThreadPoolExecutor(4, thread_name_prefix="wand-collect")
 
 
-def _score_on_driver(seg: DataFrame, lens: DataFrame, salt_group_factor: int,
-                     batch: _Batch) -> DataFrame:
-    """The driver dispatcher: collect both pruned frames through Arrow
-    (JVM scans, no shuffle, no Python worker task), run
-    :func:`_score_group` once per group key and rank each query by
-    score desc, doc_id asc, as the cogroup plan's window does. The
+def _read_lens(doc_lens: DataFrame, lens_by_salt: DataFrame | None, salt_range: int,
+               salts) -> pd.DataFrame:
+    """The lens rows, with their salt, of ``salts`` (``None``: every
+    salt): the packed ``lens_by_salt`` rows, or ``doc_lens`` rows whose
+    salt is derived as the writers derive it, ``(doc_id / salt_range)``
+    as a double cast to int. A ``doc_lens`` read from its files holds
+    every salt; the caller cuts it."""
+    if lens_by_salt is not None:
+        return read_rows(lens_by_salt, None if salts is None else {"salt": salts})
+    rows = read_rows(doc_lens, fallback=lambda: doc_lens if salts is None else
+                     _lens(doc_lens, None, salt_range).filter(in_expr("salt", salts)))
+    return rows.assign(salt=(rows["doc_id"].to_numpy(np.float64) / salt_range).astype(np.int32))
+
+
+def _score_on_driver(segments: DataFrame, where: dict, doc_lens: DataFrame,
+                     lens_by_salt: DataFrame | None, salt_range: int, lens_salts,
+                     salt_group_factor: int, batch: _Batch) -> DataFrame:
+    """The driver dispatcher: read the segments rows under ``where``,
+    then the lens rows of the salts they touch (both through
+    :func:`session.read_rows`: a bare parquet scan is read by pyarrow in
+    this process, any other frame is one Arrow collect of a JVM scan, no
+    shuffle, no Python worker task), run :func:`_score_group` once per
+    group key and rank each query by score desc, doc_id asc, as the
+    cogroup plan's window does. ``lens_salts`` (``None``: all) prunes a
+    packed lens read, which starts before the segments are known. The
     result is a LocalRelation: collecting it runs no Spark job."""
-    spark = seg.sparkSession
-    # the two collects overlap; the helper thread runs its job in the
-    # caller's job group and local properties
-    lens_pdf = _COLLECTOR.submit(inheritable_thread_target(spark)(lens.toPandas))
-    seg_pdf, lens_pdf = seg.toPandas(), lens_pdf.result()
+    spark = segments.sparkSession
+    lens_pdf = None
+    if lens_by_salt is not None:
+        # the helper thread runs its job in the caller's job group and
+        # local properties
+        lens_pdf = _COLLECTOR.submit(inheritable_thread_target(spark)(_read_lens),
+                                     doc_lens, lens_by_salt, salt_range, lens_salts)
+    seg_pdf = read_rows(segments, where)
+    touched = sorted(int(s) for s in seg_pdf["salt"].unique())
+    if lens_pdf is None:
+        lens_pdf = _read_lens(doc_lens, None, salt_range, touched)
+    else:
+        lens_pdf = lens_pdf.result()
+    # only groups that hold segments are scored: the other lens rows are
+    # never read by a scorer
+    lens_pdf = lens_pdf[lens_pdf["salt"].isin(touched)]
     if batch.dfs is None:
         # every posting sits in exactly one block, so a term's n_docs
-        # summed over its collected blocks is its term_stats df
+        # summed over its read blocks is its term_stats df
         dfs = {t: int(n) for t, n in seg_pdf.groupby("term")["n_docs"].sum().items()}
         batch = batch._replace(qtfs=_in_index(batch.qtfs, dfs), dfs=dfs)
     g = max(1, int(salt_group_factor))
@@ -730,11 +744,12 @@ def wand_topk_batch(
     ``LOCAL_MAX_POSTINGS`` (matched postings = Σ df of the batch's
     in-index terms, plus ``n_docs`` lens rows, or touched salts ×
     ``salt_range`` when that is smaller and a ``salt_lookup`` is given)
-    the DRIVER route collects the pruned segments and lens frames
-    through Arrow and scores them in this process; a batch with neither
-    lookup whose worst case (query terms + 1) × ``n_docs`` is below the
-    budget skips the term_stats lookup and takes the dfs from the
-    collected blocks (Σ ``n_docs`` per term), so ``segments`` must hold
+    the DRIVER route reads the pruned segments and lens rows into this
+    process (a bare parquet scan from its files, with no Spark job) and
+    scores them there; a batch with neither lookup whose worst case
+    (query terms + 1) × ``n_docs`` is below the budget skips the
+    term_stats lookup and takes the dfs from the blocks it read
+    (Σ ``n_docs`` per term), so ``segments`` must hold
     every block of those terms: a bucket-pruned scan does, a caller that
     prunes segments by salt passes a ``df_lookup``. EXECUTION SEMANTICS:
     that route executes eagerly — its result is a snapshot-at-call
@@ -775,30 +790,27 @@ def wand_topk_batch(
     all_terms = sorted({t for m in qtfs.values() for t in m})
     if not all_terms:
         return local_frame(spark, BATCH_SCHEMA)
-    lens = _lens(doc_lens, lens_by_salt, salt_range)
     # read at call time so a test can patch the module constant
     if (df_lookup is None and salt_lookup is None
             and (len(all_terms) + 1) * stats.n_docs < LOCAL_MAX_POSTINGS):
         # the worst case (every term in every doc, plus the lens rows)
         # fits the driver budget: skip the term_stats lookup, the driver
-        # route sums each term's df from the blocks it collects
+        # route sums each term's df from the blocks it reads
         batch = _Batch(qtfs, None, init_theta or {}, None, stats.n_docs, stats.avgdl,
                        k1, b, k, impact_scale)
-        return _score_on_driver(segments.filter(_in_expr("term", all_terms)), lens,
-                                salt_group_factor, batch)
+        return _score_on_driver(segments, {"term": all_terms}, doc_lens, lens_by_salt,
+                                salt_range, None, salt_group_factor, batch)
     if df_lookup is not None:
         dfs = {t: df_lookup[t] for t in all_terms if t in df_lookup}
     else:
-        dfs = {
-            r["term"]: int(r["df"])
-            for r in term_stats.filter(_in_expr("term", all_terms)).collect()
-        }
+        found = read_rows(term_stats, {"term": all_terms})
+        dfs = {t: int(d) for t, d in zip(found["term"], found["df"])}
     if not dfs:
         return local_frame(spark, BATCH_SCHEMA)
     qtfs = _in_index(qtfs, dfs)
-    seg = segments.filter(_in_expr("term", list(dfs)))
+    where = {"term": list(dfs)}
     lens_rows = stats.n_docs
-    qsalts = None
+    qsalts = union = None
     if salt_lookup is not None:
         union = _touched_salts(dfs, salt_lookup)
         if not union:
@@ -807,8 +819,7 @@ def wand_topk_batch(
         # side holds EVERY salt: without these filters a python scorer
         # spins (and a doc-length slice ships over Arrow) for every salt
         # in the corpus, and segments of salts outside the lookup are read
-        seg = seg.filter(_in_expr("salt", union))
-        lens = lens.filter(_in_expr("salt", union))
+        where["salt"] = union
         lens_rows = min(lens_rows, len(union) * salt_range)
         # per-query touched-salt sets: a query skips salts that only
         # OTHER queries' terms touch (cheap set probe per group)
@@ -816,8 +827,15 @@ def wand_topk_batch(
     batch = _Batch(qtfs, qsalts, init_theta or {}, dfs, stats.n_docs, stats.avgdl,
                    k1, b, k, impact_scale)
     if sum(dfs.values()) + lens_rows < LOCAL_MAX_POSTINGS:
-        return _score_on_driver(seg, lens, salt_group_factor, batch)
+        return _score_on_driver(segments, where, doc_lens, lens_by_salt, salt_range, union,
+                                salt_group_factor, batch)
 
+    seg = segments
+    for col, vals in where.items():
+        seg = seg.filter(in_expr(col, vals))
+    lens = _lens(doc_lens, lens_by_salt, salt_range)
+    if union is not None:
+        lens = lens.filter(in_expr("salt", union))
     gkey = _group_key(salt_group_factor)
     per_salt = (
         seg.groupBy(gkey)

@@ -6,7 +6,7 @@
   ingest (the definition it optimizes)
 - single-stage exact plan: a doc_id-partitioned cached postings frame
   plans the literal BM25 query with ZERO exchanges above the cache
-- _in_expr: one-call IN lists semantically equal isin, with quoting;
+- in_expr: one-call IN lists semantically equal isin, with quoting;
   values it would mis-quote (None, floats, bools, mixes) raise TypeError
 """
 
@@ -22,7 +22,8 @@ from pyspark_codesearch.indexing import (
     corpus_stats,
 )
 from pyspark_codesearch.scoring import bm25_topk
-from pyspark_codesearch.wand import _in_expr, prepare_lens_by_salt, wand_topk_batch
+from pyspark_codesearch.session import in_expr
+from pyspark_codesearch.wand import prepare_lens_by_salt, wand_topk_batch
 
 SALT_RANGE = 64
 
@@ -117,16 +118,16 @@ def test_in_expr_matches_isin(spark):
     df = spark.createDataFrame(
         [(1, "a"), (2, "b'c"), (3, "d")], "k int, s string"
     )
-    got = sorted(r["k"] for r in df.filter(_in_expr("s", ["a", "b'c"])).collect())
+    got = sorted(r["k"] for r in df.filter(in_expr("s", ["a", "b'c"])).collect())
     want = sorted(
         r["k"] for r in df.filter(F.col("s").isin(["a", "b'c"])).collect()
     )
     assert got == want == [1, 2]
-    got_i = sorted(r["s"] for r in df.filter(_in_expr("k", [2, 3])).collect())
+    got_i = sorted(r["s"] for r in df.filter(in_expr("k", [2, 3])).collect())
     assert got_i == ["b'c", "d"]
-    got_np = sorted(r["s"] for r in df.filter(_in_expr("k", np.array([1, 3]))).collect())
+    got_np = sorted(r["s"] for r in df.filter(in_expr("k", np.array([1, 3]))).collect())
     assert got_np == ["a", "d"]
     # values it would mis-quote are refused, never stringified
     for bad in (["a", None], [None], [1.5], [1, 2.0], [True, 2], [np.bool_(True)], ["a", 1]):
         with pytest.raises(TypeError):
-            _in_expr("k", bad)
+            in_expr("k", bad)

@@ -243,6 +243,53 @@ def test_term_dictionary_filtered_lookups(env):
     assert td.fetched_terms == set(terms)
 
 
+
+def test_term_dictionary_is_thread_safe(env):
+    """Serve's four workers share one dictionary: four threads look up
+    overlapping term sets while a fifth keeps invalidating it. No lookup
+    raises, and each returns what a single-threaded dictionary does."""
+    import sys
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark_codesearch.wand import TermDictionary
+
+    sets = [["parse", "json", "zzznotaterm"], ["json", "data", "merge"],
+            ["merge", "sort", "parse"], ["data", "zzznotaterm", "index"]]
+    want = [TermDictionary(env["term_stats"], env["segments"]).lookup3(t) for t in sets]
+    td = TermDictionary(env["term_stats"], env["segments"])
+
+    def lookups(i):
+        return [td.lookup3(sets[(i + j) % len(sets)]) for j in range(8)]
+
+    done = threading.Event()
+
+    def invalidations():
+        n = 0
+        while not done.is_set():
+            td.invalidate()
+            n += 1
+            time.sleep(0.01)
+        return n
+
+    # five threads on a 4-core host, switching often
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(5) as ex:
+            inv = ex.submit(invalidations)
+            try:
+                got = list(ex.map(lookups, range(4), timeout=300))
+            finally:
+                done.set()
+            assert inv.result(timeout=60) > 1
+    finally:
+        sys.setswitchinterval(interval)
+    for i, results in enumerate(got):
+        for j, r in enumerate(results):
+            assert r == want[(i + j) % len(sets)]
+
 def test_engine_wand_uses_filtered_dictionary(spark, sf_dir):
     """DocumentsEngine.search_wand must not collect the full vocabulary:
     after one query, the resident dictionary holds only that query's

@@ -1,19 +1,21 @@
 """The two dispatchers of wand_topk_batch: the driver route (small
 batches) and the cogroup plan run one group scorer, so they return the
-same rows with the same scores; and the driver route starts no Python
-worker task and no job beyond its two Arrow collects. A small batch
+same rows with the same scores; and over the disk index the driver route
+starts no Spark job at all: ``session.read_rows`` reads the snapshot-
+pinned parquet files of its bare scans in this process. A small batch
 without a df lookup takes its dfs from the blocks the driver route
-collects, which is exact because every posting sits in one block.
+reads, which is exact because every posting sits in one block.
 
 Each route is forced by patching ``wand.LOCAL_MAX_POSTINGS``: 0 sends
 every batch to the cogroup plan, a huge value every batch to the driver.
 """
 
+import pandas as pd
 import pytest
 from conftest import _jobs_started_by
 from pyspark.sql import functions as F
 
-from pyspark_codesearch import wand
+from pyspark_codesearch import session, wand
 from pyspark_codesearch.analysis import tokenize_py
 from pyspark_codesearch.corpus import corpus_df, ingest_bucketed, ingest_documents_df
 from pyspark_codesearch.indexing import CorpusStats
@@ -27,6 +29,7 @@ from pyspark_codesearch.lineage import (
     upsert_index,
 )
 from pyspark_codesearch.scoring import bm25_topk
+from pyspark_codesearch.session import read_rows
 from pyspark_codesearch.wand import prepare_lens_by_salt, wand_topk_batch
 
 SALT_RANGE = 64
@@ -70,7 +73,8 @@ def indexes(spark, tmp_path_factory):
     over the salts to a delete, then took an upsert that raised avgdl
     (two long docs in new salts, touching only some buckets), so its
     pruning bound is scaled: impact_scale > 1."""
-    root = tmp_path_factory.mktemp("routes")
+    # a space and a "%" in the path pin the decoding of the file URIs
+    root = tmp_path_factory.mktemp("routes") / "index 100%20 dir"
     docs = ingest_bucketed(corpus_df(spark, 300, seed=7), n_buckets=1)
     fresh, upserted = str(root / "fresh"), str(root / "upserted")
     for out in (fresh, upserted):
@@ -180,8 +184,8 @@ def test_df_from_blocks_matches_lookups(spark, indexes, monkeypatch, which):
 def test_budget_below_worst_case_takes_the_lookup(spark, indexes, monkeypatch):
     """A budget above the batch's real Σ df + n_docs but below its worst
     case (query terms + 1) × n_docs: the batch looks its dfs up in
-    term_stats first (one more job than the two collects), stays on the
-    driver route and returns the same rows."""
+    term_stats first, stays on the driver route and returns the same
+    rows. Every read is a bare scan read from its files: no job."""
     ix = indexes["fresh"]
     terms = _terms_of(QUERIES)
     n_docs = ix["stats"].n_docs
@@ -191,15 +195,15 @@ def test_budget_below_worst_case_takes_the_lookup(spark, indexes, monkeypatch):
     want = _batch(ix, QUERIES)
     monkeypatch.setattr(wand, "LOCAL_MAX_POSTINGS", budget)
     got = []
-    assert len(_jobs_started_by(spark, lambda: got.extend(_batch(ix, QUERIES)))) == 3
+    assert _jobs_started_by(spark, lambda: got.extend(_batch(ix, QUERIES))) == []
     assert got == want
 
 
 def test_small_disk_batch_job_contract(spark, indexes):
     """A small batch over the disk index, as scripts/query.py runs it
-    (no df_lookup): the driver route's two Arrow collects are its only
-    jobs, as its dfs come from the collected blocks with no term_stats
-    lookup, and collecting its result runs none."""
+    (no df_lookup): no Spark job. The driver route reads the segments
+    and doc_lens files itself, its dfs come from the blocks it read with
+    no term_stats lookup, and collecting its result runs none."""
     ix = indexes["fresh"]
     terms = _terms_of(QUERIES)
 
@@ -212,7 +216,7 @@ def test_small_disk_batch_job_contract(spark, indexes):
 
     call().collect()  # warm
     out = {}
-    assert len(_jobs_started_by(spark, lambda: out.update(df=call()))) == 2
+    assert _jobs_started_by(spark, lambda: out.update(df=call())) == []
     rows = []
     assert _jobs_started_by(spark, lambda: rows.extend(out["df"].collect())) == []
     assert rows
@@ -232,3 +236,76 @@ def test_empty_results_start_no_job(spark, indexes):
             ix["segments"], ix["doc_lens"], ix["term_stats"], ix["stats"], {"q": q}, 10,
             salt_range=SALT_RANGE, df_lookup=ix["df_lookup"],
         ).collect()) == [], q
+
+
+def _sorted(pdf, keys):
+    return pdf.sort_values(keys, ignore_index=True)
+
+
+# per table the driver route reads: its sort key and an IN filter (column, values)
+READS = {
+    "segments": (["term", "salt", "block_id"], "term", ["json", "parse", "zzznotaterm"]),
+    "doc_lens": (["doc_id"], "doc_id", [0, 5, 64, 10_000]),
+    "term_stats": (["term"], "term", ["data", "merge", "zzznotaterm"]),
+}
+
+
+@pytest.mark.parametrize("which", ["fresh", "upserted"])
+@pytest.mark.parametrize("table", sorted(READS))
+def test_read_rows_matches_to_pandas(spark, indexes, which, table):
+    """read_rows on a bare scan reads the files in this process, with no
+    job, and returns toPandas's rows and dtypes, whole and under an IN
+    filter, from a path whose name holds a space and a "%"."""
+    ix = indexes[which]
+    df = ix[table]
+    keys, col, vals = READS[table]
+    assert " " in ix["out"] and "%" in ix["out"]
+    assert session._parquet_files(df)
+    for where in (None, {col: vals}):
+        got = []
+        assert _jobs_started_by(spark, lambda: got.append(read_rows(df, where))) == []
+        want = df if where is None else df.filter(F.col(col).isin(vals))
+        want = _sorted(want.toPandas(), keys)
+        assert len(want) > 0
+        pd.testing.assert_frame_equal(_sorted(got[0], keys), want)
+
+
+def test_read_rows_falls_back_for_other_frames(spark, indexes):
+    """A cached, a filtered and a unioned frame are no bare scan: they are
+    collected through Spark, with the same rows as toPandas."""
+    segs = indexes["upserted"]["segments"]
+    keys = READS["segments"][0]
+    where = {"term": ["json", "parse"]}
+    want = _sorted(segs.filter(F.col("term").isin(where["term"])).toPandas(), keys)
+    # the same bare scan, cached: its reads come from the cache
+    cached = load_segments(spark, indexes["upserted"]["out"]).cache()
+    try:
+        for frame in (cached, segs.filter(F.col("salt") >= 0), segs.unionByName(segs.limit(0))):
+            assert session._parquet_files(frame) is None
+            pd.testing.assert_frame_equal(_sorted(read_rows(frame, where), keys), want)
+    finally:
+        cached.unpersist()
+    # the fallback plan is built only when the frame is no bare scan
+    assert read_rows(segs.limit(5), fallback=lambda: segs.limit(0)).empty
+    assert len(read_rows(segs, fallback=lambda: segs.limit(0))) == segs.count()
+
+
+def test_driver_route_reads_its_snapshot(spark, tmp_path):
+    """Frames opened before an upsert keep reading the version they were
+    planned on: a driver-route batch run on them after the upsert equals
+    the batch run before it, while frames opened afterwards see the
+    upsert."""
+    out = str(tmp_path / "snap shot%")
+    docs = ingest_bucketed(corpus_df(spark, 120, seed=11), n_buckets=1)
+    build_index_resumable(docs, out, n_buckets=2, salt_range=SALT_RANGE)
+    ix = _open(spark, out)
+    before = _batch(ix, QUERIES)
+    assert before
+    text = " ".join(["parse json string data value"] * 30)
+    upsert_index(spark, out, ingest_documents_df(
+        spark.createDataFrame([(10_000, text)], "doc_id long, text string")
+    ).withColumn("lang", F.lit("python")))
+    got = []
+    assert _jobs_started_by(spark, lambda: got.extend(_batch(ix, QUERIES))) == []
+    assert got == before
+    assert _batch(_open(spark, out), QUERIES) != before
