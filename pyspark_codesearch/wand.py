@@ -57,12 +57,10 @@ from __future__ import annotations
 
 import threading
 from collections import Counter
-from concurrent.futures import ThreadPoolExecutor
 from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -334,9 +332,11 @@ class TermDictionary:
     planned with, so invalidate() must re-plan from fresh reads — merely
     re-caching the old plan would read renamed/deleted files.
 
-    Threads: serve's workers share one dictionary. A lock covers the
-    miss fill, the result build and :meth:`invalidate`, so a lookup never
-    sees a half-filled or half-cleared dictionary.
+    Threads: serve's workers share one dictionary. A lock covers reading
+    and filling the dicts and :meth:`invalidate`, never the filtered
+    collect, so a lookup of resident terms does not wait behind another
+    request's miss. Each invalidate bumps a generation; a fill collected
+    before one is returned to its caller but not kept.
     """
 
     def __init__(
@@ -348,6 +348,7 @@ class TermDictionary:
     ):
         self._frames_factory = frames_factory
         self._lock = threading.Lock()
+        self._gen = 0
         self._build(term_stats, segments)
         self._df: dict[str, int] = {}
         self._salts: dict[str, tuple[int, ...]] = {}
@@ -395,6 +396,7 @@ class TermDictionary:
         recomputes from the originally supplied frames (correct for
         in-memory frames, stale for file-backed ones)."""
         with self._lock:
+            self._gen += 1
             self._side.unpersist()
             if self._frames_factory is not None:
                 self._build(*self._frames_factory())
@@ -412,20 +414,26 @@ class TermDictionary:
         collect for terms not yet resident."""
         want = set(terms)
         with self._lock:
+            gen, side = self._gen, self._side
             missing = sorted(want - self._df.keys() - self._miss)
-            if missing:
-                self.fetched_terms.update(missing)
-                rows = self._side.filter(in_expr("term", missing)).collect()
-                for r in rows:
-                    self._df[r["term"]] = int(r["df"])
-                    self._salts[r["term"]] = tuple(sorted(int(s) for s in r["salts"]))
-                    self._imp[r["term"]] = float(r["max_impact"])
-                self._miss.update(t for t in missing if t not in self._df)
-            return (
-                {t: self._df[t] for t in want if t in self._df},
-                {t: self._salts[t] for t in want if t in self._salts},
-                {t: self._imp[t] for t in want if t in self._imp},
-            )
+            self.fetched_terms.update(missing)
+            dfs = {t: self._df[t] for t in want if t in self._df}
+            salts = {t: self._salts[t] for t in want if t in self._salts}
+            imps = {t: self._imp[t] for t in want if t in self._imp}
+        if not missing:
+            return dfs, salts, imps
+        for r in side.filter(in_expr("term", missing)).collect():
+            dfs[r["term"]] = int(r["df"])
+            salts[r["term"]] = tuple(sorted(int(s) for s in r["salts"]))
+            imps[r["term"]] = float(r["max_impact"])
+        with self._lock:
+            if gen == self._gen:
+                for t in missing:
+                    if t in dfs:
+                        self._df[t], self._salts[t], self._imp[t] = dfs[t], salts[t], imps[t]
+                    else:
+                        self._miss.add(t)
+        return dfs, salts, imps
 
 
 def _touched_salts(terms, salt_lookup) -> list[int]:
@@ -645,29 +653,23 @@ BATCH_SCHEMA = "query_id string, rank int, doc_id long, score double"
 LOCAL_MAX_POSTINGS = 1_000_000
 
 
-# reads the packed lens_by_salt table (a cached frame, so its read is a
-# Spark job) next to the segments read of the driver route (measured
-# 387 -> 311 ms median per perfbench batch when both were jobs); a few
-# threads, so concurrent callers do not queue behind one another
-_COLLECTOR = ThreadPoolExecutor(4, thread_name_prefix="wand-collect")
-
-
 def _read_lens(doc_lens: DataFrame, lens_by_salt: DataFrame | None, salt_range: int,
-               salts) -> pd.DataFrame:
-    """The lens rows, with their salt, of ``salts`` (``None``: every
-    salt): the packed ``lens_by_salt`` rows, or ``doc_lens`` rows whose
-    salt is derived as the writers derive it, ``(doc_id / salt_range)``
-    as a double cast to int. A ``doc_lens`` read from its files holds
-    every salt; the caller cuts it."""
+               salts: list[int]) -> pd.DataFrame:
+    """The lens rows, with their salt, of ``salts``: the packed
+    ``lens_by_salt`` rows, or ``doc_lens`` rows whose salt is derived as
+    the writers derive it, ``(doc_id / salt_range)`` as a double cast to
+    int. A ``doc_lens`` read from its files holds every salt and is cut
+    here."""
     if lens_by_salt is not None:
-        return read_rows(lens_by_salt, None if salts is None else {"salt": salts})
-    rows = read_rows(doc_lens, fallback=lambda: doc_lens if salts is None else
-                     _lens(doc_lens, None, salt_range).filter(in_expr("salt", salts)))
-    return rows.assign(salt=(rows["doc_id"].to_numpy(np.float64) / salt_range).astype(np.int32))
+        return read_rows(lens_by_salt, {"salt": salts})
+    rows = read_rows(doc_lens, fallback=lambda: doc_lens.filter(
+        in_expr(f"CAST(doc_id / {int(salt_range)} AS INT)", salts)))
+    salt = (rows["doc_id"].to_numpy(np.float64) / salt_range).astype(np.int32)
+    return rows.assign(salt=salt)[np.isin(salt, salts)]
 
 
 def _score_on_driver(segments: DataFrame, where: dict, doc_lens: DataFrame,
-                     lens_by_salt: DataFrame | None, salt_range: int, lens_salts,
+                     lens_by_salt: DataFrame | None, salt_range: int,
                      salt_group_factor: int, batch: _Batch) -> DataFrame:
     """The driver dispatcher: read the segments rows under ``where``,
     then the lens rows of the salts they touch (both through
@@ -675,25 +677,15 @@ def _score_on_driver(segments: DataFrame, where: dict, doc_lens: DataFrame,
     this process, any other frame is one Arrow collect of a JVM scan, no
     shuffle, no Python worker task), run :func:`_score_group` once per
     group key and rank each query by score desc, doc_id asc, as the
-    cogroup plan's window does. ``lens_salts`` (``None``: all) prunes a
-    packed lens read, which starts before the segments are known. The
-    result is a LocalRelation: collecting it runs no Spark job."""
+    cogroup plan's window does. Only groups that hold segments are
+    scored, so the other salts' lens rows are never read. The result is
+    a LocalRelation: collecting it runs no Spark job."""
     spark = segments.sparkSession
-    lens_pdf = None
-    if lens_by_salt is not None:
-        # the helper thread runs its job in the caller's job group and
-        # local properties
-        lens_pdf = _COLLECTOR.submit(inheritable_thread_target(spark)(_read_lens),
-                                     doc_lens, lens_by_salt, salt_range, lens_salts)
     seg_pdf = read_rows(segments, where)
+    if seg_pdf.empty:
+        return local_frame(spark, BATCH_SCHEMA)
     touched = sorted(int(s) for s in seg_pdf["salt"].unique())
-    if lens_pdf is None:
-        lens_pdf = _read_lens(doc_lens, None, salt_range, touched)
-    else:
-        lens_pdf = lens_pdf.result()
-    # only groups that hold segments are scored: the other lens rows are
-    # never read by a scorer
-    lens_pdf = lens_pdf[lens_pdf["salt"].isin(touched)]
+    lens_pdf = _read_lens(doc_lens, lens_by_salt, salt_range, touched)
     if batch.dfs is None:
         # every posting sits in exactly one block, so a term's n_docs
         # summed over its read blocks is its term_stats df
@@ -743,7 +735,8 @@ def wand_topk_batch(
     Two dispatchers run the one group scorer. Below
     ``LOCAL_MAX_POSTINGS`` (matched postings = Σ df of the batch's
     in-index terms, plus ``n_docs`` lens rows, or touched salts ×
-    ``salt_range`` when that is smaller and a ``salt_lookup`` is given)
+    ``salt_range`` when that is smaller and both a ``salt_lookup`` and
+    ``lens_by_salt`` are given)
     the DRIVER route reads the pruned segments and lens rows into this
     process (a bare parquet scan from its files, with no Spark job) and
     scores them there; a batch with neither lookup whose worst case
@@ -799,7 +792,7 @@ def wand_topk_batch(
         batch = _Batch(qtfs, None, init_theta or {}, None, stats.n_docs, stats.avgdl,
                        k1, b, k, impact_scale)
         return _score_on_driver(segments, {"term": all_terms}, doc_lens, lens_by_salt,
-                                salt_range, None, salt_group_factor, batch)
+                                salt_range, salt_group_factor, batch)
     if df_lookup is not None:
         dfs = {t: df_lookup[t] for t in all_terms if t in df_lookup}
     else:
@@ -820,14 +813,17 @@ def wand_topk_batch(
         # spins (and a doc-length slice ships over Arrow) for every salt
         # in the corpus, and segments of salts outside the lookup are read
         where["salt"] = union
-        lens_rows = min(lens_rows, len(union) * salt_range)
+        if lens_by_salt is not None:
+            # a packed lens read holds only these salts; a doc_lens read
+            # from its files decodes every row before the driver cuts it
+            lens_rows = min(lens_rows, len(union) * salt_range)
         # per-query touched-salt sets: a query skips salts that only
         # OTHER queries' terms touch (cheap set probe per group)
         qsalts = {qid: set(_touched_salts(m, salt_lookup)) for qid, m in qtfs.items()}
     batch = _Batch(qtfs, qsalts, init_theta or {}, dfs, stats.n_docs, stats.avgdl,
                    k1, b, k, impact_scale)
     if sum(dfs.values()) + lens_rows < LOCAL_MAX_POSTINGS:
-        return _score_on_driver(segments, where, doc_lens, lens_by_salt, salt_range, union,
+        return _score_on_driver(segments, where, doc_lens, lens_by_salt, salt_range,
                                 salt_group_factor, batch)
 
     seg = segments

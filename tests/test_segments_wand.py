@@ -520,3 +520,48 @@ def test_wand_init_theta_applies_at_coarse_groups(env):
     base = _wand(env, q, 3)
     seeded = _wand(env, q, 3, salt_group_factor=16, init_theta={"q": base[-1][1]})
     _same_ranking(seeded, base)
+
+
+def test_term_dictionary_miss_does_not_block_hits(env):
+    """A lookup whose terms are resident returns while another thread's
+    miss is still collecting; a fill collected before an invalidate is
+    returned to its caller but not kept."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark_codesearch.wand import TermDictionary
+
+    want = TermDictionary(env["term_stats"], env["segments"]).lookup3(["json"])
+    td = TermDictionary(env["term_stats"], env["segments"])
+    hit = td.lookup3(["parse"])
+    entered, release = threading.Event(), threading.Event()
+    real = td._side
+
+    class Slow:
+        """The side table, but its filtered collect waits to be released."""
+
+        def __getattr__(self, name):
+            return getattr(real, name)
+
+        def filter(self, cond):
+            q = real.filter(cond)
+
+            class Held:
+                def collect(self):
+                    entered.set()
+                    release.wait(120)
+                    return q.collect()
+
+            return Held()
+
+    td._side = Slow()
+    with ThreadPoolExecutor(2) as ex:
+        try:
+            miss = ex.submit(td.lookup3, ["json"])
+            assert entered.wait(120)
+            assert ex.submit(td.lookup3, ["parse"]).result(timeout=60) == hit
+            td.invalidate()
+        finally:
+            release.set()
+        assert miss.result(timeout=120) == want
+    assert "json" not in td._df and not td._miss

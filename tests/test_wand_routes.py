@@ -309,3 +309,31 @@ def test_driver_route_reads_its_snapshot(spark, tmp_path):
     assert _jobs_started_by(spark, lambda: got.extend(_batch(ix, QUERIES))) == []
     assert got == before
     assert _batch(_open(spark, out), QUERIES) != before
+
+
+def test_budget_counts_every_doc_lens_row_it_reads(spark, indexes, monkeypatch):
+    """With a salt lookup, the driver budget counts the touched salts'
+    lens rows only when the packed lens_by_salt is read: a doc_lens read
+    from its files decodes all n_docs rows before the driver cuts them,
+    so a budget between the two sends that batch to the cogroup plan."""
+    ix = indexes["fresh"]
+    # a term found in one salt only
+    term = next(t for t, v in sorted(ix["salt_lookup"].items())
+                if len(v) == 1 and tokenize_py(t) == [t])
+    q = {"u": term}
+    small = ix["df_lookup"][term] + SALT_RANGE
+    assert small + 1 < ix["df_lookup"][term] + ix["stats"].n_docs
+    monkeypatch.setattr(wand, "LOCAL_MAX_POSTINGS", small + 1)
+    kw = dict(df_lookup=ix["df_lookup"], salt_lookup=ix["salt_lookup"])
+    lens_by_salt = prepare_lens_by_salt(ix["doc_lens"], SALT_RANGE)
+    rows = {}
+    for name, extra in (("packed", dict(lens_by_salt=lens_by_salt)), ("doc_lens", {})):
+        out = wand_topk_batch(ix["segments"], ix["doc_lens"], ix["term_stats"], ix["stats"],
+                              q, 5, salt_range=SALT_RANGE, **kw, **extra)
+        got = []
+        jobs = _jobs_started_by(spark, lambda: got.extend(tuple(r) for r in out.collect()))
+        rows[name] = (got, bool(jobs))
+    lens_by_salt.unpersist()
+    assert rows["packed"] == (rows["doc_lens"][0], False)  # driver: a LocalRelation
+    assert rows["doc_lens"][1]  # cogroup: collecting the plan runs its jobs
+    assert rows["packed"][0]
