@@ -48,6 +48,7 @@ import re
 import shutil
 import struct
 import time
+from collections import OrderedDict
 from contextlib import contextmanager as _contextmanager
 from functools import reduce
 
@@ -64,7 +65,7 @@ from .indexing import (
     corpus_stats,
 )
 from .operators.merge import merge_upsert
-from .session import local_frame
+from .session import MEMO_LOCK, local_frame
 
 N_BUCKETS = 8
 
@@ -920,13 +921,59 @@ def _resolve_snapshot(path: str) -> str:
     return os.path.realpath(path)
 
 
+# How many snapshot-pinned scans _pinned_scan keeps (least recently used
+# out first): a client's side tables plus the bucket sets its batches
+# touch, over a few indexes.
+SCAN_CACHE_SIZE = 64
+# (session, schema, ((pinned dir, its file names), ...)) -> DataFrame,
+# guarded by session.MEMO_LOCK
+_SCANS: OrderedDict = OrderedDict()
+
+
+def _pinned_scan(spark: SparkSession, schema: str, dirs: list[str]) -> DataFrame:
+    """ONE parquet scan over the pinned version dirs ``dirs``, kept per
+    index version as Elasticsearch keeps a segment reader open from one
+    refresh to the next: a scan built again lists its dirs and plans a
+    relation, ~16 ms of JVM calls for a small batch.
+
+    The key is the session, the declared schema and each dir with the
+    names of its files. Spark names part files after the writing job's
+    UUID, so a version dir written again (a rebuild with other bucket
+    counts re-creates ``v000000001``) never matches an old key. A dir
+    that cannot be listed is left to ``spark.read`` and its error."""
+    try:
+        key = (spark, schema, tuple((d, tuple(sorted(os.listdir(d)))) for d in dirs))
+    except OSError:
+        return spark.read.schema(schema).parquet(*dirs)
+    with MEMO_LOCK:
+        df = _SCANS.get(key)
+        if df is not None:
+            _SCANS.move_to_end(key)
+            return df
+    df = spark.read.schema(schema).parquet(*dirs)
+    with MEMO_LOCK:
+        # a racing thread's scan of the same key wins: every caller of
+        # one version gets one DataFrame
+        df = _SCANS.setdefault(key, df)
+        _SCANS.move_to_end(key)
+        while len(_SCANS) > SCAN_CACHE_SIZE:
+            _SCANS.popitem(last=False)
+    return df
+
+
 def read_table(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
     """Snapshot-pinned read of one index table (docs, doc_lens, stats,
     term_stats, postings/bucket=N, ...) — see :func:`_resolve_snapshot`.
-    A table in :data:`TABLE_SCHEMAS` is read with its declared schema."""
+    A table in :data:`TABLE_SCHEMAS` is read with its declared schema,
+    and its scan is kept per version (:func:`_pinned_scan`): reading an
+    unchanged table again returns the same DataFrame and plans nothing.
+    Any other table (docs, quarantine) is read off the hot path with its
+    schema inferred from the footers, a Spark job each read."""
     schema = TABLE_SCHEMAS.get(name.split("/", 1)[0])
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(_resolve_snapshot(os.path.join(out_dir, name)))
+    path = _resolve_snapshot(os.path.join(out_dir, name))
+    if schema is None:
+        return spark.read.parquet(path)
+    return _pinned_scan(spark, schema, [path])
 
 
 def _conform(df: DataFrame, table: str) -> DataFrame:
@@ -954,12 +1001,16 @@ def load_segments(
     schema: one relation however many buckets, no per-bucket plan to
     build and union. Bucket pruning is explicit path selection via
     ``buckets`` — same files skipped as Catalyst's partition pruning on
-    the old glob layout, decided one level earlier."""
+    the old glob layout, decided one level earlier. The scan is kept per
+    version of its buckets (:func:`_pinned_scan`): while none of them is
+    rewritten, the same bucket set returns the same DataFrame, and
+    neither lists a dir in the JVM nor plans anything."""
     ids = segment_bucket_ids(out_dir) if buckets is None else sorted(buckets)
     if not ids:
         raise ValueError(f"no segment buckets under {out_dir}/segments")
-    return spark.read.schema(SEGMENT_SCHEMA).parquet(
-        *(_resolve_snapshot(f"{out_dir}/segments/bucket={b}") for b in ids)
+    return _pinned_scan(
+        spark, SEGMENT_SCHEMA,
+        [_resolve_snapshot(f"{out_dir}/segments/bucket={b}") for b in ids],
     )
 
 

@@ -6,11 +6,16 @@ on (vectorized python boundary), shuffle partitions sized by parallelism.
 :func:`local_frame` turns small driver-side tables into DataFrames without
 a Python task; :func:`read_rows` brings a frame's rows to the driver, a
 bare parquet scan without a Spark job.
+
+Driver-side memos shared by threads (lineage's scan cache, the listing
+memo of :func:`read_rows`) are guarded by :data:`MEMO_LOCK`.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+import weakref
 from urllib.parse import unquote, urlparse
 
 import numpy as np
@@ -22,6 +27,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
+
+
+# One lock for the driver-side memos that threads share: the scans
+# lineage keeps per index version and the listing memo of read_rows.
+MEMO_LOCK = threading.Lock()
 
 
 def host_cpus() -> int:
@@ -82,6 +92,11 @@ def get_spark(
     return b.getOrCreate()
 
 
+# DDL string -> its parsed StructType; a schema does not depend on the
+# session, and a race only parses one twice
+_STRUCTS: dict[str, T.StructType] = {}
+
+
 def local_frame(spark: SparkSession, schema: str, rows=()) -> DataFrame:
     """A driver-side table (``rows``: tuples or a pandas frame) as a
     DataFrame that starts no Python task.
@@ -94,14 +109,20 @@ def local_frame(spark: SparkSession, schema: str, rows=()) -> DataFrame:
     an empty pandas frame, so no rows becomes ``SELECT ... WHERE
     false``, which the optimizer folds to an empty LocalRelation
     (29–45 ms).
-    ``schema`` is a DDL string of ``name type`` pairs."""
+    ``schema`` is a DDL string of ``name type`` pairs; it is parsed once
+    and the parsed ``StructType`` kept, so a frame's build makes no JVM
+    call for it. What is left of the cost is building the Arrow
+    LocalRelation, and planning the ``collect()`` of it."""
     cols = [c.split() for c in schema.split(",")]
     if len(rows) == 0:
         nulls = ", ".join(f"CAST(NULL AS {t}) AS {n}" for n, t in cols)
         return spark.sql(f"SELECT {nulls} WHERE false")
     if not isinstance(rows, pd.DataFrame):
         rows = pd.DataFrame(list(rows), columns=[n for n, _ in cols])
-    return spark.createDataFrame(rows, schema)
+    struct = _STRUCTS.get(schema)
+    if struct is None:
+        struct = _STRUCTS[schema] = T.StructType.fromDDL(schema)
+    return spark.createDataFrame(rows, struct)
 
 
 def in_expr(col: str, values):
@@ -140,31 +161,52 @@ _PLAIN_TYPES = (T.StringType, T.BinaryType, T.BooleanType, T.ByteType, T.ShortTy
                 T.IntegerType, T.LongType, T.FloatType, T.DoubleType)
 
 
-def _parquet_files(df: DataFrame) -> list[str] | None:
-    """The local files of ``df`` when it is a bare parquet scan, else
-    ``None``. Bare: the analyzed plan is a ``LogicalRelation`` over a
-    parquet ``HadoopFsRelation`` with nothing on top, no partition
-    columns and no cached copy, and every column has a plain type. A few
-    py4j calls, no job. The files are the relation's listing — what
-    ``df.inputFiles()`` returns, without its optimizer pass — so a scan
-    of a pinned version directory stays on that version, and hidden
-    files are already left out."""
+# DataFrame -> the file listing of its relation, or None when it is no
+# bare parquet relation (see _relation_files). A plan's listing never
+# changes; entries go with their DataFrame.
+_LISTINGS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_UNSEEN = object()
+
+
+def _relation_files(df: DataFrame) -> list[str] | None:
+    """The local files of ``df``'s relation when its analyzed plan is a
+    ``LogicalRelation`` over a parquet ``HadoopFsRelation`` with nothing
+    on top and no partition columns, and every column has a plain type;
+    else ``None``."""
     if not all(isinstance(f.dataType, _PLAIN_TYPES) for f in df.schema):
         return None
-    jdf = df._jdf
-    plan = jdf.queryExecution().analyzed()
+    plan = df._jdf.queryExecution().analyzed()
     if plan.getClass().getSimpleName() != "LogicalRelation":
         return None
     rel = plan.relation()
     if (rel.getClass().getSimpleName() != "HadoopFsRelation"
             or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
-            or not rel.partitionSchema().isEmpty()
-            or jdf.storageLevel().isValid()):
+            or not rel.partitionSchema().isEmpty()):
         return None
     uris = [urlparse(u) for u in rel.inputFiles()]
     if any(u.scheme != "file" for u in uris):
         return None
     return [unquote(u.path) for u in uris]
+
+
+def _parquet_files(df: DataFrame) -> list[str] | None:
+    """The local files of ``df`` when it is a bare parquet scan, else
+    ``None``. Bare: a parquet relation with nothing on top (see
+    :func:`_relation_files`) and no cached copy. The files are the
+    relation's listing — what ``df.inputFiles()`` returns, without its
+    optimizer pass — so a scan of a pinned version directory stays on
+    that version, and hidden files are already left out. The listing is
+    looked up once per DataFrame object (a dozen py4j calls); whether
+    the frame is cached can change, so that is asked on every call."""
+    with MEMO_LOCK:
+        files = _LISTINGS.get(df, _UNSEEN)
+    if files is _UNSEEN:
+        files = _relation_files(df)
+        with MEMO_LOCK:
+            _LISTINGS[df] = files
+    if files is None or df._jdf.storageLevel().isValid():
+        return None
+    return files
 
 
 def read_rows(df: DataFrame, where: dict | None = None, *, fallback=None) -> pd.DataFrame:
@@ -177,7 +219,10 @@ def read_rows(df: DataFrame, where: dict | None = None, *, fallback=None) -> pd.
     whose fixed start-up cost is most of a small read (two overlapping
     collects took ~62 ms each; pyarrow read the same rows in ~4 ms).
     Partition discovery is off, so version directory names never become
-    columns, and the table is cast to ``df``'s schema. Any other frame —
+    columns, and the table is cast to ``df``'s schema. The relation's
+    listing is memoized per DataFrame object, so a frame read again (the
+    scans lineage keeps per index version, a client's side tables) costs
+    two py4j calls, the check for a cached copy. Any other frame —
     cached, filtered, unioned, in memory — is collected through Arrow:
     ``fallback()`` if given (its plan is built only then), else ``df``
     filtered by ``where``."""

@@ -21,16 +21,22 @@ Two dispatchers run that group scorer, chosen by predicted cost:
   from its snapshot-pinned files, as a Lucene reader opens its segment
   files, so no Spark job runs, whose fixed start-up cost is most of a
   small batch's time; any other frame is one Arrow collect of a JVM
-  scan (``session.read_rows``). When the caller has no df or salt
-  lookup and even the WORST case fits the budget — every query term in
-  every doc, (terms + 1) × ``n_docs`` — the route is taken without
-  looking df up at all: a term's df is the sum of ``n_docs`` over the
-  blocks the route reads anyway, as Lucene reads docFreq from the
-  dictionary entry that points at the postings;
+  scan (``session.read_rows``). A warm batch over an unchanged index
+  plans nothing new either: lineage keeps its scans per index version
+  and ``read_rows`` each scan's file listing, so what is left of the
+  JVM's share is returning the ranked rows as a DataFrame. When the
+  caller has no df or salt lookup and even the WORST case fits the
+  budget — every query term in every doc, (terms + 1) × ``n_docs`` —
+  the route is taken without looking df up at all: a term's df is the
+  sum of ``n_docs`` over the blocks the route reads anyway, as Lucene
+  reads docFreq from the dictionary entry that points at the postings;
 - the COGROUP plan above it: ``applyInPandas`` runs the group scorer on
   the executors and a window ranks each query.
 The scorer and the groups are the same, so the two routes are
-rank-identical by construction (tests/test_wand_routes.py).
+rank-identical by construction (tests/test_wand_routes.py). Inside a
+group the scorer splits the block rows once into each term's run of
+column arrays (:func:`_term_groups`), views into one sorted copy, and
+works on those arrays, not on pandas slices.
 
 Pruning (lossless for top-k):
 - terms processed in descending max-contribution C_t = qtf * idf_t * max
@@ -104,8 +110,10 @@ def _prep_lens(lens_pdf: pd.DataFrame, avgdl: float, k1: float, b: float):
     return base, k1 * (1.0 - b + b * dl / max(avgdl, 1e-9))
 
 
-def _decode_term_blocks(g: pd.DataFrame):
-    """Decode a (term, salt) block run in TWO varbyte passes total.
+def _decode_term_blocks(g):
+    """Decode a (term, salt) block run in TWO varbyte passes total. ``g``
+    maps ``doc_ids_enc``, ``tfs_enc`` and ``n_docs`` to the run's column
+    arrays (see :func:`_term_groups`).
 
     Blocks are independently decodable (absolute first id per block), so
     the concatenated buffers decode in one vectorized call each; block-
@@ -116,7 +124,7 @@ def _decode_term_blocks(g: pd.DataFrame):
     tf_buf = b"".join(g["tfs_enc"])
     gaps = varbyte_decode(id_buf).astype(np.int64)
     tfs = varbyte_decode(tf_buf).astype(np.float64)
-    counts = g["n_docs"].to_numpy(np.int64)
+    counts = g["n_docs"].astype(np.int64)
     starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
     # gaps[start] IS the absolute first id of its block (encode_blocked
     # restarts there). Zero the block-start slots BEFORE the cumsum so
@@ -131,15 +139,18 @@ def _decode_term_blocks(g: pd.DataFrame):
     return ids, tfs
 
 
-def _no_hits(**lead: str) -> pd.DataFrame:
-    """An empty scorer result; ``lead`` names extra leading columns and
-    their dtypes (the batch's ``query_id``)."""
-    dtypes = {**lead, "doc_id": "int64", "score": "float64"}
+def _no_hits() -> pd.DataFrame:
+    """An empty group scorer result."""
+    dtypes = {"query_id": "object", "doc_id": "int64", "score": "float64"}
     return pd.DataFrame({c: pd.Series(dtype=t) for c, t in dtypes.items()})
 
 
+# no (ids, values): shared by every empty return, so never written to
+_NONE = (np.empty(0, np.int64), np.empty(0, np.float64))
+
+
 def _score_salt(
-    term_groups: dict[str, pd.DataFrame],
+    term_groups: dict[str, dict[str, np.ndarray]],
     prep: tuple,
     cache: dict,
     qtf: dict[str, float],
@@ -148,11 +159,13 @@ def _score_salt(
     k: int,
     impact_scale: float,
     init_theta: float,
-) -> pd.DataFrame:
-    """MaxScore scoring of one query in one cogroup group. ``term_groups``
-    (term -> block rows sorted by (salt, block_id), split ONCE per
-    group), ``prep`` (base, norm_c) and ``cache`` (term -> (ids,
-    query-independent contrib)) are shared by the queries of a batch —
+) -> tuple[np.ndarray, np.ndarray]:
+    """MaxScore scoring of one query in one cogroup group: its local
+    top-k as (doc ids, scores) arrays, best first. ``term_groups``
+    (term -> its block run's column arrays sorted by (salt, block_id),
+    split ONCE per group by :func:`_term_groups`), ``prep`` (base,
+    norm_c) and ``cache`` (term -> (ids, query-independent contrib)) are
+    shared by the queries of a batch —
     hot terms decode and divide ONCE per group, and no per-query
     isin/groupby re-scans the group frame. A coarse group
     (salt_group_factor > 1) holds several salts' block runs; doc-range
@@ -184,10 +197,10 @@ def _score_salt(
         c_t = w * float(g["block_max_impact"].max()) * impact_scale
         terms.append((term, w, c_t, g))
     if not terms:
-        return _no_hits()
+        return _NONE
     terms.sort(key=lambda t: (-t[2], t[0]))
 
-    def term_arrays(g: pd.DataFrame, term: str):
+    def term_arrays(g, term: str):
         """(ids, contrib) where contrib = tf/(tf + norm) — the whole
         QUERY-INDEPENDENT part of the BM25 term score. Cached per
         (term, group): in a batch, the decode AND the division/gather
@@ -199,7 +212,7 @@ def _score_salt(
             cache[term] = (ids, tfs / (tfs + norm_c[ids - base]))
         return cache[term]
 
-    def lookup_arrays(g: pd.DataFrame, term: str, hi_ids):
+    def lookup_arrays(g, term: str, hi_ids):
         """(ids, contrib) restricted to blocks that can intersect the
         candidate set. A cached full decode is strictly cheaper than a
         fresh partial decode, so prefer it."""
@@ -207,18 +220,17 @@ def _score_salt(
             # frozen-from-the-start salt (global init_theta): nothing can
             # enter, decode nothing — not even a term another query of
             # the batch cached (the candidate probe needs a candidate)
-            return np.empty(0, np.int64), np.empty(0, np.float64)
+            return _NONE
         if term in cache:
             return cache[term]
         # block-range skip: keep only blocks whose [first_doc, last_doc]
         # intersects the (sorted) candidate ids, then one fused decode
-        first = g["first_doc"].to_numpy(np.int64)
-        last = g["last_doc"].to_numpy(np.int64)
+        first, last = g["first_doc"], g["last_doc"]
         j = np.searchsorted(hi_ids, first)
         keep = (j < hi_ids.size) & (hi_ids[np.minimum(j, hi_ids.size - 1)] <= last)
         if not keep.any():
-            return np.empty(0, np.int64), np.empty(0, np.float64)
-        ids, tfs = _decode_term_blocks(g[keep])
+            return _NONE
+        ids, tfs = _decode_term_blocks({c: g[c][keep] for c in _DECODE_COLS})
         return ids, tfs / (tfs + norm_c[ids - base])
 
     cand_ids = np.empty(0, np.int64)
@@ -262,11 +274,9 @@ def _score_salt(
             cand_scores = np.zeros(cand_ids.size, np.float64)
             np.add.at(cand_scores, inv, all_sc)
 
-    if cand_ids.size == 0:
-        return _no_hits()
     top = min(k, cand_ids.size)
     order = np.lexsort((cand_ids, -cand_scores))[:top]
-    return pd.DataFrame({"doc_id": cand_ids[order], "score": cand_scores[order]})
+    return cand_ids[order], cand_scores[order]
 
 
 def prepare_lens_by_salt(doc_lens: DataFrame, salt_range: int) -> DataFrame:
@@ -580,16 +590,23 @@ def _in_index(qtfs: dict[str, dict[str, float]], dfs: dict[str, int]):
     return {qid: {t: c for t, c in m.items() if t in dfs} for qid, m in qtfs.items()}
 
 
-def _term_groups(seg_pdf: pd.DataFrame) -> dict[str, pd.DataFrame]:
-    """term -> its block rows sorted by (salt, block_id): ONE lexsort on
-    (term, salt, block_id), split at the term boundaries, instead of a
-    groupby and a sort per term."""
+# the segment columns the scorer reads from a term's block run
+_DECODE_COLS = ("doc_ids_enc", "tfs_enc", "n_docs")
+_RUN_COLS = ("block_max_impact", "first_doc", "last_doc", *_DECODE_COLS)
+
+
+def _term_groups(seg_pdf: pd.DataFrame) -> dict[str, dict[str, np.ndarray]]:
+    """term -> its block run sorted by (salt, block_id), as column arrays
+    (:data:`_RUN_COLS`): ONE lexsort on (term, salt, block_id) and one
+    sorted copy of each column, whose term runs are views cut at the
+    term boundaries — no groupby, no sort and no pandas slice per term,
+    whose indexing cost more than the small runs' arithmetic."""
     codes, terms = pd.factorize(seg_pdf["term"], sort=True)
-    rows = seg_pdf.take(np.lexsort((seg_pdf["block_id"].to_numpy(),
-                                    seg_pdf["salt"].to_numpy(), codes)))
+    order = np.lexsort((seg_pdf["block_id"].to_numpy(), seg_pdf["salt"].to_numpy(), codes))
+    cols = {c: seg_pdf[c].to_numpy()[order] for c in _RUN_COLS}
     ends = np.cumsum(np.bincount(codes, minlength=len(terms)))
     starts = np.concatenate(([0], ends[:-1]))
-    return {t: rows.iloc[a:e] for t, a, e in zip(terms, starts, ends)}
+    return {t: {c: a[s:e] for c, a in cols.items()} for t, s, e in zip(terms, starts, ends)}
 
 
 def _score_group(seg_pdf: pd.DataFrame, lens_pdf: pd.DataFrame, batch: _Batch) -> pd.DataFrame:
@@ -598,7 +615,7 @@ def _score_group(seg_pdf: pd.DataFrame, lens_pdf: pd.DataFrame, batch: _Batch) -
     group scorer of both dispatchers: the cogroup runs it on the
     executors, the driver route once per group key."""
     if seg_pdf.empty or lens_pdf.empty:
-        return _no_hits(query_id="object")
+        return _no_hits()
     # salts actually present in this (possibly coarse) group — the
     # per-query skip below intersects against them
     group_salts = set(int(s) for s in seg_pdf["salt"].unique())
@@ -609,18 +626,19 @@ def _score_group(seg_pdf: pd.DataFrame, lens_pdf: pd.DataFrame, batch: _Batch) -
     term_groups = _term_groups(seg_pdf)
     prep = _prep_lens(lens_pdf, batch.avgdl, batch.k1, batch.b)
     cache: dict = {}
-    outs = []
+    qids, ids, scores = [], [], []
     for qid, qtf in batch.qtfs.items():
         if not qtf or (batch.qsalts is not None and not (batch.qsalts[qid] & group_salts)):
             continue
-        r = _score_salt(term_groups, prep, cache, qtf, batch.dfs, batch.n_docs, batch.k,
-                        batch.impact_scale, batch.thetas.get(qid, -np.inf))
-        if len(r):
-            r.insert(0, "query_id", qid)
-            outs.append(r)
-    if not outs:
-        return _no_hits(query_id="object")
-    return pd.concat(outs, ignore_index=True)
+        d, sc = _score_salt(term_groups, prep, cache, qtf, batch.dfs, batch.n_docs, batch.k,
+                            batch.impact_scale, batch.thetas.get(qid, -np.inf))
+        qids.append(np.full(d.size, qid, dtype=object))
+        ids.append(d)
+        scores.append(sc)
+    if not ids:
+        return _no_hits()
+    return pd.DataFrame({"query_id": np.concatenate(qids), "doc_id": np.concatenate(ids),
+                         "score": np.concatenate(scores)})
 
 
 BATCH_SCHEMA = "query_id string, rank int, doc_id long, score double"

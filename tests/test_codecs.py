@@ -72,9 +72,8 @@ def test_compression_ratio_dense_ids():
 def test_decode_term_blocks_bucket_composed_ids_no_overflow():
     """Fused block decode must not wrap int64 when block-start absolutes
     are bucket-composed doc ids (~2^50) over many blocks: the cumsum runs
-    over within-block gaps only, never over the absolutes."""
-    import pandas as pd
-
+    over within-block gaps only, never over the absolutes. The run is
+    given as the scorer gives it, a mapping of column arrays."""
     from pyspark_codesearch.codecs import encode_blocked
     from pyspark_codesearch.wand import _decode_term_blocks
 
@@ -85,7 +84,11 @@ def test_decode_term_blocks_bucket_composed_ids_no_overflow():
     tfs = np.ones(ids.size, dtype=np.int64)
     id_bufs, tf_bufs = encode_blocked(ids, tfs, 128)
     counts = [128] * 9000
-    g = pd.DataFrame({"doc_ids_enc": id_bufs, "tfs_enc": tf_bufs, "n_docs": counts})
+    g = {
+        "doc_ids_enc": np.array(id_bufs, dtype=object),
+        "tfs_enc": np.array(tf_bufs, dtype=object),
+        "n_docs": np.array(counts, dtype=np.int32),
+    }
     got_ids, got_tfs = _decode_term_blocks(g)
     assert got_ids.dtype == np.int64
     assert (got_ids == ids).all()

@@ -126,10 +126,10 @@ def test_segment_doc_counts_match_df(env):
 
 
 def test_term_groups_match_per_term_sort(env):
-    """The scorer's one-lexsort term split gives every term the rows and
-    the (salt, block_id) order a per-term sort_values gives, on a frame
-    whose rows arrive shuffled."""
-    from pyspark_codesearch.wand import _term_groups
+    """The scorer's one-lexsort term split gives every term, as column
+    arrays, the rows and the (salt, block_id) order a per-term
+    sort_values gives, on a frame whose rows arrive shuffled."""
+    from pyspark_codesearch.wand import _RUN_COLS, _term_groups
 
     pdf = env["segments"].toPandas().sample(frac=1.0, random_state=5)
     got = _term_groups(pdf)
@@ -137,7 +137,12 @@ def test_term_groups_match_per_term_sort(env):
     assert list(got) == sorted(want) and len(got) > 100
     assert any(g["salt"].nunique() > 1 for g in want.values())
     for t, g in want.items():
-        assert got[t].index.equals(g.index), t
+        assert set(got[t]) == set(_RUN_COLS), t
+        # a block's first doc is unique within its term: same rows, same order
+        assert g["first_doc"].is_unique, t
+        for c in _RUN_COLS:
+            assert isinstance(got[t][c], np.ndarray), (t, c)
+            assert list(got[t][c]) == list(g[c]), (t, c)
 
 
 def test_prepare_lens_by_salt_infers_eval_type(env):

@@ -272,10 +272,14 @@ def test_read_rows_matches_to_pandas(spark, indexes, which, table):
 
 def test_read_rows_falls_back_for_other_frames(spark, indexes):
     """A cached, a filtered and a unioned frame are no bare scan: they are
-    collected through Spark, with the same rows as toPandas."""
+    collected through Spark, with the same rows as toPandas. Once the
+    cached copy is dropped the bare scan is read from its files again:
+    the check for a cached copy is made on every read, not memoized."""
     segs = indexes["upserted"]["segments"]
     keys = READS["segments"][0]
     where = {"term": ["json", "parse"]}
+    files = session._parquet_files(segs)
+    assert files
     want = _sorted(segs.filter(F.col("term").isin(where["term"])).toPandas(), keys)
     # the same bare scan, cached: its reads come from the cache
     cached = load_segments(spark, indexes["upserted"]["out"]).cache()
@@ -285,6 +289,11 @@ def test_read_rows_falls_back_for_other_frames(spark, indexes):
             pd.testing.assert_frame_equal(_sorted(read_rows(frame, where), keys), want)
     finally:
         cached.unpersist()
+    for frame in (cached, segs):
+        assert session._parquet_files(frame) == files
+        got = []
+        assert _jobs_started_by(spark, lambda: got.append(read_rows(frame, where))) == []
+        pd.testing.assert_frame_equal(_sorted(got[0], keys), want)
     # the fallback plan is built only when the frame is no bare scan
     assert read_rows(segs.limit(5), fallback=lambda: segs.limit(0)).empty
     assert len(read_rows(segs, fallback=lambda: segs.limit(0))) == segs.count()
