@@ -89,10 +89,11 @@ def search_topk_auto(
     paid at action time, composable into larger plans); the SELECTIVE
     route executes eagerly — ``wand_topk_selective``'s global-θ hand-off
     needs two driver collects, so its result is a snapshot-at-call
-    DataFrame of literal rows. Callers composing the result into a
-    bigger unexecuted plan get call-time data on that route;
-    collect()-immediately callers (tests, bench, the driver entry) see
-    no difference."""
+    ``session.DriverFrame`` holding its rows in this process, whose
+    ``collect()`` makes no JVM call. Callers composing the result into
+    a bigger unexecuted plan get call-time data on that route (planned
+    once as a LocalRelation); collect()-immediately callers (tests,
+    bench, the driver entry) see no difference."""
     from .wand import _idf, wand_topk_selective
 
     qtf = Counter(tokenize_py(query))

@@ -635,6 +635,8 @@ def _swap_dir(path: str, write_fn) -> None:
         os.utime(prev)  # its mtime now records when it was superseded
         keep.add(os.path.basename(prev))
     _repoint(path, vdir)
+    if prev is not None:
+        _forget_scans(prev)
     now = time.time()
     for d in os.listdir(vroot):
         v = os.path.join(vroot, d)
@@ -959,6 +961,17 @@ def _pinned_scan(spark: SparkSession, schema: str, dirs: list[str]) -> DataFrame
         while len(_SCANS) > SCAN_CACHE_SIZE:
             _SCANS.popitem(last=False)
     return df
+
+
+def _forget_scans(vdir: str) -> None:
+    """Drop the kept scans that read version dir ``vdir``, which a swap
+    has just superseded: a read resolves its path to the new version
+    from now on, so they would only take slots from live scans (the
+    writer reads every version it publishes through :func:`read_table`).
+    Holders of the dropped DataFrames keep reading their snapshot."""
+    with MEMO_LOCK:
+        for key in [k for k in _SCANS if any(d == vdir for d, _ in k[2])]:
+            del _SCANS[key]
 
 
 def read_table(spark: SparkSession, out_dir: str, name: str) -> DataFrame:

@@ -3,8 +3,9 @@
 Defaults are tuned so the same code runs on local[N] here and would run on a
 1000-executor cluster unchanged: AQE on (runtime re-plan + skew-join), Arrow
 on (vectorized python boundary), shuffle partitions sized by parallelism.
-:func:`local_frame` turns small driver-side tables into DataFrames without
-a Python task; :func:`read_rows` brings a frame's rows to the driver, a
+:func:`local_frame` turns small driver-side tables into DataFrames held in
+this process (:class:`DriverFrame`), whose ``collect()`` makes no JVM
+call; :func:`read_rows` brings a frame's rows to the driver, a
 bare parquet scan without a Spark job.
 
 Driver-side memos shared by threads (lineage's scan cache, the listing
@@ -23,10 +24,12 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql.classic.dataframe import DataFrame as _ClassicFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _create_row
 
 
 # One lock for the driver-side memos that threads share: the scans
@@ -92,37 +95,95 @@ def get_spark(
     return b.getOrCreate()
 
 
-# DDL string -> its parsed StructType; a schema does not depend on the
-# session, and a race only parses one twice
-_STRUCTS: dict[str, T.StructType] = {}
+# DDL string -> its parsed StructType and Arrow schema; a schema does not
+# depend on the session, and a race only parses one twice
+_STRUCTS: dict[str, tuple[T.StructType, pa.Schema]] = {}
+
+
+class DriverFrame(_ClassicFrame):
+    """A DataFrame whose rows are held in this process, as Lucene hands
+    back ``TopDocs`` from the process that scored them. ``collect()``
+    builds its ``Row``s here, with no JVM call, and ``schema`` and
+    ``columns`` come from the parsed ``StructType``. Every other method
+    reaches the rows through ``_jdf``, which builds the JVM relation on
+    first use — an Arrow LocalRelation of the rows, or ``SELECT ...
+    WHERE false`` for none — once per frame, under a lock, so threads
+    that touch it at once share one build. Frames derived from this
+    one (``select``, ``join``, ...) are plain JVM DataFrames."""
+
+    def __new__(cls, *args, **kwargs):
+        # the classic __new__ takes (jdf, session) and calls __init__ itself
+        return object.__new__(cls)
+
+    def __init__(self, spark: SparkSession, struct: T.StructType, arrow: pa.Schema,
+                 rows: pd.DataFrame | None):
+        self._session = spark
+        self._sc = spark._sc
+        self.is_cached = False
+        self._support_repr_html = False
+        self._struct, self._arrow, self._rows = struct, arrow, rows
+        self._built = None
+        self._build_lock = threading.Lock()
+
+    @property
+    def schema(self) -> T.StructType:
+        return self._struct
+
+    @property
+    def _jdf(self):
+        with self._build_lock:
+            if self._built is None:
+                if self._rows is None:
+                    nulls = ", ".join(f"CAST(NULL AS {f.dataType.simpleString()}) AS {f.name}"
+                                      for f in self._struct)
+                    frame = self._session.sql(f"SELECT {nulls} WHERE false")
+                else:
+                    frame = self._session.createDataFrame(self._rows, self._struct)
+                self._built = frame._jdf
+            return self._built
+
+    def collect(self) -> list[Row]:
+        """The rows, with the values the JVM relation holds: each column,
+        taken by position, converted to its Arrow type as
+        ``createDataFrame`` converts it (nulls and NaNs to ``None``, no
+        overflow check), then to Python values."""
+        if self._rows is None:
+            return []
+        cols = [
+            pa.Array.from_pandas(col, mask=col.isnull().to_numpy(), type=f.type,
+                                 safe=False).to_pylist()
+            for (_, col), f in zip(self._rows.items(), self._arrow)
+        ]
+        names = self._struct.names
+        return [_create_row(names, vals) for vals in zip(*cols)]
 
 
 def local_frame(spark: SparkSession, schema: str, rows=()) -> DataFrame:
     """A driver-side table (``rows``: tuples or a pandas frame) as a
-    DataFrame that starts no Python task.
+    :class:`DriverFrame`: ``collect()`` returns the rows with no Spark
+    job and no JVM call, and any other use plans them in the JVM once.
 
     ``spark.createDataFrame(list, schema)`` pickles its rows through a
     Python RDD, so every action on it runs ``defaultParallelism`` Python
     worker tasks: collecting an empty one took 0.52–0.55 s (local[4],
-    4-core host). Pandas through Arrow plans a LocalRelation, whose
-    ``collect()`` runs no job (57–59 ms with the build). Arrow refuses
-    an empty pandas frame, so no rows becomes ``SELECT ... WHERE
-    false``, which the optimizer folds to an empty LocalRelation
-    (29–45 ms).
+    4-core host). The JVM relation behind a frame is pandas through
+    Arrow, a LocalRelation whose actions run no job (57–59 ms to build
+    and collect); Arrow refuses an empty pandas frame, so no rows
+    becomes ``SELECT ... WHERE false``, which the optimizer folds to an
+    empty LocalRelation (29–45 ms). A caller that only collects — the
+    WAND driver route's callers — pays neither.
     ``schema`` is a DDL string of ``name type`` pairs; it is parsed once
-    and the parsed ``StructType`` kept, so a frame's build makes no JVM
-    call for it. What is left of the cost is building the Arrow
-    LocalRelation, and planning the ``collect()`` of it."""
-    cols = [c.split() for c in schema.split(",")]
+    and the parsed ``StructType`` kept."""
+    parsed = _STRUCTS.get(schema)
+    if parsed is None:
+        struct = T.StructType.fromDDL(schema)
+        parsed = _STRUCTS[schema] = (struct, to_arrow_schema(struct))
+    struct, arrow = parsed
     if len(rows) == 0:
-        nulls = ", ".join(f"CAST(NULL AS {t}) AS {n}" for n, t in cols)
-        return spark.sql(f"SELECT {nulls} WHERE false")
-    if not isinstance(rows, pd.DataFrame):
-        rows = pd.DataFrame(list(rows), columns=[n for n, _ in cols])
-    struct = _STRUCTS.get(schema)
-    if struct is None:
-        struct = _STRUCTS[schema] = T.StructType.fromDDL(schema)
-    return spark.createDataFrame(rows, struct)
+        rows = None
+    elif not isinstance(rows, pd.DataFrame):
+        rows = pd.DataFrame(list(rows), columns=struct.names)
+    return DriverFrame(spark, struct, arrow, rows)
 
 
 def in_expr(col: str, values):

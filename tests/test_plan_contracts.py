@@ -11,6 +11,7 @@ import re
 
 import pytest
 from conftest import _jobs_started_by
+from py4j.clientserver import ClientServerConnection
 from pyspark.sql import functions as F
 
 from pyspark_codesearch.corpus import corpus_df, ingest_bucketed
@@ -126,6 +127,57 @@ def test_request_metadata_runs_no_spark_job(spark, index_dir):
         assert _jobs_started_by(spark, fn) == [], name
     # the counter sees jobs: inferring the docs table's schema runs one
     assert _jobs_started_by(spark, lambda: read_table(spark, index_dir, "docs"))
+
+
+def _py4j_calls(monkeypatch, fn) -> int:
+    """How many py4j round trips ``fn()`` makes (the verify skill's count
+    of ``ClientServerConnection.send_command``)."""
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        calls.append(command)
+        return send(self, command)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", counted)
+        fn()
+    return len(calls)
+
+
+def test_small_disk_batch_collect_makes_no_jvm_call(spark, index_dir, monkeypatch):
+    """The ranked rows of a warm small disk WAND batch stay on the
+    driver: its collect() makes no py4j round trip, nor does the
+    collect() of an empty local_frame. Building the batch still makes a
+    few (the cached-copy checks of read_rows), which the counter sees."""
+    from pyspark_codesearch.analysis import tokenize_py
+    from pyspark_codesearch.indexing import CorpusStats
+    from pyspark_codesearch.lineage import impact_scale, load_segments_for_terms
+    from pyspark_codesearch.session import local_frame
+    from pyspark_codesearch.wand import BATCH_SCHEMA, wand_topk_batch
+
+    st = read_table(spark, index_dir, "stats").collect()[0]
+    stats = CorpusStats(int(st["n_docs"]), float(st["avgdl"]))
+    doc_lens = read_table(spark, index_dir, "doc_lens")
+    term_stats = read_table(spark, index_dir, "term_stats")
+    qd = {"q0": "parse json string", "q1": "merge sort index"}
+    terms = {t for q in qd.values() for t in tokenize_py(q)}
+
+    def batch():
+        segs = load_segments_for_terms(spark, index_dir, terms)
+        return wand_topk_batch(segs, doc_lens, term_stats, stats, qd, 10, salt_range=64,
+                               impact_scale=impact_scale(index_dir, stats.avgdl))
+
+    want = batch().collect()  # warm
+    assert want
+    out = {}
+    assert 0 < _py4j_calls(monkeypatch, lambda: out.update(df=batch())) <= 6
+    rows = []
+    assert _py4j_calls(monkeypatch, lambda: rows.extend(out["df"].collect())) == 0
+    assert rows == want
+    empty = local_frame(spark, BATCH_SCHEMA)
+    assert _py4j_calls(monkeypatch, lambda: rows.extend(empty.collect())) == 0
+    assert rows == want
 
 
 def test_column_pruning_reaches_scan(spark, index_dir):

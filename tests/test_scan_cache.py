@@ -72,6 +72,43 @@ def test_scan_reused_while_version_unchanged(spark, tmp_path, parquet_reads):
     assert lens is not first[1] and 10_000 in set(read_rows(lens)["doc_id"])
 
 
+def _pinned_dirs(out):
+    """The version dirs named by the kept scans of index ``out``."""
+    root = os.path.realpath(out) + os.sep
+    with MEMO_LOCK:
+        keys = list(lineage._SCANS)
+    return {d for k in keys for d, _ in k[2] if d.startswith(root)}
+
+
+def _superseded(vdir):
+    """Whether the table path of version dir ``vdir`` now points elsewhere."""
+    vroot = os.path.dirname(vdir)
+    name = os.path.basename(vroot)[1:-len(".versions")]
+    return os.path.realpath(os.path.join(os.path.dirname(vroot), name)) != vdir
+
+
+def test_swap_drops_scans_of_superseded_versions(spark, tmp_path):
+    """The writer reads the versions it publishes through read_table, and
+    a reader keeps the scans of its batches: once an upsert supersedes
+    a version, no kept scan names it, so dead versions take no slot of
+    SCAN_CACHE_SIZE. Scans of versions the upsert left alone stay."""
+    out = str(tmp_path / "idx")
+    build_index_resumable(ingest_bucketed(corpus_df(spark, 80, seed=6), n_buckets=1),
+                          out, n_buckets=4, salt_range=SALT_RANGE)
+    load_segments_for_terms(spark, out, TERMS)
+    read_table(spark, out, "doc_lens")
+    before = _pinned_dirs(out)
+    assert before and not any(_superseded(d) for d in before)
+    delta = ingest_documents_df(spark.createDataFrame(
+        [(10_000, "uniqscanterm parse")], "doc_id long, text string"
+    )).withColumn("lang", F.lit("python"))
+    upsert_index(spark, out, delta)
+    assert any(_superseded(d) for d in before)
+    after = _pinned_dirs(out)
+    assert after and not any(_superseded(d) for d in after)
+    assert after & before  # the buckets the upsert did not rewrite
+
+
 def _word(gen, j):
     """A one-token word of its own per (gen, j): letters only, which the
     analyzer keeps whole."""

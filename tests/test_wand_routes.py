@@ -163,6 +163,55 @@ def test_block_doc_counts_sum_to_df(spark, indexes, which):
     assert len(sums) > 100
 
 
+def _cross_salt_cuts(ranked, k_max=40):
+    """(query id, k) pairs whose k-th and (k+1)-th rows tie in score on
+    docs of two salts: cutting there, doc_id asc decides which of the
+    tied docs make the top k. ``ranked``: every matched row per query,
+    best first."""
+    cuts = []
+    for qid, rows in sorted(ranked.items()):
+        for k in range(1, min(k_max, len(rows) - 1)):
+            (a, sa), (b, sb) = rows[k - 1], rows[k]
+            if sa == sb and a // SALT_RANGE != b // SALT_RANGE:
+                cuts.append((qid, k))
+                break
+    return cuts
+
+
+@pytest.mark.parametrize("which", ["fresh", "upserted"])
+def test_ranking_breaks_cross_salt_ties_by_doc_id(spark, indexes, monkeypatch, which):
+    """Scores that tie across salt groups: the driver route's ranking
+    keeps the cogroup window's order, score desc then doc_id asc, at
+    most k rows per query, ranks 1..n, queries in id order, also where
+    the k-th row's tie reaches into another salt."""
+    ix = indexes[which]
+    terms = sorted(t for t in ix["df_lookup"] if tokenize_py(t) == [t]
+                   and len(ix["salt_lookup"][t]) > 1)[:60]
+    queries = {f"t{i:02d}": t for i, t in enumerate(terms)}
+    every = max(ix["df_lookup"][t] for t in terms)
+    full = _both_routes(monkeypatch, lambda: _batch(ix, queries, k=every))
+    assert full["driver"] == full["cogroup"]
+    ranked = {}
+    for qid, rank, doc, score in full["driver"]:
+        ranked.setdefault(qid, []).append((doc, score))
+        assert rank == len(ranked[qid])
+    assert list(ranked) == sorted(ranked)
+    for rows in ranked.values():
+        assert rows == sorted(rows, key=lambda r: (-r[1], r[0]))
+    cuts = _cross_salt_cuts(ranked)
+    assert len(cuts) >= 3, "no score tie across salts: the test would be vacuous"
+    for qid, k in cuts[:5]:
+        one = {qid: queries[qid]}
+        got = _both_routes(monkeypatch, lambda: _batch(ix, one, k=k))
+        assert got["driver"] == got["cogroup"]
+        assert got["driver"] == [(qid, i + 1, d, sc) for i, (d, sc) in enumerate(ranked[qid][:k])]
+    batch_k = cuts[0][1]
+    got = _both_routes(monkeypatch, lambda: _batch(ix, queries, k=batch_k))
+    assert got["driver"] == got["cogroup"] == [
+        (qid, i + 1, d, sc) for qid in sorted(ranked)
+        for i, (d, sc) in enumerate(ranked[qid][:batch_k])]
+
+
 def _terms_of(queries):
     return sorted({t for q in queries.values() for t in tokenize_py(q)})
 
@@ -343,6 +392,6 @@ def test_budget_counts_every_doc_lens_row_it_reads(spark, indexes, monkeypatch):
         jobs = _jobs_started_by(spark, lambda: got.extend(tuple(r) for r in out.collect()))
         rows[name] = (got, bool(jobs))
     lens_by_salt.unpersist()
-    assert rows["packed"] == (rows["doc_lens"][0], False)  # driver: a LocalRelation
+    assert rows["packed"] == (rows["doc_lens"][0], False)  # driver: rows held here
     assert rows["doc_lens"][1]  # cogroup: collecting the plan runs its jobs
     assert rows["packed"][0]
